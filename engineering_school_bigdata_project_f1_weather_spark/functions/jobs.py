@@ -16,11 +16,20 @@ sub-index's COMMITTED state runs inside the same thunk, after that
 sub-index's update).  Each sub-index self-commits into its own
 directory, so concurrent legs never race on files; the caller's
 top-level snapshot commit stays strictly after every leg.
+
+Pool threads are fresh Python threads, and under PySpark's pinned-thread
+mode (the 4.x default) each one maps to its own JVM thread that starts
+with no local properties.  Every leg is therefore wrapped on the caller
+thread with ``inheritable_thread_target``, so its jobs carry the
+caller's job group, description and scheduler pool.
 """
 
 from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
+
+from pyspark import inheritable_thread_target
+from pyspark.sql import SparkSession
 
 # 2-3 jobs in flight is plenty (guide §2.6): enough to fill each leg's
 # task tail, not so many that they fight for executors.
@@ -35,6 +44,10 @@ def run_overlapped(*thunks):
     coherent).  A single thunk runs inline: no pool, no thread."""
     if len(thunks) == 1:
         return [thunks[0]()]
-    with ThreadPoolExecutor(max_workers=min(MAX_OVERLAP, len(thunks))) as pool:
-        futures = [pool.submit(t) for t in thunks]
+    # One wrap per leg: each captures its own copy of the caller's local
+    # properties, so a leg that sets a property cannot leak it to another.
+    session = SparkSession.active()
+    legs = [inheritable_thread_target(session)(t) for t in thunks]
+    with ThreadPoolExecutor(max_workers=min(MAX_OVERLAP, len(legs))) as pool:
+        futures = [pool.submit(t) for t in legs]
         return [f.result() for f in futures]

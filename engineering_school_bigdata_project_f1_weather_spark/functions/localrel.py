@@ -41,12 +41,13 @@ def empty_rel(spark, schema):
 
 
 def local_rows(spark, rows, schema):
-    """Bounded list-of-tuples ``rows`` as one Arrow ``LocalTableScan``
-    with ``schema`` (DDL string or StructType)."""
+    """Bounded list-of-tuples ``rows`` (any iterable of tuples) as one
+    Arrow ``LocalTableScan`` with ``schema`` (DDL string or StructType)."""
+    rows = list(rows)  # a generator is truthy even when empty
     if not rows:
         return empty_rel(spark, schema)
     import pandas as pd
 
     st = _struct(schema)
-    pdf = pd.DataFrame(list(rows), columns=[f.name for f in st.fields])
+    pdf = pd.DataFrame(rows, columns=[f.name for f in st.fields])
     return spark.createDataFrame(pdf, schema=st)

@@ -72,12 +72,17 @@ def meta_row(spark, schema: str, values: tuple):
     ``schema`` is the same DDL string the createDataFrame call took,
     e.g. ``"c_q16 long"``; values positional.  Parsed via StructType
     (ADVICE r12: the old ``rsplit(' ', 1)`` silently mis-split any type
-    containing a space, e.g. ``decimal(10, 2)``)."""
+    containing a space, e.g. ``decimal(10, 2)``).  Raises ``ValueError``
+    when ``values`` and ``schema`` differ in arity."""
     import pyspark.sql.functions as F  # local: this module is imported early
     from pyspark.sql.types import StructType
 
     fields = StructType.fromDDL(schema).fields
-    assert len(fields) == len(values), (schema, values)
+    if len(fields) != len(values):
+        raise ValueError(
+            f"meta_row: {len(values)} values for {len(fields)} fields "
+            f"({schema!r}, {values!r})"
+        )
     cols = [
         F.lit(v).cast(f.dataType).alias(f.name)
         for f, v in zip(fields, values)
