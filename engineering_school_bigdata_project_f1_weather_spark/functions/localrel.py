@@ -31,7 +31,13 @@ def _struct(schema) -> StructType:
 def empty_rel(spark, schema):
     """Zero-row frame with ``schema`` (DDL string or StructType) as a
     pure-JVM relation — ``createDataFrame([], schema)`` builds a Python
-    RDD whose empty partitions still each pay a worker round trip."""
+    RDD whose empty partitions still each pay a worker round trip.
+
+    Every field comes back nullable, whatever ``schema`` says: each
+    column is a ``NULL`` literal cast to its type.  Column names and
+    types match ``schema``; a ``StructType``'s non-null flags do not.
+    Callers that compare schemas must compare names and types only
+    (a parquet round trip makes every field nullable anyway)."""
     import pyspark.sql.functions as F
 
     st = _struct(schema)

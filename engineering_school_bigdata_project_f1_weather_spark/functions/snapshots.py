@@ -1,27 +1,50 @@
 """Versioned-snapshot durability for persisted incremental indexes.
 
-The shared convention (round 7 for the sketch index twins, round 8 for
-the minhash / ANN dedup indexes — VERDICT r7 item 1): updates never
-overwrite or append to the live state in place.  Each state version
-lives in its own ``{prefix}{n}`` directory under the index path; a
-``CURRENT`` pointer file names the live one and is swapped atomically
-(write-temp + ``os.replace`` — POSIX rename atomicity), so a crash or
-executor loss at ANY point leaves CURRENT pointing at a complete,
-readable snapshot.  A failed update's half-written version directory is
-an orphan that the next successful commit garbage-collects.
+Every incremental index family (minhash, ER, substring, ANN, SemDeDup,
+search, curation and the six sketch tables) stores its mutable state the
+same way: each version lives in its own ``{prefix}{n}`` directory under
+the index path, and a ``CURRENT`` pointer file names the live one.
+Updates never overwrite or append to the live state in place.  One
+primitive, :class:`txn`, owns that protocol::
 
-For BOUNDED state (the sketch registers/counters) each snapshot is a
+    with snapshots.txn(index_path, "sig_v") as t:
+        old = spark.read.parquet(t.live)   # the live version
+        write_sized(delta, t.dir)          # the batch, as the next version
+        t.carry()                          # + the live files, hard-linked
+
+- ``t.live`` is the live version's directory, or ``None`` when the path
+  has no ``CURRENT`` yet (a bootstrap writes ``{prefix}0``; re-running a
+  bootstrap on a committed index writes the next version, so a retried
+  init never rewrites the directory serving reads).  ``t.dir`` is the
+  next version's directory, ``{prefix}{n+1}``, cleared of any debris a
+  failed attempt left under that name.  ``t.carry(*subs)`` hard-links
+  the live version's parquet files (the named sub-directories, or the
+  whole version when none are named) into ``t.dir``; it runs after the
+  writes, because an overwrite-mode write into a directory deletes what
+  was linked there.
+- A clean exit commits: :func:`snap_commit` swaps ``CURRENT`` atomically
+  (write-temp + ``os.replace`` — POSIX rename atomicity) and
+  garbage-collects every other ``{prefix}*`` directory.
+- An exception commits nothing.  ``CURRENT`` still names the complete
+  previous version, and the half-written ``t.dir`` is an orphan that the
+  next transaction clears.
+- An exit that wrote nothing into ``t.dir`` raises instead of pointing
+  ``CURRENT`` at a missing directory.  A no-op path (a batch that is
+  already applied, an empty batch) therefore returns BEFORE the ``with``,
+  never from inside it.
+
+For BOUNDED state (the sketch registers/counters) each version is a
 full rewrite — the state is m-rows-sized, so that's free.  For
-CORPUS-SIZED state (minhash signatures, ANN vectors/assign lists) a
-full rewrite per batch would break the per-batch-work ∝ batch contract,
-so :func:`link_parquet_files` carries the previous snapshot's immutable
-data files into the new version directory by hard link (falling back to
-copy across filesystems): per-batch I/O stays ∝ batch while every
-snapshot remains a plain self-contained parquet directory.  This is the
-local-filesystem analogue of a table-format commit (Iceberg/Delta: new
-manifest referencing old data files + atomic pointer swap); on an
-object store the pointer swap becomes the table-format commit and the
-layout is unchanged.
+CORPUS-SIZED state (minhash signatures, ANN vectors/assign lists) a full
+rewrite per batch would break the per-batch-work ∝ batch contract, so
+the batch writes only its delta and ``t.carry`` shares the previous
+version's immutable data files by hard link (falling back to copy across
+filesystems): per-batch I/O stays ∝ batch while every version remains a
+plain self-contained parquet directory.  This is the local-filesystem
+analogue of a table-format commit (Iceberg/Delta: new manifest
+referencing old data files + atomic pointer swap); on an object store
+the pointer swap becomes the table-format commit and the layout is
+unchanged.
 """
 
 from __future__ import annotations
@@ -33,10 +56,8 @@ import shutil
 # optimization, guide §6: small files hurt twice — task overhead on
 # write, file-count growth on every snapshot hard-link and probe read).
 # The index frames here are narrow (tens of bytes/row), so 4M rows land
-# in the 128 MB–1 GB sweet spot; the knob is env-tunable per deployment.
-SNAP_ROWS_PER_FILE = int(
-    os.environ.get("SPARK_GRAFT_SNAP_ROWS_PER_FILE", "4000000")
-)
+# in the 128 MB–1 GB sweet spot.
+SNAP_ROWS_PER_FILE = 4_000_000
 
 
 def write_sized(df, path: str, rows: int | None = None) -> int:
@@ -96,11 +117,6 @@ def snap_live(path: str) -> str:
         return f.read().strip()
 
 
-def snap_next(live: str, prefix: str) -> str:
-    """``{prefix}{n+1}`` for a live ``{prefix}{n}``."""
-    return f"{prefix}{int(live[len(prefix):]) + 1}"
-
-
 def snap_commit(path: str, snap: str, prefix: str) -> None:
     """Atomically point CURRENT at ``snap`` and GC every other
     ``prefix``-versioned directory (the predecessor, plus any orphan a
@@ -155,3 +171,44 @@ def link_parquet_files(src_dir: str, dst_dir: str) -> None:
             os.link(src, dst)
         except OSError:
             shutil.copy2(src, dst)
+
+
+class txn:
+    """One snapshot transaction on the index at ``path`` (module note):
+    ``t.live``, ``t.dir`` and ``t.carry`` inside the block, a commit on
+    clean exit, nothing on an exception.  The module-level
+    :func:`snap_commit` and :func:`link_parquet_files` are looked up at
+    call time, so wrappers installed on them see every commit and link."""
+
+    def __init__(self, path: str, prefix: str) -> None:
+        self.path, self.prefix = path, prefix
+
+    def __enter__(self) -> "txn":
+        try:
+            live = snap_live(self.path)
+        except FileNotFoundError:
+            live = None
+        n = 0 if live is None else int(live[len(self.prefix):]) + 1
+        self.live = None if live is None else os.path.join(self.path, live)
+        self.dir = os.path.join(self.path, f"{self.prefix}{n}")
+        # debris of a failed attempt at this version (never the live one)
+        shutil.rmtree(self.dir, ignore_errors=True)
+        return self
+
+    def carry(self, *subs: str) -> None:
+        """Hard-link the live version's files under each of ``subs``
+        (the whole version when none are named) into ``t.dir``."""
+        for sub in subs or ("",):
+            link_parquet_files(
+                os.path.join(self.live, sub), os.path.join(self.dir, sub)
+            )
+
+    def __exit__(self, exc_type, exc, tb) -> None:
+        if exc_type is not None:
+            return  # t.dir stays an orphan; the next transaction clears it
+        if not (os.path.isdir(self.dir) and os.listdir(self.dir)):
+            raise RuntimeError(
+                f"snapshot txn on {self.path!r} wrote nothing to {self.dir!r}; "
+                "a no-op path must return before the `with`"
+            )
+        snap_commit(self.path, os.path.basename(self.dir), self.prefix)

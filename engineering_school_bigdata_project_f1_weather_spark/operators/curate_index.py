@@ -159,43 +159,40 @@ def curate_index_init(
     §2.6): classifier train+score+roster write, minhash bootstrap+pair
     log, SemDeDup bootstrap.  Every frame, write, and the commit-last
     ordering are unchanged — only the job submission is concurrent."""
-    os.makedirs(index_path, exist_ok=True)
     d = docs.select("doc_id", "lang", "text").localCheckpoint()
-    snap = f"{CUR_PREFIX}0"
-    sdir = os.path.join(index_path, snap)
 
-    def _leg_quality() -> None:
-        spark.sparkContext.setJobDescription("curate init: quality leg")
-        wide = _quality_scored_wide(d)
-        lab = wide.select("doc_id", _qc_label_col().alias("train_label"))
-        fb = _qc_featbuckets(wide).localCheckpoint()
-        model, c_q16 = qc_train_model(spark, fb, lab)
-        model.write.mode("overwrite").parquet(f"{index_path}/model")
-        snapshots.meta_row(spark, "c_q16 long", (int(c_q16),)).write.mode(
-            "overwrite"
-        ).parquet(f"{index_path}/model_meta")
-        model_b = F.broadcast(spark.read.parquet(f"{index_path}/model"))
-        rows = _doc_rows(d, model_b, c_q16, wide=wide, fb=fb)
-        # Sized write (round 12 opt, guide §6): checkpointed first (the
-        # frame is corpus-sized, cheap) so the file count derives from a
-        # free count instead of one file per task.
-        snapshots.write_sized(rows.localCheckpoint(), f"{sdir}/docs")
+    with snapshots.txn(index_path, CUR_PREFIX) as t:
+        def _leg_quality() -> None:
+            spark.sparkContext.setJobDescription("curate init: quality leg")
+            wide = _quality_scored_wide(d)
+            lab = wide.select("doc_id", _qc_label_col().alias("train_label"))
+            fb = _qc_featbuckets(wide).localCheckpoint()
+            model, c_q16 = qc_train_model(spark, fb, lab)
+            model.write.mode("overwrite").parquet(f"{index_path}/model")
+            snapshots.meta_row(spark, "c_q16 long", (int(c_q16),)).write.mode(
+                "overwrite"
+            ).parquet(f"{index_path}/model_meta")
+            model_b = F.broadcast(spark.read.parquet(f"{index_path}/model"))
+            rows = _doc_rows(d, model_b, c_q16, wide=wide, fb=fb)
+            # Sized write (round 12 opt, guide §6): checkpointed first (the
+            # frame is corpus-sized, cheap) so the file count derives from a
+            # free count instead of one file per task.
+            snapshots.write_sized(rows.localCheckpoint(), f"{t.dir}/docs")
 
-    def _leg_minhash() -> None:
-        spark.sparkContext.setJobDescription("curate init: minhash leg")
-        minhash_index_init(spark, d, f"{index_path}/mh")
-        sigs = spark.read.parquet(_minhash_live_dir(f"{index_path}/mh"))
-        pairs = minhash_pairs_of(sigs, sigs).where(
-            F.col("jaccard_e6") >= COMPONENT_MIN_JACCARD_E6
-        ).select("doc_a", "doc_b", "jaccard_e6")
-        snapshots.write_sized(pairs.localCheckpoint(), f"{sdir}/pairs")
+        def _leg_minhash() -> None:
+            spark.sparkContext.setJobDescription("curate init: minhash leg")
+            minhash_index_init(spark, d, f"{index_path}/mh")
+            sigs = spark.read.parquet(_minhash_live_dir(f"{index_path}/mh"))
+            pairs = minhash_pairs_of(sigs, sigs).where(
+                F.col("jaccard_e6") >= COMPONENT_MIN_JACCARD_E6
+            ).select("doc_a", "doc_b", "jaccard_e6")
+            snapshots.write_sized(pairs.localCheckpoint(), f"{t.dir}/pairs")
 
-    def _leg_semdedup() -> None:
-        spark.sparkContext.setJobDescription("curate init: semdedup leg")
-        semdedup_index_init(spark, vectors, f"{index_path}/sem")
+        def _leg_semdedup() -> None:
+            spark.sparkContext.setJobDescription("curate init: semdedup leg")
+            semdedup_index_init(spark, vectors, f"{index_path}/sem")
 
-    run_overlapped(_leg_quality, _leg_minhash, _leg_semdedup)
-    snapshots.snap_commit(index_path, snap, CUR_PREFIX)
+        run_overlapped(_leg_quality, _leg_minhash, _leg_semdedup)
 
 
 def curate_index_update(
@@ -209,8 +206,7 @@ def curate_index_update(
     top-level snapshot.  Idempotent under retry at ANY crash point
     (module head); returns the batch's scored roster rows (empty on a
     clean retry)."""
-    live = snapshots.snap_live(index_path)
-    base = os.path.join(index_path, live)
+    base = os.path.join(index_path, snapshots.snap_live(index_path))
     roster = spark.read.parquet(f"{base}/docs")
     batch = (
         new_docs.select("doc_id", "lang", "text")
@@ -262,14 +258,11 @@ def curate_index_update(
 
     _, new_pairs, rows = run_overlapped(_leg_semdedup, _leg_pairs, _leg_rows)
 
-    nxt = snapshots.snap_next(live, CUR_PREFIX)
-    nxt_dir = os.path.join(index_path, nxt)
-    # rows / new_pairs are checkpointed above — sized writes are free.
-    snapshots.write_sized(rows, f"{nxt_dir}/docs")
-    snapshots.write_sized(new_pairs, f"{nxt_dir}/pairs")
-    snapshots.link_parquet_files(f"{base}/docs", f"{nxt_dir}/docs")
-    snapshots.link_parquet_files(f"{base}/pairs", f"{nxt_dir}/pairs")
-    snapshots.snap_commit(index_path, nxt, CUR_PREFIX)
+    with snapshots.txn(index_path, CUR_PREFIX) as t:
+        # rows / new_pairs are checkpointed above — sized writes are free.
+        snapshots.write_sized(rows, f"{t.dir}/docs")
+        snapshots.write_sized(new_pairs, f"{t.dir}/pairs")
+        t.carry("docs", "pairs")
     return rows
 
 
@@ -287,15 +280,11 @@ def curate_index_compact(spark: SparkSession, index_path: str) -> None:
     only append, and compaction amortizes read-side file-count growth
     on its own schedule.  Idempotent."""
     semdedup_index_compact(spark, f"{index_path}/sem")
-    live = snapshots.snap_live(index_path)
-    base = os.path.join(index_path, live)
-    docs = spark.read.parquet(f"{base}/docs").localCheckpoint()
-    pairs = spark.read.parquet(f"{base}/pairs").localCheckpoint()
-    nxt = snapshots.snap_next(live, CUR_PREFIX)
-    nxt_dir = os.path.join(index_path, nxt)
-    docs.coalesce(1).write.mode("overwrite").parquet(f"{nxt_dir}/docs")
-    pairs.coalesce(1).write.mode("overwrite").parquet(f"{nxt_dir}/pairs")
-    snapshots.snap_commit(index_path, nxt, CUR_PREFIX)
+    with snapshots.txn(index_path, CUR_PREFIX) as t:
+        docs = spark.read.parquet(f"{t.live}/docs").localCheckpoint()
+        pairs = spark.read.parquet(f"{t.live}/pairs").localCheckpoint()
+        docs.coalesce(1).write.mode("overwrite").parquet(f"{t.dir}/docs")
+        pairs.coalesce(1).write.mode("overwrite").parquet(f"{t.dir}/pairs")
 
 
 def curate_resolve(spark: SparkSession, index_path: str) -> DataFrame:

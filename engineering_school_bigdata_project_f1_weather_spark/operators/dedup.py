@@ -1093,16 +1093,13 @@ def minhash_index_init(spark: SparkSession, docs: DataFrame, index_path: str) ->
     (functions/snapshots.py — CURRENT pointer, atomic swap, orphan GC):
     the same durability contract as the sketch index twins since round
     8 (VERDICT r7 item 1)."""
-    os.makedirs(index_path, exist_ok=True)
-    snap = "sig_v0"
     # checkpoint + sized write (round 12 opt, guide §6): the signature
     # frame is narrow, and one-file-per-task writes cost task+commit
     # overhead and grow the file count every later hard-linked snapshot.
-    snapshots.write_sized(
-        minhash_signatures(spark, docs).localCheckpoint(),
-        os.path.join(index_path, snap),
-    )
-    snapshots.snap_commit(index_path, snap, "sig_v")
+    with snapshots.txn(index_path, "sig_v") as t:
+        snapshots.write_sized(
+            minhash_signatures(spark, docs).localCheckpoint(), t.dir
+        )
 
 
 def minhash_index_update(
@@ -1127,31 +1124,28 @@ def minhash_index_update(
     Returns the same (doc_a, doc_b, inter, un, jaccard_e6) shape as
     :func:`dedup_minhash_lsh`, restricted to pairs with a new member.
     """
-    live = snapshots.snap_live(index_path)
-    old_sig = spark.read.parquet(os.path.join(index_path, live))
-    # Idempotency guard: drop docs already in the index BEFORE signing-in.
-    # An orchestrator retry after the append (or a re-submitted doc_id)
-    # would otherwise duplicate signature rows, multiplying candidate/pair
-    # rows in every later batch and breaking the one-signature-per-doc
-    # invariant. The anti-join makes re-running a batch a no-op on the
-    # index (the retry returns only pairs for genuinely-new docs).
-    new_sig = (
-        minhash_signatures(spark, new_docs)
-        .join(old_sig.select("doc_id"), "doc_id", "left_anti")
-        .localCheckpoint()
-    )
-    all_sig = old_sig.unionByName(new_sig)
-    pairs = minhash_pairs_of(new_sig, all_sig)
-    result = pairs.localCheckpoint()  # materialize BEFORE mutating the index
-    # Commit protocol: write the batch to the NEXT version dir (mode
-    # overwrite clears any crash debris reusing the name), hard-link the
-    # live snapshot's data files in, swap CURRENT. Nothing under the
-    # live dir is ever touched.
-    nxt = snapshots.snap_next(live, "sig_v")
-    nxt_dir = os.path.join(index_path, nxt)
-    snapshots.write_sized(new_sig, nxt_dir)  # checkpointed above
-    snapshots.link_parquet_files(os.path.join(index_path, live), nxt_dir)
-    snapshots.snap_commit(index_path, nxt, "sig_v")
+    with snapshots.txn(index_path, "sig_v") as t:
+        old_sig = spark.read.parquet(t.live)
+        # Idempotency guard: drop docs already in the index BEFORE
+        # signing-in.  An orchestrator retry after the append (or a
+        # re-submitted doc_id) would otherwise duplicate signature rows,
+        # multiplying candidate/pair rows in every later batch and
+        # breaking the one-signature-per-doc invariant. The anti-join
+        # makes re-running a batch a no-op on the index (the retry
+        # returns only pairs for genuinely-new docs).
+        new_sig = (
+            minhash_signatures(spark, new_docs)
+            .join(old_sig.select("doc_id"), "doc_id", "left_anti")
+            .localCheckpoint()
+        )
+        all_sig = old_sig.unionByName(new_sig)
+        pairs = minhash_pairs_of(new_sig, all_sig)
+        result = pairs.localCheckpoint()  # materialize BEFORE the commit
+        # The batch goes to the NEXT version dir, the live snapshot's
+        # data files are hard-linked in; nothing under the live dir is
+        # ever touched.
+        snapshots.write_sized(new_sig, t.dir)  # checkpointed above
+        t.carry()
     return result
 
 
@@ -2348,10 +2342,6 @@ def er_index_init(spark: SparkSession, docs: DataFrame, index_path: str) -> None
     """Bootstrap the ER index on an initial corpus: persist the doc
     state, the NEAR/TYPO candidate structures, the per-doc entity labels
     from a full closure, and an empty remap — as snapshot ``er_v0``."""
-    os.makedirs(index_path, exist_ok=True)
-    snap = "er_v0"
-    base = os.path.join(index_path, snap)
-
     # The doc-state chain (drows → grams → dford → qg) and the minhash
     # signature scan are independent until _er_edges consumes both —
     # overlapped from a driver thread pool (round 13, guide §2.6); the
@@ -2393,21 +2383,23 @@ def er_index_init(spark: SparkSession, docs: DataFrame, index_path: str) -> None
     # The six sub-table writes are independent jobs over materialized (or
     # once-consumed) frames — overlapped like the legs above (§2.6).
     n_docs = drows.count()
-    run_overlapped(
-        lambda: snapshots.write_sized(drows, f"{base}/docs", rows=n_docs),
-        lambda: snapshots.write_sized(sig, f"{base}/sig"),
-        lambda: snapshots.write_sized(qg, f"{base}/qg"),
-        lambda: snapshots.write_sized(dford, f"{base}/dford"),
-        lambda: snapshots.write_sized(ent, f"{base}/labels", rows=n_docs),
-        # Empty remap as a pure-JVM relation: createDataFrame([], schema)
-        # builds a Python RDD whose (empty) partitions each pay a Python
-        # worker round-trip — coalesce(1) evaluates all of them SEQUENTIALLY
-        # in one task (measured: 5.1-5.8 s for an EMPTY write; round 12 opt).
-        lambda: spark.range(0).select(
-            F.col("id").alias("old_label"), F.col("id").alias("new_label")
-        ).coalesce(1).write.mode("overwrite").parquet(f"{base}/remap"),
-    )
-    snapshots.snap_commit(index_path, snap, "er_v")
+    with snapshots.txn(index_path, "er_v") as t:
+        base = t.dir
+        run_overlapped(
+            lambda: snapshots.write_sized(drows, f"{base}/docs", rows=n_docs),
+            lambda: snapshots.write_sized(sig, f"{base}/sig"),
+            lambda: snapshots.write_sized(qg, f"{base}/qg"),
+            lambda: snapshots.write_sized(dford, f"{base}/dford"),
+            lambda: snapshots.write_sized(ent, f"{base}/labels", rows=n_docs),
+            # Empty remap as a pure-JVM relation: createDataFrame([],
+            # schema) builds a Python RDD whose (empty) partitions each
+            # pay a Python worker round-trip — coalesce(1) evaluates all
+            # of them SEQUENTIALLY in one task (measured: 5.1-5.8 s for
+            # an EMPTY write; round 12 opt).
+            lambda: spark.range(0).select(
+                F.col("id").alias("old_label"), F.col("id").alias("new_label")
+            ).coalesce(1).write.mode("overwrite").parquet(f"{base}/remap"),
+        )
 
 
 def er_index_update(
@@ -2429,148 +2421,147 @@ def er_index_update(
 
     Idempotent (anti-join on doc_id); returns the batch's new match
     edges (doc_a, doc_b) — empty on a retry."""
-    live = snapshots.snap_live(index_path)
-    base = os.path.join(index_path, live)
-    old_docs = spark.read.parquet(f"{base}/docs")
-    old_sig = spark.read.parquet(f"{base}/sig")
-    old_qg = spark.read.parquet(f"{base}/qg")
-    old_labels = spark.read.parquet(f"{base}/labels")
-    old_remap = spark.read.parquet(f"{base}/remap")
+    with snapshots.txn(index_path, "er_v") as t:
+        base = t.live
+        old_docs = spark.read.parquet(f"{base}/docs")
+        old_sig = spark.read.parquet(f"{base}/sig")
+        old_qg = spark.read.parquet(f"{base}/qg")
+        old_labels = spark.read.parquet(f"{base}/labels")
+        old_remap = spark.read.parquet(f"{base}/remap")
 
-    dford = spark.read.parquet(f"{base}/dford")
-    # Stage the anti-join once (round 13): drows and sig each re-ran it
-    # inside their own checkpoint before; and the doc→gram-prefix chain
-    # is independent of the minhash signature scan, so the two legs
-    # overlap from a driver thread pool (guide §2.6) — same frames, same
-    # checkpoints, concurrent submission only.
-    fresh = new_docs.join(
-        old_docs.select("doc_id"), "doc_id", "left_anti"
-    ).localCheckpoint()
+        dford = spark.read.parquet(f"{base}/dford")
+        # Stage the anti-join once (round 13): drows and sig each re-ran it
+        # inside their own checkpoint before; and the doc→gram-prefix chain
+        # is independent of the minhash signature scan, so the two legs
+        # overlap from a driver thread pool (guide §2.6) — same frames, same
+        # checkpoints, concurrent submission only.
+        fresh = new_docs.join(
+            old_docs.select("doc_id"), "doc_id", "left_anti"
+        ).localCheckpoint()
 
-    def _leg_doc_chain():
-        spark.sparkContext.setJobDescription("er update: doc/gram leg")
-        drows = _er_doc_rows(fresh).localCheckpoint()
-        return drows, _er_qgram_prefix(drows, dford).localCheckpoint()
+        def _leg_doc_chain():
+            spark.sparkContext.setJobDescription("er update: doc/gram leg")
+            drows = _er_doc_rows(fresh).localCheckpoint()
+            return drows, _er_qgram_prefix(drows, dford).localCheckpoint()
 
-    def _leg_sig():
-        spark.sparkContext.setJobDescription("er update: signature leg")
-        return minhash_signatures(spark, fresh).localCheckpoint()
+        def _leg_sig():
+            spark.sparkContext.setJobDescription("er update: signature leg")
+            return minhash_signatures(spark, fresh).localCheckpoint()
 
-    (drows, qg), sig = run_overlapped(_leg_doc_chain, _leg_sig)
+        (drows, qg), sig = run_overlapped(_leg_doc_chain, _leg_sig)
 
-    all_docs = old_docs.unionByName(drows)
-    edges = _er_edges(
-        spark, drows, all_docs, sig, old_sig.unionByName(sig),
-        qg, old_qg.unionByName(qg),
-    ).localCheckpoint()
+        all_docs = old_docs.unionByName(drows)
+        edges = _er_edges(
+            spark, drows, all_docs, sig, old_sig.unionByName(sig),
+            qg, old_qg.unionByName(qg),
+        ).localCheckpoint()
 
-    # Contract old endpoints onto their CURRENT entity labels.  The
-    # per-snapshot ``labels`` parquet stores each doc's label AS OF the
-    # batch that wrote it; a later update may have retired that label
-    # (recorded in the composed remap).  Contracting onto the STORED
-    # label would attach the new edge to a retired node, and the single
-    # remap hop at serve time can't follow the resulting chain (e.g.
-    # stored 7 contracts onto retired 5 while 5→3 already exists → doc 7
-    # serves entity 5, batch oracle says 3).  So resolve stored → current
-    # through the composed remap FIRST, then contract onto current
-    # labels only (ADVICE r8 high).
-    cur_labels = (
-        old_labels.join(
-            old_remap.withColumnRenamed("old_label", "entity"),
-            "entity",
-            "left",
+        # Contract old endpoints onto their CURRENT entity labels.  The
+        # per-snapshot ``labels`` parquet stores each doc's label AS OF the
+        # batch that wrote it; a later update may have retired that label
+        # (recorded in the composed remap).  Contracting onto the STORED
+        # label would attach the new edge to a retired node, and the single
+        # remap hop at serve time can't follow the resulting chain (e.g.
+        # stored 7 contracts onto retired 5 while 5→3 already exists → doc 7
+        # serves entity 5, batch oracle says 3).  So resolve stored → current
+        # through the composed remap FIRST, then contract onto current
+        # labels only (ADVICE r8 high).
+        cur_labels = (
+            old_labels.join(
+                old_remap.withColumnRenamed("old_label", "entity"),
+                "entity",
+                "left",
+            )
+            .select(
+                "doc_id",
+                F.coalesce("new_label", F.col("entity")).alias("entity"),
+            )
         )
-        .select(
-            "doc_id",
-            F.coalesce("new_label", F.col("entity")).alias("entity"),
+        lbl = cur_labels.select(
+            F.col("doc_id").alias("_d"), F.col("entity").alias("_e")
         )
-    )
-    lbl = cur_labels.select(
-        F.col("doc_id").alias("_d"), F.col("entity").alias("_e")
-    )
-    contracted = (
-        edges.join(lbl.withColumnRenamed("_d", "doc_a"), "doc_a", "left")
-        .withColumn("ca", F.coalesce("_e", "doc_a"))
-        .drop("_e")
-        .join(lbl.withColumnRenamed("_d", "doc_b"), "doc_b", "left")
-        .withColumn("cb", F.coalesce("_e", "doc_b"))
-        .select("ca", "cb")
-        .where(F.col("ca") != F.col("cb"))
-    )
-    closure = _er_closure(
-        spark,
-        contracted.select(
-            F.col("ca").alias("doc_a"), F.col("cb").alias("doc_b")
-        ),
-    )
+        contracted = (
+            edges.join(lbl.withColumnRenamed("_d", "doc_a"), "doc_a", "left")
+            .withColumn("ca", F.coalesce("_e", "doc_a"))
+            .drop("_e")
+            .join(lbl.withColumnRenamed("_d", "doc_b"), "doc_b", "left")
+            .withColumn("cb", F.coalesce("_e", "doc_b"))
+            .select("ca", "cb")
+            .where(F.col("ca") != F.col("cb"))
+        )
+        closure = _er_closure(
+            spark,
+            contracted.select(
+                F.col("ca").alias("doc_a"), F.col("cb").alias("doc_b")
+            ),
+        )
 
-    # New docs: label from the affected closure, else themselves.
-    new_labels = (
-        drows.select("doc_id")
-        .join(closure, F.col("doc_id") == closure.node, "left")
-        .select(
-            "doc_id",
-            F.coalesce("component", F.col("doc_id")).alias("entity"),
+        # New docs: label from the affected closure, else themselves.
+        new_labels = (
+            drows.select("doc_id")
+            .join(closure, F.col("doc_id") == closure.node, "left")
+            .select(
+                "doc_id",
+                F.coalesce("component", F.col("doc_id")).alias("entity"),
+            )
+            # no checkpoint: written exactly once below, and every input is
+            # already materialized (drows checkpoint, driver-built closure)
         )
-        # no checkpoint: written exactly once below, and every input is
-        # already materialized (drows checkpoint, driver-built closure)
-    )
-    # CURRENT entities whose label moved: remap entries for this batch.
-    # Keyed on current (never retired) labels, so batch_remap.old_label
-    # is disjoint from old_remap.old_label — composition below can't emit
-    # duplicate old_label rows.
-    batch_remap = (
-        closure.join(
-            cur_labels.select(F.col("entity").alias("node")).distinct(),
-            "node",
+        # CURRENT entities whose label moved: remap entries for this batch.
+        # Keyed on current (never retired) labels, so batch_remap.old_label
+        # is disjoint from old_remap.old_label — composition below can't emit
+        # duplicate old_label rows.
+        batch_remap = (
+            closure.join(
+                cur_labels.select(F.col("entity").alias("node")).distinct(),
+                "node",
+            )
+            .where(F.col("node") != F.col("component"))
+            .select(
+                F.col("node").alias("old_label"),
+                F.col("component").alias("new_label"),
+            )
         )
-        .where(F.col("node") != F.col("component"))
-        .select(
-            F.col("node").alias("old_label"),
-            F.col("component").alias("new_label"),
+        # Compose with the stored remap so every historical label maps to a
+        # CURRENT one in a single hop at serve time.
+        br = batch_remap.select(
+            F.col("old_label").alias("_o"), F.col("new_label").alias("_n")
         )
-    )
-    # Compose with the stored remap so every historical label maps to a
-    # CURRENT one in a single hop at serve time.
-    br = batch_remap.select(
-        F.col("old_label").alias("_o"), F.col("new_label").alias("_n")
-    )
-    remap = (
-        old_remap.join(br.withColumnRenamed("_o", "new_label"), "new_label", "left")
-        .select(
-            "old_label",
-            F.coalesce("_n", F.col("new_label")).alias("new_label"),
+        remap = (
+            old_remap.join(
+                br.withColumnRenamed("_o", "new_label"), "new_label", "left"
+            )
+            .select(
+                "old_label",
+                F.coalesce("_n", F.col("new_label")).alias("new_label"),
+            )
+            .unionByName(batch_remap)
+            # checkpointed at the write below (merge-event-sized) so the
+            # sized write can count it for free
         )
-        .unionByName(batch_remap)
-        # checkpointed at the write below (merge-event-sized) so the
-        # sized write can count it for free
-    )
 
-    nxt = snapshots.snap_next(live, "er_v")
-    nbase = os.path.join(index_path, nxt)
-    # Sized writes (round 12 opt, guide §6) — batch-proportional frames,
-    # one near-empty file per task otherwise.  new_labels has exactly one
-    # row per batch doc (drows is checkpointed, so the count is a cheap
-    # scan); remap is merge-event-sized and written once, so it is
-    # checkpointed (tiny) to make its count free.
-    n_batch = drows.count()
-    # Independent writes of materialized (or once-consumed) frames —
-    # overlapped (round 13, guide §2.6), then the hard links and the one
-    # atomic commit strictly after.
-    run_overlapped(
-        lambda: snapshots.write_sized(drows, f"{nbase}/docs", rows=n_batch),
-        lambda: snapshots.write_sized(sig, f"{nbase}/sig"),
-        lambda: snapshots.write_sized(qg, f"{nbase}/qg"),
-        lambda: snapshots.write_sized(
-            new_labels, f"{nbase}/labels", rows=n_batch
-        ),
-        lambda: snapshots.write_sized(
-            remap.localCheckpoint(), f"{nbase}/remap"
-        ),
-    )
-    for sub in ("docs", "sig", "qg", "labels", "dford"):
-        snapshots.link_parquet_files(f"{base}/{sub}", f"{nbase}/{sub}")
-    snapshots.snap_commit(index_path, nxt, "er_v")
+        nbase = t.dir
+        # Sized writes (round 12 opt, guide §6) — batch-proportional frames,
+        # one near-empty file per task otherwise.  new_labels has exactly one
+        # row per batch doc (drows is checkpointed, so the count is a cheap
+        # scan); remap is merge-event-sized and written once, so it is
+        # checkpointed (tiny) to make its count free.
+        n_batch = drows.count()
+        # Independent writes of materialized (or once-consumed) frames —
+        # overlapped (round 13, guide §2.6), then the hard links and the one
+        # atomic commit strictly after.
+        run_overlapped(
+            lambda: snapshots.write_sized(drows, f"{nbase}/docs", rows=n_batch),
+            lambda: snapshots.write_sized(sig, f"{nbase}/sig"),
+            lambda: snapshots.write_sized(qg, f"{nbase}/qg"),
+            lambda: snapshots.write_sized(
+                new_labels, f"{nbase}/labels", rows=n_batch
+            ),
+            lambda: snapshots.write_sized(
+                remap.localCheckpoint(), f"{nbase}/remap"
+            ),
+        )
+        t.carry("docs", "sig", "qg", "labels", "dford")
     return edges
 
 
@@ -3324,9 +3315,6 @@ def substr_index_init(spark: SparkSession, docs: DataFrame, index_path: str) -> 
     tokens have no occurrence rows), the occurrence log (h-bucket
     partitioned, see ``_write_occ_bucketed``), the duplicated-digest
     set, and the span table as snapshot ``sub_v0``."""
-    os.makedirs(index_path, exist_ok=True)
-    snap = "sub_v0"
-    base = os.path.join(index_path, snap)
     d = docs.select("doc_id", "text")
     occ = _substr_occ(d).localCheckpoint()
     dup = (
@@ -3342,12 +3330,15 @@ def substr_index_init(spark: SparkSession, docs: DataFrame, index_path: str) -> 
     # roster is checkpointed first (ADVICE r12): write_sized counts its
     # input, and an unmaterialized projection would run the scan once
     # for the count and again for the write.
-    snapshots.write_sized(d.select("doc_id").localCheckpoint(), f"{base}/docs")
-    _write_occ_bucketed(occ, f"{base}/occ", OCC_BUCKET_CHARS)
-    snapshots.write_sized(dup, f"{base}/dup")
-    snapshots.write_sized(spans.localCheckpoint(), f"{base}/spans")
-    _occ_width_write(base, OCC_BUCKET_CHARS)
-    snapshots.snap_commit(index_path, snap, "sub_v")
+    with snapshots.txn(index_path, "sub_v") as t:
+        base = t.dir
+        snapshots.write_sized(
+            d.select("doc_id").localCheckpoint(), f"{base}/docs"
+        )
+        _write_occ_bucketed(occ, f"{base}/occ", OCC_BUCKET_CHARS)
+        snapshots.write_sized(dup, f"{base}/dup")
+        snapshots.write_sized(spans.localCheckpoint(), f"{base}/spans")
+        _occ_width_write(base, OCC_BUCKET_CHARS)
 
 
 def substr_index_update(
@@ -3366,90 +3357,87 @@ def substr_index_update(
     duplicated digests and (b) STORED occurrences of digests the batch
     promoted to count ≥ 2 — both covered by the affected-doc recompute;
     every other doc's seed set, hence span set, is untouched."""
-    live = snapshots.snap_live(index_path)
-    base = os.path.join(index_path, live)
-    # Probe AND write deltas at the width the stored layout was built
-    # at (snapshot metadata, never the env — ADVICE r10): the new
-    # snapshot hard-links the old occ files, so a different delta width
-    # would mix 'b0'/'b00' partitions in one directory and the pruned
-    # probe would silently skip stored occurrences.
-    chars = _occ_width(base)
-    old_docs = spark.read.parquet(f"{base}/docs")
-    old_occ_b = _read_occ(spark, f"{base}/occ")  # carries the hb column
-    old_occ = old_occ_b.select("doc_id", "pos", "h")
-    old_dup = spark.read.parquet(f"{base}/dup")
-    old_spans = spark.read.parquet(f"{base}/spans")
+    with snapshots.txn(index_path, "sub_v") as t:
+        base = t.live
+        # Probe AND write deltas at the width the stored layout was built
+        # at (snapshot metadata, never the env — ADVICE r10): the new
+        # snapshot hard-links the old occ files, so a different delta width
+        # would mix 'b0'/'b00' partitions in one directory and the pruned
+        # probe would silently skip stored occurrences.
+        chars = _occ_width(base)
+        old_docs = spark.read.parquet(f"{base}/docs")
+        old_occ_b = _read_occ(spark, f"{base}/occ")  # carries the hb column
+        old_occ = old_occ_b.select("doc_id", "pos", "h")
+        old_dup = spark.read.parquet(f"{base}/dup")
+        old_spans = spark.read.parquet(f"{base}/spans")
 
-    # Staged once (ADVICE r12): the anti-join feeds both the occurrence
-    # scan and the roster write below — unmaterialized it re-ran per
-    # consumer (write_sized's count alone executed it twice).
-    fresh = new_docs.select("doc_id", "text").join(
-        old_docs, "doc_id", "left_anti"
-    ).localCheckpoint()
-    bocc = _substr_occ(fresh).localCheckpoint()
-    batch_h = bocc.groupBy("h").agg(F.count(F.lit(1)).alias("bc"))
-    # Buckets the batch touches — a bounded (≤ 16**OCC_BUCKET_CHARS)
-    # driver list; the
-    # stored-log probe below filters on the hb PARTITION column, so
-    # parquet partition pruning skips every untouched bucket's files
-    # (the on-disk realization of "probe ∝ batch", VERDICT r9 item 4).
-    touched = [
-        r["hb"]
-        for r in bocc.select(
-            _occ_bucket(chars=chars).alias("hb")
-        ).distinct().collect()
-    ]
-    probe_base = old_occ_b.where(F.col("hb").isin(touched)).select(
-        "doc_id", "pos", "h"
-    )
-    stored_h = (
-        probe_base.join(batch_h.select("h"), "h")
-        .groupBy("h")
-        .agg(F.count(F.lit(1)).alias("sc"))
-    )
-    newly_dup = (
-        batch_h.join(stored_h, "h", "left")
-        .join(old_dup.withColumn("_d", F.lit(1)), "h", "left")
-        .where(
-            F.col("_d").isNull()
-            & (F.col("bc") + F.coalesce("sc", F.lit(0)) >= 2)
+        # Staged once (ADVICE r12): the anti-join feeds both the occurrence
+        # scan and the roster write below — unmaterialized it re-ran per
+        # consumer (write_sized's count alone executed it twice).
+        fresh = new_docs.select("doc_id", "text").join(
+            old_docs, "doc_id", "left_anti"
+        ).localCheckpoint()
+        bocc = _substr_occ(fresh).localCheckpoint()
+        batch_h = bocc.groupBy("h").agg(F.count(F.lit(1)).alias("bc"))
+        # Buckets the batch touches — a bounded (≤ 16**OCC_BUCKET_CHARS)
+        # driver list; the
+        # stored-log probe below filters on the hb PARTITION column, so
+        # parquet partition pruning skips every untouched bucket's files
+        # (the on-disk realization of "probe ∝ batch", VERDICT r9 item 4).
+        touched = [
+            r["hb"]
+            for r in bocc.select(
+                _occ_bucket(chars=chars).alias("hb")
+            ).distinct().collect()
+        ]
+        probe_base = old_occ_b.where(F.col("hb").isin(touched)).select(
+            "doc_id", "pos", "h"
         )
-        .select("h")
-        .localCheckpoint()
-    )
-    dup_all = old_dup.unionByName(newly_dup)
-    affected = (
-        bocc.join(dup_all, "h")
-        .select("doc_id")
-        # newly_dup digests all occur in the batch, so their stored
-        # occurrences live in touched buckets — the pruned read serves
-        # this probe too.
-        .unionByName(probe_base.join(newly_dup, "h").select("doc_id"))
-        .distinct()
-        .localCheckpoint()
-    )
-    all_occ = old_occ.unionByName(bocc)
-    seeds = (
-        all_occ.join(affected, "doc_id")
-        .join(dup_all, "h")
-        .select("doc_id", "pos")
-    )
-    new_spans = _substr_spans(seeds).localCheckpoint()
-    spans = old_spans.join(affected, "doc_id", "left_anti").unionByName(
-        new_spans
-    )
+        stored_h = (
+            probe_base.join(batch_h.select("h"), "h")
+            .groupBy("h")
+            .agg(F.count(F.lit(1)).alias("sc"))
+        )
+        newly_dup = (
+            batch_h.join(stored_h, "h", "left")
+            .join(old_dup.withColumn("_d", F.lit(1)), "h", "left")
+            .where(
+                F.col("_d").isNull()
+                & (F.col("bc") + F.coalesce("sc", F.lit(0)) >= 2)
+            )
+            .select("h")
+            .localCheckpoint()
+        )
+        dup_all = old_dup.unionByName(newly_dup)
+        affected = (
+            bocc.join(dup_all, "h")
+            .select("doc_id")
+            # newly_dup digests all occur in the batch, so their stored
+            # occurrences live in touched buckets — the pruned read serves
+            # this probe too.
+            .unionByName(probe_base.join(newly_dup, "h").select("doc_id"))
+            .distinct()
+            .localCheckpoint()
+        )
+        all_occ = old_occ.unionByName(bocc)
+        seeds = (
+            all_occ.join(affected, "doc_id")
+            .join(dup_all, "h")
+            .select("doc_id", "pos")
+        )
+        new_spans = _substr_spans(seeds).localCheckpoint()
+        spans = old_spans.join(affected, "doc_id", "left_anti").unionByName(
+            new_spans
+        )
 
-    nxt = snapshots.snap_next(live, "sub_v")
-    nbase = os.path.join(index_path, nxt)
-    # Sized writes (round 12 opt, guide §6) — same rationale as init.
-    snapshots.write_sized(fresh.select("doc_id"), f"{nbase}/docs")
-    _write_occ_bucketed(bocc, f"{nbase}/occ", chars)
-    snapshots.write_sized(newly_dup, f"{nbase}/dup")
-    snapshots.write_sized(spans.localCheckpoint(), f"{nbase}/spans")
-    for sub in ("docs", "occ", "dup"):
-        snapshots.link_parquet_files(f"{base}/{sub}", f"{nbase}/{sub}")
-    _occ_width_write(nbase, chars)
-    snapshots.snap_commit(index_path, nxt, "sub_v")
+        nbase = t.dir
+        # Sized writes (round 12 opt, guide §6) — same rationale as init.
+        snapshots.write_sized(fresh.select("doc_id"), f"{nbase}/docs")
+        _write_occ_bucketed(bocc, f"{nbase}/occ", chars)
+        snapshots.write_sized(newly_dup, f"{nbase}/dup")
+        snapshots.write_sized(spans.localCheckpoint(), f"{nbase}/spans")
+        t.carry("docs", "occ", "dup")
+        _occ_width_write(nbase, chars)
     return new_spans
 
 
@@ -3462,32 +3450,30 @@ def substr_index_compact(spark: SparkSession, index_path: str) -> None:
     updates only append; compaction amortizes the read-side file-count
     growth on its own schedule.  Idempotent; the span table rides along
     unchanged."""
-    live = snapshots.snap_live(index_path)
-    base = os.path.join(index_path, live)
-    occ = (
-        _read_occ(spark, f"{base}/occ")
-        .select("doc_id", "pos", "h")
-        .localCheckpoint()
-    )
-    dup = spark.read.parquet(f"{base}/dup").localCheckpoint()
-    docs = spark.read.parquet(f"{base}/docs").localCheckpoint()
-    spans = spark.read.parquet(f"{base}/spans").localCheckpoint()
-    nxt = snapshots.snap_next(live, "sub_v")
-    nbase = os.path.join(index_path, nxt)
-    # The compaction rewrite collapses each bucket's accumulated
-    # per-batch delta files into ONE file per hb partition (the
-    # repartition("hb") inside the bucketed writer), restoring O(1)
-    # files per bucket for the update-time pruned probe.  Compaction is
-    # also the sanctioned WIDTH-MIGRATION point (ADVICE r10): it
-    # re-buckets the full log at the current env width and stamps that
-    # width into the new snapshot, so updates after a knob change probe
-    # a uniform layout.
-    _write_occ_bucketed(occ, f"{nbase}/occ", OCC_BUCKET_CHARS)
-    dup.coalesce(1).write.mode("overwrite").parquet(f"{nbase}/dup")
-    docs.coalesce(1).write.mode("overwrite").parquet(f"{nbase}/docs")
-    spans.write.mode("overwrite").parquet(f"{nbase}/spans")
-    _occ_width_write(nbase, OCC_BUCKET_CHARS)
-    snapshots.snap_commit(index_path, nxt, "sub_v")
+    with snapshots.txn(index_path, "sub_v") as t:
+        base = t.live
+        occ = (
+            _read_occ(spark, f"{base}/occ")
+            .select("doc_id", "pos", "h")
+            .localCheckpoint()
+        )
+        dup = spark.read.parquet(f"{base}/dup").localCheckpoint()
+        docs = spark.read.parquet(f"{base}/docs").localCheckpoint()
+        spans = spark.read.parquet(f"{base}/spans").localCheckpoint()
+        nbase = t.dir
+        # The compaction rewrite collapses each bucket's accumulated
+        # per-batch delta files into ONE file per hb partition (the
+        # repartition("hb") inside the bucketed writer), restoring O(1)
+        # files per bucket for the update-time pruned probe.  Compaction is
+        # also the sanctioned WIDTH-MIGRATION point (ADVICE r10): it
+        # re-buckets the full log at the current env width and stamps that
+        # width into the new snapshot, so updates after a knob change probe
+        # a uniform layout.
+        _write_occ_bucketed(occ, f"{nbase}/occ", OCC_BUCKET_CHARS)
+        dup.coalesce(1).write.mode("overwrite").parquet(f"{nbase}/dup")
+        docs.coalesce(1).write.mode("overwrite").parquet(f"{nbase}/docs")
+        spans.write.mode("overwrite").parquet(f"{nbase}/spans")
+        _occ_width_write(nbase, OCC_BUCKET_CHARS)
 
 
 def substr_resolve(spark: SparkSession, index_path: str) -> DataFrame:

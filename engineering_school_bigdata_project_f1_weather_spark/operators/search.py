@@ -777,16 +777,12 @@ def search_index_init(
 ) -> None:
     """Bootstrap the retrieval index on an initial corpus; commits
     snapshot ``si_v0`` via the atomic CURRENT swap."""
-    import os
-
     from ..functions import snapshots
 
-    os.makedirs(index_path, exist_ok=True)
     d = docs.select("doc_id", "text").localCheckpoint()
     postings, doclen = _sidx_rows(d)
-    snap = f"{SIDX_PREFIX}0"
-    _sidx_write(postings, doclen, f"{index_path}/{snap}")
-    snapshots.snap_commit(index_path, snap, SIDX_PREFIX)
+    with snapshots.txn(index_path, SIDX_PREFIX) as t:
+        _sidx_write(postings, doclen, t.dir)
 
 
 def search_index_update(
@@ -798,8 +794,7 @@ def search_index_update(
     roster); returns the batch's doclen rows (empty on a clean retry)."""
     from ..functions import snapshots
 
-    live = snapshots.snap_live(index_path)
-    base = f"{index_path}/{live}"
+    base = f"{index_path}/{snapshots.snap_live(index_path)}"
     roster = spark.read.parquet(f"{base}/doclen").select("doc_id")
     batch = (
         new_docs.select("doc_id", "text")
@@ -810,12 +805,9 @@ def search_index_update(
         return empty_rel(spark, "doc_id long, dl long")
     postings, doclen = _sidx_rows(batch)
     doclen = doclen.localCheckpoint()
-    nxt = snapshots.snap_next(live, SIDX_PREFIX)
-    nxt_dir = f"{index_path}/{nxt}"
-    _sidx_write(postings, doclen, nxt_dir)
-    snapshots.link_parquet_files(f"{base}/postings", f"{nxt_dir}/postings")
-    snapshots.link_parquet_files(f"{base}/doclen", f"{nxt_dir}/doclen")
-    snapshots.snap_commit(index_path, nxt, SIDX_PREFIX)
+    with snapshots.txn(index_path, SIDX_PREFIX) as t:
+        _sidx_write(postings, doclen, t.dir)
+        t.carry("postings", "doclen")
     return doclen
 
 
@@ -826,24 +818,20 @@ def search_index_compact(spark: SparkSession, index_path: str) -> None:
     Serving identical before and after; idempotent."""
     from ..functions import snapshots
 
-    live = snapshots.snap_live(index_path)
-    base = f"{index_path}/{live}"
-    postings = (
-        spark.read.parquet(f"{base}/postings")
-        .select("doc_id", "token", "tf", "tb")
-        .localCheckpoint()
-    )
-    doclen = spark.read.parquet(f"{base}/doclen").localCheckpoint()
-    nxt = snapshots.snap_next(live, SIDX_PREFIX)
-    nxt_dir = f"{index_path}/{nxt}"
-    (
-        postings.repartition("tb")  # one file per bucket post-compaction
-        .write.partitionBy("tb")
-        .mode("overwrite")
-        .parquet(f"{nxt_dir}/postings")
-    )
-    doclen.coalesce(1).write.mode("overwrite").parquet(f"{nxt_dir}/doclen")
-    snapshots.snap_commit(index_path, nxt, SIDX_PREFIX)
+    with snapshots.txn(index_path, SIDX_PREFIX) as t:
+        postings = (
+            spark.read.parquet(f"{t.live}/postings")
+            .select("doc_id", "token", "tf", "tb")
+            .localCheckpoint()
+        )
+        doclen = spark.read.parquet(f"{t.live}/doclen").localCheckpoint()
+        (
+            postings.repartition("tb")  # one file per bucket post-compaction
+            .write.partitionBy("tb")
+            .mode("overwrite")
+            .parquet(f"{t.dir}/postings")
+        )
+        doclen.coalesce(1).write.mode("overwrite").parquet(f"{t.dir}/doclen")
 
 
 def search_index_serve(

@@ -1279,15 +1279,13 @@ def semdedup_index_init(
         .select("vec_a", "vec_b")
     )
     dominated = _semantic_dominated(cand, withcs)
-    snap = "sem_v0"
-    sdir = f"{index_path}/{snap}"
-    _semdedup_write_vectors(withcs, f"{sdir}/vectors")
-    # checkpoint + sized write (round 12 opt, guide §6): dominated is
-    # loser-set-sized and was writing one near-empty file per task.
-    snapshots.write_sized(
-        dominated.localCheckpoint(), f"{sdir}/dominated"
-    )
-    snapshots.snap_commit(index_path, snap, "sem_v")
+    with snapshots.txn(index_path, "sem_v") as t:
+        _semdedup_write_vectors(withcs, f"{t.dir}/vectors")
+        # checkpoint + sized write (round 12 opt, guide §6): dominated is
+        # loser-set-sized and was writing one near-empty file per task.
+        snapshots.write_sized(
+            dominated.localCheckpoint(), f"{t.dir}/dominated"
+        )
 
 
 def semdedup_index_update(
@@ -1305,71 +1303,63 @@ def semdedup_index_update(
     Per-batch work: |batch|·k assignment, candidate pairs only against
     touched clusters (≤ |batch| clusters of ~TARGET_LIST_SIZE each),
     batch-sized writes via hard-linked snapshots."""
-    live = snapshots.snap_live(index_path)
-    live_dir = f"{index_path}/{live}"
-    cents = spark.read.parquet(f"{index_path}/centroids")
-    k = int(spark.read.parquet(f"{index_path}/meta").first()["k"])
-    old_vecs = spark.read.parquet(f"{live_dir}/vectors")
-    old_dom = spark.read.parquet(f"{live_dir}/dominated")
+    with snapshots.txn(index_path, "sem_v") as t:
+        live_dir = t.live
+        cents = spark.read.parquet(f"{index_path}/centroids")
+        k = int(spark.read.parquet(f"{index_path}/meta").first()["k"])
+        old_vecs = spark.read.parquet(f"{live_dir}/vectors")
+        old_dom = spark.read.parquet(f"{live_dir}/dominated")
 
-    new_base = (
-        _quantize_vectors(new_vectors)
-        .join(old_vecs.select("vec_id"), "vec_id", "left_anti")
-        .localCheckpoint()
-    )
-    new_cs = _semantic_withcs(new_base, cents, k).localCheckpoint()
-    # Clusters the batch touches — bounded (<= k) driver list; the
-    # stored probe filters on the cb PARTITION column so parquet
-    # partition pruning skips every untouched cluster's files.
-    touched = [
-        r["cb"]
-        for r in new_cs.select(
-            F.concat(F.lit("c"), F.col("cluster_id")).alias("cb")
+        new_base = (
+            _quantize_vectors(new_vectors)
+            .join(old_vecs.select("vec_id"), "vec_id", "left_anti")
+            .localCheckpoint()
         )
-        .distinct()
-        .collect()
-    ]
-    stored_touched = old_vecs.where(F.col("cb").isin(touched)).select(
-        "vec_id", "cluster_id", "cent_sim_e6", "q", "n2"
-    )
-    both = stored_touched.unionByName(new_cs).localCheckpoint()
-    # pairs with at least one NEW member: new x (stored-in-touched or
-    # new), normalized to vec_a < vec_b; distinct collapses the double
-    # count of new x new.
-    cand = (
-        new_cs.select(F.col("vec_id").alias("va"), "cluster_id")
-        .join(
-            both.select(F.col("vec_id").alias("vb"), "cluster_id"),
-            "cluster_id",
+        new_cs = _semantic_withcs(new_base, cents, k).localCheckpoint()
+        # Clusters the batch touches — bounded (<= k) driver list; the
+        # stored probe filters on the cb PARTITION column so parquet
+        # partition pruning skips every untouched cluster's files.
+        touched = [
+            r["cb"]
+            for r in new_cs.select(
+                F.concat(F.lit("c"), F.col("cluster_id")).alias("cb")
+            )
+            .distinct()
+            .collect()
+        ]
+        stored_touched = old_vecs.where(F.col("cb").isin(touched)).select(
+            "vec_id", "cluster_id", "cent_sim_e6", "q", "n2"
         )
-        .where(F.col("va") != F.col("vb"))
-        .select(
-            F.least("va", "vb").alias("vec_a"),
-            F.greatest("va", "vb").alias("vec_b"),
+        both = stored_touched.unionByName(new_cs).localCheckpoint()
+        # pairs with at least one NEW member: new x (stored-in-touched or
+        # new), normalized to vec_a < vec_b; distinct collapses the double
+        # count of new x new.
+        cand = (
+            new_cs.select(F.col("vec_id").alias("va"), "cluster_id")
+            .join(
+                both.select(F.col("vec_id").alias("vb"), "cluster_id"),
+                "cluster_id",
+            )
+            .where(F.col("va") != F.col("vb"))
+            .select(
+                F.least("va", "vb").alias("vec_a"),
+                F.greatest("va", "vb").alias("vec_b"),
+            )
+            .distinct()
         )
-        .distinct()
-    )
-    newly_dom = (
-        _semantic_dominated(cand, both)
-        .join(old_dom, "vec_id", "left_anti")
-        .join(
-            both.select("vec_id", "cluster_id"), "vec_id"
+        newly_dom = (
+            _semantic_dominated(cand, both)
+            .join(old_dom, "vec_id", "left_anti")
+            .join(
+                both.select("vec_id", "cluster_id"), "vec_id"
+            )
+            .localCheckpoint()  # materialize BEFORE mutating the index
         )
-        .localCheckpoint()  # materialize BEFORE mutating the index
-    )
 
-    nxt = snapshots.snap_next(live, "sem_v")
-    nxt_dir = f"{index_path}/{nxt}"
-    _semdedup_write_vectors(new_cs, f"{nxt_dir}/vectors")
-    # newly_dom is checkpointed above — the sized write's count is free.
-    snapshots.write_sized(
-        newly_dom.select("vec_id"), f"{nxt_dir}/dominated"
-    )
-    snapshots.link_parquet_files(f"{live_dir}/vectors", f"{nxt_dir}/vectors")
-    snapshots.link_parquet_files(
-        f"{live_dir}/dominated", f"{nxt_dir}/dominated"
-    )
-    snapshots.snap_commit(index_path, nxt, "sem_v")
+        _semdedup_write_vectors(new_cs, f"{t.dir}/vectors")
+        # newly_dom is checkpointed above — the sized write's count is free.
+        snapshots.write_sized(newly_dom.select("vec_id"), f"{t.dir}/dominated")
+        t.carry("vectors", "dominated")
     return newly_dom
 
 
@@ -1383,21 +1373,17 @@ def semdedup_index_compact(spark: SparkSession, index_path: str) -> None:
     Idempotent; per-batch ingest stays ∝ batch because updates only
     append, and compaction amortizes read-side file-count growth on its
     own schedule."""
-    live = snapshots.snap_live(index_path)
-    live_dir = f"{index_path}/{live}"
-    vecs = (
-        spark.read.parquet(f"{live_dir}/vectors")
-        .select("vec_id", "cluster_id", "cent_sim_e6", "q", "n2")
-        .localCheckpoint()
-    )
-    dom = spark.read.parquet(f"{live_dir}/dominated").localCheckpoint()
-    nxt = snapshots.snap_next(live, "sem_v")
-    nxt_dir = f"{index_path}/{nxt}"
-    # one file per cluster partition (the repartition("cb") inside the
-    # bucketed writer), restoring O(1) files per touched-cluster probe
-    _semdedup_write_vectors(vecs, f"{nxt_dir}/vectors")
-    dom.coalesce(1).write.mode("overwrite").parquet(f"{nxt_dir}/dominated")
-    snapshots.snap_commit(index_path, nxt, "sem_v")
+    with snapshots.txn(index_path, "sem_v") as t:
+        vecs = (
+            spark.read.parquet(f"{t.live}/vectors")
+            .select("vec_id", "cluster_id", "cent_sim_e6", "q", "n2")
+            .localCheckpoint()
+        )
+        dom = spark.read.parquet(f"{t.live}/dominated").localCheckpoint()
+        # one file per cluster partition (the repartition("cb") inside the
+        # bucketed writer), restoring O(1) files per touched-cluster probe
+        _semdedup_write_vectors(vecs, f"{t.dir}/vectors")
+        dom.coalesce(1).write.mode("overwrite").parquet(f"{t.dir}/dominated")
 
 
 def semdedup_resolve(spark: SparkSession, index_path: str) -> DataFrame:
@@ -1782,22 +1768,22 @@ def ann_index_init(
         k, _ = scaled_ann_params(base.count())
     cents = _train_centroids(spark, base, k=k)
     cents.write.mode("overwrite").parquet(f"{index_path}/centroids")
-    snap = "state_v0"
-    # sized writes (round 12 opt, guide §6): base is cached (count is a
-    # cheap scan); assign is n·ASSIGN_LISTS rows, checkpointed so the
-    # sizing count doesn't re-run the assignment.
-    snapshots.write_sized(base, f"{index_path}/{snap}/vectors")
-    snapshots.write_sized(
-        _assign_lists(base, cents, ASSIGN_LISTS, k=k).localCheckpoint(),
-        f"{index_path}/{snap}/assign",
-    )
-    # Persist k as index metadata (round 7, VERDICT r6 item 6 / ADVICE
-    # r5): the update path dispatches assignment strategy on k, and
-    # without metadata it re-counted the centroid frame on every batch.
-    snapshots.meta_row(spark, "k long", (int(k),)).write.mode(
-        "overwrite"
-    ).parquet(f"{index_path}/meta")
-    snapshots.snap_commit(index_path, snap, "state_v")
+    with snapshots.txn(index_path, "state_v") as t:
+        # sized writes (round 12 opt, guide §6): base is cached (count is
+        # a cheap scan); assign is n·ASSIGN_LISTS rows, checkpointed so
+        # the sizing count doesn't re-run the assignment.
+        snapshots.write_sized(base, f"{t.dir}/vectors")
+        snapshots.write_sized(
+            _assign_lists(base, cents, ASSIGN_LISTS, k=k).localCheckpoint(),
+            f"{t.dir}/assign",
+        )
+        # Persist k as index metadata (round 7, VERDICT r6 item 6 /
+        # ADVICE r5): the update path dispatches assignment strategy on
+        # k, and without metadata it re-counted the centroid frame on
+        # every batch.
+        snapshots.meta_row(spark, "k long", (int(k),)).write.mode(
+            "overwrite"
+        ).parquet(f"{index_path}/meta")
 
 
 def ann_index_update(
@@ -1827,71 +1813,64 @@ def ann_index_update(
     :func:`dedup.minhash_index_update`."""
     import functools
 
-    live = snapshots.snap_live(index_path)
-    live_dir = f"{index_path}/{live}"
-    cents = spark.read.parquet(f"{index_path}/centroids")
-    old_vecs = spark.read.parquet(f"{live_dir}/vectors")
-    old_assign = spark.read.parquet(f"{live_dir}/assign")
-    # k from the index metadata ann_index_init persisted (round 7): the
-    # one-row meta read replaces a per-batch count job over the centroid
-    # table as the strategy-dispatch hint. Indexes written before meta
-    # existed fall back to the count.
-    try:
+    with snapshots.txn(index_path, "state_v") as t:
+        live_dir = t.live
+        cents = spark.read.parquet(f"{index_path}/centroids")
+        old_vecs = spark.read.parquet(f"{live_dir}/vectors")
+        old_assign = spark.read.parquet(f"{live_dir}/assign")
+        # k from the index metadata ann_index_init persisted (round 7): the
+        # one-row meta read replaces a per-batch count job over the centroid
+        # table as the strategy-dispatch hint.
         k = int(spark.read.parquet(f"{index_path}/meta").first()["k"])
-    except Exception:
-        k = None
 
-    new_base = (
-        _quantize_vectors(new_vectors)
-        .join(old_vecs.select("vec_id"), "vec_id", "left_anti")
-        .localCheckpoint()
-    )
-    new_assign = _assign_lists(
-        new_base, cents, ASSIGN_LISTS, k=k
-    ).localCheckpoint()
+        new_base = (
+            _quantize_vectors(new_vectors)
+            .join(old_vecs.select("vec_id"), "vec_id", "left_anti")
+            .localCheckpoint()
+        )
+        new_assign = _assign_lists(
+            new_base, cents, ASSIGN_LISTS, k=k
+        ).localCheckpoint()
 
-    all_assign = old_assign.unionByName(new_assign)
-    cand = (
-        new_assign.alias("a")
-        .join(all_assign.alias("b"), "centroid_id")
-        .where(F.col("a.vec_id") != F.col("b.vec_id"))
-        .select(
-            F.least("a.vec_id", "b.vec_id").alias("vec_a"),
-            F.greatest("a.vec_id", "b.vec_id").alias("vec_b"),
+        all_assign = old_assign.unionByName(new_assign)
+        cand = (
+            new_assign.alias("a")
+            .join(all_assign.alias("b"), "centroid_id")
+            .where(F.col("a.vec_id") != F.col("b.vec_id"))
+            .select(
+                F.least("a.vec_id", "b.vec_id").alias("vec_a"),
+                F.greatest("a.vec_id", "b.vec_id").alias("vec_b"),
+            )
+            .distinct()
         )
-        .distinct()
-    )
-    all_vecs = old_vecs.unionByName(new_base)
-    av = all_vecs.select(
-        F.col("vec_id").alias("vec_a"), F.col("q").alias("qa"), F.col("n2").alias("na")
-    )
-    bv = all_vecs.select(
-        F.col("vec_id").alias("vec_b"), F.col("q").alias("qb"), F.col("n2").alias("nb")
-    )
-    pairs = (
-        cand.join(av, "vec_a")
-        .join(bv, "vec_b")
-        .mapInPandas(
-            functools.partial(_verify_pairs_arrow, min_e6=EMBED_DUP_MIN_E6),
-            schema="vec_a long, vec_b long, sim_e6 long",
+        all_vecs = old_vecs.unionByName(new_base)
+        av = all_vecs.select(
+            F.col("vec_id").alias("vec_a"),
+            F.col("q").alias("qa"),
+            F.col("n2").alias("na"),
         )
-    )
-    result = pairs.localCheckpoint()  # materialize BEFORE mutating the index
-    # Commit protocol (shared convention, functions/snapshots.py): write
-    # the batch's rows into the NEXT version dir (mode overwrite clears
-    # any crash debris reusing the name), hard-link the live snapshot's
-    # data files in, then swap CURRENT once for both tables. Nothing
-    # under the live dir is ever touched, so a crash at any point —
-    # including between the two writes below — leaves the previous
-    # state fully intact and the retry redoes the whole batch.
-    nxt = snapshots.snap_next(live, "state_v")
-    nxt_dir = f"{index_path}/{nxt}"
-    # both frames are checkpointed above — sized writes are free.
-    snapshots.write_sized(new_assign, f"{nxt_dir}/assign")
-    snapshots.write_sized(new_base, f"{nxt_dir}/vectors")
-    snapshots.link_parquet_files(f"{live_dir}/assign", f"{nxt_dir}/assign")
-    snapshots.link_parquet_files(f"{live_dir}/vectors", f"{nxt_dir}/vectors")
-    snapshots.snap_commit(index_path, nxt, "state_v")
+        bv = all_vecs.select(
+            F.col("vec_id").alias("vec_b"),
+            F.col("q").alias("qb"),
+            F.col("n2").alias("nb"),
+        )
+        pairs = (
+            cand.join(av, "vec_a")
+            .join(bv, "vec_b")
+            .mapInPandas(
+                functools.partial(_verify_pairs_arrow, min_e6=EMBED_DUP_MIN_E6),
+                schema="vec_a long, vec_b long, sim_e6 long",
+            )
+        )
+        result = pairs.localCheckpoint()  # materialize BEFORE the commit
+        # The batch's rows go into the NEXT version dir and CURRENT swaps
+        # once for both tables (functions/snapshots.py), so a crash at any
+        # point — including between the two writes below — leaves the
+        # previous state fully intact and the retry redoes the whole batch.
+        # Both frames are checkpointed above — sized writes are free.
+        snapshots.write_sized(new_assign, f"{t.dir}/assign")
+        snapshots.write_sized(new_base, f"{t.dir}/vectors")
+        t.carry("assign", "vectors")
     return result
 
 

@@ -62,7 +62,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 
-from ..functions import texts
+from ..functions import snapshots, texts
 from ..sources.tables import load_table
 from .events import load_events
 
@@ -888,12 +888,8 @@ def bloom_index_init(spark: SparkSession, events_df: DataFrame, path: str) -> No
     events (no false negatives; false-positive rate set by m/d against
     the per-day active-user count).  Same versioned-snapshot + atomic
     CURRENT-pointer durability as the HLL register table."""
-    os.makedirs(path, exist_ok=True)
-    snap = "bits_v0"
-    _bloom_bits_of(events_df).write.mode("overwrite").parquet(
-        os.path.join(path, snap)
-    )
-    _snap_commit(path, snap, "bits_v")
+    with snapshots.txn(path, "bits_v") as t:
+        _bloom_bits_of(events_df).write.mode("overwrite").parquet(t.dir)
 
 
 def bloom_index_update(
@@ -904,13 +900,11 @@ def bloom_index_update(
     snapshot.  IDEMPOTENT — re-delivery is absorbed because
     a ∪ a = a (the Bloom merge law as persisted state).  Returns the
     post-merge frame; per-batch work is O(|batch| + m·days-touched)."""
-    live = _snap_live(path)
-    old = spark.read.parquet(os.path.join(path, live))
-    merged = old.unionByName(_bloom_bits_of(new_events)).distinct()
-    nxt = f"bits_v{int(live.rsplit('_v', 1)[1]) + 1}"
-    merged.write.mode("overwrite").parquet(os.path.join(path, nxt))
-    _snap_commit(path, nxt, "bits_v")
-    return spark.read.parquet(os.path.join(path, nxt))
+    with snapshots.txn(path, "bits_v") as t:
+        old = spark.read.parquet(t.live)
+        merged = old.unionByName(_bloom_bits_of(new_events)).distinct()
+        merged.write.mode("overwrite").parquet(t.dir)
+    return spark.read.parquet(t.dir)
 
 
 def _bloom_bits_of(events_df: DataFrame) -> DataFrame:
@@ -1040,24 +1034,13 @@ ORDER BY 1
 # ------------------------------------- incremental HLL register table
 #
 # Durability (round 7, ADVICE r6): updates never overwrite the live
-# snapshot in place.  Each state version is written to a fresh
-# ``registers_v{n}`` directory and a CURRENT pointer file is swapped
-# atomically (write-temp + os.replace — POSIX rename atomicity), so a
-# crash or executor loss at ANY point leaves CURRENT pointing at a
-# complete, readable snapshot; the failed version directory is an orphan
-# that the next successful update garbage-collects.  This replaces the
-# previous read-modify-overwrite (whose localCheckpoint guard still lost
-# the table if an executor died mid-overwrite).  On an object store the
-# pointer swap becomes a table-format commit (Delta/Iceberg log); the
-# snapshot layout is unchanged.
-
-
-# Shared with the corpus-sized dedup/ANN indexes since round 8 —
-# implementation lives in functions/snapshots.py; thin aliases kept so
-# the sketch tests' `_snap_live` probes stay valid.
-from ..functions.snapshots import meta_row as _meta_row  # noqa: E402
-from ..functions.snapshots import snap_commit as _snap_commit  # noqa: E402
-from ..functions.snapshots import snap_live as _snap_live  # noqa: E402
+# snapshot in place.  Each state version is a fresh ``registers_v{n}``
+# directory committed by an atomic CURRENT swap (``snapshots.txn``, the
+# protocol every index family shares), so a crash or executor loss at
+# ANY point leaves CURRENT pointing at a complete, readable snapshot.
+# This replaces the previous read-modify-overwrite (whose
+# localCheckpoint guard still lost the table if an executor died
+# mid-overwrite).
 
 
 def _snap_meta_row(spark: SparkSession, batch_id: str) -> DataFrame:
@@ -1065,12 +1048,7 @@ def _snap_meta_row(spark: SparkSession, batch_id: str) -> DataFrame:
     opt): createDataFrame([(id,)]) parallelized the 1-row list into 32
     Python-RDD slices — a Python-worker job plus up to 32 ledger files
     PER BATCH; this writes one."""
-    return _meta_row(spark, "batch_id string", (batch_id,))
-
-
-# back-compat aliases for the HLL table (tests reference _hll_live)
-def _hll_live(path: str) -> str:
-    return _snap_live(path)
+    return snapshots.meta_row(spark, "batch_id string", (batch_id,))
 
 
 def hll_index_init(spark: SparkSession, events_df: DataFrame, path: str) -> None:
@@ -1080,12 +1058,8 @@ def hll_index_init(spark: SparkSession, events_df: DataFrame, path: str) -> None
     pipeline: the lake keeps ≤ m rows per day FOREVER and answers any
     day/month/arbitrary-window distinct-user question by register-MAX
     merge, never re-reading raw events."""
-    os.makedirs(path, exist_ok=True)
-    snap = "registers_v0"
-    _registers_of(events_df).write.mode("overwrite").parquet(
-        os.path.join(path, snap)
-    )
-    _snap_commit(path, snap, "registers_v")
+    with snapshots.txn(path, "registers_v") as t:
+        _registers_of(events_df).write.mode("overwrite").parquet(t.dir)
 
 
 def hll_index_update(
@@ -1099,20 +1073,18 @@ def hll_index_update(
     contract as the minhash / ANN index updates, via the merge law
     instead of an anti-join).  Returns the post-merge register frame;
     per-batch work is O(|batch| + m·days-touched), never corpus-sized."""
-    live = _hll_live(path)
-    old = spark.read.parquet(os.path.join(path, live))
-    merged = (
-        old.unionByName(_registers_of(new_events))
-        .groupBy("day_us", "reg")
-        .agg(F.max("m_reg").alias("m_reg"))
-    )
-    nxt = f"registers_v{int(live.rsplit('_v', 1)[1]) + 1}"
-    # Writing to a FRESH directory means the plan may stream straight
-    # from the old snapshot's files — no checkpoint needed to sever
-    # lineage, because nothing it reads is being replaced.
-    merged.write.mode("overwrite").parquet(os.path.join(path, nxt))
-    _snap_commit(path, nxt, "registers_v")
-    return spark.read.parquet(os.path.join(path, nxt))
+    with snapshots.txn(path, "registers_v") as t:
+        old = spark.read.parquet(t.live)
+        merged = (
+            old.unionByName(_registers_of(new_events))
+            .groupBy("day_us", "reg")
+            .agg(F.max("m_reg").alias("m_reg"))
+        )
+        # Writing to a FRESH directory means the plan may stream straight
+        # from the old snapshot's files — no checkpoint needed to sever
+        # lineage, because nothing it reads is being replaced.
+        merged.write.mode("overwrite").parquet(t.dir)
+    return spark.read.parquet(t.dir)
 
 
 def _registers_of(events_df: DataFrame) -> DataFrame:
@@ -1477,16 +1449,13 @@ def hist_index_init(spark: SparkSession, events_df: DataFrame, path: str) -> Non
     """Materialize the per-day histogram table (counts + applied-batch
     ledger) for an initial corpus; ≤ B rows per day kept forever, any
     coarser-grain percentile served by per-bin SUM merge."""
-    os.makedirs(path, exist_ok=True)
-    snap = "hist_v0"
-    base = os.path.join(path, snap)
-    _daily_hist_of(events_df).write.mode("overwrite").parquet(
-        os.path.join(base, "counts")
-    )
-    _snap_meta_row(spark, "__init__").write.mode(
-        "overwrite"
-    ).parquet(os.path.join(base, "batches"))
-    _snap_commit(path, snap, "hist_v")
+    with snapshots.txn(path, "hist_v") as t:
+        _daily_hist_of(events_df).write.mode("overwrite").parquet(
+            os.path.join(t.dir, "counts")
+        )
+        _snap_meta_row(spark, "__init__").write.mode(
+            "overwrite"
+        ).parquet(os.path.join(t.dir, "batches"))
 
 
 def hist_index_update(
@@ -1499,8 +1468,7 @@ def hist_index_update(
     snapshot and atomically swap CURRENT.  Per-batch work is
     O(|batch| + B·days-touched), never corpus-sized.  Returns the
     post-merge (day_us, bin, cnt) frame."""
-    live = _snap_live(path)
-    base = os.path.join(path, live)
+    base = os.path.join(path, snapshots.snap_live(path))
     ledger = spark.read.parquet(os.path.join(base, "batches"))
     # ledger is batch-count-sized (one row per applied batch) — the
     # membership probe is a steering-sized action, like the k-row
@@ -1513,14 +1481,12 @@ def hist_index_update(
         .groupBy("day_us", "bin")
         .agg(F.sum("cnt").alias("cnt"))
     )
-    nxt = f"hist_v{int(live.rsplit('_v', 1)[1]) + 1}"
-    nbase = os.path.join(path, nxt)
-    merged.write.mode("overwrite").parquet(os.path.join(nbase, "counts"))
-    ledger.unionByName(
-        _snap_meta_row(spark, batch_id)
-    ).write.mode("overwrite").parquet(os.path.join(nbase, "batches"))
-    _snap_commit(path, nxt, "hist_v")
-    return spark.read.parquet(os.path.join(nbase, "counts"))
+    with snapshots.txn(path, "hist_v") as t:
+        merged.write.mode("overwrite").parquet(os.path.join(t.dir, "counts"))
+        ledger.unionByName(
+            _snap_meta_row(spark, batch_id)
+        ).write.mode("overwrite").parquet(os.path.join(t.dir, "batches"))
+    return spark.read.parquet(os.path.join(t.dir, "counts"))
 
 
 # Direct month-grain binning from raw events: equals the Spark side's
@@ -1653,12 +1619,8 @@ def kmv_index_init(spark: SparkSession, events_df: DataFrame, path: str) -> None
     completing the persisted-sketch family (minhash / ANN / HLL / Bloom
     / histogram): ≤ KMV_K rows per day kept forever, any window's
     distinct-count estimate served by min-k merge of its days."""
-    os.makedirs(path, exist_ok=True)
-    snap = "kmv_v0"
-    _daily_kmv_of(events_df).write.mode("overwrite").parquet(
-        os.path.join(path, snap)
-    )
-    _snap_commit(path, snap, "kmv_v")
+    with snapshots.txn(path, "kmv_v") as t:
+        _daily_kmv_of(events_df).write.mode("overwrite").parquet(t.dir)
 
 
 def kmv_index_update(
@@ -1671,24 +1633,22 @@ def kmv_index_update(
     merge is a semilattice, so a re-delivered batch is a no-op and no
     ledger is needed (contrast hist_index_update's non-idempotent SUM).
     Per-batch work is O(|batch| + k·days-touched), never corpus-sized."""
-    live = _snap_live(path)
-    old = spark.read.parquet(os.path.join(path, live))
     # Both merge inputs are already ≤ k rows/day sketches, so the union
     # is ≤ 2k rows per day BY CONSTRUCTION — a plain per-day rank is
     # skew-safe here and saves the two-level's extra exchange (the
     # two-level stays on the raw-batch side, where a day is unbounded).
     w = Window.partitionBy("day_us").orderBy("h")
-    merged = (
-        old.unionByName(_daily_kmv_of(new_events))
-        .distinct()
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= KMV_K)
-        .drop("rn")
-    )
-    nxt = f"kmv_v{int(live.rsplit('_v', 1)[1]) + 1}"
-    merged.write.mode("overwrite").parquet(os.path.join(path, nxt))
-    _snap_commit(path, nxt, "kmv_v")
-    return spark.read.parquet(os.path.join(path, nxt))
+    with snapshots.txn(path, "kmv_v") as t:
+        merged = (
+            spark.read.parquet(t.live)
+            .unionByName(_daily_kmv_of(new_events))
+            .distinct()
+            .withColumn("rn", F.row_number().over(w))
+            .where(F.col("rn") <= KMV_K)
+            .drop("rn")
+        )
+        merged.write.mode("overwrite").parquet(t.dir)
+    return spark.read.parquet(t.dir)
 
 
 def events_kmv_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2006,12 +1966,8 @@ def qsample_index_init(
     of its days (same semilattice and snapshot durability as the KMV
     twin; the carried ``cents`` payload is what turns the membership
     sketch into a quantile sketch)."""
-    os.makedirs(path, exist_ok=True)
-    snap = "qs_v0"
-    _daily_qsample_of(events_df).write.mode("overwrite").parquet(
-        os.path.join(path, snap)
-    )
-    _snap_commit(path, snap, "qs_v")
+    with snapshots.txn(path, "qs_v") as t:
+        _daily_qsample_of(events_df).write.mode("overwrite").parquet(t.dir)
 
 
 def qsample_index_update(
@@ -2023,20 +1979,18 @@ def qsample_index_update(
     key makes the per-row (h, cents) pair unique, so a re-delivered
     batch is a no-op (no ledger; contrast hist_index_update's SUM).
     Per-batch work is O(|batch| + k·days-touched), never corpus-sized."""
-    live = _snap_live(path)
-    old = spark.read.parquet(os.path.join(path, live))
     w = Window.partitionBy("day_us").orderBy("h")
-    merged = (
-        old.unionByName(_daily_qsample_of(new_events))
-        .distinct()
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= QSAMPLE_K)
-        .drop("rn")
-    )
-    nxt = f"qs_v{int(live.rsplit('_v', 1)[1]) + 1}"
-    merged.write.mode("overwrite").parquet(os.path.join(path, nxt))
-    _snap_commit(path, nxt, "qs_v")
-    return spark.read.parquet(os.path.join(path, nxt))
+    with snapshots.txn(path, "qs_v") as t:
+        merged = (
+            spark.read.parquet(t.live)
+            .unionByName(_daily_qsample_of(new_events))
+            .distinct()
+            .withColumn("rn", F.row_number().over(w))
+            .where(F.col("rn") <= QSAMPLE_K)
+            .drop("rn")
+        )
+        merged.write.mode("overwrite").parquet(t.dir)
+    return spark.read.parquet(t.dir)
 
 
 def events_value_quantiles_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2546,20 +2500,18 @@ def ndv_index_init(spark: SparkSession, df: DataFrame, path: str) -> None:
     grows.  The exact-NDV audit column of the batch entry is
     deliberately NOT maintained (it is corpus-sized state); serving
     emits the estimator profile."""
-    os.makedirs(path, exist_ok=True)
-    base = os.path.join(path, "ndv_v0")
     # one melt scan; regs + counts both read the staged distinct frame
     dv = _ndv_distinct(_ndv_melted(df)).localCheckpoint()
-    _ndv_regs_of(dv.select("col_name", "v")).write.mode("overwrite").parquet(
-        os.path.join(base, "regs")
-    )
-    _ndv_counts_of(dv).write.mode("overwrite").parquet(
-        os.path.join(base, "counts")
-    )
-    _snap_meta_row(spark, "__init__").write.mode(
-        "overwrite"
-    ).parquet(os.path.join(base, "batches"))
-    _snap_commit(path, "ndv_v0", "ndv_v")
+    with snapshots.txn(path, "ndv_v") as t:
+        _ndv_regs_of(dv.select("col_name", "v")).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(t.dir, "regs"))
+        _ndv_counts_of(dv).write.mode("overwrite").parquet(
+            os.path.join(t.dir, "counts")
+        )
+        _snap_meta_row(spark, "__init__").write.mode(
+            "overwrite"
+        ).parquet(os.path.join(t.dir, "batches"))
 
 
 def ndv_index_update(
@@ -2573,8 +2525,7 @@ def ndv_index_update(
     serving profile.  Serving parity with the batch entry's estimator
     columns is pytest-pinned (init on half A, update with half B ≡
     one-shot profile of A ∪ B — MAX/SUM merge laws compose)."""
-    live = _snap_live(path)
-    base = os.path.join(path, live)
+    base = os.path.join(path, snapshots.snap_live(path))
     ledger = spark.read.parquet(os.path.join(base, "batches"))
     if ledger.where(F.col("batch_id") == batch_id).limit(1).count() > 0:
         return ndv_index_profile(spark, path)
@@ -2595,21 +2546,19 @@ def ndv_index_update(
             F.sum("n_null").alias("n_null"),
         )
     )
-    nxt = f"ndv_v{int(live.rsplit('_v', 1)[1]) + 1}"
-    nbase = os.path.join(path, nxt)
-    regs.write.mode("overwrite").parquet(os.path.join(nbase, "regs"))
-    counts.write.mode("overwrite").parquet(os.path.join(nbase, "counts"))
-    ledger.unionByName(
-        _snap_meta_row(spark, batch_id)
-    ).write.mode("overwrite").parquet(os.path.join(nbase, "batches"))
-    _snap_commit(path, nxt, "ndv_v")
+    with snapshots.txn(path, "ndv_v") as t:
+        regs.write.mode("overwrite").parquet(os.path.join(t.dir, "regs"))
+        counts.write.mode("overwrite").parquet(os.path.join(t.dir, "counts"))
+        ledger.unionByName(
+            _snap_meta_row(spark, batch_id)
+        ).write.mode("overwrite").parquet(os.path.join(t.dir, "batches"))
     return ndv_index_profile(spark, path)
 
 
 def ndv_index_profile(spark: SparkSession, path: str) -> DataFrame:
     """Serve the estimator profile from the live state — the batch
     entry's columns minus the corpus-sized exact-NDV audit column."""
-    base = os.path.join(path, _snap_live(path))
+    base = os.path.join(path, snapshots.snap_live(path))
     counts = spark.read.parquet(os.path.join(base, "counts"))
     regs = spark.read.parquet(os.path.join(base, "regs"))
     return (

@@ -13,6 +13,7 @@ import pyspark.sql.functions as F
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from engineering_school_bigdata_project_f1_weather_spark.functions import snapshots
 from engineering_school_bigdata_project_f1_weather_spark.operators import sketch
 
 
@@ -359,14 +360,14 @@ def test_hll_index_update_merges_and_is_idempotent(spark, sf_dir, tmp_path):
     # orphan left by a crashed update is GC'd by the next successful one.
     import os
 
-    live = sketch._hll_live(idx)
+    live = snapshots.snap_live(idx)
     assert os.path.isdir(os.path.join(idx, live))
     snaps = [d for d in os.listdir(idx) if d.startswith("registers_v")]
     assert snaps == [live]
     os.makedirs(os.path.join(idx, "registers_v99"))  # simulated crash debris
     sketch.hll_index_update(spark, second, idx)
     snaps = [d for d in os.listdir(idx) if d.startswith("registers_v")]
-    assert snaps == [sketch._hll_live(idx)]
+    assert snaps == [snapshots.snap_live(idx)]
 
 
 def test_bloom_semi_join_prefilter_selectivity(spark, sf_dir):
@@ -443,7 +444,7 @@ def test_bloom_index_update_merges_and_is_idempotent(spark, sf_dir, tmp_path):
     # durability contract shared with the HLL table
     import os
 
-    live = sketch._snap_live(idx)
+    live = snapshots.snap_live(idx)
     snaps = [d for d in os.listdir(idx) if d.startswith("bits_v")]
     assert snaps == [live]
 
@@ -676,7 +677,7 @@ def test_hist_index_update_is_exactly_once_via_ledger(spark, sf_dir, tmp_path):
         k: want[k] + half.get(k, 0) for k in want
     }
 
-    live = sketch._snap_live(idx)
+    live = snapshots.snap_live(idx)
     assert os.path.isdir(os.path.join(idx, live))
     snaps = [d for d in os.listdir(idx) if d.startswith("hist_v")]
     assert snaps == [live]
@@ -811,14 +812,14 @@ def test_kmv_index_update_merges_and_is_idempotent(spark, sf_dir, tmp_path):
     again = sketch.kmv_index_update(spark, second, idx)
     assert {(r.day_us, r.h) for r in again.collect()} == want
 
-    live = sketch._snap_live(idx)
+    live = snapshots.snap_live(idx)
     assert os.path.isdir(os.path.join(idx, live))
     snaps = [d for d in os.listdir(idx) if d.startswith("kmv_v")]
     assert snaps == [live]
     os.makedirs(os.path.join(idx, "kmv_v99"))  # simulated crash debris
     sketch.kmv_index_update(spark, second, idx)
     snaps = [d for d in os.listdir(idx) if d.startswith("kmv_v")]
-    assert snaps == [sketch._snap_live(idx)]
+    assert snaps == [snapshots.snap_live(idx)]
 
 
 # ------------------------------ Misra-Gries month merge (round 7)
@@ -987,13 +988,13 @@ def test_qsample_index_update_merges_and_is_idempotent(spark, sf_dir, tmp_path):
     again = sketch.qsample_index_update(spark, second, idx)
     assert {(r.day_us, r.h, r.cents) for r in again.collect()} == want
 
-    live = sketch._snap_live(idx)
+    live = snapshots.snap_live(idx)
     snaps = [d for d in os.listdir(idx) if d.startswith("qs_v")]
     assert snaps == [live]
     os.makedirs(os.path.join(idx, "qs_v99"))  # simulated crash debris
     sketch.qsample_index_update(spark, second, idx)
     snaps = [d for d in os.listdir(idx) if d.startswith("qs_v")]
-    assert snaps == [sketch._snap_live(idx)]
+    assert snaps == [snapshots.snap_live(idx)]
 
 
 # ---------------------- Sketch-driven planner statistics (round 12)
@@ -1112,4 +1113,4 @@ def test_ndv_index_update_merges_and_is_exactly_once(spark, sf_dir, tmp_path):
     )
     assert again == merged
     snaps = [d for d in _os.listdir(idx) if d.startswith("ndv_v")]
-    assert snaps == [sketch._snap_live(idx)]
+    assert snaps == [snapshots.snap_live(idx)]
