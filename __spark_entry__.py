@@ -66,99 +66,6 @@ _MODULES = [
     similarity, sketch, graph, olap_deep, bpe, unigram, wordpiece,
 ]
 
-# First-50 driver window for round 10 (VERDICT r9 item 7): slots 1-10
-# are the ten round-10 additions (never driver-witnessed by
-# construction: the three scale-safe banding/selection twins, the
-# Lee-et-al keep-one substring policy, SemDeDup, the cross-source
-# near-dup leakage matrix, the leakage-safe split, the online
-# decontamination drain, the embedding-drift report, and the
-# rendezvous shard census); slot 11 is text_decontaminate,
-# whose r9 witness was the VACUOUS 0-row match — its gate now runs at
-# the fixture-scale window and needs a real driver witness (VERDICT r9
-# item 3).  The rest is the least-recently-witnessed fill computed from
-# the union of CORRECTNESS_r01..r09 green rows: ALL 43 remaining
-# r6-vintage entries (events wave-2, multimodal, the corpus-prep
-# family, reshape, quality/search/similarity singles, the monthly
-# sketch pair, stream drains) plus the 2 oldest r7-vintage entries.
-# Every entry is additionally re-verified on current data via
-# tools/selfcheck.py → SELFCHECK_r10.json.
-_WINDOW_R10 = [
-    # round-10 additions (never driver-witnessed)
-    "quality_perplexity_banded", "quality_backoff_banded",
-    "sample_dsir_selected", "dedup_substring_keep_one",
-    "dedup_semantic", "dedup_source_overlap", "sample_split_safe",
-    "stream_decontaminate", "embedding_drift", "corpus_shard",
-    # r9-witnessed but vacuously (0 rows); gate re-parameterized this round
-    "text_decontaminate",
-    # r6-vintage: complete (43 entries, registry order within modules)
-    "events_retention", "events_resample", "events_user_spend_salted",
-    "events_concurrency", "events_asof_purchase", "events_value_bands",
-    "events_multigrain", "multimodal_features", "multimodal_frames",
-    "multimodal_energy", "corpus_curate", "text_chunk",
-    "text_contamination", "sample_split", "text_repetition", "text_pii",
-    "sample_stratified", "corpus_mix",
-    "corpus_forget", "events_pivot", "weather_melt", "segment_overlap",
-    "dq_lineitem", "events_json_variant", "quality_score",
-    "lineitem_snapshot_diff", "lineitem_zorder_layout", "text_postings",
-    "text_search", "stream_view_purchase_outer",
-    "stream_hourly", "stream_sessions", "sim_lsh",
-    "sim_lsh_banded", "sim_ivf_trained", "dedup_embedding_ann",
-    "events_mau_hll", "events_user_cms", "tpch_forecast_revenue",
-]
-# The second-wave additions displaced the two r7-vintage pads
-# (q1_wins/q2_fastestlap, both driver-green r7 AND golden-pinned in
-# tests/test_marts.py), sim_topk (r6-vintage, but the ground-truth set
-# for four recall pytests — the strongest non-driver evidence in the
-# r6 cohort), text_hash_embed (r6-vintage; dedicated end-to-end pytest
-# test_hash_embed_feeds_similarity_stack), corpus_shuffle
-# (r6-vintage; determinism-pinned by
-# test_shuffle_is_deterministic_permutation), and corpus_pack
-# (r6-vintage; budget-arithmetic-pinned by
-# test_pack_sequences_respect_budget_arithmetic); never-witnessed
-# entries outrank any witnessed one.
-# Round-11 window (VERDICT r10 item 4): slots 1-4 are the round-11
-# additions (never driver-witnessed by construction: the trained
-# Bernoulli-NB quality classifier, CCNet line-level dedup, the
-# fleet-scale 64→65 rendezvous census, and the incremental SemDeDup
-# index); then the 4 r6-vintage entries the r10 window deferred on
-# pytest evidence (now the registry's OLDEST witnesses — age beats the
-# deferral rationale on the second pass); then 42 of the 50 r7-vintage
-# entries, computed from the CORRECTNESS_r01..r10 green-row union.
-# Deferred to r12: the 8 r7-vintage entries with the strongest
-# independent evidence — q1_wins, q2_fastestlap, q4_weather,
-# q5_evopoints, q8_circuit_stats, q9_top10, p1_f1_formatted,
-# p3_combined (all golden-pinned in tests/test_marts.py, benched
-# headline every round, and q9/p3 plan-pinned in tests/test_plans.py).
-# Every registry entry is additionally re-verified on current data via
-# tools/selfcheck.py → SELFCHECK_r11.json.
-_WINDOW_R11 = [
-    # round-11 additions (never driver-witnessed)
-    "quality_classifier_scored", "dedup_lines", "corpus_shard_wide",
-    "dedup_semantic_incremental",
-    # r6-vintage (oldest witnesses in the registry)
-    "corpus_pack", "corpus_shuffle", "sim_topk", "text_hash_embed",
-    # r7-vintage fill (42 of 50, least-recently-witnessed)
-    "dedup_edit_distance", "dedup_entity_resolution",
-    "events_attribution", "events_funnel_windowed",
-    "events_heavy_hitters_monthly", "events_kmv_monthly",
-    "events_user_bloom_monthly", "events_user_cms_monthly",
-    "events_value_hist_monthly", "events_value_quantiles_monthly",
-    "hybrid_search_rrf", "lineitem_snapshot_apply",
-    "orders_above_avg", "orders_bloom_semi_join", "orders_distribution",
-    "orders_rolling_7d", "orders_skyline", "p2_weather_daily",
-    "q3_filter", "q6_constructor", "q7_pitstops",
-    "sample_weighted_reservoir", "segment_jaccard_kmv",
-    "segment_overlap_hll", "sim_clusters", "sim_ivf", "sim_mmr",
-    "stream_dau_hll", "stream_view_purchase_full",
-    "t10_weather_filled", "t6_parse_time", "text_bpe_apply",
-    "text_search_bm25", "tpch_big_orders", "tpch_important_stock",
-    "tpch_min_cost_supplier", "tpch_pricing_summary",
-    "tpch_product_profit", "tpch_promo_suppliers",
-    "tpch_revenue_by_nation", "tpch_shipmode_priority",
-    "tpch_shipping_priority",
-]
-assert len(_WINDOW_R11) == 50 and len(set(_WINDOW_R11)) == 50
-
 # Round-12 window (VERDICT r11 item 5): slots 1-4 are the never-
 # driver-witnessed entries — the three round-12 additions (the
 # continuous-curation capstone, the LR quality classifier, the unigram

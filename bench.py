@@ -591,6 +591,38 @@ def _bench_zorder_write(spark, sf_dir: str) -> None:
     ).save()
 
 
+def _bench_forced_distributed(entry: str):
+    """Registry entry ``entry`` with every size-dispatched driver twin
+    forced onto its distributed branch: ``localrel.pull`` declines for
+    the span of the run, as it does above the twin thresholds (~65k
+    vectors, 500k edges) that no bench dataset reaches.  Raises if the
+    entry never reached the pull, so a row cannot silently time the
+    driver path."""
+
+    def run(spark, sf_dir: str) -> None:
+        from engineering_school_bigdata_project_f1_weather_spark.functions import (
+            localrel,
+        )
+
+        real_pull, limits = localrel.pull, []
+
+        def decline(df, limit):
+            limits.append(limit)
+            return df.count(), None
+
+        localrel.pull = decline
+        try:
+            entrymod.queries()[entry](spark, sf_dir).write.format("noop").mode(
+                "overwrite"
+            ).save()
+        finally:
+            localrel.pull = real_pull
+        if not limits:
+            raise RuntimeError(f"{entry} never reached localrel.pull")
+
+    return run
+
+
 # ---------------------------------------------------------------------
 # Ambient-drift calibration (round 12, VERDICT r11 item 3): r11 burned a
 # re-measure session proving six apparent movers were a uniform ~1.10x
@@ -643,6 +675,17 @@ EXTRA_BENCH = {
     "text_bpe_train": _bench_bpe_train,
     "text_unigram_train": _bench_unigram_train,
     "text_wordpiece_train": _bench_wordpiece_train,
+    # the distributed branch of each size-dispatched twin
+    **{
+        f"{q}_dist": _bench_forced_distributed(q)
+        for q in (
+            "dedup_components",
+            "doc_pagerank",
+            "sim_ivf_trained",
+            "sim_pq_trained",
+            "quality_lr_scored",
+        )
+    },
 }
 
 # Full-registry coverage (VERDICT r8 item 3): 70 registry entries never

@@ -13,8 +13,8 @@ With Arrow enabled (the session factory sets
 ``spark.sql.execution.arrow.pyspark.enabled``), ``createDataFrame`` on
 a pandas frame instead serializes the rows ONCE into a JVM
 ``LocalTableScan`` — no Python workers at execution, ~4x cheaper per
-action (measured), bit-identical values and schema (pinned per call
-site by the existing driver-twin equality tests).  Empty input is the
+action (measured), bit-identical values and schema (pinned by the
+driver-twin parity test in tests/test_functions.py).  Empty input is the
 one exception: the Arrow path falls back to a Python-RDD scan there, so
 empty relations are built as a zero-row ``spark.range`` projection.
 """
@@ -57,3 +57,14 @@ def local_rows(spark, rows, schema):
     st = _struct(schema)
     pdf = pd.DataFrame(rows, columns=[f.name for f in st.fields])
     return spark.createDataFrame(pdf, schema=st)
+
+
+def pull(df, limit: int):
+    """``(n, table)``: ``df``'s row count and, when ``n <= limit``, its
+    rows as one ``pyarrow.Table`` from a single ``toArrow`` job (not a
+    job per partition, nor ``Row`` objects); ``None`` above ``limit``,
+    where the caller runs its distributed twin.  ``limit`` bounds the
+    driver twin's heap.  ``df`` is read twice: pass a cached or
+    checkpointed frame."""
+    n = df.count()
+    return n, (df.toArrow() if n <= limit else None)

@@ -29,7 +29,7 @@ import os
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from ..functions import snapshots, texts, vectors
+from ..functions import localrel, snapshots, texts, vectors
 from ..functions.jobs import run_overlapped
 from ..functions.localrel import empty_rel, local_rows
 from ..sources.tables import load_table, load_table_spread
@@ -525,20 +525,16 @@ EDIT_TAU = 4  # edit-distance threshold (the corpus near-dup cluster sits at 4)
 # r10 weak #1): the banded verify costs O(tau * len) PER PAIR while the
 # location filter's occurrence join costs ~constant per pair, so the
 # filter flips from net loss to net win as docs get long.  Measured
-# (tools/edit_crossover_probe.py, quiet, 1k docs x 60 failing
-# candidates/doc-template): ~300-char docs verify at ~15 us/pair and
-# the filter is a 2.5x loss (the round-10 revert); at ~4,000 chars the
-# verify is ~40x costlier per pair and the filter wins (SCALE.md
-# crossover row).  The mean corpus length decides — one cheap
-# len-column agg against a scan the job does anyway.  Env override
-# SPARK_GRAFT_EDIT_FILTER in {auto, on, off} for probes and tests.
+# (SCALE.md "Round-11: the EDjoin location-filter crossover is
+# PINNED"): ~300-char docs verify at ~15 us/pair and the filter is a
+# 2.5x loss (the round-10 revert); at ~4,000 chars the verify is ~40x
+# costlier per pair and the filter wins.  The mean corpus length
+# decides — one cheap len-column agg against a scan the job does
+# anyway.
 EDIT_FILTER_MIN_AVG_CHARS = 2000
 
 
 def _edit_filter_enabled(d: DataFrame) -> bool:
-    mode = os.environ.get("SPARK_GRAFT_EDIT_FILTER", "auto")
-    if mode in ("on", "off"):
-        return mode == "on"
     avg_len = d.agg(F.avg("len")).first()[0]
     return avg_len is not None and avg_len >= EDIT_FILTER_MIN_AVG_CHARS
 
@@ -575,8 +571,8 @@ def dedup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`_edit_location_filter`) was implemented, hash-verified, and
     REJECTED from the short-document hot path on measurement (round
     10): it collapses the verify surface spectacularly (25,667 → 254
-    candidates at sf0.1; 597,778 → 16 at sf0.5 — tools/er_census.py
-    still audits both counts), but Spark's banded ``levenshtein(a, b,
+    candidates at sf0.1; 597,778 → 16 at sf0.5 — SCALE.md "Round-9
+    batch-ER edge census"), but Spark's banded ``levenshtein(a, b,
     τ)`` early-exit verify costs ~15 µs/pair on these ~300-char docs,
     so the pairs the filter saves are worth ~0.4 s while its own
     occurrence join + interval-packing aggregate costs 4.3 s at sf0.1
@@ -586,11 +582,11 @@ def dedup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     codegen verify when docs are short. Round 11 pins the OTHER side of
     that trade: per-pair verify cost grows with doc length while the
     filter's does not, and the crossover was measured at ~2-4 k chars
-    (tools/edit_crossover_probe.py; SCALE.md row) — so the filter now
-    AUTO-ENABLES when the corpus' mean length exceeds
-    ``EDIT_FILTER_MIN_AVG_CHARS``, with SPARK_GRAFT_EDIT_FILTER as the
-    override. Output-identical either way (the filter only rejects
-    pairs the verify would reject — hash-pinned at both settings).
+    (SCALE.md "Round-11: the EDjoin location-filter crossover is
+    PINNED") — so the filter now AUTO-ENABLES when the corpus' mean
+    length exceeds ``EDIT_FILTER_MIN_AVG_CHARS``. Output-identical
+    either way (the filter only rejects pairs the verify would reject
+    — hash-pinned at both settings).
 
     100 TB shape: the q-gram frame is codegen end-to-end (explode a
     position ``sequence``, substring at (text, pos) — no interpreted
@@ -633,7 +629,8 @@ def _edit_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _edit_surfaces(d: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     """The candidate-generation stages of :func:`dedup_edit_distance`,
-    exposed for reuse (tools/er_census.py audits these surfaces):
+    exposed for reuse (SCALE.md "Round-9 batch-ER edge census" pins
+    their sizes):
     positional q-gram frame (doc_id, pos, x), the (df, x)-ranked prefix
     (doc_id, x, len), and the distinct candidate pairs
     (prefix join ∪ tiny-doc rescue)."""
@@ -710,9 +707,9 @@ def _edit_location_filter(
     rejects pairs the verify would reject.  NOT in the hot path:
     measured a net loss against the banded JVM verify at every probed
     scale (see the rejection note in :func:`dedup_edit_distance`);
-    retained for tools/er_census.py's surface audit and as the
-    escape hatch for long-string regimes where per-pair verify cost
-    grows with length.
+    retained (its sf0.1/sf0.5 pruning is pinned in SCALE.md "Round-9
+    batch-ER edge census") as the escape hatch for long-string regimes
+    where per-pair verify cost grows with length.
 
     Soundness: a positional q-gram of doc_a with NO content-equal
     occurrence in doc_b within position shift τ must have been
@@ -1154,19 +1151,15 @@ PAGERANK_SCALE = 1_000_000_000  # pr as e9-scaled BIGINT
 PAGERANK_D_NUM, PAGERANK_D_DEN = 85, 100  # damping 0.85 as a ratio
 
 
-def _pagerank_driver(spark: SparkSession, edges: DataFrame) -> DataFrame:
-    """Driver twin of the doc_pagerank loop over a (s, d) directed edge
-    frame — the same PAGERANK_ITERS power iterations in the same exact
-    integer arithmetic (``//`` ≡ Spark's ``div`` on the non-negative
-    e9-scaled BIGINTs here), edges streamed via toLocalIterator (never a
-    collect of Row objects).  Equality with the distributed loop is
-    pytest-pinned (tests/test_corpus.py)."""
+def _pagerank_driver(spark: SparkSession, tbl) -> DataFrame:
+    """Driver twin of the doc_pagerank loop over the pulled (s, d)
+    directed edge table — the same PAGERANK_ITERS power iterations in
+    the same exact integer arithmetic (``//`` ≡ Spark's ``div`` on the
+    non-negative e9-scaled BIGINTs here)."""
     deg: dict = {}
-    elist: list = []
-    for row in edges.toLocalIterator():
-        s, d = int(row[0]), int(row[1])
+    elist = list(zip(tbl.column("s").to_pylist(), tbl.column("d").to_pylist()))
+    for s, _ in elist:
         deg[s] = deg.get(s, 0) + 1
-        elist.append((s, d))
     if not deg:
         # pure-JVM empty relation (ADVICE r12: this was the exact
         # Python-RDD empty-frame pattern the er_index_init fix removed)
@@ -1183,7 +1176,7 @@ def _pagerank_driver(spark: SparkSession, edges: DataFrame) -> DataFrame:
             )
         pr = {x: base + incoming.get(x, 0) for x in deg}
     return local_rows(
-        spark, [(int(x), int(pr[x])) for x in deg], "doc_id long, pr_e9 long"
+        spark, [(x, pr[x]) for x in deg], "doc_id long, pr_e9 long"
     )
 
 
@@ -1209,8 +1202,8 @@ def doc_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .localCheckpoint()
     )
-    n_edges = edges.count()
-    if n_edges <= ER_DRIVER_CLOSURE_MAX_EDGES:
+    _, tbl = localrel.pull(edges, ER_DRIVER_CLOSURE_MAX_EDGES)
+    if tbl is not None:
         # Size-dispatched driver twin (round 12 optimization — the
         # ``_er_closure`` precedent): the pair graph is steering-sized
         # at any corpus scale where an exact all-pairs PR is sane, and
@@ -1220,7 +1213,7 @@ def doc_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Python // on the same non-negative BIGINTs as Spark's div,
         # order-free integer sums.  Above the threshold (same driver
         # heap bound as the closure) the loop below takes over.
-        return _pagerank_driver(spark, edges)
+        return _pagerank_driver(spark, tbl)
     deg = edges.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
     nodes = deg.select(F.col("s").alias("node"), "deg").localCheckpoint()
     n_nodes = nodes.count()
@@ -2288,11 +2281,11 @@ ER_CLOSURE_JUMPS = 4
 # with a deep round budget; correctness is identical (component = min
 # reachable endpoint, endpoints only).
 # Sized so the driver path's peak heap (a dict of int parents over
-# ≤2·max endpoints, streamed in as plain int tuples via toLocalIterator
-# — never a collect()ed list of Row objects, ADVICE r8) stays under
-# ~100 MB, while keeping the measured sf1 half-corpus bootstrap graphs
-# (~10^5 edges, >20-round Hash-Min diameter) on the milliseconds path;
-# the distributed engine is correct at any size above.
+# ≤2·max endpoints, read from ONE Arrow table of ≤ max × 2 longs via
+# localrel.pull — never a collect()ed list of Row objects, ADVICE r8)
+# stays under ~100 MB, while keeping the measured sf1 half-corpus
+# bootstrap graphs (~10^5 edges, >20-round Hash-Min diameter) on the
+# milliseconds path; the distributed engine is correct at any size above.
 ER_DRIVER_CLOSURE_MAX_EDGES = 500_000
 
 
@@ -2300,9 +2293,9 @@ def _er_closure(spark: SparkSession, edges: DataFrame) -> DataFrame:
     """(node, component) over the (doc_a, doc_b) edge frame — size-
     dispatched: driver union-find below ER_DRIVER_CLOSURE_MAX_EDGES,
     the distributed Hash-Min engine above."""
-    edges = edges.localCheckpoint()  # count + (collect | engine) read it
-    n_edges = edges.count()
-    if n_edges > ER_DRIVER_CLOSURE_MAX_EDGES:
+    edges = edges.localCheckpoint()  # count + (pull | engine) read it
+    _, tbl = localrel.pull(edges, ER_DRIVER_CLOSURE_MAX_EDGES)
+    if tbl is None:
         return propagate_components(
             spark, edges, "doc_a", "doc_b",
             max_iters=ER_CLOSURE_MAX_ITERS, jumps=ER_CLOSURE_JUMPS,
@@ -2317,8 +2310,7 @@ def _er_closure(spark: SparkSession, edges: DataFrame) -> DataFrame:
             parent[x], x = r, parent[x]
         return r
 
-    for row in edges.toLocalIterator():
-        a, b = int(row[0]), int(row[1])
+    for a, b in zip(tbl.column(0).to_pylist(), tbl.column(1).to_pylist()):
         parent.setdefault(a, a)
         parent.setdefault(b, b)
         ra, rb = find(a), find(b)
@@ -2330,7 +2322,7 @@ def _er_closure(spark: SparkSession, edges: DataFrame) -> DataFrame:
         m = comp_min.get(r)
         if m is None or x < m:
             comp_min[r] = x
-    rows = [(int(x), int(comp_min[find(x)])) for x in parent]
+    rows = [(x, comp_min[find(x)]) for x in parent]
     # Arrow local relation (round 13, guide §4): the label frame is
     # consumed by several downstream actions (entity join + snapshot
     # write; the closure family re-reads it per serving pass), and a

@@ -24,12 +24,10 @@ plan anyway (the production data-quality monitor shape).
 
 from __future__ import annotations
 
-import os
-
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
-from ..functions import texts
+from ..functions import localrel, texts
 from ..functions.localrel import local_rows
 from ..sources.tables import load_table
 
@@ -763,10 +761,10 @@ _Q16 = 65536
 _BIAS_B = -1  # sentinel bucket carrying the bias gradient
 # Gradient-loop size dispatch (round 12, the KM_DRIVER_MAX precedent):
 # at or below this many LABELED docs the 16 gradient steps run on the
-# driver over one bounded collect of (label, bucket-array) rows — every
-# step is exact integer arithmetic, so driver and distributed loops
-# agree bit-for-bit.  0 forces the distributed path (tests).
-LR_DRIVER_MAX = int(os.environ.get("SPARK_GRAFT_LR_DRIVER_MAX", "65536"))
+# driver over one bounded localrel.pull of (label, bucket-array) rows —
+# every step is exact integer arithmetic, so driver and distributed
+# loops agree bit-for-bit.
+LR_DRIVER_MAX = 65_536
 
 
 def _tdiv(a: int, b: int) -> int:
@@ -815,10 +813,10 @@ def lr_train_model(
         .agg(F.collect_list("b").alias("bs"))
         .localCheckpoint()
     )
-    n_rows = int(docs_bs.count())
+    n_rows, tbl = localrel.pull(docs_bs, LR_DRIVER_MAX)
     n_lab = max(n_rows, 1)
-    if n_rows <= LR_DRIVER_MAX:
-        return _lr_train_driver(spark, docs_bs, n_lab)
+    if tbl is not None:
+        return _lr_train_driver(spark, tbl, n_lab)
     w = {b: 0 for b in range(QC_B)}
     bias = 0
     y = F.when(F.col("train_label") == "pos", F.lit(_Q16)).otherwise(F.lit(0))
@@ -855,25 +853,23 @@ def lr_train_model(
 
 
 def _lr_train_driver(
-    spark: SparkSession, docs_bs: DataFrame, n_lab: int
+    spark: SparkSession, tbl, n_lab: int
 ) -> tuple[DataFrame, int]:
-    """Driver twin of the distributed gradient loop — one bounded
-    collect (≤ LR_DRIVER_MAX labeled rows), then the identical 16 steps
+    """Driver twin of the distributed gradient loop over the pulled
+    (≤ LR_DRIVER_MAX rows) labeled cohort — the identical 16 steps
     in exact Python integers: margin = bias + Σw[b] (duplicates in the
     bucket array count, as in the Spark fold), the Q16 hard sigmoid
     with TRUNCATING /8 (``_tdiv`` — Spark's ``x - x%8`` then exact
     double division), per-bucket residual sums restricted to buckets
     PRESENT in the cohort (absent buckets get no gradient row in either
     engine), and the truncating-division weight step.  Bit-identical to
-    the distributed loop (tests/test_quality.py::
-    test_lr_driver_twin_bit_identical); the distributed path paid one
-    cohort scan + one bounded collect of scheduler latency per step
-    (~0.25 s × 16 at sf0.1) for arithmetic the driver does in
-    milliseconds."""
-    rows = docs_bs.select("train_label", "bs").collect()  # bounded
+    the distributed loop (tests/test_functions.py's driver-twin parity
+    test); the distributed path pays one cohort scan + one gradient
+    collect of scheduler latency per step (~0.25 s × 16 at sf0.1) for
+    arithmetic the driver does in milliseconds."""
     data = [
-        (_Q16 if r["train_label"] == "pos" else 0, list(r["bs"]))
-        for r in rows
+        (_Q16 if r["train_label"] == "pos" else 0, r["bs"])
+        for r in tbl.to_pylist()
     ]
     w = {b: 0 for b in range(QC_B)}
     bias = 0

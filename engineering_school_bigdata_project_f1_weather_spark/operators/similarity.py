@@ -20,13 +20,11 @@ vs the DuckDB oracle.
 
 from __future__ import annotations
 
-import os
-
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from ..functions import snapshots, vectors
+from ..functions import localrel, snapshots, vectors
 from ..functions.localrel import empty_rel, local_rows
 from ..sources.tables import load_table_spread
 from .dedup import EMBED_DUP_MIN_E6
@@ -290,11 +288,11 @@ NPROBE = 4
 # exact in BIGINT on both engines and far below DOUBLE's 2**53 mantissa.
 ORD_MULT = 2**21
 # Quantizer-training size dispatch (round 12): at or below this many
-# vectors the kmeans loop runs as a driver numpy twin in ONE bounded
-# collect (65,536 × 64 int64 ≈ 34 MB — an explicit, model-scale bound;
-# the _er_closure size-dispatch precedent).  Above it, the distributed
-# loop with identical semantics.  0 forces the distributed path (tests).
-KM_DRIVER_MAX = int(os.environ.get("SPARK_GRAFT_KM_DRIVER_MAX", "65536"))
+# vectors the kmeans loop runs as a driver numpy twin over ONE bounded
+# localrel.pull (65,536 × 64 int64 ≈ 34 MB — an explicit, model-scale
+# bound; the _er_closure size-dispatch precedent).  Above it, the
+# distributed loop with identical semantics.
+KM_DRIVER_MAX = 65_536
 
 
 def _seed_centroids(base: DataFrame, k: int = K_CENTROIDS) -> DataFrame:
@@ -332,20 +330,20 @@ def _train_centroids(
 
     Size-dispatched (round 12, the ``_er_closure`` precedent): below
     ``KM_DRIVER_MAX`` vectors a driver numpy twin runs the bit-identical
-    iteration in one bounded collect — Lloyd's on a small init corpus is
-    k·n·DIM·iters of arithmetic that the distributed loop pays ~2 jobs
-    of scheduler latency per round for (measured 3.0 s at sf0.1 for
+    iteration over one bounded ``localrel.pull`` — Lloyd's on a small
+    init corpus is k·n·DIM·iters of arithmetic that the distributed
+    loop pays ~2 jobs of scheduler latency per round for (measured 3.0 s at sf0.1 for
     1,000 vectors, ~0.1 s on the driver; it is the dominant fixed cost
     of every quantizer-training entry).  Above the threshold the
     distributed loop takes over with identical semantics — the
     assignment is the exact IEEE-754 sequence both physical paths
     already share (``_assign_lists_arrow``'s contract), the M-step is
     the same exact-integer rounded mean, so the dispatch is invisible
-    to every oracle hash (pinned by
-    tests/test_similarity.py::test_kmeans_driver_twin_bit_identical)."""
-    n_vecs = base.count()  # caller caches base, so this is a cheap scan
-    if n_vecs <= KM_DRIVER_MAX:
-        return _train_centroids_driver(spark, base, k, iters)
+    to every oracle hash (pinned by tests/test_functions.py's
+    driver-twin parity test)."""
+    n_vecs, tbl = localrel.pull(base, KM_DRIVER_MAX)  # caller caches base
+    if tbl is not None:
+        return _train_centroids_driver(spark, tbl, k, iters)
     cents = _seed_centroids(base, k).localCheckpoint()
     # Loop-scoped shuffle sizing (same move as propagate_components): the
     # per-iteration shuffles carry n·assign / k·DIM rows, so at bench scale
@@ -363,11 +361,11 @@ def _train_centroids(
 
 
 def _train_centroids_driver(
-    spark: SparkSession, base: DataFrame, k: int, iters: int
+    spark: SparkSession, tbl, k: int, iters: int
 ) -> DataFrame:
-    """Driver numpy twin of :func:`_kmeans_iterations` — ONE bounded
-    collect (≤ KM_DRIVER_MAX quantized rows, an explicit constant), then
-    the identical per-round computation:
+    """Driver numpy twin of :func:`_kmeans_iterations` over the pulled
+    (≤ KM_DRIVER_MAX rows) quantized table — the identical per-round
+    computation:
 
     - E-step: the exact int64 matmul + IEEE-754 cosine sequence
       (d·1e6 / sqrt(n2a·n2b), floor, non-finite→0) and the strictly
@@ -382,15 +380,14 @@ def _train_centroids_driver(
     so driver and distributed runs agree bit-for-bit."""
     import numpy as np
 
-    rows = base.select("vec_id", "q", "n2").collect()  # ≤ KM_DRIVER_MAX
-    ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
-    Q = np.array([r["q"] for r in rows], dtype=np.int64)
-    n2 = np.array([r["n2"] for r in rows], dtype=np.float64)
+    ids = np.array(tbl.column("vec_id").to_pylist(), dtype=np.int64)
+    Q = np.array(tbl.column("q").to_pylist(), dtype=np.int64)
+    n2 = np.array(tbl.column("n2").to_pylist(), dtype=np.float64)
     seed_mask = (ids >= 1) & (ids <= k)
     order = np.argsort(ids[seed_mask], kind="stable")
     cid = ids[seed_mask][order]
     C = Q[seed_mask][order].copy()
-    if cid.size == 0 or len(rows) == 0:
+    if cid.size == 0:
         return empty_rel(
             spark, "centroid_id long, cq array<long>, cn2 long"
         )
@@ -2064,9 +2061,9 @@ def sim_pq(
 PQ_TRAIN_ITERS = 2
 
 
-def _pq_train_driver(spark: SparkSession, base: DataFrame, iters: int) -> DataFrame:
-    """Driver numpy twin of the :func:`pq_train_codebooks` loop — ONE
-    bounded collect (≤ KM_DRIVER_MAX quantized rows), then the identical
+def _pq_train_driver(spark: SparkSession, tbl, iters: int) -> DataFrame:
+    """Driver numpy twin of the :func:`pq_train_codebooks` loop over the
+    pulled (≤ KM_DRIVER_MAX rows) quantized table — the identical
     per-round integer computation per subspace:
 
     - E-step: ``d2 = sn2 − 2·(S @ Cᵀ) + cn2`` in exact int64 and the
@@ -2081,14 +2078,13 @@ def _pq_train_driver(spark: SparkSession, base: DataFrame, iters: int) -> DataFr
     distributed runs agree bit-for-bit (pytest-pinned)."""
     import numpy as np
 
-    rows = base.select("vec_id", "q").collect()  # ≤ KM_DRIVER_MAX
-    ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
-    Q = np.array([r["q"] for r in rows], dtype=np.int64)
+    ids = np.array(tbl.column("vec_id").to_pylist(), dtype=np.int64)
+    Q = np.array(tbl.column("q").to_pylist(), dtype=np.int64)
     seed_mask = (ids >= 1) & (ids <= PQ_K)
     order = np.argsort(ids[seed_mask], kind="stable")
     cid = ids[seed_mask][order]
     out = []
-    if cid.size and len(rows):
+    if cid.size:
         for m in range(PQ_M):
             S = Q[:, m * PQ_SUBDIM : (m + 1) * PQ_SUBDIM]
             sn2 = np.einsum("ij,ij->i", S, S)
@@ -2130,8 +2126,8 @@ def pq_train_codebooks(
     bit-for-bit. Per-iteration driver traffic: none (localCheckpoint
     truncates lineage; the codebook never leaves the cluster)."""
     base = _quantized(spark, sf_dir).cache()
-    n_vecs = base.count()
-    if n_vecs <= KM_DRIVER_MAX:
+    n_vecs, tbl = localrel.pull(base, KM_DRIVER_MAX)
+    if tbl is not None:
         # Size-dispatched driver twin (round 12, the _train_centroids
         # precedent): PQ training is EXACT integer arithmetic end to end
         # (int64 L2 distances, injective min_by key, exact rounded
@@ -2139,7 +2135,7 @@ def pq_train_codebooks(
         # bit-for-bit (pytest-pinned) while skipping its ~3 shuffles ×
         # iters of scheduler rounds.  Above the threshold the loop below
         # takes over unchanged.
-        return _pq_train_driver(spark, base, iters)
+        return _pq_train_driver(spark, tbl, iters)
     sub = _pq_subvectors(base).localCheckpoint()
     cb = _pq_seed_codebook(sub).localCheckpoint()
     d2 = (

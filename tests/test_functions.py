@@ -1,5 +1,7 @@
 """Cross-engine kernels in functions/ — exactness pins — and the
-driver-side helpers there (overlapped legs, local relations, meta rows)."""
+driver-side helpers there (overlapped legs, local relations, bounded
+driver pulls, meta rows), with the driver-twin parity of every
+size-dispatched operator that reads its input through ``pull``."""
 
 from __future__ import annotations
 
@@ -7,17 +9,26 @@ import math
 import warnings
 
 import duckdb
+import pyspark.sql.functions as F
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from engineering_school_bigdata_project_f1_weather_spark.functions import intlog
+from engineering_school_bigdata_project_f1_weather_spark.functions import intlog, localrel
 from engineering_school_bigdata_project_f1_weather_spark.functions.jobs import run_overlapped
 from engineering_school_bigdata_project_f1_weather_spark.functions.localrel import (
     empty_rel,
     local_rows,
 )
 from engineering_school_bigdata_project_f1_weather_spark.functions.snapshots import meta_row
+from engineering_school_bigdata_project_f1_weather_spark.operators import (
+    dedup,
+    quality,
+    similarity,
+)
+from engineering_school_bigdata_project_f1_weather_spark.sources.tables import (
+    load_table_spread,
+)
 
 
 def _duck_ilog2(vals: list[int]) -> dict[int, int]:
@@ -94,3 +105,132 @@ def test_meta_row_arity_mismatch_raises(spark):
         meta_row(spark, "a long, b string", (1,))
     with pytest.raises(ValueError):
         meta_row(spark, "a long", (1, 2))
+
+
+def _jobs_in_group(spark, group, action):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts are async
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_pull_returns_table_up_to_limit(spark):
+    df = spark.range(0, 10, 1, 4).selectExpr("id AS a", "array(id, -id) AS q")
+    n, tbl = localrel.pull(df, 10)
+    assert n == 10 and tbl.num_rows == 10
+    assert sorted(tbl.column("a").to_pylist()) == list(range(10))
+    assert sorted(tbl.column("q").to_pylist()) == [[i, -i] for i in range(10)]
+    assert localrel.pull(df, 9) == (10, None)
+
+
+def test_pull_empty_frame_keeps_schema(spark):
+    df = spark.range(0).selectExpr("id AS a", "CAST(NULL AS STRING) AS s")
+    n, tbl = localrel.pull(df, 0)
+    assert n == 0 and tbl.num_rows == 0
+    assert tbl.schema.names == ["a", "s"]
+    assert [str(t) for t in tbl.schema.types] == ["int64", "string"]
+
+
+def test_pull_is_one_job_after_the_count(spark):
+    """toArrow is one Spark job whatever the partition count (a
+    toLocalIterator pull would run one per partition)."""
+    df = spark.range(0, 800, 1, 8)
+    n, count_jobs = _jobs_in_group(spark, "pull_count", df.count)
+    (n2, tbl), pull_jobs = _jobs_in_group(
+        spark, "pull_pull", lambda: localrel.pull(df, n)
+    )
+    assert n == n2 == tbl.num_rows == 800
+    assert pull_jobs == count_jobs + 1
+
+
+# ------------------------------------------------- driver-twin parity
+# Each size-dispatched operator runs its public dispatching function
+# twice: as is (the fixture is below every threshold, so the driver twin
+# runs) and with ``localrel.pull`` patched to always decline, which
+# forces the distributed branch.  The twins are exact-integer (or
+# order-free IEEE-754) ports of their loops, so the outputs must match.
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def _closure(spark, sf_dir):
+    return _rows(dedup.dedup_components(spark, sf_dir))
+
+
+def _pagerank(spark, sf_dir):
+    return _rows(dedup.doc_pagerank(spark, sf_dir))
+
+
+def _kmeans(k, zero_norm):
+    """k-means at ``k`` (the serving k takes the Arrow assignment path,
+    k=5 the JVM expression path), on the fixture or on a variant whose
+    vector 21 has zero norm."""
+
+    def run(spark, sf_dir):
+        base = similarity._quantized(spark, sf_dir)
+        if zero_norm:
+            z = F.col("vec_id") == 21
+            base = base.withColumn(
+                "q",
+                F.when(
+                    z, F.transform("q", lambda _: F.lit(0).cast("long"))
+                ).otherwise(F.col("q")),
+            ).withColumn("n2", F.when(z, F.lit(0)).otherwise(F.col("n2")))
+        return _rows(similarity._train_centroids(spark, base.cache(), k, 3))
+
+    return run
+
+
+def _pq(spark, sf_dir):
+    return _rows(similarity.pq_train_codebooks(spark, sf_dir))
+
+
+def _lr(spark, sf_dir):
+    wide = quality._quality_scored_wide(
+        load_table_spread(spark, sf_dir, "documents").select(
+            "doc_id", "lang", "text"
+        )
+    )
+    lab = wide.select("doc_id", quality._qc_label_col().alias("train_label"))
+    fb = quality._qc_featbuckets(wide).localCheckpoint()
+    model, bias = quality.lr_train_model(spark, fb, lab)
+    assert model.where(F.col("w") != 0).count() > 0  # it learned something
+    return _rows(model), bias
+
+
+TWINS = {
+    "closure": _closure,
+    "pagerank": _pagerank,
+    "kmeans_k16": _kmeans(similarity.K_CENTROIDS, False),
+    "kmeans_k5": _kmeans(5, False),
+    "kmeans_k16_zero_norm": _kmeans(similarity.K_CENTROIDS, True),
+    "kmeans_k5_zero_norm": _kmeans(5, True),
+    "pq_codebooks": _pq,
+    "lr": _lr,
+}
+
+
+@pytest.mark.parametrize("site", list(TWINS))
+def test_driver_twin_equals_distributed(spark, sf_dir, monkeypatch, site):
+    real_pull = localrel.pull
+    took_driver = []
+
+    def spy(df, limit):
+        n, tbl = real_pull(df, limit)
+        took_driver.append(tbl is not None)
+        return n, tbl
+
+    monkeypatch.setattr(localrel, "pull", spy)
+    driver = TWINS[site](spark, sf_dir)
+    assert took_driver and all(took_driver), took_driver
+    assert driver, "fixture must give the twin a non-empty output"
+
+    monkeypatch.setattr(localrel, "pull", lambda df, limit: (df.count(), None))
+    assert TWINS[site](spark, sf_dir) == driver

@@ -506,43 +506,6 @@ def test_quality_classifier_learns_token_signal(spark, tmp_path):
     assert out[9001].qc_llr_q16 > out[9003].qc_llr_q16
 
 
-def test_lr_driver_twin_bit_identical(spark, sf_dir):
-    """The size-dispatched driver gradient loop must equal the
-    distributed loop bit-for-bit: same (b, w) table and bias on the
-    fixture cohort."""
-    from engineering_school_bigdata_project_f1_weather_spark.operators import quality as q
-    from engineering_school_bigdata_project_f1_weather_spark.sources.tables import load_table_spread
-
-    wide = q._quality_scored_wide(
-        load_table_spread(spark, sf_dir, "documents").select(
-            "doc_id", "lang", "text"
-        )
-    )
-    lab = wide.select("doc_id", q._qc_label_col().alias("train_label"))
-    fb = q._qc_featbuckets(wide).localCheckpoint()
-    docs_bs = (
-        fb.join(lab.where(F.col("train_label").isNotNull()), "doc_id")
-        .groupBy("doc_id", "train_label")
-        .agg(F.collect_list("b").alias("bs"))
-        .localCheckpoint()
-    )
-    n_lab = max(int(docs_bs.count()), 1)
-    drv_model, drv_bias = q._lr_train_driver(spark, docs_bs, n_lab)
-
-    # distributed loop, forced via the knob's 0 path semantics: call the
-    # trainer body directly with the dispatch threshold monkeypatched
-    old = q.LR_DRIVER_MAX
-    q.LR_DRIVER_MAX = -1
-    try:
-        dist_model, dist_bias = q.lr_train_model(spark, fb, lab)
-    finally:
-        q.LR_DRIVER_MAX = old
-    assert drv_bias == dist_bias
-    assert {(r["b"], r["w"]) for r in drv_model.collect()} == {
-        (r["b"], r["w"]) for r in dist_model.collect()
-    }
-
-
 def test_pr_sweep_confusion_exact_and_monotone(spark, sf_dir):
     """The sweep's contracts: (a) every row's confusion is exactly the
     direct filter's confusion at that threshold (checked at the best-F1

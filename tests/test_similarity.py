@@ -791,61 +791,3 @@ def test_semdedup_index_compact_preserves_serving(spark, sf_dir, tmp_path):
     }
     total = vecs.count()
     assert len(after) == total  # every vector indexed across the 3 batches
-
-
-def test_kmeans_driver_twin_bit_identical(spark, sf_dir):
-    """The size-dispatched driver numpy trainer must equal the
-    distributed loop bit-for-bit — at the serving k (Arrow assignment
-    path) AND at a small k (JVM expression assignment path), on the
-    fixture corpus and on a variant with a zero-norm vector."""
-    import pyspark.sql.functions as F
-
-    base = similarity._quantized(spark, sf_dir).cache()
-    zeroed = base.withColumn(
-        "q",
-        F.when(
-            F.col("vec_id") == 21,
-            F.transform("q", lambda _: F.lit(0).cast("long")),
-        ).otherwise(F.col("q")),
-    ).withColumn(
-        "n2", F.when(F.col("vec_id") == 21, F.lit(0)).otherwise(F.col("n2"))
-    ).cache()
-
-    def as_map(df):
-        return {
-            r["centroid_id"]: (list(r["cq"]), r["cn2"]) for r in df.collect()
-        }
-
-    for frame in (base, zeroed):
-        for k in (similarity.K_CENTROIDS, 5):
-            driver = as_map(
-                similarity._train_centroids_driver(spark, frame, k, 3)
-            )
-            seeded = similarity._seed_centroids(frame, k).localCheckpoint()
-            dist = as_map(
-                similarity._kmeans_iterations(frame, seeded, k, 3)
-            )
-            assert driver == dist, (k, frame is zeroed)
-
-
-def test_pq_train_driver_twin_bit_identical(spark, sf_dir, monkeypatch):
-    """pq_train_codebooks' size dispatch (round 12): the driver numpy
-    twin must equal the distributed Lloyd's loop bit-for-bit — same
-    exact-integer L2 argmin key, same rounded means, same empty-code
-    carry — on the fixture corpus."""
-    base = similarity._quantized(spark, sf_dir).cache()
-
-    def as_map(df):
-        return {
-            (r["m"], r["code_id"]): (list(r["cq"]), r["cn2"])
-            for r in df.collect()
-        }
-
-    driver = as_map(
-        similarity._pq_train_driver(spark, base, similarity.PQ_TRAIN_ITERS)
-    )
-    assert driver, "fixture corpus must seed a non-empty codebook"
-    # Force the distributed loop on the same (sub-threshold) corpus.
-    monkeypatch.setattr(similarity, "KM_DRIVER_MAX", -1)
-    dist = as_map(similarity.pq_train_codebooks(spark, sf_dir))
-    assert driver == dist

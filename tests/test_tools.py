@@ -1,10 +1,13 @@
-"""Unit tests for the round-4 harness surface: the bench regression gate
-and the selfcheck canonicalizer the correctness artifacts depend on."""
+"""Unit tests for the round-4 harness surface: the bench regression gate,
+the forced-distributed bench rows, and the selfcheck canonicalizer the
+correctness artifacts depend on."""
 
 from __future__ import annotations
 
 import json
 import sys
+
+import pytest
 
 
 def test_bench_compare_gate(tmp_path):
@@ -126,3 +129,20 @@ def test_selfcheck_canonicalizer_is_order_and_rep_stable():
     assert canon_cell([1, 2]) == canon_cell(np.array([1, 2], dtype=np.int64))
     # but genuinely different doubles stay different (bit-exact contract)
     assert canon_cell(0.1) != canon_cell(0.1 + 1e-16)
+
+
+def test_bench_forced_distributed_row_refuses_entries_without_a_twin(
+    spark, sf_dir
+):
+    """A ``*_dist`` bench row must time a distributed branch: an entry
+    that never reaches ``localrel.pull`` raises, and the real pull is
+    back in place afterwards."""
+    import bench
+    from engineering_school_bigdata_project_f1_weather_spark.functions import (
+        localrel,
+    )
+
+    real_pull = localrel.pull
+    with pytest.raises(RuntimeError, match="never reached localrel.pull"):
+        bench._bench_forced_distributed("dedup_exact")(spark, sf_dir)
+    assert localrel.pull is real_pull
