@@ -1,9 +1,9 @@
 """Versioned-snapshot durability for persisted incremental indexes.
 
-Every incremental index family (minhash, ER, substring, ANN, SemDeDup,
-search, curation and the six sketch tables) stores its mutable state the
-same way: each version lives in its own ``{prefix}{n}`` directory under
-the index path, and a ``CURRENT`` pointer file names the live one.
+Every incremental index family (``operators.indexes.FAMILIES``) stores
+its mutable state the same way: each version lives in its own
+``{prefix}{n}`` directory under the index path, and a ``CURRENT``
+pointer file names the live one.
 Updates never overwrite or append to the live state in place.  One
 primitive, :class:`txn`, owns that protocol::
 

@@ -52,7 +52,6 @@ from ..functions import snapshots
 from ..functions import texts
 from ..functions.jobs import run_overlapped
 from ..functions.localrel import empty_rel
-from ..sources.tables import load_table_spread
 from .corpus import (
     PACK_BUDGET,
     SHARDS_FROM,
@@ -372,33 +371,8 @@ def curate_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     incremental index families composed end-to-end lose nothing vs one
     batch run (documents and embeddings share the id domain, so the
     doc-side and vec-side halves coincide)."""
-    import shutil
-    import tempfile
-
-    docs = load_table_spread(spark, sf_dir, "documents").select(
-        "doc_id", "lang", "text"
-    )
-    vecs = load_table_spread(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding"
-    )
-    half = docs.agg(F.expr("div(max(doc_id), 2)").alias("h")).first()["h"]
-    tmp = tempfile.mkdtemp(prefix="curate_idx_")
-    try:
-        curate_index_init(
-            spark,
-            docs.where(F.col("doc_id") <= half),
-            vecs.where(F.col("vec_id") <= half),
-            f"{tmp}/idx",
-        )
-        curate_index_update(
-            spark,
-            docs.where(F.col("doc_id") > half),
-            vecs.where(F.col("vec_id") > half),
-            f"{tmp}/idx",
-        )
-        return curate_resolve(spark, f"{tmp}/idx").localCheckpoint()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    from . import indexes  # indexes imports this module
+    return indexes.incremental(spark, sf_dir, "curate")
 
 
 def _curate_incremental_oracle_sql() -> str:

@@ -2590,23 +2590,14 @@ def er_resolve(spark: SparkSession, index_path: str) -> DataFrame:
 
 def dedup_er_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry entry for the incremental ER path: bootstrap the index on
-    the even-doc_id half of the corpus, ingest the odd half as an update
-    batch, serve the resolved view — which must equal the BATCH
-    ``dedup_entity_resolution`` over the full corpus bit-for-bit (the
-    oracle is that entry's SQL verbatim): the hash gate pins that
-    probe-only edge generation + affected-only closure + remap
+    the first half of the corpus (doc_id <= max/2), ingest the second
+    half as an update batch, serve the resolved view — which must equal
+    the BATCH ``dedup_entity_resolution`` over the full corpus
+    bit-for-bit (the oracle is that entry's SQL verbatim): the hash gate
+    pins that probe-only edge generation + affected-only closure + remap
     composition lose nothing vs recomputing from scratch."""
-    import shutil
-    import tempfile
-
-    docs = _docs(spark, sf_dir).select("doc_id", "lang", "text")
-    tmp = tempfile.mkdtemp(prefix="er_index_entry_")
-    try:
-        er_index_init(spark, docs.where(F.col("doc_id") % 2 == 0), tmp)
-        er_index_update(spark, docs.where(F.col("doc_id") % 2 == 1), tmp)
-        return er_resolve(spark, tmp).localCheckpoint()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    from . import indexes  # indexes imports this module
+    return indexes.incremental(spark, sf_dir, "er")
 
 # ------------------------------------------------- substring-level dedup
 # Lee et al. 2022 ("Deduplicating Training Data Makes Language Models
@@ -3216,9 +3207,11 @@ FROM hl JOIN grp USING (h)
 # cut hardcoded 2 chars = 256 buckets and the composed incremental
 # entry paid 6.6 → 10.2 s at sf0.1 in pure small-file listing/write
 # overhead; 16 buckets restores it while keeping the probe's partition
-# pruning plan-pinned. A deployment whose log outgrows 16 files per
-# compaction sets SPARK_GRAFT_OCC_BUCKET_CHARS=2 (256) or 3 (4096).
-OCC_BUCKET_CHARS = int(os.environ.get("SPARK_GRAFT_OCC_BUCKET_CHARS", "1"))
+# pruning plan-pinned. A log that outgrows 16 files per compaction needs
+# 2 (256) or 3 (4096) here; each snapshot records the width it was
+# written at (``OCC_WIDTH``), so stored indexes stay readable across the
+# change and the next compaction re-buckets them.
+OCC_BUCKET_CHARS = 1
 
 
 def _occ_width_write(base: str, chars: int) -> None:
@@ -3233,19 +3226,19 @@ def _occ_width_write(base: str, chars: int) -> None:
 def _occ_width(base: str) -> int:
     """Bucket width of a snapshot's occ log (round 11, ADVICE r10):
     updates MUST bucket and probe at the width the stored partitions
-    were written at — the env knob only changing the width of FUTURE
-    layouts.  Without this, flipping SPARK_GRAFT_OCC_BUCKET_CHARS
+    were written at — the constant only changing the width of FUTURE
+    layouts.  Without this, changing OCC_BUCKET_CHARS
     mid-index-life left mixed-width partitions ('b0' vs 'b00') the
     isin(touched) probe silently skipped, so stored occurrences went
     unseen and spans were wrong with no error.  Width migration is a
     compaction (the full rewrite is the sanctioned point to re-bucket).
     Pre-round-11 snapshots carry no width file; their width is derived
     from the on-disk layout itself (ADVICE r11: falling back to the
-    CURRENT env knob silently desyncs the probe from the stored 'b…'
-    partitions if the knob changed since the snapshot was written —
+    current constant silently desyncs the probe from the stored 'b…'
+    partitions if it changed since the snapshot was written —
     the exact wrong-spans failure the width file exists to prevent):
     every 'hb=b…' partition directory name encodes the width as
-    len(value) - len('b'). Env is the last resort only when the occ
+    len(value) - len('b'). The constant is the last resort only when the occ
     log has no partitions to read it from (empty log — nothing to
     desync against)."""
     p = os.path.join(base, "OCC_WIDTH")
@@ -3271,7 +3264,7 @@ def _occ_width(base: str) -> int:
 
 def _occ_bucket(col: str = "h", chars: int | None = None):
     """Hive-partition bucket of a digest: its leading ``chars``
-    (default: the env knob) hex chars, prefixed so the partition
+    (default: OCC_BUCKET_CHARS) hex chars, prefixed so the partition
     values never type-infer to integers ('b0'..'bf' at the default
     width — a pure-digit value set would flip the discovered column to
     int and break unionByName between stored and batch frames)."""
@@ -3458,8 +3451,8 @@ def substr_index_compact(spark: SparkSession, index_path: str) -> None:
         # repartition("hb") inside the bucketed writer), restoring O(1)
         # files per bucket for the update-time pruned probe.  Compaction is
         # also the sanctioned WIDTH-MIGRATION point (ADVICE r10): it
-        # re-buckets the full log at the current env width and stamps that
-        # width into the new snapshot, so updates after a knob change probe
+        # re-buckets the full log at the current width and stamps that
+        # width into the new snapshot, so updates after a width change probe
         # a uniform layout.
         _write_occ_bucketed(occ, f"{nbase}/occ", OCC_BUCKET_CHARS)
         dup.coalesce(1).write.mode("overwrite").parquet(f"{nbase}/dup")
@@ -3480,23 +3473,14 @@ def substr_resolve(spark: SparkSession, index_path: str) -> DataFrame:
 
 def dedup_substring_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry entry for the incremental substring-dedup path:
-    bootstrap on the even-doc_id half, ingest the odd half as an update
-    batch, serve — must equal the BATCH :func:`dedup_substring` over
-    the full corpus bit-for-bit (the oracle is that entry's SQL
-    verbatim): the hash gate pins that digest-probe promotion +
-    affected-only span recompute lose nothing vs recomputing from
-    scratch."""
-    import shutil
-    import tempfile
-
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    tmp = tempfile.mkdtemp(prefix="substr_index_entry_")
-    try:
-        substr_index_init(spark, docs.where(F.col("doc_id") % 2 == 0), tmp)
-        substr_index_update(spark, docs.where(F.col("doc_id") % 2 == 1), tmp)
-        return substr_resolve(spark, tmp).localCheckpoint()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    bootstrap on the first half (doc_id <= max/2), ingest the second
+    half as an update batch, serve — must equal the BATCH
+    :func:`dedup_substring` over the full corpus bit-for-bit (the oracle
+    is that entry's SQL verbatim): the hash gate pins that digest-probe
+    promotion + affected-only span recompute lose nothing vs
+    recomputing from scratch."""
+    from . import indexes  # indexes imports this module
+    return indexes.incremental(spark, sf_dir, "substr")
 
 
 RECALL_TAU_E6 = 100_000  # ground-truth near-dup threshold: jaccard ≥ 0.1

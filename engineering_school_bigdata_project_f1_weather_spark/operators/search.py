@@ -895,24 +895,8 @@ def search_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``_bm25_oracle_sql`` verbatim) — the hash gate pins that the
     incremental index's merged postings, document lengths, and global
     (N, T, df) statistics reproduce one batch build exactly."""
-    import shutil
-    import tempfile
-
-    docs = load_table_spread(spark, sf_dir, "documents").select(
-        "doc_id", "text"
-    )
-    half = docs.agg(F.expr("div(max(doc_id), 2)").alias("h")).first()["h"]
-    tmp = tempfile.mkdtemp(prefix="search_idx_")
-    try:
-        search_index_init(
-            spark, docs.where(F.col("doc_id") <= half), f"{tmp}/idx"
-        )
-        search_index_update(
-            spark, docs.where(F.col("doc_id") > half), f"{tmp}/idx"
-        )
-        return search_index_serve(spark, f"{tmp}/idx").localCheckpoint()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    from . import indexes  # indexes imports this module
+    return indexes.incremental(spark, sf_dir, "search")
 
 
 QUERIES = {

@@ -1409,26 +1409,8 @@ def dedup_semantic_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the quantizer trained on the SAME first half — the hash gate
     pins that touched-cluster probing + per-edge domination lose
     nothing vs recomputing from scratch under the frozen quantizer."""
-    import shutil
-    import tempfile
-
-    vecs = load_table_spread(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding"
-    )
-    half = vecs.agg(
-        F.expr("div(max(vec_id), 2)").alias("h")
-    ).first()["h"]
-    tmp = tempfile.mkdtemp(prefix="semdedup_idx_")
-    try:
-        semdedup_index_init(
-            spark, vecs.where(F.col("vec_id") <= half), f"{tmp}/idx"
-        )
-        semdedup_index_update(
-            spark, vecs.where(F.col("vec_id") > half), f"{tmp}/idx"
-        )
-        return semdedup_resolve(spark, f"{tmp}/idx").localCheckpoint()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    from . import indexes  # indexes imports this module
+    return indexes.incremental(spark, sf_dir, "semdedup")
 
 
 def _semantic_incremental_oracle_sql() -> str:

@@ -69,6 +69,11 @@ from .events import load_events
 MG_CAPACITY = 128  # C: summary size; guarantee threshold is N/(C+1)
 
 
+def _day_us() -> Column:
+    """``ts`` floored to its UTC day, in epoch microseconds."""
+    return F.unix_micros("ts") - F.unix_micros("ts") % (24 * 3600 * 1_000_000)
+
+
 def _mg_merge(counters: dict, batch: pd.Series, capacity: int) -> dict:
     """Merge a batch's value counts into a Misra-Gries summary of the
     given capacity: add counts, and if the summary overflows, subtract
@@ -191,7 +196,7 @@ def _mg_monthly_of(events_df: DataFrame) -> DataFrame:
     from .events import MONTH_DAYS_US
 
     C = MG_MONTHLY_CAPACITY
-    day_us = F.unix_micros("ts") - F.unix_micros("ts") % (24 * 3600 * 1_000_000)
+    day_us = _day_us()
     per_day = (
         events_df
         .groupBy(day_us.alias("day_us"), F.col("user_id"))
@@ -392,14 +397,14 @@ def _hll_estimate(regs: DataFrame, grain: str) -> DataFrame:
 
 def events_mau_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Month-grain distinct users by MERGING the daily HLL register
-    frames (round 6, VERDICT r5 item 5) — the registry proof of the
-    property that makes sketches the 100 TB answer: the month sketch is
-    the register-wise MAX of its days' sketches, so stored daily
-    register tables (512 rows/day) roll up to ANY coarser grain without
-    touching raw events again.  The Spark side composes day → month
-    explicitly (the same `_daily_registers` frame ``events_dau_hll``
-    serves, merged by ``MAX(m_reg)`` per (month, register)); the ORACLE
-    sketches the month grain DIRECTLY from events — the hash gate
+    frames — the registry proof of the property that makes sketches
+    the 100 TB answer: the month sketch is the register-wise MAX of its
+    days' sketches, so stored daily register tables (512 rows/day) roll
+    up to ANY coarser grain without touching raw events again.  The
+    Spark side composes day → month explicitly (the same
+    `_daily_registers` frame ``events_dau_hll`` serves, merged by
+    ``MAX(m_reg)`` per (month, register)); the ORACLE sketches the month
+    grain DIRECTLY from events — the hash gate
     therefore validates the merge law itself, in-engine, not just the
     pytest register-level pin (test_sketch.py).  Month = the same fixed
     30-day calendar-free grid as events_dau_mau (MONTH_DAYS_US).
@@ -473,7 +478,7 @@ def _cms_expand(df: DataFrame) -> DataFrame:
     The bucket is a pure function of (r, user_id), so the expansion
     commutes with any filter/distinct on the input — which is what lets
     the query side expand DISTINCT USERS (∝ queried keys) instead of
-    distinct-ing an events×d frame (∝ events; VERDICT r6 item 4)."""
+    distinct-ing an events×d frame (∝ events)."""
     return df.withColumn(
         "r", F.explode(F.array(*[F.lit(r) for r in range(CMS_D)]))
     ).withColumn(
@@ -505,16 +510,15 @@ def events_user_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     point lookups against a tiny materialized summary, never a scan of
     the raw events.
 
-    Hash-side scaling (round 7, VERDICT r6 item 4): CMS counters are
-    LINEAR in the input multiset (counter[r][b] = Σ_{u: h_r(u)=b}
-    count(u) — Cormode-Muthukrishnan 2005 §4), so the plan aggregates
-    per-user counts FIRST (one map-side-combinable groupBy; the
-    ≤|users|-row frequency vector) and only then expands the d hash
-    rows and md5-hashes — d·|users| hash evaluations instead of
-    d·|events| (the previous form's dominant linear term), and the
-    query side reads the same per-user frame (n_true rides along; no
-    second events scan).  Bit-identical counters, same hash; measured
-    ×5-data slope 3.0× → see SCALE.md round 7."""
+    Hash-side scaling: CMS counters are LINEAR in the input multiset
+    (counter[r][b] = Σ_{u: h_r(u)=b} count(u) — Cormode-Muthukrishnan
+    2005 §4), so the plan aggregates per-user counts FIRST (one
+    map-side-combinable groupBy; the ≤|users|-row frequency vector) and
+    only then expands the d hash rows and md5-hashes — d·|users| hash
+    evaluations instead of d·|events|, and the query side reads the same
+    per-user frame (n_true rides along; no second events scan).
+    Bit-identical counters, same hash; measured ×5-data slope 3.0× → see
+    SCALE.md."""
     per_user = (
         load_events(spark, sf_dir)
         .groupBy("user_id")
@@ -566,11 +570,10 @@ ORDER BY e.user_id
 
 def events_user_cms_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Month-grain CMS point frequencies by MERGING daily counter tables
-    (round 7, VERDICT r6 item 3) — the in-engine proof of the CMS
-    counter-SUM merge law, the exact twin of ``events_mau_hll``'s
-    register-MAX proof, completing in-engine merge proofs for all three
-    mergeable summaries (MG truncating-union is pytest-pinned;
-    HLL/CMS are now hash-gated).
+    — the in-engine proof of the CMS counter-SUM merge law, the exact
+    twin of ``events_mau_hll``'s register-MAX proof, completing in-engine
+    merge proofs for all three mergeable summaries (MG truncating-union
+    is pytest-pinned; HLL/CMS are now hash-gated).
 
     The Spark side composes day → month explicitly: per-day counter
     tables (the d·w-row frames a production pipeline persists per
@@ -590,7 +593,7 @@ def events_user_cms_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
     never d·|events|, and the query/true sides reuse the same frame."""
     from .events import MONTH_DAYS_US
 
-    day_us = F.unix_micros("ts") - F.unix_micros("ts") % (24 * 3600 * 1_000_000)
+    day_us = _day_us()
     per_day_user = (
         load_events(spark, sf_dir)
         .groupBy(day_us.alias("day_us"), F.col("user_id"))
@@ -712,7 +715,7 @@ def events_user_bloom_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
     identically in both engines."""
     from .events import MONTH_DAYS_US
 
-    day_us = F.unix_micros("ts") - F.unix_micros("ts") % (24 * 3600 * 1_000_000)
+    day_us = _day_us()
     day_user = (
         load_events(spark, sf_dir)
         .select(day_us.alias("day_us"), "user_id")
@@ -879,7 +882,94 @@ ORDER BY nb.month_us
 """
 
 
+# ------------------------------------------- persisted sketch indexes
+# Six index families keep fixed-size sketch state in a versioned
+# snapshot (``snapshots.txn``): Bloom bits, HLL registers, histogram
+# bins, KMV and row-sample bottom-k, and the table profile.  Each update
+# is the same shape — sketch the batch, union it with the live state,
+# merge by the sketch's merge law, write the result as the next version
+# — so one helper, :func:`_merge_commit`, runs it for all six.  A crash
+# at any point leaves CURRENT on a complete version.  Writing to a fresh
+# directory also means the merge may stream straight from the live
+# version's files: nothing it reads is being replaced.
+
+
+def _max_by(keys: list, col: str):
+    """Register-MAX merge (HLL registers): idempotent, max(a, a) = a."""
+    return lambda df: df.groupBy(*keys).agg(F.max(col).alias(col))
+
+
+def _sum_by(keys: list, cols: list):
+    """Counter-SUM merge (histogram bins, profile counts): a + a ≠ a, so
+    these families keep an exactly-once ``batches`` ledger."""
+    return lambda df: df.groupBy(*keys).agg(*[F.sum(c).alias(c) for c in cols])
+
+
+def _min_k_per_day(k: int):
+    """Order-statistic merge (KMV, row sample): the k smallest distinct
+    ``h`` per day, a semilattice, so min-k(S ∪ S) = min-k(S).  Both
+    inputs are already ≤ k rows per day, so the union is ≤ 2k rows per
+    day by construction and a plain per-day rank is skew-safe here; the
+    two-level salted rank stays on the raw-batch side, where a day is
+    unbounded."""
+    w = Window.partitionBy("day_us").orderBy("h")
+    return lambda df: (
+        df.distinct()
+        .withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") <= k)
+        .drop("rn")
+    )
+
+
+def _merge_commit(
+    spark: SparkSession,
+    path: str,
+    prefix: str,
+    parts: dict,
+    batch_id: str | None = None,
+    init: bool = False,
+) -> str:
+    """Commit one sketched batch as the next version of the index at
+    ``path``; returns the directory of the version now live.
+
+    ``parts`` maps each sub-table (``""`` is the version root) to
+    ``(batch_sketch, merge)``.  An update writes
+    ``merge(live ∪ batch_sketch)`` into each sub-table; ``init`` writes
+    the batch sketch unmerged, so a re-run bootstrap replaces the state.
+
+    A ``batch_id`` marks a SUM-merged family, whose ``batches`` ledger
+    commits in the same version as its counters, so the two are always
+    consistent (the lake form of Structured Streaming's
+    commit-log-per-batch contract).  An update whose ``batch_id`` is
+    already in the live ledger commits nothing and returns the live
+    directory; the probe runs before the transaction, because ``txn``
+    raises on a block that writes nothing."""
+    if batch_id is not None and not init:
+        live = os.path.join(path, snapshots.snap_live(path))
+        ledger = spark.read.parquet(os.path.join(live, "batches"))
+        # one row per applied batch: a steering-sized probe
+        if ledger.where(F.col("batch_id") == batch_id).limit(1).count() > 0:
+            return live
+    with snapshots.txn(path, prefix) as t:
+        for sub, (batch, merge) in parts.items():
+            if not init:
+                live_sub = spark.read.parquet(os.path.join(t.live, sub))
+                batch = merge(live_sub.unionByName(batch))
+            batch.write.mode("overwrite").parquet(os.path.join(t.dir, sub))
+        if batch_id is not None:
+            row = snapshots.meta_row(spark, "batch_id string", (batch_id,))
+            (row if init else ledger.unionByName(row)).write.mode(
+                "overwrite"
+            ).parquet(os.path.join(t.dir, "batches"))
+    return t.dir
+
+
 # ------------------------------------- incremental Bloom bit-set table
+def _bloom_parts(events_df: DataFrame) -> dict:
+    # set-union merge: a ∪ a = a
+    return {"": (_bloom_bits_of(events_df), DataFrame.distinct)}
+
+
 def bloom_index_init(spark: SparkSession, events_df: DataFrame, path: str) -> None:
     """Materialize the per-day Bloom bit-set table for an initial event
     corpus — the membership twin of :func:`hll_index_init`: the lake
@@ -888,8 +978,7 @@ def bloom_index_init(spark: SparkSession, events_df: DataFrame, path: str) -> No
     events (no false negatives; false-positive rate set by m/d against
     the per-day active-user count).  Same versioned-snapshot + atomic
     CURRENT-pointer durability as the HLL register table."""
-    with snapshots.txn(path, "bits_v") as t:
-        _bloom_bits_of(events_df).write.mode("overwrite").parquet(t.dir)
+    _merge_commit(spark, path, "bits_v", _bloom_parts(events_df), init=True)
 
 
 def bloom_index_update(
@@ -900,20 +989,16 @@ def bloom_index_update(
     snapshot.  IDEMPOTENT — re-delivery is absorbed because
     a ∪ a = a (the Bloom merge law as persisted state).  Returns the
     post-merge frame; per-batch work is O(|batch| + m·days-touched)."""
-    with snapshots.txn(path, "bits_v") as t:
-        old = spark.read.parquet(t.live)
-        merged = old.unionByName(_bloom_bits_of(new_events)).distinct()
-        merged.write.mode("overwrite").parquet(t.dir)
-    return spark.read.parquet(t.dir)
+    return spark.read.parquet(
+        _merge_commit(spark, path, "bits_v", _bloom_parts(new_events))
+    )
 
 
 def _bloom_bits_of(events_df: DataFrame) -> DataFrame:
     """(day_us, pos) distinct bit rows over an arbitrary (ts, user_id)
     frame — the per-day Bloom bitmaps in row form."""
     day_user = events_df.select(
-        (
-            F.unix_micros("ts") - F.unix_micros("ts") % (24 * 3600 * 1_000_000)
-        ).alias("day_us"),
+        _day_us().alias("day_us"),
         "user_id",
     ).distinct()
     return (
@@ -1032,23 +1117,8 @@ ORDER BY 1
 
 
 # ------------------------------------- incremental HLL register table
-#
-# Durability (round 7, ADVICE r6): updates never overwrite the live
-# snapshot in place.  Each state version is a fresh ``registers_v{n}``
-# directory committed by an atomic CURRENT swap (``snapshots.txn``, the
-# protocol every index family shares), so a crash or executor loss at
-# ANY point leaves CURRENT pointing at a complete, readable snapshot.
-# This replaces the previous read-modify-overwrite (whose
-# localCheckpoint guard still lost the table if an executor died
-# mid-overwrite).
-
-
-def _snap_meta_row(spark: SparkSession, batch_id: str) -> DataFrame:
-    """One ledger row as a pure-JVM single-partition frame (round 12
-    opt): createDataFrame([(id,)]) parallelized the 1-row list into 32
-    Python-RDD slices — a Python-worker job plus up to 32 ledger files
-    PER BATCH; this writes one."""
-    return snapshots.meta_row(spark, "batch_id string", (batch_id,))
+def _hll_parts(events_df: DataFrame) -> dict:
+    return {"": (_registers_of(events_df), _max_by(["day_us", "reg"], "m_reg"))}
 
 
 def hll_index_init(spark: SparkSession, events_df: DataFrame, path: str) -> None:
@@ -1058,8 +1128,7 @@ def hll_index_init(spark: SparkSession, events_df: DataFrame, path: str) -> None
     pipeline: the lake keeps ≤ m rows per day FOREVER and answers any
     day/month/arbitrary-window distinct-user question by register-MAX
     merge, never re-reading raw events."""
-    with snapshots.txn(path, "registers_v") as t:
-        _registers_of(events_df).write.mode("overwrite").parquet(t.dir)
+    _merge_commit(spark, path, "registers_v", _hll_parts(events_df), init=True)
 
 
 def hll_index_update(
@@ -1067,24 +1136,15 @@ def hll_index_update(
 ) -> DataFrame:
     """Merge a new event batch into the register table: sketch the batch,
     register-wise MAX against the stored frame, write the merged state
-    as a NEW snapshot, atomically swap the CURRENT pointer (module note
-    above).  IDEMPOTENT — re-delivering the same batch is absorbed
-    because max(a, a) = a, so an orchestrator retry is a no-op (the same
-    contract as the minhash / ANN index updates, via the merge law
-    instead of an anti-join).  Returns the post-merge register frame;
+    as a NEW snapshot, atomically swap the CURRENT pointer.  IDEMPOTENT
+    — re-delivering the same batch is absorbed because max(a, a) = a,
+    so an orchestrator retry is a no-op (the same contract as the
+    minhash / ANN index updates, via the merge law instead of an
+    anti-join).  Returns the post-merge register frame;
     per-batch work is O(|batch| + m·days-touched), never corpus-sized."""
-    with snapshots.txn(path, "registers_v") as t:
-        old = spark.read.parquet(t.live)
-        merged = (
-            old.unionByName(_registers_of(new_events))
-            .groupBy("day_us", "reg")
-            .agg(F.max("m_reg").alias("m_reg"))
-        )
-        # Writing to a FRESH directory means the plan may stream straight
-        # from the old snapshot's files — no checkpoint needed to sever
-        # lineage, because nothing it reads is being replaced.
-        merged.write.mode("overwrite").parquet(t.dir)
-    return spark.read.parquet(t.dir)
+    return spark.read.parquet(
+        _merge_commit(spark, path, "registers_v", _hll_parts(new_events))
+    )
 
 
 def _registers_of(events_df: DataFrame) -> DataFrame:
@@ -1092,18 +1152,23 @@ def _registers_of(events_df: DataFrame) -> DataFrame:
     frame — the same pipeline `_daily_registers` runs on the sf_dir
     path, factored for the index twins."""
     e = events_df.select(
-        (
-            F.unix_micros("ts") - F.unix_micros("ts") % (24 * 3600 * 1_000_000)
-        ).alias("day_us"),
+        _day_us().alias("day_us"),
         texts.hash32(F.col("user_id").cast("string")).alias("h"),
     )
+    return _hll_registers(e, "day_us")
+
+
+def _hll_registers(hashed: DataFrame, key: str) -> DataFrame:
+    """(key, h) → (key, reg, m_reg): register index h mod m, M = max(rho)
+    of the rank field h div m (pipeline in the events_dau_hll
+    docstring)."""
     w = F.expr(f"div(h, {HLL_M})")
     rho = F.when(w == 0, F.lit(HLL_W_BITS + 1)).otherwise(
         F.lit(HLL_W_BITS + 1) - F.length(F.bin(w))
     )
     return (
-        e.select("day_us", (F.col("h") % HLL_M).alias("reg"), rho.alias("rho"))
-        .groupBy("day_us", "reg")
+        hashed.select(key, (F.col("h") % HLL_M).alias("reg"), rho.alias("rho"))
+        .groupBy(key, "reg")
         .agg(F.max("rho").alias("m_reg"))
     )
 
@@ -1187,17 +1252,7 @@ def segment_overlap_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         texts.hash32(F.col("user_id").cast("string")).alias("h"),
     )
-    w = F.expr(f"div(h, {HLL_M})")
-    rho = F.when(w == 0, F.lit(HLL_W_BITS + 1)).otherwise(
-        F.lit(HLL_W_BITS + 1) - F.length(F.bin(w))
-    )
-    seg_regs = (
-        hashed.select(
-            "event_type", (F.col("h") % HLL_M).alias("reg"), rho.alias("rho")
-        )
-        .groupBy("event_type", "reg")
-        .agg(F.max("rho").alias("m_reg"))
-    )
+    seg_regs = _hll_registers(hashed, "event_type")
     union_regs = (
         seg_regs.groupBy("reg")
         .agg(F.max("m_reg").alias("m_reg"))  # the register-MAX merge
@@ -1413,7 +1468,7 @@ def _daily_hist_of(events_df: DataFrame) -> DataFrame:
     factored from events_value_hist_monthly."""
     from .events import _cents
 
-    day_us = F.unix_micros("ts") - F.unix_micros("ts") % (24 * 3600 * 1_000_000)
+    day_us = _day_us()
     return (
         events_df.select(
             day_us.alias("day_us"), _cents("value").alias("value_cents")
@@ -1430,63 +1485,38 @@ def _daily_hist_of(events_df: DataFrame) -> DataFrame:
 
 
 # ---------------- incremental histogram table with a batch ledger
-# The continuous-ingest twin for a NON-IDEMPOTENT merge.  The other
-# index twins are idempotent through their merge law alone (max(a,a)=a
-# for HLL registers, a∪a=a for Bloom bits and minhash/ANN member sets),
-# so an orchestrator re-delivering a batch is absorbed for free.  SUM
-# merges — histograms here, CMS counters identically — are NOT:
-# a+a ≠ a, so a retried batch would double-count.  The standard fix is
-# an applied-batch LEDGER carried inside the same atomic snapshot as
-# the counters: an update whose batch_id is already in the live
-# snapshot's ledger is a no-op, and because ledger and counters commit
-# together (one CURRENT-pointer swap), a crash between them is
-# impossible — the pair is always mutually consistent.  This is the
-# engine-level form of Structured Streaming's own commit-log-per-batch
-# exactly-once contract, applied to a lake-persisted summary table.
+# The continuous-ingest twin for a NON-IDEMPOTENT merge: a + a ≠ a, so
+# a re-delivered batch would double-count without the applied-batch
+# ledger of :func:`_merge_commit` (the other sketch twins absorb it
+# through their merge law alone).
+
+
+def _hist_parts(events_df: DataFrame) -> dict:
+    merge = _sum_by(["day_us", "bin"], ["cnt"])
+    return {"counts": (_daily_hist_of(events_df), merge)}
 
 
 def hist_index_init(spark: SparkSession, events_df: DataFrame, path: str) -> None:
     """Materialize the per-day histogram table (counts + applied-batch
     ledger) for an initial corpus; ≤ B rows per day kept forever, any
     coarser-grain percentile served by per-bin SUM merge."""
-    with snapshots.txn(path, "hist_v") as t:
-        _daily_hist_of(events_df).write.mode("overwrite").parquet(
-            os.path.join(t.dir, "counts")
-        )
-        _snap_meta_row(spark, "__init__").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(t.dir, "batches"))
+    _merge_commit(
+        spark, path, "hist_v", _hist_parts(events_df), "__init__", init=True
+    )
 
 
 def hist_index_update(
     spark: SparkSession, new_events: DataFrame, path: str, batch_id: str
 ) -> DataFrame:
     """Merge one ingest batch into the histogram table by per-bin SUM —
-    EXACTLY-ONCE via the snapshot-embedded ledger (module note above):
+    EXACTLY-ONCE via the snapshot-embedded ledger (:func:`_merge_commit`):
     if ``batch_id`` is already applied, return the live counts
     untouched; otherwise write merged counts + extended ledger as a new
     snapshot and atomically swap CURRENT.  Per-batch work is
     O(|batch| + B·days-touched), never corpus-sized.  Returns the
     post-merge (day_us, bin, cnt) frame."""
-    base = os.path.join(path, snapshots.snap_live(path))
-    ledger = spark.read.parquet(os.path.join(base, "batches"))
-    # ledger is batch-count-sized (one row per applied batch) — the
-    # membership probe is a steering-sized action, like the k-row
-    # centroid collects.
-    if ledger.where(F.col("batch_id") == batch_id).limit(1).count() > 0:
-        return spark.read.parquet(os.path.join(base, "counts"))
-    old = spark.read.parquet(os.path.join(base, "counts"))
-    merged = (
-        old.unionByName(_daily_hist_of(new_events))
-        .groupBy("day_us", "bin")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
-    with snapshots.txn(path, "hist_v") as t:
-        merged.write.mode("overwrite").parquet(os.path.join(t.dir, "counts"))
-        ledger.unionByName(
-            _snap_meta_row(spark, batch_id)
-        ).write.mode("overwrite").parquet(os.path.join(t.dir, "batches"))
-    return spark.read.parquet(os.path.join(t.dir, "counts"))
+    live = _merge_commit(spark, path, "hist_v", _hist_parts(new_events), batch_id)
+    return spark.read.parquet(os.path.join(live, "counts"))
 
 
 # Direct month-grain binning from raw events: equals the Spark side's
@@ -1584,12 +1614,9 @@ def _user_day_hash() -> Column:
     exercise the estimator or the min-k truncation).  User-days are the
     standard engagement denominator (DAU-days / MAU) and reach ~30× the
     user cardinality, so the month sketch is genuinely truncated."""
-    day_us = F.unix_micros("ts") - F.unix_micros("ts") % (
-        24 * 3600 * 1_000_000
-    )
     return texts.hash32(
         F.concat_ws(
-            ":", F.col("user_id").cast("string"), day_us.cast("string")
+            ":", F.col("user_id").cast("string"), _day_us().cast("string")
         )
     )
 
@@ -1605,12 +1632,14 @@ def _daily_kmv_of(events_df: DataFrame) -> DataFrame:
     events frame — the persisted sketch the month entry, the Jaccard
     entry's shape, and the kmv_index twins all derive from."""
     hashed = events_df.select(
-        (
-            F.unix_micros("ts") - F.unix_micros("ts") % (24 * 3600 * 1_000_000)
-        ).alias("day_us"),
+        _day_us().alias("day_us"),
         _user_day_hash().alias("h"),
     ).distinct()
     return _bottom_k(hashed, ["day_us"], KMV_K)
+
+
+def _kmv_parts(events_df: DataFrame) -> dict:
+    return {"": (_daily_kmv_of(events_df), _min_k_per_day(KMV_K))}
 
 
 def kmv_index_init(spark: SparkSession, events_df: DataFrame, path: str) -> None:
@@ -1619,8 +1648,7 @@ def kmv_index_init(spark: SparkSession, events_df: DataFrame, path: str) -> None
     completing the persisted-sketch family (minhash / ANN / HLL / Bloom
     / histogram): ≤ KMV_K rows per day kept forever, any window's
     distinct-count estimate served by min-k merge of its days."""
-    with snapshots.txn(path, "kmv_v") as t:
-        _daily_kmv_of(events_df).write.mode("overwrite").parquet(t.dir)
+    _merge_commit(spark, path, "kmv_v", _kmv_parts(events_df), init=True)
 
 
 def kmv_index_update(
@@ -1628,27 +1656,14 @@ def kmv_index_update(
 ) -> DataFrame:
     """Merge a new event batch into the bottom-k table: sketch the
     batch, min-k the union per day, write a NEW snapshot, atomically
-    swap CURRENT (shared _snap machinery).  IDEMPOTENT like the
+    swap CURRENT (:func:`_merge_commit`).  IDEMPOTENT like the
     HLL/Bloom twins — min-k(S ∪ S) = min-k(S), the order-statistic
     merge is a semilattice, so a re-delivered batch is a no-op and no
     ledger is needed (contrast hist_index_update's non-idempotent SUM).
     Per-batch work is O(|batch| + k·days-touched), never corpus-sized."""
-    # Both merge inputs are already ≤ k rows/day sketches, so the union
-    # is ≤ 2k rows per day BY CONSTRUCTION — a plain per-day rank is
-    # skew-safe here and saves the two-level's extra exchange (the
-    # two-level stays on the raw-batch side, where a day is unbounded).
-    w = Window.partitionBy("day_us").orderBy("h")
-    with snapshots.txn(path, "kmv_v") as t:
-        merged = (
-            spark.read.parquet(t.live)
-            .unionByName(_daily_kmv_of(new_events))
-            .distinct()
-            .withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= KMV_K)
-            .drop("rn")
-        )
-        merged.write.mode("overwrite").parquet(t.dir)
-    return spark.read.parquet(t.dir)
+    return spark.read.parquet(
+        _merge_commit(spark, path, "kmv_v", _kmv_parts(new_events))
+    )
 
 
 def events_kmv_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1694,10 +1709,7 @@ def _kmv_monthly_serve(
                 F.unix_micros("ts") - F.unix_micros("ts") % MONTH_DAYS_US
             ).alias("month_us"),
             "user_id",
-            (
-                F.unix_micros("ts")
-                - F.unix_micros("ts") % (24 * 3600 * 1_000_000)
-            ).alias("day_us"),
+            _day_us().alias("day_us"),
         )
         .distinct()
         .groupBy("month_us")
@@ -1783,10 +1795,7 @@ def segment_jaccard_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "event_type",
             "user_id",
-            (
-                F.unix_micros("ts")
-                - F.unix_micros("ts") % (24 * 3600 * 1_000_000)
-            ).alias("day_us"),
+            _day_us().alias("day_us"),
             _user_day_hash().alias("h"),
         )
     )
@@ -1957,6 +1966,10 @@ def _daily_qsample_of(events_df: DataFrame) -> DataFrame:
     return _bottom_k(rows, ["day_us"], QSAMPLE_K)
 
 
+def _qsample_parts(events_df: DataFrame) -> dict:
+    return {"": (_daily_qsample_of(events_df), _min_k_per_day(QSAMPLE_K))}
+
+
 def qsample_index_init(
     spark: SparkSession, events_df: DataFrame, path: str
 ) -> None:
@@ -1966,8 +1979,7 @@ def qsample_index_init(
     of its days (same semilattice and snapshot durability as the KMV
     twin; the carried ``cents`` payload is what turns the membership
     sketch into a quantile sketch)."""
-    with snapshots.txn(path, "qs_v") as t:
-        _daily_qsample_of(events_df).write.mode("overwrite").parquet(t.dir)
+    _merge_commit(spark, path, "qs_v", _qsample_parts(events_df), init=True)
 
 
 def qsample_index_update(
@@ -1979,18 +1991,9 @@ def qsample_index_update(
     key makes the per-row (h, cents) pair unique, so a re-delivered
     batch is a no-op (no ledger; contrast hist_index_update's SUM).
     Per-batch work is O(|batch| + k·days-touched), never corpus-sized."""
-    w = Window.partitionBy("day_us").orderBy("h")
-    with snapshots.txn(path, "qs_v") as t:
-        merged = (
-            spark.read.parquet(t.live)
-            .unionByName(_daily_qsample_of(new_events))
-            .distinct()
-            .withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= QSAMPLE_K)
-            .drop("rn")
-        )
-        merged.write.mode("overwrite").parquet(t.dir)
-    return spark.read.parquet(t.dir)
+    return spark.read.parquet(
+        _merge_commit(spark, path, "qs_v", _qsample_parts(new_events))
+    )
 
 
 def events_value_quantiles_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2354,37 +2357,39 @@ def _ndv_regs_of(melted: DataFrame) -> DataFrame:
             F.concat(F.lit("ndv:"), F.col("col_name"), F.lit(":"), F.col("v"))
         ).alias("h"),
     )
-    w = F.expr(f"div(h, {HLL_M})")
-    rho = F.when(w == 0, F.lit(HLL_W_BITS + 1)).otherwise(
-        F.lit(HLL_W_BITS + 1) - F.length(F.bin(w))
-    )
-    return (
-        h.select("col_name", (F.col("h") % HLL_M).alias("reg"), rho.alias("rho"))
-        .groupBy("col_name", "reg")
-        .agg(F.max("rho").alias("m_reg"))
-    )
+    return _hll_registers(h, "col_name")
 
 
 def _ndv_distinct(melted: DataFrame) -> DataFrame:
     """(col_name, v) → one row per DISTINCT (column, value) with its
     multiplicity — the single map-combinable shuffle both profile
-    halves derive from (round 12 optimization): counts come back via
+    halves derive from: counts come back via
     SUM(c), exact NDV is the non-null row count, and the HLL registers
     are invariant under duplicate removal (register update is a MAX, so
     hashing each distinct value once is identical to hashing every
-    occurrence).  The previous form scanned + exploded the table once
-    per half."""
+    occurrence)."""
     return melted.groupBy("col_name", "v").agg(F.count(F.lit(1)).alias("c"))
 
 
-def _ndv_counts_of(dv: DataFrame) -> DataFrame:
-    """distinct frame (col_name, v, c) → per-column (n_rows, n_null) —
-    the SUM-mergeable half of the profile state."""
+def _ndv_counts_of(dv: DataFrame, *extra: Column) -> DataFrame:
+    """distinct frame (col_name, v, c) → per-column (n_rows, n_null,
+    *extra) — the SUM-mergeable half of the profile state."""
     return dv.groupBy("col_name").agg(
         F.sum("c").alias("n_rows"),
         F.sum(
             F.when(F.col("v").isNull(), F.col("c")).otherwise(F.lit(0))
         ).alias("n_null"),
+        *extra,
+    )
+
+
+def _ndv_profile(counts: DataFrame, regs: DataFrame) -> DataFrame:
+    """Per-column counts joined with the HLL estimate of ``regs``."""
+    est = ["n_zero_regs", "z_scaled", "hll_raw", "small_range"]
+    return (
+        counts.join(_hll_estimate(regs, "col_name"), "col_name")
+        .select(*counts.columns, *est)
+        .orderBy("col_name")
     )
 
 
@@ -2411,34 +2416,14 @@ def lineitem_ndv_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     envelope pytest-pinned per column across both regimes)."""
     # ONE melt scan + ONE (col, value) distinct shuffle; counts, exact
     # NDV, and registers all derive from the staged distinct frame
-    # (round 12 opt — the un-cut plan ran the scan+explode per half, and
-    # count_distinct's internal expansion re-did the same dedup anyway).
+    # (count_distinct's internal expansion would redo the same dedup).
     dv = _ndv_distinct(
         _ndv_melted(load_table(spark, sf_dir, "lineitem"))
     ).localCheckpoint()
-    base = dv.groupBy("col_name").agg(
-        F.sum("c").alias("n_rows"),
-        F.sum(
-            F.when(F.col("v").isNull(), F.col("c")).otherwise(F.lit(0))
-        ).alias("n_null"),
-        F.count(F.when(F.col("v").isNotNull(), F.lit(1))).alias("ndv_true"),
-    )
-    return (
-        base.join(
-            _hll_estimate(_ndv_regs_of(dv.select("col_name", "v")), "col_name"),
-            "col_name",
-        )
-        .select(
-            "col_name",
-            "n_rows",
-            "n_null",
-            "ndv_true",
-            "n_zero_regs",
-            "z_scaled",
-            "hll_raw",
-            "small_range",
-        )
-        .orderBy("col_name")
+    ndv_true = F.count(F.when(F.col("v").isNotNull(), F.lit(1)))
+    return _ndv_profile(
+        _ndv_counts_of(dv, ndv_true.alias("ndv_true")),
+        _ndv_regs_of(dv.select("col_name", "v")),
     )
 
 
@@ -2489,6 +2474,19 @@ ORDER BY col_name
 """
 
 
+def _ndv_parts(df: DataFrame) -> dict:
+    # one melt scan per batch; regs + counts read the staged distinct
+    # frame, checkpointed by the first write that reads it
+    dv = _ndv_distinct(_ndv_melted(df)).localCheckpoint(eager=False)
+    return {
+        "regs": (
+            _ndv_regs_of(dv.select("col_name", "v")),
+            _max_by(["col_name", "reg"], "m_reg"),
+        ),
+        "counts": (_ndv_counts_of(dv), _sum_by(["col_name"], ["n_rows", "n_null"])),
+    }
+
+
 def ndv_index_init(spark: SparkSession, df: DataFrame, path: str) -> None:
     """Materialize the table-profile state for an initial corpus — the
     continuous-ingest twin of :func:`lineitem_ndv_profile`, completing
@@ -2500,18 +2498,7 @@ def ndv_index_init(spark: SparkSession, df: DataFrame, path: str) -> None:
     grows.  The exact-NDV audit column of the batch entry is
     deliberately NOT maintained (it is corpus-sized state); serving
     emits the estimator profile."""
-    # one melt scan; regs + counts both read the staged distinct frame
-    dv = _ndv_distinct(_ndv_melted(df)).localCheckpoint()
-    with snapshots.txn(path, "ndv_v") as t:
-        _ndv_regs_of(dv.select("col_name", "v")).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(t.dir, "regs"))
-        _ndv_counts_of(dv).write.mode("overwrite").parquet(
-            os.path.join(t.dir, "counts")
-        )
-        _snap_meta_row(spark, "__init__").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(t.dir, "batches"))
+    _merge_commit(spark, path, "ndv_v", _ndv_parts(df), "__init__", init=True)
 
 
 def ndv_index_update(
@@ -2525,33 +2512,7 @@ def ndv_index_update(
     serving profile.  Serving parity with the batch entry's estimator
     columns is pytest-pinned (init on half A, update with half B ≡
     one-shot profile of A ∪ B — MAX/SUM merge laws compose)."""
-    base = os.path.join(path, snapshots.snap_live(path))
-    ledger = spark.read.parquet(os.path.join(base, "batches"))
-    if ledger.where(F.col("batch_id") == batch_id).limit(1).count() > 0:
-        return ndv_index_profile(spark, path)
-    # one melt scan per batch; regs + counts read the staged distinct frame
-    dv = _ndv_distinct(_ndv_melted(df)).localCheckpoint()
-    regs = (
-        spark.read.parquet(os.path.join(base, "regs"))
-        .unionByName(_ndv_regs_of(dv.select("col_name", "v")))
-        .groupBy("col_name", "reg")
-        .agg(F.max("m_reg").alias("m_reg"))
-    )
-    counts = (
-        spark.read.parquet(os.path.join(base, "counts"))
-        .unionByName(_ndv_counts_of(dv))
-        .groupBy("col_name")
-        .agg(
-            F.sum("n_rows").alias("n_rows"),
-            F.sum("n_null").alias("n_null"),
-        )
-    )
-    with snapshots.txn(path, "ndv_v") as t:
-        regs.write.mode("overwrite").parquet(os.path.join(t.dir, "regs"))
-        counts.write.mode("overwrite").parquet(os.path.join(t.dir, "counts"))
-        ledger.unionByName(
-            _snap_meta_row(spark, batch_id)
-        ).write.mode("overwrite").parquet(os.path.join(t.dir, "batches"))
+    _merge_commit(spark, path, "ndv_v", _ndv_parts(df), batch_id)
     return ndv_index_profile(spark, path)
 
 
@@ -2559,20 +2520,9 @@ def ndv_index_profile(spark: SparkSession, path: str) -> DataFrame:
     """Serve the estimator profile from the live state — the batch
     entry's columns minus the corpus-sized exact-NDV audit column."""
     base = os.path.join(path, snapshots.snap_live(path))
-    counts = spark.read.parquet(os.path.join(base, "counts"))
-    regs = spark.read.parquet(os.path.join(base, "regs"))
-    return (
-        counts.join(_hll_estimate(regs, "col_name"), "col_name")
-        .select(
-            "col_name",
-            "n_rows",
-            "n_null",
-            "n_zero_regs",
-            "z_scaled",
-            "hll_raw",
-            "small_range",
-        )
-        .orderBy("col_name")
+    return _ndv_profile(
+        spark.read.parquet(os.path.join(base, "counts")),
+        spark.read.parquet(os.path.join(base, "regs")),
     )
 
 

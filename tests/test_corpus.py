@@ -1263,7 +1263,7 @@ def test_substr_index_promotes_stored_singleton(spark, tmp_path):
 
 
 def test_substr_index_bucket_width_persisted(spark, tmp_path, monkeypatch):
-    """Flipping SPARK_GRAFT_OCC_BUCKET_CHARS mid-index-life must not
+    """Changing OCC_BUCKET_CHARS mid-index-life must not
     desync the probe from the stored partition layout (ADVICE r10):
     the snapshot records its occ-log bucket width, updates probe AND
     write deltas at that recorded width (a stored singleton is still
@@ -1316,8 +1316,8 @@ def test_occ_width_legacy_snapshot_derived_from_layout(
     spark, tmp_path, monkeypatch
 ):
     """Pre-round-11 snapshots carry no OCC_WIDTH file; their width must
-    come from the on-disk 'hb=b…' layout, NOT the current env knob
-    (ADVICE r11: the env fallback silently desyncs the probe if the
+    come from the on-disk 'hb=b…' layout, NOT the current constant
+    (ADVICE r11: that fallback silently desyncs the probe if the
     knob changed since the legacy snapshot was written — the wrong-spans
     failure the width file prevents for new snapshots)."""
     import os

@@ -6,32 +6,22 @@ injects a fault at each commit point by monkeypatching the call that
 fails there.  After every fault, ``CURRENT`` must still name a complete
 version, and the next transaction must clean up.
 
-The second half runs the 13 index families on the test fixtures: a
-failed commit leaves the serving view unchanged, a retry converges to
-the clean-run serving view, and re-running a bootstrap on a committed
-index writes a new version instead of the live one."""
+The second half runs the 13 index families of ``indexes.FAMILIES`` on
+the test fixtures: a failed commit leaves the serving view unchanged, a
+retry converges to the clean-run serving view, and re-running a
+bootstrap on a committed index writes a new version instead of the live
+one.  The same holds for a failed compaction of the append-only
+families."""
 
 from __future__ import annotations
 
 import os
 
-import pyspark.sql.functions as F
 import pytest
 
 from engineering_school_bigdata_project_f1_weather_spark.functions import snapshots
-from engineering_school_bigdata_project_f1_weather_spark.operators import (
-    curate_index,
-    dedup,
-    search,
-    similarity,
-    sketch,
-)
-from engineering_school_bigdata_project_f1_weather_spark.operators.events import (
-    load_events,
-)
-from engineering_school_bigdata_project_f1_weather_spark.sources.tables import (
-    load_table,
-    load_table_spread,
+from engineering_school_bigdata_project_f1_weather_spark.operators.indexes import (
+    FAMILIES,
 )
 from tools.selfcheck import canon_rows
 
@@ -181,139 +171,6 @@ def test_txn_carry_hard_links(tmp_path):
 # ----------------------------------------------------- the 13 families
 
 
-def _docs(spark, sf_dir):
-    return load_table_spread(spark, sf_dir, "documents").select(
-        "doc_id", "lang", "text"
-    )
-
-
-def _vecs(spark, sf_dir):
-    return load_table_spread(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding"
-    )
-
-
-def _halves(df, col):
-    """First half (``col <= max/2``, where the frozen models of the
-    curation and SemDeDup indexes are defined) and second half."""
-    half = df.agg(F.expr(f"div(max({col}), 2)")).first()[0]
-    return df.where(F.col(col) <= half), df.where(F.col(col) > half)
-
-
-def _events(spark, sf_dir):
-    e = load_events(spark, sf_dir)
-    return e.where(F.col("ts_us") % 2 == 0), e.where(F.col("ts_us") % 2 == 1)
-
-
-def _state(sub=""):
-    """Serving view for a family without one: its live state table."""
-    return lambda spark, path: spark.read.parquet(
-        os.path.join(path, snapshots.snap_live(path), sub)
-    )
-
-
-def _curate_inputs(spark, sf_dir):
-    da, db = _halves(_docs(spark, sf_dir), "doc_id")
-    va, vb = _halves(_vecs(spark, sf_dir), "vec_id")
-    return (da, va), (db, vb)
-
-
-# family: (prefix, inputs(spark, sf_dir) -> (A, B), init, update, serve)
-FAMILIES = {
-    "minhash": (
-        "sig_v",
-        lambda s, d: _halves(_docs(s, d).select("doc_id", "text"), "doc_id"),
-        dedup.minhash_index_init,
-        dedup.minhash_index_update,
-        lambda s, p: _state()(s, p).drop("xs"),
-    ),
-    "er": (
-        "er_v",
-        lambda s, d: _halves(_docs(s, d), "doc_id"),
-        dedup.er_index_init,
-        dedup.er_index_update,
-        dedup.er_resolve,
-    ),
-    "substr": (
-        "sub_v",
-        lambda s, d: _halves(_docs(s, d).select("doc_id", "text"), "doc_id"),
-        dedup.substr_index_init,
-        dedup.substr_index_update,
-        dedup.substr_resolve,
-    ),
-    "ann": (
-        "state_v",
-        lambda s, d: _halves(_vecs(s, d), "vec_id"),
-        similarity.ann_index_init,
-        similarity.ann_index_update,
-        _state("assign"),
-    ),
-    "semdedup": (
-        "sem_v",
-        lambda s, d: _halves(_vecs(s, d), "vec_id"),
-        similarity.semdedup_index_init,
-        similarity.semdedup_index_update,
-        similarity.semdedup_resolve,
-    ),
-    "search": (
-        "si_v",
-        lambda s, d: _halves(_docs(s, d).select("doc_id", "text"), "doc_id"),
-        search.search_index_init,
-        search.search_index_update,
-        search.search_index_serve,
-    ),
-    "curate": (
-        "cur_v",
-        _curate_inputs,
-        lambda s, ab, p: curate_index.curate_index_init(s, *ab, p),
-        lambda s, ab, p: curate_index.curate_index_update(s, *ab, p),
-        curate_index.curate_resolve,
-    ),
-    "bloom": (
-        "bits_v",
-        _events,
-        sketch.bloom_index_init,
-        sketch.bloom_index_update,
-        _state(),
-    ),
-    "hll": (
-        "registers_v",
-        _events,
-        sketch.hll_index_init,
-        sketch.hll_index_update,
-        _state(),
-    ),
-    "hist": (
-        "hist_v",
-        _events,
-        sketch.hist_index_init,
-        lambda s, b, p: sketch.hist_index_update(s, b, p, "b1"),
-        _state("counts"),
-    ),
-    "kmv": (
-        "kmv_v",
-        _events,
-        sketch.kmv_index_init,
-        sketch.kmv_index_update,
-        _state(),
-    ),
-    "qsample": (
-        "qs_v",
-        _events,
-        sketch.qsample_index_init,
-        sketch.qsample_index_update,
-        _state(),
-    ),
-    "ndv": (
-        "ndv_v",
-        lambda s, d: _halves(load_table(s, d, "lineitem"), "l_orderkey"),
-        sketch.ndv_index_init,
-        lambda s, b, p: sketch.ndv_index_update(s, b, p, "b1"),
-        sketch.ndv_index_profile,
-    ),
-}
-
-
 def _hash(df):
     return canon_rows(df.columns, [tuple(r) for r in df.collect()])[0]
 
@@ -333,14 +190,15 @@ def test_index_commit_fault_retry_and_reinit(
     For the curation index the failing commit is the sub-indexes' own
     (inside the overlapped legs), so this also pins that a failed leg
     never reaches the top-level commit."""
-    prefix, inputs, init, update, serve = FAMILIES[family]
-    a, b = inputs(spark, sf_dir)
+    f = FAMILIES[family]
+    prefix, serve = f.prefix, f.serve
+    a, b = f.split(spark, sf_dir)
     idx, clean = str(tmp_path / "idx"), str(tmp_path / "clean")
 
-    init(spark, a, idx)
+    f.init(spark, *a, idx)
     assert snapshots.snap_live(idx) == f"{prefix}0"
     h_init = _hash(serve(spark, idx))
-    init(spark, a, idx)
+    f.init(spark, *a, idx)
     assert snapshots.snap_live(idx) == f"{prefix}1"
     assert not os.path.exists(os.path.join(idx, f"{prefix}0"))
     assert _hash(serve(spark, idx)) == h_init
@@ -348,12 +206,75 @@ def test_index_commit_fault_retry_and_reinit(
     with monkeypatch.context() as m:
         m.setattr(snapshots, "snap_commit", _boom)
         with pytest.raises(Boom):
-            update(spark, b, idx)
+            f.update(spark, *b, idx)
     assert snapshots.snap_live(idx) == f"{prefix}1"
     assert _hash(serve(spark, idx)) == h_init
 
-    update(spark, b, idx)
+    f.update(spark, *b, idx)
     assert snapshots.snap_live(idx) == f"{prefix}2"
-    init(spark, a, clean)
-    update(spark, b, clean)
+    f.init(spark, *a, clean)
+    f.update(spark, *b, clean)
     assert _hash(serve(spark, idx)) == _hash(serve(spark, clean))
+
+
+COMPACTING = sorted(n for n, f in FAMILIES.items() if f.compact is not None)
+
+
+@pytest.mark.parametrize("family", COMPACTING)
+def test_index_compact_fault_and_retry(
+    spark, sf_dir, tmp_path, monkeypatch, family
+):
+    """Per append-only family, after init(A) + update(B): a compaction
+    whose commit of the index's own version fails raises, and leaves
+    CURRENT and the serving view unchanged; the retried compaction
+    serves exactly the pre-compaction view.  Sub-index commits are let
+    through, so for the curation index this pins that a SemDeDup
+    compaction that committed before the failed top-level commit is
+    harmless."""
+    f = FAMILIES[family]
+    a, b = f.split(spark, sf_dir)
+    idx = str(tmp_path / "idx")
+    f.init(spark, *a, idx)
+    f.update(spark, *b, idx)
+    live = snapshots.snap_live(idx)
+    h_pre = _hash(f.serve(spark, idx))
+
+    real_commit = snapshots.snap_commit
+
+    def fail_top(path, snap, prefix):
+        if path == idx:
+            raise Boom("injected fault")
+        real_commit(path, snap, prefix)
+
+    with monkeypatch.context() as m:
+        m.setattr(snapshots, "snap_commit", fail_top)
+        with pytest.raises(Boom):
+            f.compact(spark, idx)
+    assert snapshots.snap_live(idx) == live
+    assert _hash(f.serve(spark, idx)) == h_pre
+
+    f.compact(spark, idx)
+    assert snapshots.snap_live(idx) != live
+    assert _hash(f.serve(spark, idx)) == h_pre
+
+
+def test_every_index_family_is_in_the_table():
+    """Every ``*_index_init`` in the operator modules belongs to a
+    family of ``indexes.FAMILIES``, so a new family cannot skip the
+    fault matrix or the bench rows."""
+    import importlib
+    import pkgutil
+
+    from engineering_school_bigdata_project_f1_weather_spark import operators
+
+    inits = set()
+    for mod in pkgutil.iter_modules(operators.__path__):
+        m = importlib.import_module(f"{operators.__name__}.{mod.name}")
+        inits |= {
+            fn
+            for name, fn in vars(m).items()
+            if name.endswith("_index_init")
+            and callable(fn)
+            and fn.__module__ == m.__name__
+        }
+    assert inits == {f.init for f in FAMILIES.values()}

@@ -5,6 +5,11 @@ the protocol the round-12 bench addenda used, for apples-to-apples
 re-measurement of suspected movers without the 234-entry session's
 ordering/JIT noise.
 
+A name that is not a queries() entry runs as its ``bench.EXTRA_BENCH``
+row (the ``*_index_update`` and ``*_dist`` rows among them); when the row
+returns its own span (an index row excludes its untimed init), that span
+is the time reported.
+
 Usage: python tools/time_entries.py [-n RUNS] entry [entry ...]
 Env:   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS
 """
@@ -27,14 +32,22 @@ name = {name!r}
 sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 spark = get_spark("time-entries", cpus=os.environ.get("SPARK_GRAFT_CPUS", "32"))
 spark.sparkContext.setLogLevel("ERROR")
-fn = entrymod.queries()[name]
+queries = entrymod.queries()
+if name in queries:
+    def run():
+        queries[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+else:
+    import bench
+
+    def run():
+        return bench.EXTRA_BENCH[name](spark, sf_dir)
 times = []
 for i in range(2):
     spark.catalog.clearCache()
     spark.sparkContext.setJobDescription(f"time: {{name}} run{{i}}")
     t0 = time.perf_counter()
-    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    times.append(round(time.perf_counter() - t0, 3))
+    span = run()
+    times.append(round(time.perf_counter() - t0 if span is None else span, 3))
 print("TIMES_JSON=" + json.dumps(times))
 spark.stop()
 """
