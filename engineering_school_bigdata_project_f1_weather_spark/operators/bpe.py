@@ -81,11 +81,13 @@ def _pair_counts(segs: DataFrame) -> DataFrame:
     )
 
 
-def _merge_pair(seg, left: str, right: str):
+def _merge_pair(seg, left: str, right: str, merged: str):
     """Greedy left-to-right single-pair merge as one aggregate fold:
     acc = (out array, pending symbol); merging consumes both symbols, so
     overlapping occurrences (aaa with pair a+a) merge non-overlapping
-    left-to-right — the standard BPE apply rule."""
+    left-to-right — the standard BPE apply rule.  Each merge emits the
+    symbol ``merged``: ``left + right`` for BPE; WordPiece drops the
+    right piece's continuation prefix."""
     init = F.struct(
         F.array().cast("array<string>").alias("out"),
         F.lit(None).cast("string").alias("prev"),
@@ -96,7 +98,7 @@ def _merge_pair(seg, left: str, right: str):
         return F.struct(
             F.when(
                 take_merge,
-                F.concat(acc["out"], F.array(F.lit(left + right))),
+                F.concat(acc["out"], F.array(F.lit(merged))),
             )
             .when(acc["prev"].isNull(), acc["out"])
             .otherwise(F.concat(acc["out"], F.array(acc["prev"])))
@@ -146,7 +148,32 @@ def train_bpe_from_words(
     by the sf_dir path and tests that need richer vocabularies than the
     31-word synthetic corpus."""
     segs = _initial_segments(words).localCheckpoint()
-    merges: list[tuple[str, str]] = []
+    merges = _merge_loop(
+        spark,
+        segs,
+        n_merges,
+        _pair_counts,
+        [F.desc("freq"), F.asc("l"), F.asc("r")],
+        lambda left, right: left + right,
+    )
+    return [(left, right) for left, right, _ in merges]
+
+
+def _merge_loop(
+    spark: SparkSession,
+    segs: DataFrame,
+    n_merges: int,
+    scores,
+    order: list,
+    merged_of,
+) -> list[tuple[str, str, str]]:
+    """The merge-training loop shared by BPE and WordPiece over a
+    checkpointed (word, n, seg) frame: each round ranks
+    ``scores(segs)`` — (l, r, freq, ...) rows — by ``order``, takes the
+    top row to the driver, stops if its pair occurs fewer than twice,
+    and otherwise folds the pair into every segmentation as the symbol
+    ``merged_of(l, r)``.  Returns [(l, r, merged), ...] in merge order."""
+    merges: list[tuple[str, str, str]] = []
     # Loop-scoped shuffle sizing (same move as the k-means / Hash-Min
     # loops): every per-round shuffle carries vocab-frame rows, so size
     # partitions to the vocab and restore the session conf after.
@@ -156,18 +183,16 @@ def train_bpe_from_words(
     spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
     try:
         for _ in range(n_merges):
-            top = (
-                _pair_counts(segs)
-                .orderBy(F.desc("freq"), F.asc("l"), F.asc("r"))
-                .limit(1)
-                .collect()
-            )
+            top = scores(segs).orderBy(*order).limit(1).collect()
             if not top or top[0]["freq"] < 2:
                 break
             left, right = top[0]["l"], top[0]["r"]
-            merges.append((left, right))
+            merged = merged_of(left, right)
+            merges.append((left, right, merged))
             segs = segs.select(
-                "word", "n", _merge_pair(F.col("seg"), left, right).alias("seg")
+                "word",
+                "n",
+                _merge_pair(F.col("seg"), left, right, merged).alias("seg"),
             ).localCheckpoint()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", saved_parts)
@@ -303,7 +328,7 @@ def apply_bpe(
     seg = F.concat(F.split(F.col("word"), ""), F.array(F.lit(END_OF_WORD)))
     col = seg
     for left, right in merges:
-        col = _merge_pair(col, left, right)
+        col = _merge_pair(col, left, right, left + right)
     per_word = tok.select(
         "doc_id", "n_chars", F.size(col).cast("long").alias("n_pieces")
     )

@@ -229,7 +229,9 @@ def sim_lsh_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(bv, "vec_b")
         .mapInPandas(
             functools.partial(
-                _verify_pairs_arrow_nbands, min_e6=LSH_VERIFY_MIN_E6
+                _verify_pairs_arrow,
+                min_e6=LSH_VERIFY_MIN_E6,
+                extra=("n_bands",),
             ),
             schema="vec_a long, vec_b long, n_bands int, sim_e6 long",
         )
@@ -688,48 +690,15 @@ ASSIGN_LISTS = 6
 TARGET_LIST_SIZE = 80  # deployment sizing: k ≈ n / TARGET_LIST_SIZE
 
 
-def _verify_pairs_arrow_nbands(batches, min_e6: int):
-    """`_verify_pairs_arrow` twin that carries the band-collision count
-    through: (vec_a, vec_b, n_bands, qa, qb, na, nb) → (vec_a, vec_b,
-    n_bands, sim_e6). Same bit-exactness contract; used by the banded-LSH
-    verify stage (round 5 — the r3→r5 wall-time drift on sim_lsh_banded
-    isolated to candidate-volume growth in the regenerated corpus, 378k
-    pairs × ~10 µs/pair interpreted dot; the batch matmul removes the
-    per-pair interpreter cost)."""
-    import numpy as np
-
-    for pdf in batches:
-        if len(pdf) == 0:
-            continue
-        A = np.vstack(pdf["qa"].to_numpy()).astype(np.int64, copy=False)
-        B = np.vstack(pdf["qb"].to_numpy()).astype(np.int64, copy=False)
-        d = np.einsum("ij,ij->i", A, B)
-        with np.errstate(invalid="ignore", divide="ignore"):
-            s = np.floor(
-                d.astype(np.float64)
-                * 1_000_000.0
-                / np.sqrt(
-                    pdf["na"].to_numpy().astype(np.float64)
-                    * pdf["nb"].to_numpy().astype(np.float64)
-                )
-            )
-        s = np.where(np.isfinite(s), s, 0.0)
-        keep = s >= min_e6
-        yield pd.DataFrame(
-            {
-                "vec_a": pdf["vec_a"].to_numpy()[keep],
-                "vec_b": pdf["vec_b"].to_numpy()[keep],
-                "n_bands": pdf["n_bands"].to_numpy()[keep],
-                "sim_e6": s[keep].astype(np.int64),
-            }
-        )
-
-
-def _verify_pairs_arrow(batches, min_e6: int | None = None):
+def _verify_pairs_arrow(
+    batches, min_e6: int | None = None, extra: tuple[str, ...] = ()
+):
     """mapInPandas body for the pairwise verify hot path: whole Arrow
-    batches of candidate pairs (vec_a, vec_b, qa, qb, na, nb) come in;
-    exact-cosine-verified pairs at the ``min_e6`` threshold (default:
-    the near-dup threshold) go out as (vec_a, vec_b, sim_e6).
+    batches of candidate pairs (vec_a, vec_b, *extra, qa, qb, na, nb)
+    come in; exact-cosine-verified pairs at the ``min_e6`` threshold
+    (default: the near-dup threshold) go out as
+    (vec_a, vec_b, *extra, sim_e6) — ``extra`` names pass-through
+    columns, e.g. the banded-LSH stage's ``n_bands``.
 
     Vectorized twin of ``vectors.sim_e6(vectors.dot(...))``: the dot
     products run as ONE numpy int64 matrix op per batch instead of
@@ -767,13 +736,9 @@ def _verify_pairs_arrow(batches, min_e6: int | None = None):
             )
         s = np.where(np.isfinite(s), s, 0.0)
         keep = s >= min_e6
-        yield pd.DataFrame(
-            {
-                "vec_a": pdf["vec_a"].to_numpy()[keep],
-                "vec_b": pdf["vec_b"].to_numpy()[keep],
-                "sim_e6": s[keep].astype(np.int64),
-            }
-        )
+        out = {c: pdf[c].to_numpy()[keep] for c in ("vec_a", "vec_b", *extra)}
+        out["sim_e6"] = s[keep].astype(np.int64)
+        yield pd.DataFrame(out)
 
 
 def scaled_ann_params(n: int) -> tuple[int, int]:

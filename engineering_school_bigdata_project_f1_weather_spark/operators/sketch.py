@@ -64,7 +64,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 from ..functions import snapshots, texts
 from ..sources.tables import load_table
-from .events import load_events
+from .events import MONTH_DAYS_US, load_events
 
 MG_CAPACITY = 128  # C: summary size; guarantee threshold is N/(C+1)
 
@@ -72,6 +72,14 @@ MG_CAPACITY = 128  # C: summary size; guarantee threshold is N/(C+1)
 def _day_us() -> Column:
     """``ts`` floored to its UTC day, in epoch microseconds."""
     return F.unix_micros("ts") - F.unix_micros("ts") % (24 * 3600 * 1_000_000)
+
+
+def _month_us(c: Column | str) -> Column:
+    """An epoch-micros column floored to its 30-day month-grid bucket
+    (``events.MONTH_DAYS_US``); day keys lie inside their bucket exactly,
+    since 86 400 s divides the grid."""
+    c = F.col(c) if isinstance(c, str) else c
+    return c - c % F.lit(MONTH_DAYS_US)
 
 
 def _mg_merge(counters: dict, batch: pd.Series, capacity: int) -> dict:
@@ -116,7 +124,13 @@ def events_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the two-pass MG sketch (module docstring). Output: (user_id,
     n_events) for each heavy hitter, heaviest first."""
     e = load_events(spark, sf_dir).select("user_id")
-    cand = mg_candidates(e, "user_id", MG_CAPACITY)
+    return _hh_verify(e, mg_candidates(e, "user_id", MG_CAPACITY))
+
+
+def _hh_verify(e: DataFrame, cand: DataFrame) -> DataFrame:
+    """The exact verify pass over a (user_id) fact frame: count the
+    candidate users exactly and keep those above N/(C+1) — the serve of
+    the batch entry and of ``streamq.stream_heavy_hitters``."""
     n_total = e.agg(F.count(F.lit(1)).alias("n_total"))
     exact = (
         e.join(F.broadcast(cand), "user_id", "left_semi")
@@ -193,8 +207,6 @@ def events_heavy_hitters_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _mg_monthly_of(events_df: DataFrame) -> DataFrame:
     """Frame-level core of :func:`events_heavy_hitters_monthly` — also
     driven by the synthetic truncation-regime pytest."""
-    from .events import MONTH_DAYS_US
-
     C = MG_MONTHLY_CAPACITY
     day_us = _day_us()
     per_day = (
@@ -213,9 +225,8 @@ def _mg_monthly_of(events_df: DataFrame) -> DataFrame:
         .where(F.col("c") > 0)
         .select("day_us", "user_id", "c")
     )
-    month_of = lambda c: F.col(c) - F.col(c) % F.lit(MONTH_DAYS_US)  # noqa: E731
     merged = (
-        dsum.groupBy(month_of("day_us").alias("month_us"), F.col("user_id"))
+        dsum.groupBy(_month_us("day_us").alias("month_us"), F.col("user_id"))
         .agg(F.sum("c").alias("s"))
     )
     wm = Window.partitionBy("month_us").orderBy(F.desc("s"), F.asc("user_id"))
@@ -228,13 +239,13 @@ def _mg_monthly_of(events_df: DataFrame) -> DataFrame:
             ).alias("tm")
         )
     )
-    slack_d = dthr.groupBy(month_of("day_us").alias("month_us")).agg(
+    slack_d = dthr.groupBy(_month_us("day_us").alias("month_us")).agg(
         F.sum("t").alias("td")
     )
     # month truth = SUM of the per-day counts (the day grid divides the
     # 30-day month grid, both floored from epoch 0) — reuses per_day
     truth = (
-        per_day.groupBy(month_of("day_us").alias("month_us"), F.col("user_id"))
+        per_day.groupBy(_month_us("day_us").alias("month_us"), F.col("user_id"))
         .agg(F.sum("n").alias("n_true"))
     )
     return (
@@ -250,8 +261,6 @@ def _mg_monthly_of(events_df: DataFrame) -> DataFrame:
 
 
 def _mg_monthly_oracle_sql() -> str:
-    from .events import MONTH_DAYS_US
-
     C = MG_MONTHLY_CAPACITY
     return f"""
 WITH per_day AS (
@@ -411,14 +420,9 @@ def events_mau_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     Day keys lie inside their month-grid bucket by construction
     (86 400 s divides the 30-day grid), so day-grain → month-grid
     assignment is exact."""
-    from .events import MONTH_DAYS_US
-
     month_regs = (
         _daily_registers(spark, sf_dir)
-        .withColumn(
-            "month_us",
-            F.col("day_us") - F.col("day_us") % F.lit(MONTH_DAYS_US),
-        )
+        .withColumn("month_us", _month_us("day_us"))
         .groupBy("month_us", "reg")
         .agg(F.max("m_reg").alias("m_reg"))
     )
@@ -519,14 +523,25 @@ def events_user_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-user frame (n_true rides along; no second events scan).
     Bit-identical counters, same hash; measured ×5-data slope 3.0× → see
     SCALE.md."""
-    per_user = (
-        load_events(spark, sf_dir)
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
+    per_user = _user_counts(load_events(spark, sf_dir))
     counters = _cms_expand(per_user).groupBy("r", "bucket").agg(
         F.sum("n_events").alias("cnt")
     )
+    return _cms_serve(per_user, counters)
+
+
+def _user_counts(events_df: DataFrame) -> DataFrame:
+    """(user_id, n_events): the per-user frequency vector."""
+    return events_df.groupBy("user_id").agg(
+        F.count(F.lit(1)).alias("n_events")
+    )
+
+
+def _cms_serve(per_user: DataFrame, counters: DataFrame) -> DataFrame:
+    """Point-query the stride users of a (user_id, n_events) frame
+    against an (r, bucket, cnt) counter table: estimate = min over the d
+    rows, exact count alongside — the serve of the batch entry and of
+    ``streamq.stream_user_cms``."""
     qkeys = per_user.where(F.col("user_id") % CMS_QUERY_STRIDE == 0)
     return (
         _cms_expand(qkeys)
@@ -591,8 +606,6 @@ def events_user_cms_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
     linearity rewrite as the day entry: per-(day, user) counts
     aggregate FIRST, so hashing costs d·|active (day, user) pairs|,
     never d·|events|, and the query/true sides reuse the same frame."""
-    from .events import MONTH_DAYS_US
-
     day_us = _day_us()
     per_day_user = (
         load_events(spark, sf_dir)
@@ -602,15 +615,14 @@ def events_user_cms_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = _cms_expand(per_day_user).groupBy("day_us", "r", "bucket").agg(
         F.sum("n_events").alias("cnt")
     )
-    month_of = lambda c: F.col(c) - F.col(c) % F.lit(MONTH_DAYS_US)  # noqa: E731
     monthly = (
-        daily.withColumn("month_us", month_of("day_us"))
+        daily.withColumn("month_us", _month_us("day_us"))
         .groupBy("month_us", "r", "bucket")
         .agg(F.sum("cnt").alias("cnt"))  # the counter-SUM merge
     )
     per_month_user = (
         per_day_user.where(F.col("user_id") % CMS_QUERY_STRIDE == 0)
-        .groupBy(month_of("day_us").alias("month_us"), F.col("user_id"))
+        .groupBy(_month_us("day_us").alias("month_us"), F.col("user_id"))
         .agg(F.sum("n_events").alias("n_true"))
     )
     return (
@@ -713,21 +725,10 @@ def events_user_bloom_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
     Membership = ALL of the key's distinct positions set; counted as
     n_hit == n_pos so intra-key position collisions are handled
     identically in both engines."""
-    from .events import MONTH_DAYS_US
-
-    day_us = _day_us()
-    day_user = (
-        load_events(spark, sf_dir)
-        .select(day_us.alias("day_us"), "user_id")
-        .distinct()
-    )
+    e = load_events(spark, sf_dir)
+    day_user = e.select(_day_us().alias("day_us"), "user_id").distinct()
     # per-day bit sets (what the lake persists), then the OR-merge
-    day_bits = (
-        _bloom_positions(day_user, "user_id")
-        .select("day_us", "pos")
-        .distinct()
-    )
-    return _bloom_monthly_serve(spark, day_bits, day_user)
+    return _bloom_monthly_serve(spark, _bloom_bits_of(e), day_user)
 
 
 def _bloom_monthly_serve(
@@ -736,11 +737,8 @@ def _bloom_monthly_serve(
     """Month-merge + membership/probe census over a per-day bit-set
     frame — factored (round 8) so the streaming twin serves the SAME
     code over its drained state."""
-    from .events import MONTH_DAYS_US
-
-    month_of = lambda c: F.col(c) - F.col(c) % F.lit(MONTH_DAYS_US)  # noqa: E731
     month_bits = (
-        day_bits.withColumn("month_us", month_of("day_us"))
+        day_bits.withColumn("month_us", _month_us("day_us"))
         .select("month_us", "pos")
         .distinct()  # set union = bitwise OR of the day bitmaps
     )
@@ -748,7 +746,7 @@ def _bloom_monthly_serve(
         F.count(F.lit(1)).alias("n_bits_set")
     )
     month_user = (
-        day_user.withColumn("month_us", month_of("day_us"))
+        day_user.withColumn("month_us", _month_us("day_us"))
         .select("month_us", "user_id")
         .distinct()
     )
@@ -1408,21 +1406,14 @@ def events_value_hist_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation is B rows per (day); the cumulative window partitions
     are B-row month histograms, never data-sized.
     """
-    from .events import MONTH_DAYS_US
-
     return _hist_monthly_serve(_daily_hist_of(load_events(spark, sf_dir)))
 
 
 def _hist_monthly_serve(daily: DataFrame) -> DataFrame:
     """SUM-merge day histograms to month grain + exact-integer
     percentile extraction — factored (round 8) for the streaming twin."""
-    from .events import MONTH_DAYS_US
-
     monthly = (
-        daily.withColumn(
-            "month_us",
-            F.col("day_us") - F.col("day_us") % F.lit(MONTH_DAYS_US),
-        )
+        daily.withColumn("month_us", _month_us("day_us"))
         .groupBy("month_us", "bin")
         .agg(F.sum("cnt").alias("cnt"))  # the histogram SUM merge
     )
@@ -1690,13 +1681,8 @@ def _kmv_monthly_serve(
 ) -> DataFrame:
     """Month min-k merge + estimator + exact companion over a per-day
     bottom-k frame — factored (round 8) for the streaming twin."""
-    from .events import MONTH_DAYS_US
-
     month_sets = daily.select(
-        (F.col("day_us") - F.col("day_us") % MONTH_DAYS_US).alias(
-            "month_us"
-        ),
-        "h",
+        _month_us("day_us").alias("month_us"), "h"
     ).distinct()  # set-union semantics: a hash seen on many days is one
     month_kmv = _bottom_k(month_sets, ["month_us"], KMV_K)
     sketch_agg = month_kmv.groupBy("month_us").agg(
@@ -1705,9 +1691,7 @@ def _kmv_monthly_serve(
     exact = (
         events_df
         .select(
-            (
-                F.unix_micros("ts") - F.unix_micros("ts") % MONTH_DAYS_US
-            ).alias("month_us"),
+            _month_us(F.unix_micros("ts")).alias("month_us"),
             "user_id",
             _day_us().alias("day_us"),
         )
@@ -2028,8 +2012,6 @@ def events_value_quantiles_monthly(spark: SparkSession, sf_dir: str) -> DataFram
 def _qsample_monthly_of(e: DataFrame) -> DataFrame:
     """Frame-level core of :func:`events_value_quantiles_monthly` — also
     driven by the sub-k exact-regime pytest."""
-    from .events import MONTH_DAYS_US, _cents
-
     return _qsample_monthly_serve(_daily_qsample_of(e), e)
 
 
@@ -2037,7 +2019,7 @@ def _qsample_monthly_serve(daily: DataFrame, e: DataFrame) -> DataFrame:
     """Month min-k merge + rank-quantile serving + exact companions over
     a per-day (h, cents) sample frame — factored (round 8) for the
     streaming twin."""
-    from .events import MONTH_DAYS_US, _cents
+    from .events import _cents
 
     day_us = F.col("ts_us") - F.col("ts_us") % (24 * 3600 * 1_000_000)
     rows = e.select(
@@ -2045,9 +2027,8 @@ def _qsample_monthly_serve(daily: DataFrame, e: DataFrame) -> DataFrame:
         _row_hash60().alias("h"),
         _cents("value").alias("cents"),
     )
-    month_of = lambda c: F.col(c) - F.col(c) % F.lit(MONTH_DAYS_US)  # noqa: E731
     merged = _bottom_k(
-        daily.select(month_of("day_us").alias("month_us"), "h", "cents"),
+        daily.select(_month_us("day_us").alias("month_us"), "h", "cents"),
         ["month_us"],
         QSAMPLE_K,
     )
@@ -2072,7 +2053,7 @@ def _qsample_monthly_serve(daily: DataFrame, e: DataFrame) -> DataFrame:
     # the identical order-statistic value, since ranks within equal
     # cents all carry the same cents.
     per_val = (
-        rows.groupBy(month_of("day_us").alias("month_us"), F.col("cents"))
+        rows.groupBy(_month_us("day_us").alias("month_us"), F.col("cents"))
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
     wcum = (
@@ -2106,8 +2087,6 @@ def _qsample_monthly_serve(daily: DataFrame, e: DataFrame) -> DataFrame:
 
 
 def _qsample_monthly_oracle_sql() -> str:
-    from .events import MONTH_DAYS_US
-
     month = f"day_us - day_us % {MONTH_DAYS_US}"
     return f"""
 WITH rows AS MATERIALIZED (

@@ -11,9 +11,11 @@ aggregate equals the batch aggregate bit-for-bit.
 
 Scale notes live with the stream builders: watermark-bounded state,
 complete-mode windowed aggs, file-source micro-batching. The drain here
-goes through a FILE sink (foreachBatch parquet overwrite) so the result
-is executor-written and read back lazily — no driver-resident copy at
-any scale.
+goes through a FILE sink (foreachBatch parquet writes, complete or append
+mode) so the result is executor-written and read back lazily — no
+driver-resident copy at any scale. Each twin keeps only what is its own
+— the streaming aggregation or GroupState fold and its output mode — and
+calls the batch code in ``sketch.py`` / ``dedup.py`` for the rest.
 
 Boundary note (MEASURED, round 4): the previously-documented suspicion
 that ``session_window`` diverges from the batch ``delta > gap`` rule at
@@ -34,6 +36,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..streaming import events_stream
 from . import sketch as _sketch
+from .corpus import EVAL_STRIDE
+from .dedup import DECON_W_GATE
 
 HOUR_US = 3_600_000_000
 GAP_US = 1_800_000_000  # streaming/events_stream.py SESSION_GAP
@@ -47,11 +51,9 @@ GAP_US = 1_800_000_000  # streaming/events_stream.py SESSION_GAP
 # drains — measured on stream_view_purchase_full at sf0.1: 8.3 s with 32
 # state partitions → 3.3 s with 8, same result hash.  A 100 TB
 # deployment sets this to match key cardinality × executor count
-# (hundreds+); the env override exists precisely because it is a
-# capacity decision, not a semantic one.
-STREAM_STATE_PARTITIONS = int(
-    os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8")
-)
+# (hundreds+) — a capacity decision, not a semantic one, made by
+# editing this constant.
+STREAM_STATE_PARTITIONS = 8
 
 
 @contextlib.contextmanager
@@ -69,9 +71,13 @@ def _state_sized(spark: SparkSession):
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
-def _drain(df: DataFrame, prefix: str, spark: SparkSession) -> DataFrame:
+def _drain(
+    df: DataFrame, prefix: str, spark: SparkSession, mode: str = "complete"
+) -> DataFrame:
     """availableNow drain through a FILE sink into a per-(session, entry)
-    temp parquet directory.
+    temp parquet directory; ``mode`` is the stream's output mode
+    (``"append"`` for stateful non-aggregations, see
+    ``events_stream.run_available_now_to_parquet``).
 
     The drained result is written by the executors and read back lazily —
     no result row is ever driver-resident, so the drain harness itself is
@@ -90,20 +96,7 @@ def _drain(df: DataFrame, prefix: str, spark: SparkSession) -> DataFrame:
         f"spark_drain_{spark.sparkContext.applicationId}_{prefix}",
     )
     with _state_sized(spark):
-        return events_stream.run_available_now_to_parquet(df, path, spark)
-
-
-def _drain_append(df: DataFrame, prefix: str, spark: SparkSession) -> DataFrame:
-    """Append-mode twin of :func:`_drain` (non-aggregation stateful
-    streams), same path/overwrite/state-sizing contract."""
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_drain_{spark.sparkContext.applicationId}_{prefix}",
-    )
-    with _state_sized(spark):
-        return events_stream.run_available_now_append_to_parquet(
-            df, path, spark
-        )
+        return events_stream.run_available_now_to_parquet(df, path, spark, mode)
 
 
 def stream_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -237,7 +230,7 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_id") % 7 == 0
     )
     deduped = events_stream.dedup_stream(base.unionByName(redelivery))
-    out = _drain_append(deduped, "stream_dedup", spark)
+    out = _drain(deduped, "stream_dedup", spark, mode="append")
     return out.select(
         "event_id",
         F.unix_micros(F.col("ts")).alias("ts_us"),
@@ -329,7 +322,7 @@ def stream_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts_us", F.unix_micros("ts")
     )
     pairs = stateful.transitions_stream(ev)
-    out = _drain_append(pairs, "stream_transitions", spark)
+    out = _drain(pairs, "stream_transitions", spark, mode="append")
     from pyspark.sql import Window
 
     m = out.groupBy("from_type", "to_type").agg(F.count(F.lit(1)).alias("n"))
@@ -435,7 +428,7 @@ def stream_view_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = view_purchase_pipeline(
         events_stream.stream_events(spark, sf_dir)
     )
-    out = _drain_append(joined, "stream_vp_join", spark)
+    out = _drain(joined, "stream_vp_join", spark, mode="append")
     return out.orderBy("user_id", "view_id", "purchase_id")
 
 
@@ -495,7 +488,7 @@ def stream_view_purchase_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         how="left_outer",
         watermark=OUTER_WATERMARK,
     )
-    out = _drain_append(joined, "stream_vp_outer", spark)
+    out = _drain(joined, "stream_vp_outer", spark, mode="append")
     return out.orderBy("user_id", "view_id", "purchase_id")
 
 
@@ -572,7 +565,7 @@ def stream_view_purchase_full(spark: SparkSession, sf_dir: str) -> DataFrame:
         how="full_outer",
         watermark=OUTER_WATERMARK,
     )
-    out = _drain_append(joined, "stream_vp_full", spark)
+    out = _drain(joined, "stream_vp_full", spark, mode="append")
     return out.orderBy("user_id", "view_id", "purchase_id")
 
 
@@ -618,37 +611,13 @@ def stream_dau_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     state that COUNT(DISTINCT) lacks.  Oracle: the SAME `_HLL_ORACLE`
     as the batch ``events_dau_hll`` — streaming/batch parity and the
     cross-engine sketch contract in one hash gate.
+
+    The streaming aggregation IS the batch register pipeline
+    (``sketch._registers_of`` over the stream), so the two cannot drift.
     """
     ev = events_stream.stream_events(spark, sf_dir)
-    out = _drain(dau_hll_pipeline(ev), "stream_dau_hll", spark)
+    out = _drain(_sketch._registers_of(ev), "stream_dau_hll", spark)
     return _sketch._hll_estimate(out, "day_us").orderBy("day_us")
-
-
-def dau_hll_pipeline(events: DataFrame) -> DataFrame:
-    """(day_us, reg, m_reg) streaming register aggregation — the SAME
-    exact-integer pipeline as the batch ``sketch._registers_of``,
-    expressed over a streaming frame (factored so the pytest can replay
-    it file-by-file to prove cross-micro-batch register merging)."""
-    from ..functions import texts
-    from .sketch import HLL_M, HLL_W_BITS
-
-    hashed = events.select(
-        (
-            F.unix_micros("ts") - F.unix_micros("ts") % (24 * 3600 * 1_000_000)
-        ).alias("day_us"),
-        texts.hash32(F.col("user_id").cast("string")).alias("h"),
-    )
-    w = F.expr(f"div(h, {HLL_M})")
-    rho = F.when(w == 0, F.lit(HLL_W_BITS + 1)).otherwise(
-        F.lit(HLL_W_BITS + 1) - F.length(F.bin(w))
-    )
-    return (
-        hashed.select(
-            "day_us", (F.col("h") % HLL_M).alias("reg"), rho.alias("rho")
-        )
-        .groupBy("day_us", "reg")
-        .agg(F.max("rho").alias("m_reg"))
-    )
 
 
 def stream_user_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -671,20 +640,8 @@ def stream_user_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash gate."""
     ev = events_stream.stream_events(spark, sf_dir)
     counters = _drain(cms_pipeline(ev), "stream_user_cms", spark)
-    per_user = (
-        _load_events_batch(spark, sf_dir)
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
-    qkeys = per_user.where(F.col("user_id") % _sketch.CMS_QUERY_STRIDE == 0)
-    return (
-        _sketch._cms_expand(qkeys)
-        .join(F.broadcast(counters), ["r", "bucket"])
-        .groupBy("user_id", F.col("n_events").alias("n_true"))
-        .agg(F.min("cnt").alias("cms_est"))
-        .select("user_id", "n_true", "cms_est")
-        .orderBy("user_id")
-    )
+    per_user = _sketch._user_counts(_load_events_batch(spark, sf_dir))
+    return _sketch._cms_serve(per_user, counters)
 
 
 def cms_pipeline(events: DataFrame) -> DataFrame:
@@ -721,10 +678,9 @@ def stream_user_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the batch month-grain Bloom SQL verbatim."""
     ev = events_stream.stream_events(spark, sf_dir)
     day_bits = _drain(bloom_bits_pipeline(ev), "stream_user_bloom", spark)
-    day_us = F.unix_micros("ts") - F.unix_micros("ts") % (24 * 3600 * 1_000_000)
     day_user = (
         _load_events_batch(spark, sf_dir)
-        .select(day_us.alias("day_us"), "user_id")
+        .select(_sketch._day_us().alias("day_us"), "user_id")
         .distinct()
     )
     return _sketch._bloom_monthly_serve(spark, day_bits, day_user)
@@ -735,8 +691,7 @@ def bloom_bits_pipeline(events: DataFrame) -> DataFrame:
     position function as the batch ``sketch._bloom_positions`` (factored
     for the replay pytest).  Expressed as a groupBy so the state store
     holds one row per set bit; the count column is dropped at serve."""
-    day_us = F.unix_micros("ts") - F.unix_micros("ts") % (24 * 3600 * 1_000_000)
-    keyed = events.select(day_us.alias("day_us"), "user_id")
+    keyed = events.select(_sketch._day_us().alias("day_us"), "user_id")
     return (
         _sketch._bloom_positions(keyed, "user_id")
         .groupBy("day_us", "pos")
@@ -752,18 +707,12 @@ def stream_value_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     partials SUM-merge into the store (the same merge law the batch
     month entry proves across grains); state ≤ B rows per day.  The
     month merge + exact-integer percentile extraction serve from the
-    drained frame through the SAME factored code as the batch entry;
-    oracle = the batch month-grain histogram SQL verbatim."""
+    drained frame through the SAME factored code as the batch entry, and
+    the streaming aggregation is the batch ``sketch._daily_hist_of``
+    itself; oracle = the batch month-grain histogram SQL verbatim."""
     ev = events_stream.stream_events(spark, sf_dir)
-    daily = _drain(hist_pipeline(ev), "stream_value_hist", spark)
+    daily = _drain(_sketch._daily_hist_of(ev), "stream_value_hist", spark)
     return _sketch._hist_monthly_serve(daily)
-
-
-def hist_pipeline(events: DataFrame) -> DataFrame:
-    """(day_us, bin, cnt) streaming histogram aggregation — the same
-    exact-integer binning as the batch ``sketch._daily_hist_of``
-    (factored for the replay pytest)."""
-    return _sketch._daily_hist_of(events)
 
 
 def bottomk_state_stream(
@@ -846,15 +795,16 @@ def bottomk_state_stream(
     )
 
 
-def _latest_snapshot(drained: DataFrame, cols: list) -> DataFrame:
-    """Max-ver rows per day from a versioned append drain."""
+def _latest_snapshot(drained: DataFrame, key: str, cols: list) -> DataFrame:
+    """Distinct ``cols`` of the max-``ver`` rows per ``key`` from a
+    versioned append drain (the final state of each GroupState group)."""
     from pyspark.sql import Window
 
-    wv = Window.partitionBy("day_us")
+    wv = Window.partitionBy(key)
     return (
         drained.withColumn("mv", F.max("ver").over(wv))
         .where(F.col("ver") == F.col("mv"))
-        .select("day_us", *cols)
+        .select(*cols)
         .distinct()
     )
 
@@ -871,16 +821,17 @@ def stream_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     semilattice, so the final state equals the batch daily sketch under
     ANY batching — bit-deterministic, unlike MG's candidates)."""
     ev = events_stream.stream_events(spark, sf_dir)
-    day_us = F.unix_micros("ts") - F.unix_micros("ts") % (24 * 3600 * 1_000_000)
     rows = ev.select(
-        day_us.alias("day_us"), _sketch._user_day_hash().alias("h")
+        _sketch._day_us().alias("day_us"),
+        _sketch._user_day_hash().alias("h"),
     )
-    drained = _drain_append(
+    drained = _drain(
         bottomk_state_stream(rows, _sketch.KMV_K, with_cents=False),
         "stream_kmv",
         spark,
+        mode="append",
     )
-    daily = _latest_snapshot(drained, ["h"])
+    daily = _latest_snapshot(drained, "day_us", ["day_us", "h"])
     return _sketch._kmv_monthly_serve(
         spark, daily, _load_events_batch(spark, sf_dir)
     )
@@ -898,18 +849,18 @@ def stream_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .events import _cents
 
     ev = events_stream.stream_events(spark, sf_dir)
-    day_us = F.unix_micros("ts") - F.unix_micros("ts") % (24 * 3600 * 1_000_000)
     rows = ev.select(
-        day_us.alias("day_us"),
+        _sketch._day_us().alias("day_us"),
         _sketch._row_hash60().alias("h"),
         _cents("value").alias("cents"),
     )
-    drained = _drain_append(
+    drained = _drain(
         bottomk_state_stream(rows, _sketch.QSAMPLE_K, with_cents=True),
         "stream_value_quantiles",
         spark,
+        mode="append",
     )
-    daily = _latest_snapshot(drained, ["h", "cents"])
+    daily = _latest_snapshot(drained, "day_us", ["day_us", "h", "cents"])
     return _sketch._qsample_monthly_serve(
         daily, _load_events_batch(spark, sf_dir)
     )
@@ -1004,32 +955,46 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is the batch ``_HH_ORACLE`` verbatim: streaming/batch parity
     and the superset guarantee in one hash gate."""
     ev = events_stream.stream_events(spark, sf_dir).select("user_id")
-    drained = _drain_append(
-        mg_state_stream(ev), "stream_heavy_hitters", spark
+    drained = _drain(
+        mg_state_stream(ev), "stream_heavy_hitters", spark, mode="append"
     )
-    from pyspark.sql import Window
-
-    wv = Window.partitionBy("grp")
-    cand = (
-        drained.withColumn("mv", F.max("ver").over(wv))
-        .where(F.col("ver") == F.col("mv"))
-        .select("user_id")
-        .distinct()
-    )
+    cand = _latest_snapshot(drained, "grp", ["user_id"])
     e = _load_events_batch(spark, sf_dir).select("user_id")
-    n_total = e.agg(F.count(F.lit(1)).alias("n_total"))
-    exact = (
-        e.join(F.broadcast(cand), "user_id", "left_semi")
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
+    return _sketch._hh_verify(e, cand)
+
+
+def _corpus_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The document stream minus the held-out eval split (the eval
+    documents are the contamination registry, not corpus)."""
+    return events_stream.stream_table(spark, sf_dir, "documents").where(
+        F.col("doc_id") % EVAL_STRIDE != 0
     )
-    return (
-        exact.crossJoin(F.broadcast(n_total))
-        .where(
-            F.col("n_events") * (_sketch.MG_CAPACITY + 1) > F.col("n_total")
-        )
-        .select("user_id", "n_events")
-        .orderBy(F.desc("n_events"), F.asc("user_id"))
+
+
+def _eval_digests(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct DECON_W_GATE-gram digests of the eval split — the static,
+    broadcast side of the online contamination probes, built by the batch
+    ``dedup._substr_occ``."""
+    from ..sources.tables import load_table
+    from .dedup import _substr_occ
+
+    ev_docs = (
+        load_table(spark, sf_dir, "documents")
+        .where(F.col("doc_id") % EVAL_STRIDE == 0)
+        .select("doc_id", "text")
+    )
+    return _substr_occ(ev_docs, DECON_W_GATE).select("h").distinct()
+
+
+def _wgram_md5s(tokens: str):
+    """Stream-side twin of ``_substr_occ``'s digests: md5 of every
+    space-joined DECON_W_GATE-token window of the ``tokens`` array, via
+    ``transform`` + ``slice`` (the batch ``lead()`` window is illegal on
+    a stream) — bit-identical digests, in position order."""
+    w = DECON_W_GATE
+    return F.transform(
+        F.sequence(F.lit(1), F.size(tokens) - (w - 1)),
+        lambda p: F.md5(F.concat_ws(" ", F.slice(F.col(tokens), p, w))),
     )
 
 
@@ -1056,35 +1021,21 @@ def stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     output-proportional, orders smaller than the corpus. Gate window
     w = DECON_W_GATE (fixture-scale, non-vacuous; see the batch gate's
     note); deployments pass the GPT-3 default through the batch entry."""
-    from .corpus import EVAL_STRIDE
-    from .dedup import DECON_W_GATE, _substr_occ
     from ..functions import texts
-    from ..sources.tables import load_table
-
-    w = DECON_W_GATE
-    ev_docs = (
-        load_table(spark, sf_dir, "documents")
-        .where(F.col("doc_id") % EVAL_STRIDE == 0)
-        .select("doc_id", "text")
-    )
-    eval_h = _substr_occ(ev_docs, w).select("h").distinct()
 
     d = (
-        events_stream.stream_documents(spark, sf_dir)
-        .where(F.col("doc_id") % EVAL_STRIDE != 0)
+        _corpus_stream(spark, sf_dir)
         .select("doc_id", texts.tokens(F.col("text")).alias("t"))
-        .where(F.size("t") >= w)
-    )
-    shingles = F.transform(
-        F.sequence(F.lit(1), F.size("t") - (w - 1)),
-        lambda p: F.md5(F.concat_ws(" ", F.slice(F.col("t"), p, w))),
+        .where(F.size("t") >= DECON_W_GATE)
     )
     occ = d.select(
-        "doc_id", F.posexplode(shingles).alias("i", "h")
+        "doc_id", F.posexplode(_wgram_md5s("t")).alias("i", "h")
     ).select("doc_id", (F.col("i") + 1).cast("long").alias("pos"), "h")
-    seeds = occ.join(F.broadcast(eval_h), "h").select("doc_id", "pos")
+    seeds = occ.join(F.broadcast(_eval_digests(spark, sf_dir)), "h").select(
+        "doc_id", "pos"
+    )
 
-    drained = _drain_append(seeds, "stream_decontaminate", spark)
+    drained = _drain(seeds, "stream_decontaminate", spark, mode="append")
     return drained.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_hits"),
         F.min("pos").alias("first_pos"),
@@ -1124,23 +1075,11 @@ def stream_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`Lucas files/finalversion`) has no streaming or curation surface —
     extension for the training-data mandate."""
     from ..functions import texts
-    from ..sources.tables import load_table
-    from .corpus import EVAL_STRIDE
     from .curate import QUALITY_MIN_TTR_E6
-    from .dedup import DECON_W_GATE, _substr_occ
     from .text import QUALITY_MAX_TOKENS, QUALITY_MIN_TOKENS
 
-    w = DECON_W_GATE
-    ev_docs = (
-        load_table(spark, sf_dir, "documents")
-        .where(F.col("doc_id") % EVAL_STRIDE == 0)
-        .select("doc_id", "text")
-    )
-    eval_h = _substr_occ(ev_docs, w).select("h").distinct()
-
     d = (
-        events_stream.stream_documents(spark, sf_dir)
-        .where(F.col("doc_id") % EVAL_STRIDE != 0)
+        _corpus_stream(spark, sf_dir)
         .select(
             "doc_id",
             "lang",
@@ -1158,23 +1097,22 @@ def stream_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ttr_e6"
         ),
     )
-    fl = _drain_append(flags, "stream_curate_flags", spark)
+    fl = _drain(flags, "stream_curate_flags", spark, mode="append")
 
     keeper = d.groupBy("h").agg(F.min("doc_id").alias("keeper"))
     kp = _drain(keeper, "stream_curate_keeper", spark)
 
-    shingle_h = F.transform(
-        F.sequence(F.lit(1), F.size("t") - (w - 1)),
-        lambda p: F.md5(F.concat_ws(" ", F.slice(F.col("t"), p, w))),
-    )
     seeds = (
-        d.where(F.size("t") >= w)
-        .select("doc_id", F.explode(shingle_h).alias("sh"))
-        .join(F.broadcast(eval_h), F.col("sh") == F.col("h"))
+        d.where(F.size("t") >= DECON_W_GATE)
+        .select("doc_id", F.explode(_wgram_md5s("t")).alias("sh"))
+        .join(
+            F.broadcast(_eval_digests(spark, sf_dir)),
+            F.col("sh") == F.col("h"),
+        )
         .select("doc_id")
     )
     cont = (
-        _drain_append(seeds, "stream_curate_seeds", spark)
+        _drain(seeds, "stream_curate_seeds", spark, mode="append")
         .distinct()
         .withColumn("contaminated", F.lit(True))
     )
@@ -1257,7 +1195,7 @@ def stream_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     qstream = (
-        events_stream.stream_embeddings(spark, sf_dir)
+        events_stream.stream_table(spark, sf_dir, "embeddings")
         .where(F.col("vec_id") % QUERY_STRIDE == 0)
         .select(
             F.col("vec_id").alias("query_id"),
@@ -1306,7 +1244,7 @@ def stream_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             sim.alias("sim_e6"),
         )
     )
-    drained = _drain_append(cand, "stream_ann_probe", spark)
+    drained = _drain(cand, "stream_ann_probe", spark, mode="append")
     from pyspark.sql import Window
 
     w = Window.partitionBy("query_id").orderBy(

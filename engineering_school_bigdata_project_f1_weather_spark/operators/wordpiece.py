@@ -39,8 +39,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..sources.tables import load_table_spread
-from .bpe import word_counts
-from .unigram import _sql_quote
+from .bpe import _merge_loop, _pair_counts, word_counts
+from .unigram import _duck_map_sql, _spark_map_sql
 
 WP_CONT = "##"
 WP_N_MERGES = 12
@@ -64,18 +64,7 @@ def _wp_pair_scores(segs: DataFrame) -> DataFrame:
     """Adjacent-pair likelihood scores over the vocab frame: freq(l,r)
     weighted by word count, joined against the two symbol totals —
     score = freq * SCALE // (count_l * count_r), exact int64."""
-    n = F.size("seg")
-    pairs = F.zip_with(
-        F.slice(F.col("seg"), 1, n - 1),
-        F.slice(F.col("seg"), 2, n - 1),
-        lambda a, b: F.struct(a.alias("l"), b.alias("r")),
-    )
-    pc = (
-        segs.where(n >= 2)
-        .select(F.explode(pairs).alias("p"), "n")
-        .groupBy("p.l", "p.r")
-        .agg(F.sum("n").alias("freq"))
-    )
+    pc = _pair_counts(segs)
     sc = (
         segs.select(F.explode("seg").alias("s"), "n")
         .groupBy("s")
@@ -100,38 +89,6 @@ def _wp_merged(left: str, right: str) -> str:
     return left + r
 
 
-def _merge_pair_wp(seg, left: str, right: str, merged: str):
-    """Greedy left-to-right non-overlapping single-pair merge — the BPE
-    fold (bpe._merge_pair) parameterized on the merged symbol, which for
-    WordPiece is NOT the concatenation (the right's ## drops)."""
-    init = F.struct(
-        F.array().cast("array<string>").alias("out"),
-        F.lit(None).cast("string").alias("prev"),
-    )
-
-    def step(acc, s):
-        take_merge = acc["prev"].eqNullSafe(F.lit(left)) & (s == F.lit(right))
-        return F.struct(
-            F.when(
-                take_merge,
-                F.concat(acc["out"], F.array(F.lit(merged))),
-            )
-            .when(acc["prev"].isNull(), acc["out"])
-            .otherwise(F.concat(acc["out"], F.array(acc["prev"])))
-            .alias("out"),
-            F.when(take_merge, F.lit(None).cast("string"))
-            .otherwise(s)
-            .alias("prev"),
-        )
-
-    def finish(acc):
-        return F.when(acc["prev"].isNull(), acc["out"]).otherwise(
-            F.concat(acc["out"], F.array(acc["prev"]))
-        )
-
-    return F.aggregate(seg, init, step, finish)
-
-
 def train_wordpiece(
     spark: SparkSession, sf_dir: str, n_merges: int = WP_N_MERGES
 ) -> list[str]:
@@ -147,43 +104,25 @@ def train_wordpiece(
 def train_wordpiece_from_words(
     spark: SparkSession, words: DataFrame, n_merges: int
 ) -> list[str]:
-    """Training loop over an arbitrary (word, n) frequency frame.  Same
-    per-round structure (and cost model) as ``bpe.train_bpe_from_words``:
-    one argmax row to the driver per round, vocab-frame shuffles sized to
-    the vocab, localCheckpoint lineage truncation."""
+    """Training loop over an arbitrary (word, n) frequency frame: the BPE
+    loop itself (``bpe._merge_loop`` — one argmax row to the driver per
+    round, vocab-frame shuffles sized to the vocab, localCheckpoint
+    lineage truncation) under the likelihood score order and the
+    ``##``-dropping merged-symbol rule."""
     segs = _wp_initial_segments(words).localCheckpoint()
     alphabet = sorted(
         r["s"]
         for r in segs.select(F.explode("seg").alias("s")).distinct().collect()
     )  # bounded: single characters in both positions (<= 2 * charset)
-    vocab: list[str] = list(alphabet)
-    saved_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    n_vocab = segs.count()
-    loop_parts = max(4, min(int(saved_parts), n_vocab // 50_000 + 1))
-    spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    try:
-        for _ in range(n_merges):
-            top = (
-                _wp_pair_scores(segs)
-                .orderBy(
-                    F.desc("score"), F.desc("freq"), F.asc("l"), F.asc("r")
-                )
-                .limit(1)
-                .collect()
-            )
-            if not top or top[0]["freq"] < 2:
-                break
-            left, right = top[0]["l"], top[0]["r"]
-            merged = _wp_merged(left, right)
-            vocab.append(merged)
-            segs = segs.select(
-                "word",
-                "n",
-                _merge_pair_wp(F.col("seg"), left, right, merged).alias("seg"),
-            ).localCheckpoint()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved_parts)
-    return vocab
+    merges = _merge_loop(
+        spark,
+        segs,
+        n_merges,
+        _wp_pair_scores,
+        [F.desc("score"), F.desc("freq"), F.asc("l"), F.asc("r")],
+        _wp_merged,
+    )
+    return alphabet + [merged for _, _, merged in merges]
 
 
 # ------------------------------------ frozen-artifact apply
@@ -211,24 +150,12 @@ def _wp_max_piece(vocab: list[str]) -> int:
     )
 
 
-def _wp_spark_map_sql(vocab: list[str]) -> str:
-    return "map(" + ", ".join(
-        f"{_sql_quote(p)}, 1" for p in sorted(set(vocab))
-    ) + ")"
-
-
-def _wp_duck_map_sql(vocab: list[str]) -> str:
-    ks = ", ".join(_sql_quote(p) for p in sorted(set(vocab)))
-    vs = ", ".join("1" for _ in sorted(set(vocab)))
-    return f"map([{ks}], [{vs}])"
-
-
 def _wp_walk_expr(vocab: list[str], word_col: str = "word") -> str:
     """Spark SQL: the greedy longest-match walk as a fold carrying
     (pos, n_tok, n_unk).  Each of the length(word) steps either no-ops
     (walk already done) or advances by the LONGEST vocab piece at pos
     (``##``-prefixed when pos > 1), falling back to a 1-char UNK."""
-    m = _wp_spark_map_sql(vocab)
+    m = _spark_map_sql(dict.fromkeys(vocab, 1))
     maxp = _wp_max_piece(vocab)
     piece = (
         f"if(st.pos = 1, substring({word_col}, cast(st.pos as int), "
@@ -299,7 +226,7 @@ def _wordpiece_apply_oracle_sql() -> str:
     """The identical greedy walk as a recursive CTE: one row per step
     per word (the walk is a single deterministic path, so rows stay
     linear in word length), terminal at pos = n + 1."""
-    m = _wp_duck_map_sql(WP_FROZEN_VOCAB)
+    m = _duck_map_sql(dict.fromkeys(WP_FROZEN_VOCAB, 1))
     maxp = _wp_max_piece(WP_FROZEN_VOCAB)
     piece = (
         f"CASE WHEN pos = 1 THEN substring(word, CAST(pos AS INT), "

@@ -1,21 +1,26 @@
-"""Structured Streaming ingest of the ``events`` table.
+"""Structured Streaming ingest of the testdata tables.
 
 The reference is pure batch (SURVEY §2.10 — an @monthly Airflow DAG is its
 only notion of time), so this module is the streaming *extension* surface
 (SURVEY §7.1 step 6): the same event analytics as ``operators/events.py``
 expressed as an incremental plan:
 
-- ``stream_events``        : file-source stream over the events parquet.
+- ``stream_table``         : file-source stream over one testdata parquet.
+- ``stream_events``        : the events stream plus its ``event_time``.
 - ``hourly_counts_stream`` : watermarked tumbling-window agg.
 - ``sessions_stream``      : watermarked session_window (30-min gap) agg.
 - ``dedup_stream``         : exactly-once event dedup with bounded state
                              (``dropDuplicatesWithinWatermark``).
 - ``enriched_counts_stream``: stream-static join against a dimension
                              table + windowed rollup.
+- ``run_available_now_to_parquet``: the one drain — availableNow through
+                             a parquet file sink, complete or append mode.
 
-Batch/stream parity is tested in tests/test_streaming.py by running the
-stream with ``availableNow`` into a memory sink and comparing against the
-batch operators.
+Batch/stream parity runs through the file-sink drain: the ``stream_*``
+registry entries (``operators/streamq.py``) drain these plans and are
+hash-checked against the batch SQL oracles, and tests/test_streaming.py
+replays them file by file against the batch operators. The memory sink
+(``run_available_now``) remains only for small test results.
 
 Scale notes: file-source streams list incrementally (maxFilesPerTrigger),
 the window aggs are stateful with watermark-based eviction — state size is
@@ -35,39 +40,25 @@ WATERMARK = "1 hour"
 SESSION_GAP = "30 minutes"
 
 
+def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """File-source stream over the ``name`` parquet under ``sf_dir`` —
+    the continuous-ingest shape of any testdata table (documents for the
+    online curation drains, embeddings for the streaming ANN probe)."""
+    return (
+        spark.readStream.schema(TESTDATA_SCHEMAS[name])
+        .option("pathGlobFilter", f"{name}.parquet")
+        .parquet(sf_dir)
+    )
+
+
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream of events with an ``event_time`` timestamp.
 
     The parquet stores TIMESTAMP(MICROS) (see operators/events.py);
     ``event_time`` aliases it for the windowing APIs.
     """
-    raw = (
-        spark.readStream.schema(TESTDATA_SCHEMAS["events"])
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    return raw.withColumn("event_time", F.col("ts"))
-
-
-def stream_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the embeddings parquet — the online
-    query-vector ingest shape (used by the streaming ANN probe,
-    operators/streamq.py::stream_ann_probe)."""
-    return (
-        spark.readStream.schema(TESTDATA_SCHEMAS["embeddings"])
-        .option("pathGlobFilter", "embeddings.parquet")
-        .parquet(sf_dir)
-    )
-
-
-def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the documents parquet — the
-    continuous-crawl ingest shape (used by the online decontamination
-    drain, operators/streamq.py::stream_decontaminate)."""
-    return (
-        spark.readStream.schema(TESTDATA_SCHEMAS["documents"])
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
+    return stream_table(spark, sf_dir, "events").withColumn(
+        "event_time", F.col("ts")
     )
 
 
@@ -157,64 +148,39 @@ def run_available_now(df: DataFrame, table_name: str, spark: SparkSession) -> Da
     return spark.table(table_name)
 
 
-def run_available_now_append_to_parquet(
-    df: DataFrame, path: str, spark: SparkSession
-) -> DataFrame:
-    """Append-mode twin of ``run_available_now_to_parquet`` for stateful
-    NON-aggregation streams (dedup): complete mode is only legal for
-    aggregates, and dedup emits each surviving row exactly once as it
-    arrives, so per-batch ``mode("append")`` parquet writes accumulate
-    precisely the final result. Same executor-written, never
-    driver-resident property as the complete-mode drain."""
-
-    import os
-    import shutil
-
-    shutil.rmtree(path, ignore_errors=True)
-
-    def _write_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(path)
-
-    q = (
-        df.writeStream.foreachBatch(_write_batch)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    if not os.path.isdir(path):  # empty source: no batch ever fired
-        return empty_rel(spark, df.schema)
-    return spark.read.parquet(path)
-
-
 def run_available_now_to_parquet(
-    df: DataFrame, path: str, spark: SparkSession
+    df: DataFrame, path: str, spark: SparkSession, mode: str = "complete"
 ) -> DataFrame:
     """Drain the stream with the availableNow trigger through a file sink
     and return a lazy reader over the drained directory.
 
-    ``foreachBatch`` runs in complete mode (the native parquet sink is
+    ``mode="complete"`` (aggregations): each micro-batch overwrites the
+    directory with the full current result, so after the final batch it
+    holds the completed aggregate (the native parquet sink is
     append-only, which with availableNow can leave the final watermark
-    window unemitted); each micro-batch overwrites the directory with the
-    full current result, so after the final batch the directory holds the
-    completed aggregate. The write is a normal distributed parquet write —
-    executors write their own partitions and no result row ever lands on
-    the driver, at any scale. The returned DataFrame is a plain
-    ``spark.read.parquet`` over the drained files."""
+    window unemitted). ``mode="append"`` (stateful non-aggregations —
+    dedup, stream-stream joins, GroupState folds — where complete mode
+    is illegal): each surviving row is emitted exactly once, so per-batch
+    appends accumulate precisely the final result. Either way the write
+    is a normal distributed parquet write — executors write their own
+    partitions and no result row ever lands on the driver, at any scale.
+    The returned DataFrame is a plain ``spark.read.parquet`` over the
+    drained files."""
 
     import os
     import shutil
 
+    write_mode = {"complete": "overwrite", "append": "append"}[mode]
     # Callers may reuse a drain directory across invocations; a stale
     # result must never survive into a run whose source fires no batch.
     shutil.rmtree(path, ignore_errors=True)
 
     def _write_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(path)
+        batch_df.write.mode(write_mode).parquet(path)
 
     q = (
         df.writeStream.foreachBatch(_write_batch)
-        .outputMode("complete")
+        .outputMode(mode)
         .trigger(availableNow=True)
         .start()
     )

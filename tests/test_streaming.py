@@ -4,6 +4,7 @@ as the batch operators when drained with availableNow."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from engineering_school_bigdata_project_f1_weather_spark.operators.events import (
     events_hourly,
@@ -741,8 +742,8 @@ def test_stream_stream_join_bridges_microbatches(spark, sf_dir, tmp_path):
         .withColumn("event_time", F.col("ts"))
     )
     out_dir = str(tmp_path / "vp_out")
-    got_df = events_stream.run_available_now_append_to_parquet(
-        streamq.view_purchase_pipeline(stream), out_dir, spark
+    got_df = events_stream.run_available_now_to_parquet(
+        streamq.view_purchase_pipeline(stream), out_dir, spark, mode="append"
     )
     got = {
         (r.view_id, r.purchase_id): r.delay_us for r in got_df.collect()
@@ -830,8 +831,8 @@ def test_stream_transitions_state_bridges_microbatches(spark, sf_dir, tmp_path):
         .withColumn("ts_us", F.unix_micros("ts"))
     )
     out_dir = str(tmp_path / "pairs")
-    got_df = events_stream.run_available_now_append_to_parquet(
-        stateful.transitions_stream(stream), out_dir, spark
+    got_df = events_stream.run_available_now_to_parquet(
+        stateful.transitions_stream(stream), out_dir, spark, mode="append"
     )
     got = {
         (r.from_type, r.to_type): r.n
@@ -923,12 +924,13 @@ def test_stream_vp_outer_null_emits_exactly_once(spark, tmp_path):
         .withColumn("event_time", F.col("ts"))
     )
     out_dir = str(tmp_path / "vp_outer_out")
-    got_df = events_stream.run_available_now_append_to_parquet(
+    got_df = events_stream.run_available_now_to_parquet(
         streamq.view_purchase_pipeline(
             stream, how="left_outer", watermark=streamq.OUTER_WATERMARK
         ),
         out_dir,
         spark,
+        mode="append",
     )
     rows = got_df.collect()
     # user 1: matched pair, exactly once, exact delay
@@ -1015,12 +1017,13 @@ def test_stream_vp_full_purchase_null_emits_exactly_once(spark, tmp_path):
         .withColumn("event_time", F.col("ts"))
     )
     out_dir = str(tmp_path / "vp_full_out")
-    got_df = events_stream.run_available_now_append_to_parquet(
+    got_df = events_stream.run_available_now_to_parquet(
         streamq.view_purchase_pipeline(
             stream, how="full_outer", watermark=streamq.OUTER_WATERMARK
         ),
         out_dir,
         spark,
+        mode="append",
     )
     rows = got_df.collect()
     # matched pairs, exactly once each
@@ -1087,8 +1090,8 @@ def test_stream_vp_outer_degenerate_one_leg_stream(spark, tmp_path):
             watermark=streamq.OUTER_WATERMARK,
         )
         out_dir = str(tmp_path / f"degenerate_{how}")
-        got = events_stream.run_available_now_append_to_parquet(
-            joined, out_dir, spark
+        got = events_stream.run_available_now_to_parquet(
+            joined, out_dir, spark, mode="append"
         ).count()
         oracle = len(
             con.execute(streamq.ORACLE_SQL[entry_name]).fetchall()
@@ -1153,7 +1156,7 @@ def test_stream_dau_hll_registers_merge_across_microbatches(spark, sf_dir, tmp_p
     )
     out_dir = str(tmp_path / "hll_out")
     got_df = events_stream.run_available_now_to_parquet(
-        streamq.dau_hll_pipeline(stream), out_dir, spark
+        sketch._registers_of(stream), out_dir, spark
     )
     got = {(r.day_us, r.reg): r.m_reg for r in got_df.collect()}
     want = {
@@ -1294,8 +1297,11 @@ def test_stream_mg_state_folds_across_microbatches(spark, sf_dir, tmp_path):
         .parquet(half_dir)
     )
     out_dir = str(tmp_path / "mg_out")
-    drained = events_stream.run_available_now_append_to_parquet(
-        streamq.mg_state_stream(stream, capacity=cap), out_dir, spark
+    drained = events_stream.run_available_now_to_parquet(
+        streamq.mg_state_stream(stream, capacity=cap),
+        out_dir,
+        spark,
+        mode="append",
     ).collect()
     by_grp: dict = {}
     for r in drained:
@@ -1399,7 +1405,7 @@ def test_stream_hist_counts_merge_across_microbatches(spark, sf_dir, tmp_path):
     got = {
         (r.day_us, r.bin): r.cnt
         for r in events_stream.run_available_now_to_parquet(
-            streamq.hist_pipeline(stream), out_dir, spark
+            sketch._daily_hist_of(stream), out_dir, spark
         ).collect()
     }
     want = {
@@ -1439,10 +1445,11 @@ def test_stream_bottomk_state_folds_across_microbatches(spark, sf_dir, tmp_path)
         day_us.alias("day_us"), sketch._user_day_hash().alias("h")
     )
     out_dir = str(tmp_path / "kmv_out")
-    drained = events_stream.run_available_now_append_to_parquet(
+    drained = events_stream.run_available_now_to_parquet(
         streamq.bottomk_state_stream(rows, sketch.KMV_K, with_cents=False),
         out_dir,
         spark,
+        mode="append",
     ).collect()
     by_day: dict = {}
     for r in drained:
@@ -1641,3 +1648,37 @@ def test_stream_ann_probe_equals_batch_ivf(spark, sf_dir):
     }
     assert got == want
     assert got  # non-vacuous at fixture scale
+
+
+@pytest.mark.parametrize("mode", ["complete", "append"])
+def test_drain_empty_source_and_stale_dir(spark, tmp_path, mode):
+    """The one drain's contract in both output modes: a source that
+    fires no batch drains to 0 rows with the stream's schema, and the
+    result an earlier call left at the same path never survives into
+    the next call's result."""
+    schema = "k long"
+    full, empty = tmp_path / "full", tmp_path / "empty"
+    spark.createDataFrame([(1,), (2,), (2,)], schema).coalesce(1).write.parquet(
+        str(full)
+    )
+    empty.mkdir()
+
+    def plan(src):
+        s = spark.readStream.schema(schema).parquet(str(src))
+        if mode == "complete":
+            return s.groupBy("k").agg(F.count(F.lit(1)).alias("n"))
+        return s.select("k", F.lit(1).cast("long").alias("n"))
+
+    path = str(tmp_path / "drain")
+    first = events_stream.run_available_now_to_parquet(
+        plan(full), path, spark, mode=mode
+    )
+    assert first.count() == (2 if mode == "complete" else 3)
+
+    df = plan(empty)
+    got = events_stream.run_available_now_to_parquet(df, path, spark, mode=mode)
+    assert got.count() == 0
+    # empty_rel keeps names and types (nullability is not part of it)
+    assert [(f.name, f.dataType) for f in got.schema] == [
+        (f.name, f.dataType) for f in df.schema
+    ]
