@@ -21,7 +21,8 @@ Pool threads are fresh Python threads, and under PySpark's pinned-thread
 mode (the 4.x default) each one maps to its own JVM thread that starts
 with no local properties.  Every leg is therefore wrapped on the caller
 thread with ``inheritable_thread_target``, so its jobs carry the
-caller's job group, description and scheduler pool.
+caller's job group, description and scheduler pool.  A leg wrapped with
+:func:`leg` also names itself: its jobs carry ``"<caller>/<name>"``.
 """
 
 from __future__ import annotations
@@ -34,6 +35,7 @@ from pyspark.sql import SparkSession
 # 2-3 jobs in flight is plenty (guide §2.6): enough to fill each leg's
 # task tail, not so many that they fight for executors.
 MAX_OVERLAP = 3
+_DESCRIPTION = "spark.job.description"
 
 
 def run_overlapped(*thunks):
@@ -51,3 +53,22 @@ def run_overlapped(*thunks):
     with ThreadPoolExecutor(max_workers=min(MAX_OVERLAP, len(legs))) as pool:
         futures = [pool.submit(t) for t in legs]
         return [f.result() for f in futures]
+
+
+def leg(name, thunk):
+    """``thunk`` wrapped to run under the job description
+    ``"<inherited description>/<name>"`` (just ``name`` when none is
+    inherited), restoring the previous description afterwards.  Wraps a
+    thunk rather than adding a parameter to :func:`run_overlapped`, so
+    every caller of that keeps passing plain positional thunks."""
+
+    def run():
+        sc = SparkSession.active().sparkContext
+        prev = sc.getLocalProperty(_DESCRIPTION)
+        sc.setLocalProperty(_DESCRIPTION, name if prev is None else f"{prev}/{name}")
+        try:
+            return thunk()
+        finally:
+            sc.setLocalProperty(_DESCRIPTION, prev)
+
+    return run

@@ -50,7 +50,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..functions import snapshots
 from ..functions import texts
-from ..functions.jobs import run_overlapped
+from ..functions.jobs import leg, run_overlapped
 from ..functions.localrel import empty_rel
 from .corpus import (
     PACK_BUDGET,
@@ -162,7 +162,6 @@ def curate_index_init(
 
     with snapshots.txn(index_path, CUR_PREFIX) as t:
         def _leg_quality() -> None:
-            spark.sparkContext.setJobDescription("curate init: quality leg")
             wide = _quality_scored_wide(d)
             lab = wide.select("doc_id", _qc_label_col().alias("train_label"))
             fb = _qc_featbuckets(wide).localCheckpoint()
@@ -179,19 +178,21 @@ def curate_index_init(
             snapshots.write_sized(rows.localCheckpoint(), f"{t.dir}/docs")
 
         def _leg_minhash() -> None:
-            spark.sparkContext.setJobDescription("curate init: minhash leg")
             minhash_index_init(spark, d, f"{index_path}/mh")
             sigs = spark.read.parquet(_minhash_live_dir(f"{index_path}/mh"))
-            pairs = minhash_pairs_of(sigs, sigs).where(
+            pairs = minhash_pairs_of(None, sigs).where(
                 F.col("jaccard_e6") >= COMPONENT_MIN_JACCARD_E6
             ).select("doc_a", "doc_b", "jaccard_e6")
             snapshots.write_sized(pairs.localCheckpoint(), f"{t.dir}/pairs")
 
-        def _leg_semdedup() -> None:
-            spark.sparkContext.setJobDescription("curate init: semdedup leg")
-            semdedup_index_init(spark, vectors, f"{index_path}/sem")
-
-        run_overlapped(_leg_quality, _leg_minhash, _leg_semdedup)
+        run_overlapped(
+            leg("curate init: quality leg", _leg_quality),
+            leg("curate init: minhash leg", _leg_minhash),
+            leg(
+                "curate init: semdedup leg",
+                lambda: semdedup_index_init(spark, vectors, f"{index_path}/sem"),
+            ),
+        )
 
 
 def curate_index_update(
@@ -227,14 +228,12 @@ def curate_index_update(
     # read the COMMITTED signature state (module head, retry safety) —
     # never the sub-update return value.
     def _leg_semdedup() -> None:
-        spark.sparkContext.setJobDescription("curate update: semdedup leg")
         bvecs = new_vectors.join(
             batch.select(F.col("doc_id").alias("vec_id")), "vec_id", "left_semi"
         )
         semdedup_index_update(spark, bvecs, f"{index_path}/sem")
 
     def _leg_pairs() -> DataFrame:
-        spark.sparkContext.setJobDescription("curate update: minhash leg")
         minhash_index_update(spark, batch, f"{index_path}/mh")
         old_pairs = spark.read.parquet(f"{base}/pairs")
         return (
@@ -248,14 +247,17 @@ def curate_index_update(
         )
 
     def _leg_rows() -> DataFrame:
-        spark.sparkContext.setJobDescription("curate update: quality leg")
         c_q16 = int(
             spark.read.parquet(f"{index_path}/model_meta").first()["c_q16"]
         )
         model_b = F.broadcast(spark.read.parquet(f"{index_path}/model"))
         return _doc_rows(batch, model_b, c_q16).localCheckpoint()
 
-    _, new_pairs, rows = run_overlapped(_leg_semdedup, _leg_pairs, _leg_rows)
+    _, new_pairs, rows = run_overlapped(
+        leg("curate update: semdedup leg", _leg_semdedup),
+        leg("curate update: minhash leg", _leg_pairs),
+        leg("curate update: quality leg", _leg_rows),
+    )
 
     with snapshots.txn(index_path, CUR_PREFIX) as t:
         # rows / new_pairs are checkpointed above — sized writes are free.

@@ -30,7 +30,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..functions import localrel, snapshots, texts, vectors
-from ..functions.jobs import run_overlapped
+from ..functions.jobs import leg, run_overlapped
 from ..functions.localrel import empty_rel, local_rows
 from ..sources.tables import load_table, load_table_spread
 
@@ -110,6 +110,92 @@ def _minhash_min_exprs() -> list:
     ]
 
 
+def _minhash_sig_of(sh: DataFrame) -> DataFrame:
+    """(doc_id, xs, mh0..mhH-1, n) signature rows of a (doc_id, x)
+    shingle-hash frame: ONE groupBy yields the shingle set, its H mins
+    and its size.  ``n`` is the size of the collected SET (not a row
+    count) so that n, inter and un all live in the same set domain: if
+    two distinct shingles of one doc collide on hash32, a row count
+    would disagree with the verify's array_intersect size —
+    set semantics everywhere keeps Spark and the oracle identical under
+    collisions."""
+    return (
+        sh.groupBy("doc_id")
+        .agg(F.collect_set("x").alias("xs"), *_minhash_min_exprs())
+        .withColumn("n", F.size("xs").cast("long"))
+    )
+
+
+# ------------------------------------------------------ pair primitives
+# One candidate-pair engine for the dedup family: the batch entries and
+# the incremental ER / curation indexes build their pairs with the same
+# join and verify code, so "incremental equals batch" holds because both
+# run one piece of code.
+def _pair_join(
+    rows: DataFrame,
+    on: tuple = (),
+    cond=None,
+    probe: DataFrame | None = None,
+) -> DataFrame:
+    """Candidate pairs (doc_a, doc_b), doc_a < doc_b, of ``rows`` equal
+    on the ``on`` columns and passing ``cond`` (a predicate over the
+    ``a`` / ``b`` sides).
+
+    ``probe=None`` is the all-pairs self-join on ``a.doc_id < b.doc_id``.
+    A probe frame joins probe × rows on ``a.doc_id != b.doc_id`` and
+    normalises each pair with least/greatest, so exactly the pairs with
+    at least one probe member come out — each up to twice when both
+    members are in the probe.  Callers drop duplicates themselves."""
+    a, b = F.col("a.doc_id"), F.col("b.doc_id")
+    pred = a < b if probe is None else a != b
+    if cond is not None:
+        pred = pred & cond
+    left, right = (rows if probe is None else probe).alias("a"), rows.alias("b")
+    joined = left.join(right, list(on)).where(pred) if on else left.join(right, pred)
+    if probe is None:
+        return joined.select(a.alias("doc_a"), b.alias("doc_b"))
+    return joined.select(
+        F.least(a, b).alias("doc_a"), F.greatest(a, b).alias("doc_b")
+    )
+
+
+def _bands(sig: DataFrame) -> DataFrame:
+    """(doc_id, h, v) band rows of a signature frame: 1-row bands, so a
+    candidate pair shares at least one minhash value."""
+    n_h = len(MINHASH_A)
+    stack_args = ", ".join(f"{h}, mh{h}" for h in range(n_h))
+    return sig.select("doc_id", F.expr(f"stack({n_h}, {stack_args}) AS (h, v)"))
+
+
+def _jaccard_verified(cand: DataFrame, sets: DataFrame) -> DataFrame:
+    """Exact set-Jaccard of the (doc_a, doc_b) candidates over the
+    (doc_id, n, xs) set rows: two id-keyed joins carrying the sets for
+    candidate pairs only, then |∩| by ``array_intersect``.  Output
+    (doc_a, doc_b, inter, un, jaccard_e6), jaccard in exact integer
+    ppm."""
+
+    def side(s: str) -> DataFrame:
+        return sets.select(
+            F.col("doc_id").alias(f"doc_{s}"),
+            F.col("n").alias(f"n{s}"),
+            F.col("xs").alias(f"x{s}"),
+        )
+
+    return (
+        cand.join(side("a"), "doc_a")
+        .join(side("b"), "doc_b")
+        .withColumn("inter", F.size(F.array_intersect("xa", "xb")).cast("long"))
+        .withColumn("un", F.col("na") + F.col("nb") - F.col("inter"))
+        .select(
+            "doc_a",
+            "doc_b",
+            "inter",
+            "un",
+            F.expr("div(inter * 1000000, un)").alias("jaccard_e6"),
+        )
+    )
+
+
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash + LSH near-dup candidates with exact-Jaccard verification.
 
@@ -132,72 +218,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = texts.shingle_frame(_docs(spark, sf_dir), dedup=False).select(
         "doc_id", texts.hash32(F.col("g")).alias("x")
     )
-
-    # One pass over the shingle table yields the signature, the set size,
-    # AND the set itself.  ``n`` is derived from the collected SET (not a
-    # row count) so that n, inter and un all live in the same set domain:
-    # if two distinct shingles of one doc collide on hash32, a row count
-    # would disagree with size(array_intersect(...)) — set semantics
-    # everywhere keeps Spark and the oracle identical under collisions.
-    mins = (
-        sh.groupBy("doc_id")
-        .agg(
-            F.collect_set("x").alias("xs"),
-            *_minhash_min_exprs(),
-        )
-        .withColumn("n", F.size("xs").cast("long"))
-        .cache()
-    )
-    n_h = len(MINHASH_A)
-    stack_args = ", ".join(f"{h}, mh{h}" for h in range(n_h))
-    sig = mins.select(
-        "doc_id", F.expr(f"stack({n_h}, {stack_args}) AS (h, v)")
-    )
-
-    cand = (
-        sig.alias("a")
-        .join(
-            sig.alias("b"),
-            (F.col("a.h") == F.col("b.h"))
-            & (F.col("a.v") == F.col("b.v"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
-
-    docs = mins.select("doc_id", "n", "xs")
-    return (
-        cand.join(
-            docs.select(
-                F.col("doc_id").alias("doc_a"),
-                F.col("n").alias("na"),
-                F.col("xs").alias("xa"),
-            ),
-            "doc_a",
-        )
-        .join(
-            docs.select(
-                F.col("doc_id").alias("doc_b"),
-                F.col("n").alias("nb"),
-                F.col("xs").alias("xb"),
-            ),
-            "doc_b",
-        )
-        .withColumn(
-            "inter", F.size(F.array_intersect("xa", "xb")).cast("long")
-        )
-        .withColumn("un", F.col("na") + F.col("nb") - F.col("inter"))
-        .select(
-            "doc_a",
-            "doc_b",
-            "inter",
-            "un",
-            F.expr("div(inter * 1000000, un)").alias("jaccard_e6"),
-        )
-    )
+    return minhash_pairs_of(None, _minhash_sig_of(sh).cache())
 
 
 def _minhash_oracle_sql() -> str:
@@ -445,66 +466,43 @@ def dedup_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "x", "n", "rk")
         .persist()
     )
-    cand = (
-        ranked.alias("a")
-        .join(ranked.alias("b"), "x")
-        .where(
-            (F.col("a.doc_id") < F.col("b.doc_id"))
-            # length filter: tau*max <= min, exact rational
-            & (
-                F.greatest(F.col("a.n"), F.col("b.n")) * 3
-                <= F.least(F.col("a.n"), F.col("b.n")) * 10
-            )
-            # Positional filter (PPJoin, round 6 — VERDICT r5 item 7):
-            # J ≥ 3/10 needs overlap I ≥ 3(na+nb)/13 (I/(na+nb−I) ≥ τ
-            # ⟺ I ≥ τ(na+nb)/(1+τ)); both docs sort shared tokens in
-            # the same global (df, x) order, so at the pair's FIRST
-            # shared token — positions (rk_a, rk_b), and it provably IS
-            # the first shared token overall (an earlier shared token
-            # would sit below both ranks, hence inside both prefixes) —
-            # overlap ≤ 1 + min(na−rk_a, nb−rk_b).  A row for a later
-            # shared token may fail the bound, but the pair survives
-            # through its first-shared-token row, where the bound is
-            # valid; integer form 13·ubound ≥ 3·(na+nb) is exact.
-            & (
-                13
-                * (
-                    1
-                    + F.least(
-                        F.col("a.n") - F.col("a.rk"),
-                        F.col("b.n") - F.col("b.rk"),
-                    )
+    cand = _pair_join(
+        ranked,
+        ("x",),
+        # length filter: tau*max <= min, exact rational
+        (
+            F.greatest(F.col("a.n"), F.col("b.n")) * 3
+            <= F.least(F.col("a.n"), F.col("b.n")) * 10
+        )
+        # Positional filter (PPJoin, round 6 — VERDICT r5 item 7):
+        # J ≥ 3/10 needs overlap I ≥ 3(na+nb)/13 (I/(na+nb−I) ≥ τ
+        # ⟺ I ≥ τ(na+nb)/(1+τ)); both docs sort shared tokens in
+        # the same global (df, x) order, so at the pair's FIRST
+        # shared token — positions (rk_a, rk_b), and it provably IS
+        # the first shared token overall (an earlier shared token
+        # would sit below both ranks, hence inside both prefixes) —
+        # overlap ≤ 1 + min(na−rk_a, nb−rk_b).  A row for a later
+        # shared token may fail the bound, but the pair survives
+        # through its first-shared-token row, where the bound is
+        # valid; integer form 13·ubound ≥ 3·(na+nb) is exact.
+        & (
+            13
+            * (
+                1
+                + F.least(
+                    F.col("a.n") - F.col("a.rk"),
+                    F.col("b.n") - F.col("b.rk"),
                 )
-                >= 3 * (F.col("a.n") + F.col("b.n"))
             )
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
-        .distinct()
-    )
+            >= 3 * (F.col("a.n") + F.col("b.n"))
+        ),
+    ).distinct()
     sets = sh.groupBy("doc_id").agg(
         F.sort_array(F.collect_set("x")).alias("xs"),
         F.count(F.lit(1)).alias("n"),
     )
-    sa = sets.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("xs").alias("xs_a"),
-        F.col("n").alias("na"),
-    )
-    sb = sets.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("xs").alias("xs_b"),
-        F.col("n").alias("nb"),
-    )
     return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "inter", F.size(F.array_intersect("xs_a", "xs_b")).cast("long")
-        )
-        .withColumn("jaccard_e6", F.expr("div(inter * 1000000, na + nb - inter)"))
+        _jaccard_verified(cand, sets)
         .where(F.col("jaccard_e6") >= PREFIX_TAU_E6)
         .select("doc_a", "doc_b", "inter", "jaccard_e6")
     )
@@ -607,8 +605,72 @@ def dedup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tests/test_corpus.py::test_edit_distance_filter_setting_is_output_invariant).
     if _edit_filter_enabled(d):
         cand = _edit_location_filter(pgram, prefix, cand)
-    ta = d.select(F.col("doc_id").alias("doc_a"), F.col("text").alias("_ta"))
-    tb = d.select(F.col("doc_id").alias("doc_b"), F.col("text").alias("_tb"))
+    return _edit_verified(cand, d)
+
+
+def _edit_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _docs(spark, sf_dir).select(
+        "doc_id", "text", F.length("text").alias("len")
+    )
+
+
+def _qgram_rows(d: DataFrame) -> DataFrame:
+    """(doc_id, len, pos, x): every positional char q-gram hash of a
+    (doc_id, text, len) frame; docs shorter than q have none."""
+    return (
+        d.where(F.col("len") >= EDIT_Q)
+        .select(
+            "doc_id",
+            "len",
+            "text",
+            F.explode(
+                F.sequence(F.lit(1), F.col("len") - (EDIT_Q - 1))
+            ).alias("pos"),
+        )
+        .select(
+            "doc_id",
+            "len",
+            "pos",
+            texts.hash32(F.expr(f"substring(text, pos, {EDIT_Q})")).alias("x"),
+        )
+    )
+
+
+def _edit_candidates(
+    prefix: DataFrame,
+    docs: DataFrame,
+    probe_prefix: DataFrame | None = None,
+    probe_docs: DataFrame | None = None,
+) -> DataFrame:
+    """Distinct (doc_a, doc_b) edit-distance candidates: a shared
+    prefix gram within the length theorem, plus the tiny-doc rescue.
+    ``prefix`` rows are (doc_id, x, len), ``docs`` rows carry
+    (doc_id, len); the probe frames give the probe form of
+    :func:`_pair_join` (pairs with a probe member only)."""
+    len_close = F.abs(F.col("a.len") - F.col("b.len")) <= EDIT_TAU
+    cand = _pair_join(prefix, ("x",), len_close, probe=probe_prefix)
+
+    def tiny(d: DataFrame | None) -> DataFrame | None:
+        return None if d is None else d.where(F.col("len") < EDIT_Q + EDIT_TAU)
+
+    # A doc shorter than q has no q-grams, so pairs whose SMALLER side
+    # is that short are joined directly; the rest already flow through
+    # the prefix join.
+    rescue = _pair_join(
+        tiny(docs),
+        (),
+        len_close & (F.least(F.col("a.len"), F.col("b.len")) < EDIT_Q),
+        probe=tiny(probe_docs),
+    )
+    return cand.unionByName(rescue).distinct()
+
+
+def _edit_verified(cand: DataFrame, docs: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, edit_dist) of the candidates within EDIT_TAU:
+    Spark's JVM ``levenshtein`` with the threshold argument (banded
+    early exit) over the (doc_id, text) rows."""
+    ta = docs.select(F.col("doc_id").alias("doc_a"), F.col("text").alias("_ta"))
+    tb = docs.select(F.col("doc_id").alias("doc_b"), F.col("text").alias("_tb"))
     return (
         cand.join(ta, "doc_a")
         .join(tb, "doc_b")
@@ -621,12 +683,6 @@ def dedup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _edit_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _docs(spark, sf_dir).select(
-        "doc_id", "text", F.length("text").alias("len")
-    )
-
-
 def _edit_surfaces(d: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     """The candidate-generation stages of :func:`dedup_edit_distance`,
     exposed for reuse (SCALE.md "Round-9 batch-ER edge census" pins
@@ -634,21 +690,7 @@ def _edit_surfaces(d: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     positional q-gram frame (doc_id, pos, x), the (df, x)-ranked prefix
     (doc_id, x, len), and the distinct candidate pairs
     (prefix join ∪ tiny-doc rescue)."""
-    pgram = (
-        d.where(F.col("len") >= EDIT_Q)
-        .select(
-            "doc_id",
-            "text",
-            F.explode(
-                F.sequence(F.lit(1), F.col("len") - (EDIT_Q - 1))
-            ).alias("pos"),
-        )
-        .select(
-            "doc_id",
-            "pos",
-            texts.hash32(F.expr(f"substring(text, pos, {EDIT_Q})")).alias("x"),
-        )
-    )
+    pgram = _qgram_rows(d).select("doc_id", "pos", "x")
     qg = (
         pgram.select("doc_id", "x")
         .distinct()
@@ -668,33 +710,7 @@ def _edit_surfaces(d: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
         .join(lens, "doc_id")
         .select("doc_id", "x", "len")
     )
-    cand = (
-        prefix.alias("a")
-        .join(prefix.alias("b"), "x")
-        .where(
-            (F.col("a.doc_id") < F.col("b.doc_id"))
-            & (F.abs(F.col("a.len") - F.col("b.len")) <= EDIT_TAU)
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-    )
-    tiny = d.where(F.col("len") < EDIT_Q + EDIT_TAU)
-    rescue = (
-        tiny.alias("a")
-        .join(
-            tiny.alias("b"),
-            (F.col("a.doc_id") < F.col("b.doc_id"))
-            & (F.abs(F.col("a.len") - F.col("b.len")) <= EDIT_TAU)
-            # only pairs whose SMALLER side has no q-grams need rescuing;
-            # the rest already flow through the prefix join
-            & (F.least(F.col("a.len"), F.col("b.len")) < EDIT_Q),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-    )
-    return pgram, prefix, cand.unionByName(rescue).distinct()
+    return pgram, prefix, _edit_candidates(prefix, d)
 
 
 def _edit_location_filter(
@@ -1003,85 +1019,27 @@ def minhash_signatures(spark: SparkSession, docs: DataFrame) -> DataFrame:
         )
         .select("doc_id", texts.hash32(F.col("g")).alias("x"))
     )
-    # n = size of the shingle SET (matches dedup_minhash_lsh's set-domain
-    # verify arithmetic under hash collisions; see note there).
-    return (
-        sh.groupBy("doc_id")
-        .agg(
-            F.collect_set("x").alias("xs"),
-            *[
-                F.min((F.lit(a) * F.col("x") + F.lit(b)) % F.lit(MINHASH_P)).alias(
-                    f"mh{h}"
-                )
-                for h, (a, b) in enumerate(zip(MINHASH_A, MINHASH_B))
-            ],
-        )
-        .withColumn("n", F.size("xs").cast("long"))
-    )
+    return _minhash_sig_of(sh)
 
 
 def _minhash_live_dir(index_path: str) -> str:
     return os.path.join(index_path, snapshots.snap_live(index_path))
 
 
-def minhash_pairs_of(probe_sig: DataFrame, all_sig: DataFrame) -> DataFrame:
-    """Verified near-dup pairs with at least one member in ``probe_sig``:
-    banded candidates (probe × all on any shared minhash band, normalized
-    to doc_a < doc_b) → exact set-jaccard verify over the stored shingle
-    sets.  The pair engine shared by :func:`minhash_index_update` (probe
-    = the new batch) and the continuous-curation index (round 12), which
-    also bootstraps with probe = all for the within-init pairs.  Output
-    (doc_a, doc_b, inter, un, jaccard_e6), the :func:`dedup_minhash_lsh`
-    shape."""
-    n_h = len(MINHASH_A)
-    stack_args = ", ".join(f"{h}, mh{h}" for h in range(n_h))
-
-    def _bands(sig: DataFrame) -> DataFrame:
-        return sig.select("doc_id", F.expr(f"stack({n_h}, {stack_args}) AS (h, v)"))
-
-    cand = (
-        _bands(probe_sig)
-        .alias("a")
-        .join(
-            _bands(all_sig).alias("b"),
-            (F.col("a.h") == F.col("b.h"))
-            & (F.col("a.v") == F.col("b.v"))
-            & (F.col("a.doc_id") != F.col("b.doc_id")),
-        )
-        .select(
-            F.least("a.doc_id", "b.doc_id").alias("doc_a"),
-            F.greatest("a.doc_id", "b.doc_id").alias("doc_b"),
-        )
-        .distinct()
-    )
-    docs_nx = all_sig.select("doc_id", "n", "xs")
-    return (
-        cand.join(
-            docs_nx.select(
-                F.col("doc_id").alias("doc_a"),
-                F.col("n").alias("na"),
-                F.col("xs").alias("xa"),
-            ),
-            "doc_a",
-        )
-        .join(
-            docs_nx.select(
-                F.col("doc_id").alias("doc_b"),
-                F.col("n").alias("nb"),
-                F.col("xs").alias("xb"),
-            ),
-            "doc_b",
-        )
-        .withColumn("inter", F.size(F.array_intersect("xa", "xb")).cast("long"))
-        .withColumn("un", F.col("na") + F.col("nb") - F.col("inter"))
-        .select(
-            "doc_a",
-            "doc_b",
-            "inter",
-            "un",
-            F.expr("div(inter * 1000000, un)").alias("jaccard_e6"),
-        )
-    )
+def minhash_pairs_of(
+    probe_sig: DataFrame | None, all_sig: DataFrame
+) -> DataFrame:
+    """Verified near-dup pairs of the ``all_sig`` signature rows:
+    banded candidates (:func:`_pair_join` on a shared minhash band) →
+    exact set-jaccard verify over the stored shingle sets.  With a
+    ``probe_sig``, only pairs with at least one member in it (probe ×
+    all); ``None`` gives all pairs.  The pair engine shared by
+    :func:`dedup_minhash_lsh`, :func:`minhash_index_update` (probe = the
+    new batch), ER's NEAR signal and the continuous-curation index.
+    Output (doc_a, doc_b, inter, un, jaccard_e6)."""
+    probe = None if probe_sig is None else _bands(probe_sig)
+    cand = _pair_join(_bands(all_sig), ("h", "v"), probe=probe).distinct()
+    return _jaccard_verified(cand, all_sig)
 
 
 def minhash_index_init(spark: SparkSession, docs: DataFrame, index_path: str) -> None:
@@ -1362,15 +1320,7 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("jaccard_e6") >= COMPONENT_MIN_JACCARD_E6
     )
     labels = _er_closure(spark, pairs.select("doc_a", "doc_b"))
-    return (
-        _docs(spark, sf_dir)
-        .select("doc_id")
-        .join(labels, F.col("doc_id") == labels.node, "left")
-        .select(
-            "doc_id",
-            F.coalesce("component", F.col("doc_id")).alias("component"),
-        )
-    )
+    return _closure_labels(_docs(spark, sf_dir), labels)
 
 
 def propagate_components(
@@ -1641,13 +1591,7 @@ def _entities_of(
     from .quality import quality_score
 
     labels = _er_closure(spark, edges.select("doc_a", "doc_b"))
-    comp = (
-        docs.select("doc_id")
-        .join(labels, F.col("doc_id") == labels.node, "left")
-        .select(
-            "doc_id", F.coalesce("component", F.col("doc_id")).alias("entity")
-        )
-    )
+    comp = _closure_labels(docs, labels, out_col="entity")
     q = quality_score(spark, sf_dir).select("doc_id", "score")
     wrank = Window.partitionBy("entity").orderBy(F.desc("score"), F.asc("doc_id"))
     wsize = Window.partitionBy("entity")
@@ -2086,23 +2030,7 @@ def _er_doc_rows(docs: DataFrame) -> DataFrame:
 def _er_doc_grams(d: DataFrame) -> DataFrame:
     """Distinct (doc_id, len, x) q-gram hashes of a (doc_id, text, len)
     frame."""
-    return (
-        d.where(F.col("len") >= EDIT_Q)
-        .select(
-            "doc_id",
-            "len",
-            F.explode(
-                F.sequence(F.lit(1), F.col("len") - (EDIT_Q - 1))
-            ).alias("pos"),
-            "text",
-        )
-        .select(
-            "doc_id",
-            "len",
-            texts.hash32(F.expr(f"substring(text, pos, {EDIT_Q})")).alias("x"),
-        )
-        .distinct()
-    )
+    return _qgram_rows(d).select("doc_id", "len", "x").distinct()
 
 
 def _er_qgram_prefix(
@@ -2141,116 +2069,31 @@ def _er_qgram_prefix(
 
 
 def _er_edges(
-    spark: SparkSession,
-    new_docs: DataFrame,
-    all_docs: DataFrame,
-    new_sig: DataFrame,
-    all_sig: DataFrame,
-    new_qg: DataFrame,
-    all_qg: DataFrame,
+    docs: DataFrame,
+    sig: DataFrame,
+    qg: DataFrame,
+    new: tuple[DataFrame, DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
-    """Match-graph edges with at least one NEW member, from the three
-    evidence signals, probed new×all (doc_a < doc_b, distinct).  Passing
-    new == all computes the full batch edge set (the init bootstrap)."""
+    """Match-graph edges (doc_a < doc_b, distinct) from the three
+    evidence signals over the doc rows, signatures and q-gram prefix
+    rows.  ``new`` = the batch's (docs, sig, qg): only edges with at
+    least one batch member, probed new × all; ``None``: every edge (the
+    init bootstrap)."""
+    nd, ns, nq = (None, None, None) if new is None else new
     # EXACT: content-hash equality.
-    exact_e = (
-        new_docs.select(F.col("h"), F.col("doc_id").alias("na"))
-        .join(all_docs.select("h", F.col("doc_id").alias("nb")), "h")
-        .where(F.col("na") != F.col("nb"))
-        .select(
-            F.least("na", "nb").alias("doc_a"),
-            F.greatest("na", "nb").alias("doc_b"),
-        )
-    )
+    exact_e = _pair_join(docs, ("h",), probe=nd)
     # NEAR: shared-minhash-band candidates, exact-Jaccard verified at the
-    # component threshold (same arithmetic as dedup_minhash_lsh).
-    n_h = len(MINHASH_A)
-    stack_args = ", ".join(f"{h}, mh{h}" for h in range(n_h))
-
-    def _bands(sig: DataFrame) -> DataFrame:
-        return sig.select(
-            "doc_id", F.expr(f"stack({n_h}, {stack_args}) AS (bh, bv)")
-        )
-
-    near_cand = (
-        _bands(new_sig)
-        .alias("a")
-        .join(
-            _bands(all_sig).alias("b"),
-            (F.col("a.bh") == F.col("b.bh"))
-            & (F.col("a.bv") == F.col("b.bv"))
-            & (F.col("a.doc_id") != F.col("b.doc_id")),
-        )
-        .select(
-            F.least("a.doc_id", "b.doc_id").alias("doc_a"),
-            F.greatest("a.doc_id", "b.doc_id").alias("doc_b"),
-        )
-        .distinct()
-    )
-    nx = all_sig.select("doc_id", "n", "xs")
+    # component threshold (the dedup_minhash_lsh pair engine).
     near_e = (
-        near_cand.join(
-            nx.select(
-                F.col("doc_id").alias("doc_a"),
-                F.col("n").alias("nna"),
-                F.col("xs").alias("xa"),
-            ),
-            "doc_a",
-        )
-        .join(
-            nx.select(
-                F.col("doc_id").alias("doc_b"),
-                F.col("n").alias("nnb"),
-                F.col("xs").alias("xb"),
-            ),
-            "doc_b",
-        )
-        .withColumn("inter", F.size(F.array_intersect("xa", "xb")).cast("long"))
-        .where(
-            F.expr("div(inter * 1000000, nna + nnb - inter)")
-            >= COMPONENT_MIN_JACCARD_E6
-        )
+        minhash_pairs_of(ns, sig)
+        .where(F.col("jaccard_e6") >= COMPONENT_MIN_JACCARD_E6)
         .select("doc_a", "doc_b")
     )
     # TYPO: shared-prefix-gram candidates + the tiny-string rescue, exact
-    # banded-levenshtein verified (same predicate as dedup_edit_distance).
-    typo_cand = (
-        new_qg.alias("a")
-        .join(all_qg.alias("b"), "x")
-        .where(
-            (F.col("a.doc_id") != F.col("b.doc_id"))
-            & (F.abs(F.col("a.len") - F.col("b.len")) <= EDIT_TAU)
-        )
-        .select(
-            F.least("a.doc_id", "b.doc_id").alias("doc_a"),
-            F.greatest("a.doc_id", "b.doc_id").alias("doc_b"),
-        )
-    )
-    new_tiny = new_docs.where(F.col("len") < EDIT_Q + EDIT_TAU)
-    all_tiny = all_docs.where(F.col("len") < EDIT_Q + EDIT_TAU)
-    rescue = (
-        new_tiny.alias("a")
-        .join(
-            all_tiny.alias("b"),
-            (F.col("a.doc_id") != F.col("b.doc_id"))
-            & (F.abs(F.col("a.len") - F.col("b.len")) <= EDIT_TAU)
-            & (F.least(F.col("a.len"), F.col("b.len")) < EDIT_Q),
-        )
-        .select(
-            F.least("a.doc_id", "b.doc_id").alias("doc_a"),
-            F.greatest("a.doc_id", "b.doc_id").alias("doc_b"),
-        )
-    )
-    ta = all_docs.select(F.col("doc_id").alias("doc_a"), F.col("text").alias("_ta"))
-    tb = all_docs.select(F.col("doc_id").alias("doc_b"), F.col("text").alias("_tb"))
-    typo_e = (
-        typo_cand.unionByName(rescue)
-        .distinct()
-        .join(ta, "doc_a")
-        .join(tb, "doc_b")
-        .where(F.levenshtein("_ta", "_tb", EDIT_TAU) >= 0)
-        .select("doc_a", "doc_b")
-    )
+    # banded-levenshtein verified (the dedup_edit_distance engine).
+    typo_e = _edit_verified(
+        _edit_candidates(qg, docs, probe_prefix=nq, probe_docs=nd), docs
+    ).select("doc_a", "doc_b")
     return exact_e.unionByName(near_e).unionByName(typo_e).distinct()
 
 
@@ -2330,6 +2173,22 @@ def _er_closure(spark: SparkSession, edges: DataFrame) -> DataFrame:
     return local_rows(spark, rows, "node long, component long")
 
 
+def _closure_labels(
+    ids: DataFrame,
+    labels: DataFrame,
+    id_col: str = "doc_id",
+    out_col: str = "component",
+) -> DataFrame:
+    """(id_col, out_col) for every row of ``ids``: its closure component
+    from the (node, component) ``labels``, or itself when it is on no
+    edge."""
+    return (
+        ids.select(id_col)
+        .join(labels, F.col(id_col) == labels.node, "left")
+        .select(id_col, F.coalesce("component", F.col(id_col)).alias(out_col))
+    )
+
+
 def er_index_init(spark: SparkSession, docs: DataFrame, index_path: str) -> None:
     """Bootstrap the ER index on an initial corpus: persist the doc
     state, the NEAR/TYPO candidate structures, the per-doc entity labels
@@ -2339,7 +2198,6 @@ def er_index_init(spark: SparkSession, docs: DataFrame, index_path: str) -> None
     # overlapped from a driver thread pool (round 13, guide §2.6); the
     # frames and their checkpoints are unchanged.
     def _leg_doc_chain():
-        spark.sparkContext.setJobDescription("er init: doc/gram leg")
         drows = _er_doc_rows(docs).localCheckpoint()
         # Stage the gram rows once (round 12): dford and the prefix index
         # both derive from the same _er_doc_grams scan — the previous form
@@ -2354,21 +2212,15 @@ def er_index_init(spark: SparkSession, docs: DataFrame, index_path: str) -> None
         qg = _er_qgram_prefix(drows, dford, grams=grams).localCheckpoint()
         return drows, dford, qg
 
-    def _leg_sig():
-        spark.sparkContext.setJobDescription("er init: signature leg")
-        return minhash_signatures(spark, docs).localCheckpoint()
-
-    (drows, dford, qg), sig = run_overlapped(_leg_doc_chain, _leg_sig)
-    edges = _er_edges(spark, drows, drows, sig, sig, qg, qg)
-    labels = _er_closure(spark, edges)
-    ent = (
-        drows.select("doc_id")
-        .join(labels, F.col("doc_id") == labels.node, "left")
-        .select(
-            "doc_id",
-            F.coalesce("component", F.col("doc_id")).alias("entity"),
-        )
+    (drows, dford, qg), sig = run_overlapped(
+        leg("er init: doc-gram leg", _leg_doc_chain),
+        leg(
+            "er init: signature leg",
+            lambda: minhash_signatures(spark, docs).localCheckpoint(),
+        ),
     )
+    edges = _er_edges(drows, sig, qg)
+    ent = _closure_labels(drows, _er_closure(spark, edges), out_col="entity")
     # Sized writes (round 12 opt, guide §6): every sub-table is already
     # materialized (checkpoint) or row-count-known, and one-file-per-task
     # writes cost ~0.4 s each in task+commit overhead at bench scale.
@@ -2432,20 +2284,21 @@ def er_index_update(
         ).localCheckpoint()
 
         def _leg_doc_chain():
-            spark.sparkContext.setJobDescription("er update: doc/gram leg")
             drows = _er_doc_rows(fresh).localCheckpoint()
             return drows, _er_qgram_prefix(drows, dford).localCheckpoint()
 
-        def _leg_sig():
-            spark.sparkContext.setJobDescription("er update: signature leg")
-            return minhash_signatures(spark, fresh).localCheckpoint()
-
-        (drows, qg), sig = run_overlapped(_leg_doc_chain, _leg_sig)
+        (drows, qg), sig = run_overlapped(
+            leg("er update: doc-gram leg", _leg_doc_chain),
+            leg(
+                "er update: signature leg",
+                lambda: minhash_signatures(spark, fresh).localCheckpoint(),
+            ),
+        )
 
         all_docs = old_docs.unionByName(drows)
         edges = _er_edges(
-            spark, drows, all_docs, sig, old_sig.unionByName(sig),
-            qg, old_qg.unionByName(qg),
+            all_docs, old_sig.unionByName(sig), old_qg.unionByName(qg),
+            new=(drows, sig, qg),
         ).localCheckpoint()
 
         # Contract old endpoints onto their CURRENT entity labels.  The
@@ -2489,16 +2342,9 @@ def er_index_update(
         )
 
         # New docs: label from the affected closure, else themselves.
-        new_labels = (
-            drows.select("doc_id")
-            .join(closure, F.col("doc_id") == closure.node, "left")
-            .select(
-                "doc_id",
-                F.coalesce("component", F.col("doc_id")).alias("entity"),
-            )
-            # no checkpoint: written exactly once below, and every input is
-            # already materialized (drows checkpoint, driver-built closure)
-        )
+        # (no checkpoint: written exactly once below, and every input is
+        # already materialized — drows checkpoint, driver-built closure)
+        new_labels = _closure_labels(drows, closure, out_col="entity")
         # CURRENT entities whose label moved: remap entries for this batch.
         # Keyed on current (never retired) labels, so batch_remap.old_label
         # is disjoint from old_remap.old_label — composition below can't emit
@@ -3552,21 +3398,7 @@ def dedup_recall_report(
         .select("doc_a", "doc_b")
     )
     mins = sh.groupBy("doc_id").agg(*_minhash_min_exprs())
-    n_h = len(MINHASH_A)
-    stack_args = ", ".join(f"{h}, mh{h}" for h in range(n_h))
-    sig = mins.select("doc_id", F.expr(f"stack({n_h}, {stack_args}) AS (h, v)"))
-    cand = (
-        sig.alias("a")
-        .join(
-            sig.alias("b"),
-            (F.col("a.h") == F.col("b.h"))
-            & (F.col("a.v") == F.col("b.v"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-        .persist()
-    )
+    cand = _pair_join(_bands(mins), ("h", "v")).distinct().persist()
     hit = truth.join(cand, ["doc_a", "doc_b"], "left_semi")
     counts = (
         truth.agg(F.count(F.lit(1)).alias("n_true"))

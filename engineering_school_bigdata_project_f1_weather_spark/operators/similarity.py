@@ -1832,7 +1832,7 @@ def sim_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: (vec_id, cluster) for every embedding; cluster = min vec_id
     reachable; isolated vectors map to themselves."""
-    from .dedup import _er_closure
+    from .dedup import _closure_labels, _er_closure
 
     pairs = sim_lsh(spark, sf_dir).where(
         F.col("sim_e6") >= CLUSTER_MIN_SIM_E6
@@ -1843,11 +1843,8 @@ def sim_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
         ),
     )
-    e = load_table_spread(spark, sf_dir, "embeddings").select("vec_id")
-    return e.join(labels, e.vec_id == labels.node, "left").select(
-        "vec_id",
-        F.coalesce("component", F.col("vec_id")).alias("cluster"),
-    )
+    e = load_table_spread(spark, sf_dir, "embeddings")
+    return _closure_labels(e, labels, id_col="vec_id", out_col="cluster")
 
 
 def _clusters_oracle_sql() -> str:

@@ -5,8 +5,9 @@ can't express)."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
-from engineering_school_bigdata_project_f1_weather_spark.operators import corpus
+from engineering_school_bigdata_project_f1_weather_spark.operators import corpus, dedup
 
 
 def test_chunks_cover_every_token_with_overlap(spark, sf_dir):
@@ -856,6 +857,61 @@ def test_edit_distance_join_complete_and_pruning(spark, sf_dir):
         .count()
     )
     assert cand < 0.2 * len_pairs, (cand, len_pairs)
+
+
+# Eight hand-built rows: doc 2 has two, so self-pairs can repeat.
+_PAIR_ROWS = [
+    (1, 0, 10, 100, 20), (2, 0, 10, 100, 22), (3, 1, 20, 100, 30),
+    (4, 1, 20, 200, 9), (5, 0, 10, 200, 7), (6, 2, 30, 300, 5),
+    (2, 1, 20, 200, 22), (7, 2, 30, 300, 11),
+]
+
+
+def _len_close():
+    return F.abs(F.col("a.len") - F.col("b.len")) <= dedup.EDIT_TAU
+
+
+@pytest.mark.parametrize(
+    "on, cond",
+    [
+        (("h", "v"), None),  # minhash band key
+        (("x",), "len"),  # prefix-gram key + length residual
+        ((), "rescue"),  # tiny-doc rescue: residual only
+    ],
+    ids=["band", "prefix_gram", "rescue"],
+)
+def test_pair_join_self_form_equals_probe_form(spark, on, cond):
+    """The all-pairs form of ``_pair_join`` (probe=None, ``<``) gives the
+    same pair set as the probe form with probe = rows, and a probe
+    subset gives exactly the self-form pairs that touch it — what lets
+    the index bootstraps use the self form and the updates the probe
+    form."""
+    from engineering_school_bigdata_project_f1_weather_spark.functions.localrel import (
+        local_rows,
+    )
+
+    rows = local_rows(
+        spark, _PAIR_ROWS, "doc_id long, h int, v long, x long, len long"
+    )
+    residual = {
+        None: None,
+        "len": _len_close(),
+        "rescue": _len_close()
+        & (F.least(F.col("a.len"), F.col("b.len")) < dedup.EDIT_Q),
+    }[cond]
+
+    def pairs(probe=None):
+        out = dedup._pair_join(rows, on, residual, probe=probe).collect()
+        assert all(a < b for a, b in out)
+        return set(out)
+
+    self_pairs = pairs()
+    assert self_pairs, "the fixture must produce pairs for every key"
+    assert pairs(probe=rows) == self_pairs
+    probe_ids = {2, 5}
+    assert pairs(probe=rows.where(F.col("doc_id").isin(*probe_ids))) == {
+        p for p in self_pairs if probe_ids & set(p)
+    }
 
 
 def test_edit_distance_rescues_sub_qgram_docs(spark, tmp_path):

@@ -15,7 +15,10 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from engineering_school_bigdata_project_f1_weather_spark.functions import intlog, localrel
-from engineering_school_bigdata_project_f1_weather_spark.functions.jobs import run_overlapped
+from engineering_school_bigdata_project_f1_weather_spark.functions.jobs import (
+    leg,
+    run_overlapped,
+)
 from engineering_school_bigdata_project_f1_weather_spark.functions.localrel import (
     empty_rel,
     local_rows,
@@ -81,6 +84,42 @@ def test_run_overlapped_legs_inherit_job_group(spark):
     assert counts == [10, 10]
     assert len(sc.statusTracker().getJobIdsForGroup("overlap_legs")) >= 2
     assert not [w for w in caught if issubclass(w.category, UserWarning)]
+
+
+def test_named_leg_nests_its_description(spark):
+    """A thunk wrapped with ``leg`` runs its jobs under "<caller's
+    description>/<name>" (just the name when the caller set none), on a
+    ``run_overlapped`` pool thread as inline, and leaves the caller's
+    description unchanged."""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+
+    seen: set = set()
+
+    def new_descriptions():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts are async
+        ids = set(sc.statusTracker().getJobIdsForGroup("named_legs")) - seen
+        seen.update(ids)
+        return {store.job(j).description().get() for j in ids}
+
+    sc.setJobGroup("named_legs", "caller")
+    try:
+        run_overlapped(
+            leg("a", lambda: spark.range(3).count()),
+            leg("b", lambda: spark.range(4).count()),
+        )
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+        assert new_descriptions() == {"caller/a", "caller/b"}
+        leg("c", lambda: spark.range(5).count())()
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+        assert new_descriptions() == {"caller/c"}
+        sc.setLocalProperty("spark.job.description", None)
+        leg("d", lambda: spark.range(6).count())()
+        assert sc.getLocalProperty("spark.job.description") is None
+        assert new_descriptions() == {"d"}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
 
 
 def test_local_rows_accepts_iterators(spark):

@@ -5,6 +5,7 @@ correctness artifacts depend on."""
 from __future__ import annotations
 
 import json
+import os
 import sys
 
 import pytest
@@ -146,3 +147,42 @@ def test_bench_forced_distributed_row_refuses_entries_without_a_twin(
     with pytest.raises(RuntimeError, match="never reached localrel.pull"):
         bench._bench_forced_distributed("dedup_exact")(spark, sf_dir)
     assert localrel.pull is real_pull
+
+
+TOOLS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
+
+
+def test_tools_put_the_checkout_on_the_workers_pythonpath(monkeypatch, tmp_path):
+    """time_entries' child and dump_plans' session hand the checkout to
+    Spark's Python workers through PYTHONPATH (not only the driver's
+    sys.path), so both run from any working directory."""
+    sys.path.insert(0, TOOLS)
+    import dump_plans
+    import time_entries
+
+    repo = os.path.dirname(TOOLS)
+    monkeypatch.setenv("PYTHONPATH", "/elsewhere")
+    seen = []
+
+    class Child:
+        stdout, stderr = "TIMES_JSON=[1.0, 0.5]", ""
+
+    def fake_run(cmd, **kwargs):
+        seen.append(kwargs["env"]["PYTHONPATH"])
+        return Child()
+
+    monkeypatch.setattr(time_entries.subprocess, "run", fake_run)
+    monkeypatch.setattr(sys, "argv", ["time_entries.py", "-n", "1", "entry"])
+    time_entries.main()
+    assert seen == [os.pathsep.join([repo, "/elsewhere"])]
+
+    def no_session(*args, **kwargs):
+        seen.append(os.environ["PYTHONPATH"])
+        raise RuntimeError("no session in this test")
+
+    monkeypatch.delenv("PYTHONPATH")
+    monkeypatch.setattr(dump_plans, "get_spark", no_session)
+    monkeypatch.setattr(sys, "argv", ["dump_plans.py", str(tmp_path), "tag"])
+    with pytest.raises(RuntimeError, match="no session"):
+        dump_plans.main()
+    assert seen[-1] == repo

@@ -14,16 +14,19 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from engineering_school_bigdata_project_f1_weather_spark import get_spark
 import __spark_entry__ as entrymod
+from selfcheck import checkout_pythonpath
 
 
 def main() -> None:
     out_dir, tag, *names = sys.argv[1:]
     os.makedirs(out_dir, exist_ok=True)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    os.environ["PYTHONPATH"] = checkout_pythonpath(REPO)
     spark = get_spark("dump-plans", cpus=os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark.sparkContext.setLogLevel("ERROR")
     queries = entrymod.queries()

@@ -25,9 +25,12 @@ that depends on our session config.
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 
 import duckdb
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -73,6 +76,12 @@ def canon_rows(cols: list[str], rows: list[tuple]) -> tuple[str, list[str]]:
     return h, lines
 
 
+def checkout_pythonpath(repo: str) -> str:
+    """``PYTHONPATH`` with the checkout first: the Python workers Spark
+    starts import the package too, from any working directory."""
+    return os.pathsep.join(p for p in (repo, os.environ.get("PYTHONPATH")) if p)
+
+
 def main() -> int:
     args = sys.argv[1:]
     ansi = "--ansi" in args
@@ -87,7 +96,8 @@ def main() -> int:
     only = set(args[1:])
     results: dict[str, dict] = {}
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
+    os.environ["PYTHONPATH"] = checkout_pythonpath(REPO)
     import __spark_entry__ as entrymod
     from engineering_school_bigdata_project_f1_weather_spark import get_spark
 

@@ -22,6 +22,8 @@ import statistics
 import subprocess
 import sys
 
+from selfcheck import checkout_pythonpath
+
 _CHILD = r"""
 import json, os, sys, time
 sys.path.insert(0, {repo!r})
@@ -67,6 +69,7 @@ def main() -> None:
             p = subprocess.run(
                 [sys.executable, "-c", _CHILD.format(repo=repo, name=name)],
                 capture_output=True, text=True,
+                env=dict(os.environ, PYTHONPATH=checkout_pythonpath(repo)),
             )
             line = [ln for ln in p.stdout.splitlines() if ln.startswith("TIMES_JSON=")]
             if not line:
