@@ -440,6 +440,7 @@ EXTRA_BENCH = {
             "sim_ivf_trained",
             "sim_pq_trained",
             "quality_lr_scored",
+            "dedup_semantic_incremental",
         )
     },
 }

@@ -8,7 +8,7 @@ Updates never overwrite or append to the live state in place.  One
 primitive, :class:`txn`, owns that protocol::
 
     with snapshots.txn(index_path, "sig_v") as t:
-        old = spark.read.parquet(t.live)   # the live version
+        old = snapshots.read(spark, t.live)  # the live version
         write_sized(delta, t.dir)          # the batch, as the next version
         t.carry()                          # + the live files, hard-linked
 
@@ -45,10 +45,26 @@ analogue of a table-format commit (Iceberg/Delta: new manifest
 referencing old data files + atomic pointer swap); on an object store
 the pointer swap becomes the table-format commit and the layout is
 unchanged.
+
+Reads go through :func:`read`.  A plain ``spark.read.parquet`` infers
+the schema with a one-task Spark job that opens a footer; an index
+update reads a dozen state tables, so those jobs were a measured part of
+its latency floor (23 of 153 jobs per ``index_ingest`` batch).  Every
+state table here is written by Spark, which stores the frame's schema in
+each part file's footer (key ``org.apache.spark.sql.parquet.row.metadata``).
+:func:`read` takes that schema from one footer with pyarrow on the
+driver and hands it to ``.schema(...)``, so building the frame runs no
+job.  Hive partition columns (``cb=``, ``hb=``) are not in the footer;
+Spark still infers them from the paths, as with a plain read.  All
+versions of one table come from one writer, so any footer holds the
+schema a plain read would pick, up to nullability, which Spark drops on
+every file read.  Without a part file or the key, :func:`read` is the
+plain read.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
@@ -81,6 +97,45 @@ def write_sized(df, path: str, rows: int | None = None) -> int:
     n = max(1, (rows + SNAP_ROWS_PER_FILE - 1) // SNAP_ROWS_PER_FILE)
     df.coalesce(n).write.mode("overwrite").parquet(path)
     return n
+
+
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _first_part_file(path: str) -> str | None:
+    """The name-first ``part-*`` file under ``path``, searching hive
+    partition directories (``col=value``) too; ``None`` when there is
+    none."""
+    try:
+        entries = sorted(os.scandir(path), key=lambda e: e.name)
+    except (FileNotFoundError, NotADirectoryError):
+        return None
+    for e in entries:
+        if e.name.startswith("part-") and e.is_file():
+            return e.path
+    for e in entries:
+        if "=" in e.name and e.is_dir():
+            found = _first_part_file(e.path)
+            if found is not None:
+                return found
+    return None
+
+
+def read(spark, path: str):
+    """``spark.read.parquet(path)`` with the data schema taken from a
+    part file's footer on the driver, so no schema-inference job runs
+    (module note); the plain read when no footer carries one."""
+    from pyspark.sql.types import StructType
+
+    part = _first_part_file(path)
+    if part is not None:
+        import pyarrow.parquet as pq
+
+        meta = pq.read_metadata(part).metadata or {}
+        if _SPARK_SCHEMA_KEY in meta:
+            schema = StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+            return spark.read.schema(schema).parquet(path)
+    return spark.read.parquet(path)
 
 
 def meta_row(spark, schema: str, values: tuple):

@@ -296,8 +296,11 @@ def _rendezvous_shard(n: int):
     shard.  Round 11 (VERDICT r10 weak #2): the encoding was ``w·16 −
     s``, capping the shard domain at 16 — far below the operator's own
     elastic-sharding contract; 2¹⁶ = 65,536 shards covers any real
-    fleet."""
-    assert n <= 65536
+    fleet.  Raises ``ValueError`` above 65,536 shards."""
+    if n > 65536:
+        raise ValueError(
+            f"_rendezvous_shard: {n} shards exceed the 65,536 the key encodes"
+        )
     key = F.transform(
         F.sequence(F.lit(0), F.lit(n - 1)),
         lambda s: F.struct(

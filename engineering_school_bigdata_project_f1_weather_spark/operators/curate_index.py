@@ -64,9 +64,9 @@ from .dedup import (
     COMPONENT_MIN_JACCARD_E6,
     _components_oracle_sql,
     _er_closure,
+    _minhash_commit,
     _minhash_live_dir,
     minhash_index_init,
-    minhash_index_update,
     minhash_pairs_of,
 )
 from .quality import (
@@ -135,7 +135,7 @@ def _component_pair_delta(
     threshold, derived from the minhash index's COMMITTED signatures —
     deterministic under retry (see module head).  Probe cost: batch
     signatures × the banded index, never index × index."""
-    all_sig = spark.read.parquet(_minhash_live_dir(f"{index_path}/mh"))
+    all_sig = snapshots.read(spark, _minhash_live_dir(f"{index_path}/mh"))
     bsig = all_sig.join(batch_ids, "doc_id", "left_semi")
     return minhash_pairs_of(bsig, all_sig).where(
         F.col("jaccard_e6") >= COMPONENT_MIN_JACCARD_E6
@@ -170,7 +170,7 @@ def curate_index_init(
             snapshots.meta_row(spark, "c_q16 long", (int(c_q16),)).write.mode(
                 "overwrite"
             ).parquet(f"{index_path}/model_meta")
-            model_b = F.broadcast(spark.read.parquet(f"{index_path}/model"))
+            model_b = F.broadcast(snapshots.read(spark, f"{index_path}/model"))
             rows = _doc_rows(d, model_b, c_q16, wide=wide, fb=fb)
             # Sized write (round 12 opt, guide §6): checkpointed first (the
             # frame is corpus-sized, cheap) so the file count derives from a
@@ -179,7 +179,7 @@ def curate_index_init(
 
         def _leg_minhash() -> None:
             minhash_index_init(spark, d, f"{index_path}/mh")
-            sigs = spark.read.parquet(_minhash_live_dir(f"{index_path}/mh"))
+            sigs = snapshots.read(spark, _minhash_live_dir(f"{index_path}/mh"))
             pairs = minhash_pairs_of(None, sigs).where(
                 F.col("jaccard_e6") >= COMPONENT_MIN_JACCARD_E6
             ).select("doc_a", "doc_b", "jaccard_e6")
@@ -207,7 +207,7 @@ def curate_index_update(
     (module head); returns the batch's scored roster rows (empty on a
     clean retry)."""
     base = os.path.join(index_path, snapshots.snap_live(index_path))
-    roster = spark.read.parquet(f"{base}/docs")
+    roster = snapshots.read(spark, f"{base}/docs")
     batch = (
         new_docs.select("doc_id", "lang", "text")
         .join(roster.select("doc_id"), "doc_id", "left_anti")
@@ -226,7 +226,9 @@ def curate_index_update(
     # regardless of leg completion order; the pair delta stays INSIDE
     # the minhash leg, after that sub-index's commit, because it must
     # read the COMMITTED signature state (module head, retry safety) —
-    # never the sub-update return value.
+    # never the sub-update return value.  So the leg commits the batch's
+    # signatures without the pair probe ``minhash_index_update`` runs
+    # before its commit: the delta below is the only pair computation.
     def _leg_semdedup() -> None:
         bvecs = new_vectors.join(
             batch.select(F.col("doc_id").alias("vec_id")), "vec_id", "left_semi"
@@ -234,8 +236,8 @@ def curate_index_update(
         semdedup_index_update(spark, bvecs, f"{index_path}/sem")
 
     def _leg_pairs() -> DataFrame:
-        minhash_index_update(spark, batch, f"{index_path}/mh")
-        old_pairs = spark.read.parquet(f"{base}/pairs")
+        _minhash_commit(spark, batch, f"{index_path}/mh")
+        old_pairs = snapshots.read(spark, f"{base}/pairs")
         return (
             _component_pair_delta(spark, batch.select("doc_id"), index_path)
             .join(
@@ -248,9 +250,9 @@ def curate_index_update(
 
     def _leg_rows() -> DataFrame:
         c_q16 = int(
-            spark.read.parquet(f"{index_path}/model_meta").first()["c_q16"]
+            snapshots.read(spark, f"{index_path}/model_meta").first()["c_q16"]
         )
-        model_b = F.broadcast(spark.read.parquet(f"{index_path}/model"))
+        model_b = F.broadcast(snapshots.read(spark, f"{index_path}/model"))
         return _doc_rows(batch, model_b, c_q16).localCheckpoint()
 
     _, new_pairs, rows = run_overlapped(
@@ -260,9 +262,12 @@ def curate_index_update(
     )
 
     with snapshots.txn(index_path, CUR_PREFIX) as t:
-        # rows / new_pairs are checkpointed above — sized writes are free.
-        snapshots.write_sized(rows, f"{t.dir}/docs")
-        snapshots.write_sized(new_pairs, f"{t.dir}/pairs")
+        # rows / new_pairs are checkpointed above — sized writes are free,
+        # and independent, so they overlap.
+        run_overlapped(
+            lambda: snapshots.write_sized(rows, f"{t.dir}/docs"),
+            lambda: snapshots.write_sized(new_pairs, f"{t.dir}/pairs"),
+        )
         t.carry("docs", "pairs")
     return rows
 
@@ -282,8 +287,8 @@ def curate_index_compact(spark: SparkSession, index_path: str) -> None:
     on its own schedule.  Idempotent."""
     semdedup_index_compact(spark, f"{index_path}/sem")
     with snapshots.txn(index_path, CUR_PREFIX) as t:
-        docs = spark.read.parquet(f"{t.live}/docs").localCheckpoint()
-        pairs = spark.read.parquet(f"{t.live}/pairs").localCheckpoint()
+        docs = snapshots.read(spark, f"{t.live}/docs").localCheckpoint()
+        pairs = snapshots.read(spark, f"{t.live}/pairs").localCheckpoint()
         docs.coalesce(1).write.mode("overwrite").parquet(f"{t.dir}/docs")
         pairs.coalesce(1).write.mode("overwrite").parquet(f"{t.dir}/pairs")
 
@@ -301,8 +306,8 @@ def curate_resolve(spark: SparkSession, index_path: str) -> DataFrame:
     only, not docs), one broadcast-size join per sub-index serving view,
     one per-lang pack window — the same passes the batch twin runs."""
     base = os.path.join(index_path, snapshots.snap_live(index_path))
-    docs = spark.read.parquet(f"{base}/docs")
-    pairs = spark.read.parquet(f"{base}/pairs")
+    docs = snapshots.read(spark, f"{base}/docs")
+    pairs = snapshots.read(spark, f"{base}/pairs")
     # size-dispatched closure (the ER family's engine): the pair log is
     # near-dup edges only — orders smaller than the corpus — so below
     # the edge threshold a driver union-find answers in milliseconds

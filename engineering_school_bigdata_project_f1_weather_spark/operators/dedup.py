@@ -1057,6 +1057,41 @@ def minhash_index_init(spark: SparkSession, docs: DataFrame, index_path: str) ->
         )
 
 
+def _minhash_commit(
+    spark: SparkSession, new_docs: DataFrame, index_path: str, pairs: bool = False
+) -> DataFrame | None:
+    """Sign the docs of ``new_docs`` that the index does not hold yet
+    and commit old ∪ new signatures as the next snapshot.  With
+    ``pairs``, also return the near-dup pairs with a new member,
+    materialized before the commit, which removes the live files they
+    read; ``None`` otherwise."""
+    with snapshots.txn(index_path, "sig_v") as t:
+        old_sig = snapshots.read(spark, t.live)
+        # Idempotency guard: drop docs already in the index BEFORE
+        # signing-in.  An orchestrator retry after the append (or a
+        # re-submitted doc_id) would otherwise duplicate signature rows,
+        # multiplying candidate/pair rows in every later batch and
+        # breaking the one-signature-per-doc invariant. The anti-join
+        # makes re-running a batch a no-op on the index (the retry
+        # returns only pairs for genuinely-new docs).
+        new_sig = (
+            minhash_signatures(spark, new_docs)
+            .join(old_sig.select("doc_id"), "doc_id", "left_anti")
+            .localCheckpoint()
+        )
+        result = (
+            minhash_pairs_of(new_sig, old_sig.unionByName(new_sig)).localCheckpoint()
+            if pairs
+            else None
+        )
+        # The batch goes to the NEXT version dir, the live snapshot's
+        # data files are hard-linked in; nothing under the live dir is
+        # ever touched.
+        snapshots.write_sized(new_sig, t.dir)  # checkpointed above
+        t.carry()
+    return result
+
+
 def minhash_index_update(
     spark: SparkSession, new_docs: DataFrame, index_path: str
 ) -> DataFrame:
@@ -1078,30 +1113,10 @@ def minhash_index_update(
     partially-visible batch.
     Returns the same (doc_a, doc_b, inter, un, jaccard_e6) shape as
     :func:`dedup_minhash_lsh`, restricted to pairs with a new member.
+    The signature commit alone is :func:`_minhash_commit`, which the
+    curation index calls (it derives its pairs from committed state).
     """
-    with snapshots.txn(index_path, "sig_v") as t:
-        old_sig = spark.read.parquet(t.live)
-        # Idempotency guard: drop docs already in the index BEFORE
-        # signing-in.  An orchestrator retry after the append (or a
-        # re-submitted doc_id) would otherwise duplicate signature rows,
-        # multiplying candidate/pair rows in every later batch and
-        # breaking the one-signature-per-doc invariant. The anti-join
-        # makes re-running a batch a no-op on the index (the retry
-        # returns only pairs for genuinely-new docs).
-        new_sig = (
-            minhash_signatures(spark, new_docs)
-            .join(old_sig.select("doc_id"), "doc_id", "left_anti")
-            .localCheckpoint()
-        )
-        all_sig = old_sig.unionByName(new_sig)
-        pairs = minhash_pairs_of(new_sig, all_sig)
-        result = pairs.localCheckpoint()  # materialize BEFORE the commit
-        # The batch goes to the NEXT version dir, the live snapshot's
-        # data files are hard-linked in; nothing under the live dir is
-        # ever touched.
-        snapshots.write_sized(new_sig, t.dir)  # checkpointed above
-        t.carry()
-    return result
+    return _minhash_commit(spark, new_docs, index_path, pairs=True)
 
 
 PAGERANK_ITERS = 5
@@ -2267,13 +2282,13 @@ def er_index_update(
     edges (doc_a, doc_b) — empty on a retry."""
     with snapshots.txn(index_path, "er_v") as t:
         base = t.live
-        old_docs = spark.read.parquet(f"{base}/docs")
-        old_sig = spark.read.parquet(f"{base}/sig")
-        old_qg = spark.read.parquet(f"{base}/qg")
-        old_labels = spark.read.parquet(f"{base}/labels")
-        old_remap = spark.read.parquet(f"{base}/remap")
+        old_docs = snapshots.read(spark, f"{base}/docs")
+        old_sig = snapshots.read(spark, f"{base}/sig")
+        old_qg = snapshots.read(spark, f"{base}/qg")
+        old_labels = snapshots.read(spark, f"{base}/labels")
+        old_remap = snapshots.read(spark, f"{base}/remap")
 
-        dford = spark.read.parquet(f"{base}/dford")
+        dford = snapshots.read(spark, f"{base}/dford")
         # Stage the anti-join once (round 13): drows and sig each re-ran it
         # inside their own checkpoint before; and the doc→gram-prefix chain
         # is independent of the minhash signature scan, so the two legs
@@ -2412,9 +2427,9 @@ def er_resolve(spark: SparkSession, index_path: str) -> DataFrame:
     only corpus-sized work serving inherently is."""
     live = snapshots.snap_live(index_path)
     base = os.path.join(index_path, live)
-    labels = spark.read.parquet(f"{base}/labels")
-    remap = spark.read.parquet(f"{base}/remap")
-    docs = spark.read.parquet(f"{base}/docs")
+    labels = snapshots.read(spark, f"{base}/labels")
+    remap = snapshots.read(spark, f"{base}/remap")
+    docs = snapshots.read(spark, f"{base}/docs")
     ent = (
         labels.join(
             remap.withColumnRenamed("old_label", "entity"), "entity", "left"
@@ -3137,7 +3152,7 @@ def _read_occ(spark: SparkSession, path: str) -> DataFrame:
     """The stored occ log WITH its ``hb`` partition column (callers
     that probe filter on it; callers that need the bare log project it
     away)."""
-    return spark.read.parquet(path)
+    return snapshots.read(spark, path)
 
 
 def substr_index_init(spark: SparkSession, docs: DataFrame, index_path: str) -> None:
@@ -3196,11 +3211,11 @@ def substr_index_update(
         # would mix 'b0'/'b00' partitions in one directory and the pruned
         # probe would silently skip stored occurrences.
         chars = _occ_width(base)
-        old_docs = spark.read.parquet(f"{base}/docs")
+        old_docs = snapshots.read(spark, f"{base}/docs")
         old_occ_b = _read_occ(spark, f"{base}/occ")  # carries the hb column
         old_occ = old_occ_b.select("doc_id", "pos", "h")
-        old_dup = spark.read.parquet(f"{base}/dup")
-        old_spans = spark.read.parquet(f"{base}/spans")
+        old_dup = snapshots.read(spark, f"{base}/dup")
+        old_spans = snapshots.read(spark, f"{base}/spans")
 
         # Staged once (ADVICE r12): the anti-join feeds both the occurrence
         # scan and the roster write below — unmaterialized it re-ran per
@@ -3288,9 +3303,9 @@ def substr_index_compact(spark: SparkSession, index_path: str) -> None:
             .select("doc_id", "pos", "h")
             .localCheckpoint()
         )
-        dup = spark.read.parquet(f"{base}/dup").localCheckpoint()
-        docs = spark.read.parquet(f"{base}/docs").localCheckpoint()
-        spans = spark.read.parquet(f"{base}/spans").localCheckpoint()
+        dup = snapshots.read(spark, f"{base}/dup").localCheckpoint()
+        docs = snapshots.read(spark, f"{base}/docs").localCheckpoint()
+        spans = snapshots.read(spark, f"{base}/spans").localCheckpoint()
         nbase = t.dir
         # The compaction rewrite collapses each bucket's accumulated
         # per-batch delta files into ONE file per hb partition (the
@@ -3312,7 +3327,7 @@ def substr_resolve(spark: SparkSession, index_path: str) -> DataFrame:
     same shape and semantics as :func:`dedup_substring` over the whole
     indexed corpus; a pure output-proportional read."""
     live = snapshots.snap_live(index_path)
-    return spark.read.parquet(f"{os.path.join(index_path, live)}/spans").select(
+    return snapshots.read(spark, f"{os.path.join(index_path, live)}/spans").select(
         "doc_id", "span_start", "span_end", "span_tokens"
     )
 

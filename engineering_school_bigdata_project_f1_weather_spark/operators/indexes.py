@@ -77,8 +77,8 @@ def _lineitem_halves(spark: SparkSession, sf_dir: str) -> tuple:
 
 def _state(sub: str = "") -> Callable:
     """Serving view for a family without one: its live state table."""
-    return lambda spark, path: spark.read.parquet(
-        os.path.join(path, snapshots.snap_live(path), sub)
+    return lambda spark, path: snapshots.read(
+        spark, os.path.join(path, snapshots.snap_live(path), sub)
     )
 
 

@@ -795,7 +795,7 @@ def search_index_update(
     from ..functions import snapshots
 
     base = f"{index_path}/{snapshots.snap_live(index_path)}"
-    roster = spark.read.parquet(f"{base}/doclen").select("doc_id")
+    roster = snapshots.read(spark, f"{base}/doclen").select("doc_id")
     batch = (
         new_docs.select("doc_id", "text")
         .join(roster, "doc_id", "left_anti")
@@ -820,11 +820,11 @@ def search_index_compact(spark: SparkSession, index_path: str) -> None:
 
     with snapshots.txn(index_path, SIDX_PREFIX) as t:
         postings = (
-            spark.read.parquet(f"{t.live}/postings")
+            snapshots.read(spark, f"{t.live}/postings")
             .select("doc_id", "token", "tf", "tb")
             .localCheckpoint()
         )
-        doclen = spark.read.parquet(f"{t.live}/doclen").localCheckpoint()
+        doclen = snapshots.read(spark, f"{t.live}/doclen").localCheckpoint()
         (
             postings.repartition("tb")  # one file per bucket post-compaction
             .write.partitionBy("tb")
@@ -848,12 +848,12 @@ def search_index_serve(
     base = f"{index_path}/{snapshots.snap_live(index_path)}"
     tbs = sorted({_tb_of_py(t) for t in q})
     tc = (
-        spark.read.parquet(f"{base}/postings")
+        snapshots.read(spark, f"{base}/postings")
         .where(F.col("tb").isin(tbs))
         .where(F.col("token").isin(q))
         .select("doc_id", "token", "tf")
     )
-    dl = spark.read.parquet(f"{base}/doclen")
+    dl = snapshots.read(spark, f"{base}/doclen")
     totals = dl.agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("dl").cast("long").alias("t_tokens"),

@@ -25,6 +25,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..functions import localrel, snapshots, vectors
+from ..functions.jobs import run_overlapped
 from ..functions.localrel import empty_rel, local_rows
 from ..sources.tables import load_table_spread
 from .dedup import EMBED_DUP_MIN_E6
@@ -1267,10 +1268,10 @@ def semdedup_index_update(
     batch-sized writes via hard-linked snapshots."""
     with snapshots.txn(index_path, "sem_v") as t:
         live_dir = t.live
-        cents = spark.read.parquet(f"{index_path}/centroids")
-        k = int(spark.read.parquet(f"{index_path}/meta").first()["k"])
-        old_vecs = spark.read.parquet(f"{live_dir}/vectors")
-        old_dom = spark.read.parquet(f"{live_dir}/dominated")
+        cents = snapshots.read(spark, f"{index_path}/centroids")
+        k = int(snapshots.read(spark, f"{index_path}/meta").first()["k"])
+        old_vecs = snapshots.read(spark, f"{live_dir}/vectors")
+        old_dom = snapshots.read(spark, f"{live_dir}/dominated")
 
         new_base = (
             _quantize_vectors(new_vectors)
@@ -1278,51 +1279,129 @@ def semdedup_index_update(
             .localCheckpoint()
         )
         new_cs = _semantic_withcs(new_base, cents, k).localCheckpoint()
-        # Clusters the batch touches — bounded (<= k) driver list; the
-        # stored probe filters on the cb PARTITION column so parquet
-        # partition pruning skips every untouched cluster's files.
-        touched = [
-            r["cb"]
-            for r in new_cs.select(
-                F.concat(F.lit("c"), F.col("cluster_id")).alias("cb")
-            )
-            .distinct()
-            .collect()
-        ]
-        stored_touched = old_vecs.where(F.col("cb").isin(touched)).select(
-            "vec_id", "cluster_id", "cent_sim_e6", "q", "n2"
-        )
-        both = stored_touched.unionByName(new_cs).localCheckpoint()
-        # pairs with at least one NEW member: new x (stored-in-touched or
-        # new), normalized to vec_a < vec_b; distinct collapses the double
-        # count of new x new.
-        cand = (
-            new_cs.select(F.col("vec_id").alias("va"), "cluster_id")
-            .join(
-                both.select(F.col("vec_id").alias("vb"), "cluster_id"),
-                "cluster_id",
-            )
-            .where(F.col("va") != F.col("vb"))
-            .select(
-                F.least("va", "vb").alias("vec_a"),
-                F.greatest("va", "vb").alias("vec_b"),
-            )
-            .distinct()
-        )
-        newly_dom = (
-            _semantic_dominated(cand, both)
-            .join(old_dom, "vec_id", "left_anti")
-            .join(
-                both.select("vec_id", "cluster_id"), "vec_id"
-            )
-            .localCheckpoint()  # materialize BEFORE mutating the index
-        )
 
-        _semdedup_write_vectors(new_cs, f"{t.dir}/vectors")
-        # newly_dom is checkpointed above — the sized write's count is free.
-        snapshots.write_sized(newly_dom.select("vec_id"), f"{t.dir}/dominated")
+        def _dominated() -> DataFrame:
+            newly_dom = _semdedup_newly_dominated(
+                spark, new_cs, old_vecs, old_dom
+            ).localCheckpoint()  # materialize BEFORE mutating the index
+            # checkpointed — the sized write's count is free.
+            snapshots.write_sized(
+                newly_dom.select("vec_id"), f"{t.dir}/dominated"
+            )
+            return newly_dom
+
+        # The batch's vectors go to the next version while the verify
+        # reads the live one: independent jobs, overlapped (guide §2.6).
+        newly_dom, _ = run_overlapped(
+            _dominated,
+            lambda: _semdedup_write_vectors(new_cs, f"{t.dir}/vectors"),
+        )
         t.carry("vectors", "dominated")
     return newly_dom
+
+
+def _semdedup_losers_driver(new_tbl, stored_tbl) -> list[tuple]:
+    """Driver twin of the update's candidate join and
+    :func:`_semantic_dominated` over the pulled batch assignment rows
+    and the touched clusters' stored rows (both ``(vec_id, cluster_id,
+    cent_sim_e6, q, n2)`` Arrow tables): the same-cluster pairs with at
+    least one new member, verified by :func:`_verify_pairs_arrow`
+    itself, and the distinct losers of the same loser rule, as
+    ``(vec_id, cluster_id)`` tuples."""
+    import numpy as np
+
+    tbls = (stored_tbl, new_tbl)
+
+    def col(name):
+        return np.concatenate([t.column(name).to_numpy() for t in tbls])
+
+    vid, cl, cs, n2 = col("vec_id"), col("cluster_id"), col("cent_sim_e6"), col("n2")
+    is_new = np.repeat([False, True], [t.num_rows for t in tbls])
+    # (row of a new member, row of any member) per touched cluster,
+    # ordered so the smaller vec_id comes first; np.unique collapses the
+    # double count of new x new
+    pairs = []
+    for c in np.unique(cl[is_new]):
+        members = np.flatnonzero(cl == c)
+        a, b = (x.ravel() for x in np.meshgrid(members[is_new[members]], members))
+        keep = vid[a] != vid[b]
+        a, b = a[keep], b[keep]
+        pairs.append(np.where(vid[a] < vid[b], [a, b], [b, a]).T)
+    if not pairs:
+        return []
+    a, b = np.unique(np.concatenate(pairs), axis=0).T
+    q = np.vstack([np.vstack(t.column("q").to_numpy()) for t in tbls if t.num_rows])
+    cand = pd.DataFrame({
+        "vec_a": vid[a], "vec_b": vid[b], "ia": a, "ib": b,
+        "qa": list(q[a]), "qb": list(q[b]), "na": n2[a], "nb": n2[b],
+    })
+    edges = list(_verify_pairs_arrow([cand], SEMDEDUP_TAU_E6, ("ia", "ib")))
+    if not edges:
+        return []
+    ia = np.concatenate([e["ia"].to_numpy() for e in edges])
+    ib = np.concatenate([e["ib"].to_numpy() for e in edges])
+    # ca < cb drops b, ca > cb drops a, a tie drops b (vec_a < vec_b)
+    losers = np.unique(np.where(cs[ia] > cs[ib], ia, ib))
+    return list(zip(vid[losers].tolist(), cl[losers].tolist()))
+
+
+def _semdedup_newly_dominated(
+    spark: SparkSession, new_cs: DataFrame, old_vecs: DataFrame, old_dom: DataFrame
+) -> DataFrame:
+    """(vec_id, cluster_id) of the vectors the batch's new same-cluster
+    edges dominate that ``old_dom`` does not hold yet.  ``new_cs`` is the
+    batch's checkpointed assignment rows; the stored probe filters on
+    the ``cb`` partition column, so parquet partition pruning skips every
+    untouched cluster's files.  Up to ``KM_DRIVER_MAX`` rows each, the
+    batch and the touched clusters' stored rows are pulled and the
+    verify and loser rule run on the driver; above it, in Spark."""
+
+    def stored_in(touched):
+        return old_vecs.where(F.col("cb").isin(touched)).select(
+            "vec_id", "cluster_id", "cent_sim_e6", "q", "n2"
+        )
+
+    _, new_tbl = localrel.pull(new_cs, KM_DRIVER_MAX)
+    if new_tbl is not None:
+        touched = sorted({f"c{c}" for c in new_tbl.column("cluster_id").to_pylist()})
+        _, stored_tbl = localrel.pull(stored_in(touched), KM_DRIVER_MAX)
+        if stored_tbl is not None:
+            schema = new_cs.select("vec_id", "cluster_id").schema
+            losers = local_rows(
+                spark, _semdedup_losers_driver(new_tbl, stored_tbl), schema
+            )
+            return losers.join(old_dom, "vec_id", "left_anti")
+    # Clusters the batch touches — bounded (<= k) driver list.
+    touched = [
+        r["cb"]
+        for r in new_cs.select(
+            F.concat(F.lit("c"), F.col("cluster_id")).alias("cb")
+        )
+        .distinct()
+        .collect()
+    ]
+    both = stored_in(touched).unionByName(new_cs).localCheckpoint()
+    # pairs with at least one NEW member: new x (stored-in-touched or
+    # new), normalized to vec_a < vec_b; distinct collapses the double
+    # count of new x new.
+    cand = (
+        new_cs.select(F.col("vec_id").alias("va"), "cluster_id")
+        .join(
+            both.select(F.col("vec_id").alias("vb"), "cluster_id"),
+            "cluster_id",
+        )
+        .where(F.col("va") != F.col("vb"))
+        .select(
+            F.least("va", "vb").alias("vec_a"),
+            F.greatest("va", "vb").alias("vec_b"),
+        )
+        .distinct()
+    )
+    return (
+        _semantic_dominated(cand, both)
+        .join(old_dom, "vec_id", "left_anti")
+        .join(both.select("vec_id", "cluster_id"), "vec_id")
+    )
 
 
 def semdedup_index_compact(spark: SparkSession, index_path: str) -> None:
@@ -1337,11 +1416,11 @@ def semdedup_index_compact(spark: SparkSession, index_path: str) -> None:
     own schedule."""
     with snapshots.txn(index_path, "sem_v") as t:
         vecs = (
-            spark.read.parquet(f"{t.live}/vectors")
+            snapshots.read(spark, f"{t.live}/vectors")
             .select("vec_id", "cluster_id", "cent_sim_e6", "q", "n2")
             .localCheckpoint()
         )
-        dom = spark.read.parquet(f"{t.live}/dominated").localCheckpoint()
+        dom = snapshots.read(spark, f"{t.live}/dominated").localCheckpoint()
         # one file per cluster partition (the repartition("cb") inside the
         # bucketed writer), restoring O(1) files per touched-cluster probe
         _semdedup_write_vectors(vecs, f"{t.dir}/vectors")
@@ -1354,8 +1433,8 @@ def semdedup_resolve(spark: SparkSession, index_path: str) -> DataFrame:
     batch :func:`dedup_semantic` under the index's frozen quantizer."""
     live = snapshots.snap_live(index_path)
     live_dir = f"{index_path}/{live}"
-    vecs = spark.read.parquet(f"{live_dir}/vectors")
-    dom = spark.read.parquet(f"{live_dir}/dominated")
+    vecs = snapshots.read(spark, f"{live_dir}/vectors")
+    dom = snapshots.read(spark, f"{live_dir}/dominated")
     return vecs.join(
         dom.withColumn("_d", F.lit(True)), "vec_id", "left"
     ).select(
@@ -1759,13 +1838,13 @@ def ann_index_update(
 
     with snapshots.txn(index_path, "state_v") as t:
         live_dir = t.live
-        cents = spark.read.parquet(f"{index_path}/centroids")
-        old_vecs = spark.read.parquet(f"{live_dir}/vectors")
-        old_assign = spark.read.parquet(f"{live_dir}/assign")
+        cents = snapshots.read(spark, f"{index_path}/centroids")
+        old_vecs = snapshots.read(spark, f"{live_dir}/vectors")
+        old_assign = snapshots.read(spark, f"{live_dir}/assign")
         # k from the index metadata ann_index_init persisted (round 7): the
         # one-row meta read replaces a per-batch count job over the centroid
         # table as the strategy-dispatch hint.
-        k = int(spark.read.parquet(f"{index_path}/meta").first()["k"])
+        k = int(snapshots.read(spark, f"{index_path}/meta").first()["k"])
 
         new_base = (
             _quantize_vectors(new_vectors)

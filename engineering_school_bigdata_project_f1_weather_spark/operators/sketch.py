@@ -944,14 +944,14 @@ def _merge_commit(
     raises on a block that writes nothing."""
     if batch_id is not None and not init:
         live = os.path.join(path, snapshots.snap_live(path))
-        ledger = spark.read.parquet(os.path.join(live, "batches"))
+        ledger = snapshots.read(spark, os.path.join(live, "batches"))
         # one row per applied batch: a steering-sized probe
         if ledger.where(F.col("batch_id") == batch_id).limit(1).count() > 0:
             return live
     with snapshots.txn(path, prefix) as t:
         for sub, (batch, merge) in parts.items():
             if not init:
-                live_sub = spark.read.parquet(os.path.join(t.live, sub))
+                live_sub = snapshots.read(spark, os.path.join(t.live, sub))
                 batch = merge(live_sub.unionByName(batch))
             batch.write.mode("overwrite").parquet(os.path.join(t.dir, sub))
         if batch_id is not None:
@@ -987,8 +987,8 @@ def bloom_index_update(
     snapshot.  IDEMPOTENT — re-delivery is absorbed because
     a ∪ a = a (the Bloom merge law as persisted state).  Returns the
     post-merge frame; per-batch work is O(|batch| + m·days-touched)."""
-    return spark.read.parquet(
-        _merge_commit(spark, path, "bits_v", _bloom_parts(new_events))
+    return snapshots.read(
+        spark, _merge_commit(spark, path, "bits_v", _bloom_parts(new_events))
     )
 
 
@@ -1140,8 +1140,8 @@ def hll_index_update(
     minhash / ANN index updates, via the merge law instead of an
     anti-join).  Returns the post-merge register frame;
     per-batch work is O(|batch| + m·days-touched), never corpus-sized."""
-    return spark.read.parquet(
-        _merge_commit(spark, path, "registers_v", _hll_parts(new_events))
+    return snapshots.read(
+        spark, _merge_commit(spark, path, "registers_v", _hll_parts(new_events))
     )
 
 
@@ -1507,7 +1507,7 @@ def hist_index_update(
     O(|batch| + B·days-touched), never corpus-sized.  Returns the
     post-merge (day_us, bin, cnt) frame."""
     live = _merge_commit(spark, path, "hist_v", _hist_parts(new_events), batch_id)
-    return spark.read.parquet(os.path.join(live, "counts"))
+    return snapshots.read(spark, os.path.join(live, "counts"))
 
 
 # Direct month-grain binning from raw events: equals the Spark side's
@@ -1652,8 +1652,8 @@ def kmv_index_update(
     merge is a semilattice, so a re-delivered batch is a no-op and no
     ledger is needed (contrast hist_index_update's non-idempotent SUM).
     Per-batch work is O(|batch| + k·days-touched), never corpus-sized."""
-    return spark.read.parquet(
-        _merge_commit(spark, path, "kmv_v", _kmv_parts(new_events))
+    return snapshots.read(
+        spark, _merge_commit(spark, path, "kmv_v", _kmv_parts(new_events))
     )
 
 
@@ -1975,8 +1975,8 @@ def qsample_index_update(
     key makes the per-row (h, cents) pair unique, so a re-delivered
     batch is a no-op (no ledger; contrast hist_index_update's SUM).
     Per-batch work is O(|batch| + k·days-touched), never corpus-sized."""
-    return spark.read.parquet(
-        _merge_commit(spark, path, "qs_v", _qsample_parts(new_events))
+    return snapshots.read(
+        spark, _merge_commit(spark, path, "qs_v", _qsample_parts(new_events))
     )
 
 
@@ -2500,8 +2500,8 @@ def ndv_index_profile(spark: SparkSession, path: str) -> DataFrame:
     entry's columns minus the corpus-sized exact-NDV audit column."""
     base = os.path.join(path, snapshots.snap_live(path))
     return _ndv_profile(
-        spark.read.parquet(os.path.join(base, "counts")),
-        spark.read.parquet(os.path.join(base, "regs")),
+        snapshots.read(spark, os.path.join(base, "counts")),
+        snapshots.read(spark, os.path.join(base, "regs")),
     )
 
 

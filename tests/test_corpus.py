@@ -1693,6 +1693,14 @@ def test_corpus_shard_wide_past_old_cap(spark, sf_dir):
     ).count() == 0
 
 
+def test_rendezvous_shard_domain_is_checked_without_spark():
+    """The shard-domain guard is a raise, not an ``assert`` that ``-O``
+    strips: past 2¹⁶ shards the ``w·2¹⁶ − s`` key stops being injective.
+    It fails before any column is built, so no session is needed."""
+    with pytest.raises(ValueError, match="65537 shards"):
+        corpus._rendezvous_shard(65_537)
+
+
 def test_dedup_lines_conservation_and_first_keeper(spark, sf_dir):
     """dedup_lines (CCNet line dedup): every token of the corpus is in
     exactly one line row (conservation); within each duplicated line

@@ -26,6 +26,7 @@ from engineering_school_bigdata_project_f1_weather_spark.functions.localrel impo
 from engineering_school_bigdata_project_f1_weather_spark.functions.snapshots import meta_row
 from engineering_school_bigdata_project_f1_weather_spark.operators import (
     dedup,
+    indexes,
     quality,
     similarity,
 )
@@ -244,6 +245,19 @@ def _lr(spark, sf_dir):
     return _rows(model), bias
 
 
+def _semdedup_update(spark, sf_dir):
+    """The SemDeDup index's init(A) + update(B): the update's newly
+    dominated rows and the serve rows (the update's touched-cluster
+    verify is size-dispatched too)."""
+    f = indexes.FAMILIES["semdedup"]
+    a, b = f.split(spark, sf_dir)
+    with indexes.scratch_path("semdedup_twin") as path:
+        f.init(spark, *a, path)
+        newly_dom = _rows(f.update(spark, *b, path))
+        assert newly_dom, "fixture must dominate some vectors in the update"
+        return newly_dom, _rows(f.serve(spark, path))
+
+
 TWINS = {
     "closure": _closure,
     "pagerank": _pagerank,
@@ -253,6 +267,7 @@ TWINS = {
     "kmeans_k5_zero_norm": _kmeans(5, True),
     "pq_codebooks": _pq,
     "lr": _lr,
+    "semdedup_update": _semdedup_update,
 }
 
 

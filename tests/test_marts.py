@@ -4,11 +4,12 @@ the same parquet inputs."""
 
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tools.selfcheck import canon_rows  # noqa: E402
 

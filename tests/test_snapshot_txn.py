@@ -6,6 +6,9 @@ injects a fault at each commit point by monkeypatching the call that
 fails there.  After every fault, ``CURRENT`` must still name a complete
 version, and the next transaction must clean up.
 
+``snapshots.read`` is checked against a plain parquet read on a few
+hand-built layouts.
+
 The second half runs the 13 index families of ``indexes.FAMILIES`` on
 the test fixtures: a failed commit leaves the serving view unchanged, a
 retry converges to the clean-run serving view, and re-running a
@@ -166,6 +169,82 @@ def test_txn_carry_hard_links(tmp_path):
     assert snapshots.snap_live(path) == "x_v1"
     assert _versions(path) == ["x_v1"]
     assert not os.path.exists(os.path.join(t.dir, "occ", "_SUCCESS"))
+
+
+# ------------------------------------------------------ snapshots.read
+
+
+def _flat(spark, path):
+    df = spark.range(4).selectExpr("id AS a", "CAST(id * 2 AS STRING) AS s")
+    df.write.parquet(path)
+
+
+def _partitioned(spark, path):
+    spark.range(6).selectExpr(
+        "id AS vec_id", "array(id, -id) AS q", "concat('c', id % 3) AS cb"
+    ).write.partitionBy("cb").parquet(path)
+
+
+def _two_writes(spark, path):
+    """A version made of its own write plus the live version's files,
+    hard-linked; the two writes differ in nullability."""
+    live = path + "_live"
+    spark.range(3).selectExpr("id AS a", "'x' AS s").write.parquet(live)
+    spark.range(3, 5).selectExpr(
+        "id AS a", "CASE WHEN id > 3 THEN 'y' END AS s"
+    ).write.parquet(path)
+    snapshots.link_parquet_files(live, path)
+
+
+def _no_part_file(spark, path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(path)
+    pq.write_table(pa.table({"a": [1, 2], "s": ["u", None]}), f"{path}/data.parquet")
+
+
+def _no_spark_key(spark, path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(path)
+    pq.write_table(pa.table({"a": [3], "s": ["v"]}), f"{path}/part-0.parquet")
+
+
+def _read_jobs(spark, read, path):
+    """(frame, jobs launched while building it)."""
+    sc = spark.sparkContext
+    group = f"snapshots_read_{os.path.basename(path)}_{id(read)}"
+    sc.setJobGroup(group, group)
+    try:
+        df = read(path)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts are async
+    return df, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize(
+    "layout",
+    [_flat, _partitioned, _two_writes, _no_part_file, _no_spark_key],
+    ids=lambda f: f.__name__.strip("_"),
+)
+def test_read_matches_plain_read_without_a_job(spark, tmp_path, layout):
+    """``snapshots.read`` gives the schema and rows of a plain parquet
+    read.  With a Spark footer it launches no job while building the
+    frame; without one it falls back to the plain read, inference job
+    included."""
+    path = str(tmp_path / layout.__name__.strip("_"))
+    layout(spark, path)
+    footer = layout not in (_no_part_file, _no_spark_key)
+    got, jobs = _read_jobs(spark, lambda p: snapshots.read(spark, p), path)
+    want, plain_jobs = _read_jobs(spark, spark.read.parquet, path)
+    assert got.schema == want.schema
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+    assert plain_jobs >= 1  # the inference job the footer schema skips
+    assert jobs == (0 if footer else plain_jobs)
 
 
 # ----------------------------------------------------- the 13 families

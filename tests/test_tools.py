@@ -10,9 +10,11 @@ import sys
 
 import pytest
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def test_bench_compare_gate(tmp_path):
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     import bench
 
     prior = tmp_path / "prior.json"
@@ -51,7 +53,7 @@ def test_bench_compare_drift_normalization(tmp_path):
     """Round 12 (VERDICT r11 item 3): the calibration probes normalize
     the gate — uniform session drift passes, a real regression on top of
     drift fails, and a FASTER box can't hide a regression."""
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     import bench
 
     prior = tmp_path / "prior.json"
@@ -91,7 +93,7 @@ def test_bench_tail_recovery_scans_whole_tail(tmp_path):
     the ENTIRE stored tail, not just from the first '\"queries\"' key —
     which lands on the trailing compact-summary line and discards every
     big-line timing before it."""
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     import bench
 
     # a driver-style artifact: front-truncated big line (its own
@@ -110,7 +112,7 @@ def test_bench_tail_recovery_scans_whole_tail(tmp_path):
 
 
 def test_selfcheck_canonicalizer_is_order_and_rep_stable():
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(ROOT, "tools"))
     import math
 
     import numpy as np
@@ -149,7 +151,7 @@ def test_bench_forced_distributed_row_refuses_entries_without_a_twin(
     assert localrel.pull is real_pull
 
 
-TOOLS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
+TOOLS = os.path.join(ROOT, "tools")
 
 
 def test_tools_put_the_checkout_on_the_workers_pythonpath(monkeypatch, tmp_path):

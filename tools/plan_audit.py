@@ -20,6 +20,7 @@ matters.
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
@@ -168,7 +169,7 @@ def main() -> int:
         "PLANS_SUMMARY.md" if summary else "PLANS.md"
     )
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entrymod
     from engineering_school_bigdata_project_f1_weather_spark import get_spark
 
