@@ -23,10 +23,14 @@ with no local properties.  Every leg is therefore wrapped on the caller
 thread with ``inheritable_thread_target``, so its jobs carry the
 caller's job group, description and scheduler pool.  A leg wrapped with
 :func:`leg` also names itself: its jobs carry ``"<caller>/<name>"``.
+
+:func:`loop_conf` scopes the shuffle sizing of the iterative loops
+(Lloyd rounds, Hash-Min closure, BPE merges) to the loop.
 """
 
 from __future__ import annotations
 
+import contextlib
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark import inheritable_thread_target
@@ -36,6 +40,8 @@ from pyspark.sql import SparkSession
 # task tail, not so many that they fight for executors.
 MAX_OVERLAP = 3
 _DESCRIPTION = "spark.job.description"
+_PARTS = "spark.sql.shuffle.partitions"
+_AQE = "spark.sql.adaptive.enabled"
 
 
 def run_overlapped(*thunks):
@@ -72,3 +78,27 @@ def leg(name, thunk):
             sc.setLocalProperty(_DESCRIPTION, prev)
 
     return run
+
+
+@contextlib.contextmanager
+def loop_conf(
+    spark: SparkSession, n: int, rows_per_part: int, aqe: bool | None = None
+):
+    """Loop-scoped shuffle sizing for the iterative twins (k-means/PQ
+    Lloyd rounds, Hash-Min closure, BPE merges): inside the block every
+    per-round shuffle gets ``max(4, min(session, n // rows_per_part + 1))``
+    partitions, sized to the ``n`` rows the loop carries instead of the
+    session's cluster-scale default (at bench scale 32 partitions are
+    pure stage-scheduling overhead); ``aqe`` not None sets
+    ``spark.sql.adaptive.enabled`` too.  The session values come back on
+    exit, also when the block raises."""
+    saved = {k: spark.conf.get(k) for k in (_PARTS, _AQE)}
+    parts = max(4, min(int(saved[_PARTS]), n // rows_per_part + 1))
+    spark.conf.set(_PARTS, str(parts))
+    if aqe is not None:
+        spark.conf.set(_AQE, str(aqe).lower())
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)

@@ -35,6 +35,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ..functions.jobs import loop_conf
 from ..sources.tables import load_table_spread
 
 END_OF_WORD = "</w>"  # classic end-of-word marker so merges can't cross words
@@ -174,14 +175,8 @@ def _merge_loop(
     and otherwise folds the pair into every segmentation as the symbol
     ``merged_of(l, r)``.  Returns [(l, r, merged), ...] in merge order."""
     merges: list[tuple[str, str, str]] = []
-    # Loop-scoped shuffle sizing (same move as the k-means / Hash-Min
-    # loops): every per-round shuffle carries vocab-frame rows, so size
-    # partitions to the vocab and restore the session conf after.
-    saved_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    n_vocab = segs.count()
-    loop_parts = max(4, min(int(saved_parts), n_vocab // 50_000 + 1))
-    spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    try:
+    # every per-round shuffle carries vocab-frame rows
+    with loop_conf(spark, segs.count(), 50_000):
         for _ in range(n_merges):
             top = scores(segs).orderBy(*order).limit(1).collect()
             if not top or top[0]["freq"] < 2:
@@ -194,8 +189,6 @@ def _merge_loop(
                 "n",
                 _merge_pair(F.col("seg"), left, right, merged).alias("seg"),
             ).localCheckpoint()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved_parts)
     return merges
 
 

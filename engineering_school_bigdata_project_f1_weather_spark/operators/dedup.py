@@ -30,7 +30,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..functions import localrel, snapshots, texts, vectors
-from ..functions.jobs import leg, run_overlapped
+from ..functions.jobs import leg, loop_conf, run_overlapped
 from ..functions.localrel import empty_rel, local_rows
 from ..sources.tables import load_table, load_table_spread
 
@@ -1003,7 +1003,7 @@ def minhash_signatures(spark: SparkSession, docs: DataFrame) -> DataFrame:
     """(doc_id, n, xs, mh0..mhH-1) signature rows for ``docs`` (doc_id,
     text) — the persisted state of the incremental dedup index."""
     # Physical-strategy dispatch by regime (round 6, same philosophy as
-    # the per-k Arrow assignment crossover): this is the INCREMENTAL
+    # the centroid-assignment crossover in SCALE.md): the INCREMENTAL
     # path, whose unit of work is a steering-sized batch — the window
     # form of texts.shingle_frame pays a fixed exchange+sort+window
     # ~0.3 s that dominates at batch scale (measured 0.65 → 0.95 s on
@@ -1373,21 +1373,8 @@ def propagate_components(
         .withColumn("label", F.col("node"))
         .localCheckpoint()
     )
-    saved = {
-        "spark.sql.shuffle.partitions": spark.conf.get(
-            "spark.sql.shuffle.partitions"
-        ),
-        "spark.sql.adaptive.enabled": spark.conf.get(
-            "spark.sql.adaptive.enabled"
-        ),
-    }
-    n_nodes = labels.count()
-    loop_parts = max(4, min(int(saved["spark.sql.shuffle.partitions"]),
-                            n_nodes // 250_000 + 1))
     changed = 0
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
+    with loop_conf(spark, labels.count(), 250_000, aqe=False):
         for it in range(max_iters):
             nbr_min = edges.join(
                 labels, edges.d == labels.node
@@ -1442,9 +1429,6 @@ def propagate_components(
             labels = new_labels.select("node", "label")
             if changed == 0:
                 break
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
     if changed != 0:
         # Hash-Min needs rounds ≈ max component diameter; a component wider
         # than the cap would silently return partially propagated labels
@@ -2127,7 +2111,7 @@ ER_CLOSURE_MAX_ITERS = COMPONENT_MAX_ITERS * 4
 ER_CLOSURE_JUMPS = 4
 
 
-# Physical-strategy dispatch for the ER closures (the ARROW_ASSIGN_MIN_K
+# Physical-strategy dispatch for the ER closures (the KM_DRIVER_MAX
 # move): a match graph is ORDERS smaller than its corpus, and both ER
 # closure inputs are candidate-bounded (bootstrap: verified pairs only;
 # update: the contracted affected subgraph) — below this edge count the

@@ -25,8 +25,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..functions import localrel, snapshots, vectors
-from ..functions.jobs import run_overlapped
-from ..functions.localrel import empty_rel, local_rows
+from ..functions.jobs import loop_conf, run_overlapped
+from ..functions.localrel import local_rows
 from ..sources.tables import load_table_spread
 from .dedup import EMBED_DUP_MIN_E6
 
@@ -286,9 +286,9 @@ NPROBE = 4
 # ordering key: the key is order-equivalent to (sim DESC, centroid_id ASC)
 # iff the multiplier exceeds the largest centroid id, so the old literal
 # 128 silently capped k at 128 (ADVICE r5: scaled_ann_params' k = n//80
-# passes that around 10k vectors). 2**21 matches _assign_lists_arrow's id
-# guard; sim is integer e6 (|sim| <= 1e6), so the key tops out near 2**41 —
-# exact in BIGINT on both engines and far below DOUBLE's 2**53 mantissa.
+# passes that around 10k vectors). sim is integer e6 (|sim| <= 1e6), so
+# the key tops out near 2**41 — exact in BIGINT on both engines and far
+# below DOUBLE's 2**53 mantissa.
 ORD_MULT = 2**21
 # Quantizer-training size dispatch (round 12): at or below this many
 # vectors the kmeans loop runs as a driver numpy twin over ONE bounded
@@ -298,9 +298,118 @@ ORD_MULT = 2**21
 KM_DRIVER_MAX = 65_536
 
 
-def _seed_centroids(base: DataFrame, k: int = K_CENTROIDS) -> DataFrame:
-    """Deterministic seed centroids: the vectors with vec_id 1..k."""
-    return base.where((F.col("vec_id") >= 1) & (F.col("vec_id") <= k)).select(
+def _cos_e6(d, nn):
+    """numpy twin of ``vectors.sim_e6``: ``floor(d·1e6 / sqrt(nn))`` over
+    exact int64 dots ``d`` and float64 norm products ``nn``.  It is the
+    JVM form's IEEE-754 sequence on identical operands, so the results
+    are bit-equal (and equal to the DuckDB oracle's); a zero norm gives
+    0/0 = NaN, mapped to 0 like the JVM form's explicit zero case."""
+    import numpy as np
+
+    with np.errstate(invalid="ignore", divide="ignore"):
+        s = np.floor(d.astype(np.float64) * 1_000_000.0 / np.sqrt(nn))
+    return np.where(np.isfinite(s), s, 0.0)
+
+
+def _nearest_np(Q, n2, C, cn2, cid, n: int, metric: str):
+    """``(idx, score)``: the ``n`` nearest centroids (rows of ``C`` with
+    squared norms ``cn2`` and ids ``cid``) of each row of ``Q`` (squared
+    norms ``n2``), nearest first, as column indices into ``C`` and their
+    scores — ``sim_e6`` for ``metric="cos"``, the exact squared L2
+    ``n2 − 2·q·c + cn2`` for ``"l2"``.
+
+    The dot is one exact int64 matmul.  The ranking is the injective
+    lexicographic (sim desc, id asc) or (d2 asc, id asc) — the order of
+    the oracles' ``arg_max`` / ``arg_min`` / ``ROW_NUMBER`` forms —
+    sorted as two keys, so no product of score and id can overflow."""
+    import numpy as np
+
+    d = Q @ C.T
+    if metric == "cos":
+        nn = n2.astype(np.float64)[:, None] * cn2.astype(np.float64)[None, :]
+        score = _cos_e6(d, nn).astype(np.int64)
+        first = -score
+    else:
+        score = first = n2[:, None] - 2 * d + cn2[None, :]
+    idx = np.lexsort((np.broadcast_to(cid, score.shape), first), axis=1)[:, :n]
+    return idx, np.take_along_axis(score, idx, axis=1)
+
+
+def _nearest(
+    rows: DataFrame, cents: DataFrame, n: int, metric: str, key: tuple = ()
+) -> DataFrame:
+    """The ``n`` nearest centroids of every row, by :func:`_nearest_np`.
+
+    ``rows`` holds a vector ``q`` and its squared norm ``n2``; ``cents``
+    is the table ``(*key, centroid_id, cq, cn2)``.  The result keeps
+    every other column of ``rows`` and adds ``centroid_id`` and
+    ``score``: one row per row and winning centroid, fewer when the
+    table is smaller than ``n``, none when the row's key has no
+    centroids.  ``key=("m",)`` ranks each PQ sub-vector against its
+    own subspace's codebook: the PQ encode (Jégou et al., TPAMI 2011)
+    is this nearest-centroid step per subspace.
+
+    The table is steering-sized (k rows per key), so it is collected
+    once and each Arrow batch runs one int64 matmul per key.
+    ``mapInPandas`` is a stateless map: the same call serves batch
+    frames and append streams."""
+    import numpy as np
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    key = list(key)
+    rows_of: dict = {}
+    for r in cents.select(*key, "centroid_id", "cq", "cn2").collect():
+        rows_of.setdefault(tuple(r[c] for c in key), []).append(r[len(key):])
+    # per key: (cid, C, cn2) int64 arrays
+    tables = {
+        kv: tuple(np.array(col, dtype=np.int64) for col in zip(*rs))
+        for kv, rs in rows_of.items()
+    }
+    kept = [f for f in rows.schema.fields if f.name not in ("q", "n2")]
+    schema = StructType(
+        kept + [StructField(c, LongType()) for c in ("centroid_id", "score")]
+    )
+
+    def body(batches):
+        for pdf in batches:
+            for kv, g in pdf.groupby(key, sort=False) if key else [((), pdf)]:
+                t = tables.get(kv if isinstance(kv, tuple) else (kv,))
+                if t is None or g.empty:
+                    continue
+                cid, C, cn2 = t
+                Q = np.vstack(g["q"].to_numpy()).astype(np.int64, copy=False)
+                n2 = g["n2"].to_numpy().astype(np.int64)
+                idx, score = _nearest_np(Q, n2, C, cn2, cid, n, metric)
+                take = idx.shape[1]
+                out = {f.name: np.repeat(g[f.name].to_numpy(), take) for f in kept}
+                out["centroid_id"] = cid[idx].reshape(-1)
+                out["score"] = score.reshape(-1)
+                yield pd.DataFrame(out)
+
+    return rows.mapInPandas(body, schema=schema)
+
+
+def _probe(queries: DataFrame, cents: DataFrame, metric: str = "cos") -> DataFrame:
+    """``(query_id, qq, qn2, cluster)``: each query's NPROBE nearest
+    lists, for a ``(query_id, qq, qn2)`` query frame (batch or stream)."""
+    return (
+        _nearest(
+            queries.withColumn("q", F.col("qq")).withColumn("n2", F.col("qn2")),
+            cents,
+            NPROBE,
+            metric,
+        )
+        .withColumnRenamed("centroid_id", "cluster")
+        .drop("score")
+    )
+
+
+def _seed_centroids(
+    rows: DataFrame, k: int = K_CENTROIDS, key: tuple = ()
+) -> DataFrame:
+    """Deterministic seed centroids: the rows with vec_id 1..k, per key."""
+    return rows.where((F.col("vec_id") >= 1) & (F.col("vec_id") <= k)).select(
+        *key,
         F.col("vec_id").alias("centroid_id"),
         F.col("q").alias("cq"),
         F.col("n2").alias("cn2"),
@@ -310,171 +419,94 @@ def _seed_centroids(base: DataFrame, k: int = K_CENTROIDS) -> DataFrame:
 def kmeans_centroids(
     spark: SparkSession, sf_dir: str, k: int = K_CENTROIDS, iters: int = 3
 ) -> DataFrame:
-    """Lloyd's k-means coarse-quantizer training, fully distributed.
+    """Lloyd's k-means coarse-quantizer training (:func:`_train_centroids`).
 
     Init = the same seeded centroids the oracle path uses (vec_id 1..k),
     so the whole procedure is deterministic — no rand(), reproducible
-    under task retry. Each round: broadcast the k centroids, cosine-argmax
-    assignment (the exact serving-time expression), then per-cluster mean
-    re-quantized to the 1/1024 integer grid (posexplode → (cluster, pos)
-    partial-agg mean → reassemble; one shuffle keyed on (cluster, pos),
-    map-side combinable). Empty clusters keep their previous centroid.
-    Per-round driver traffic is only the k×DIM centroid table — steering,
-    not data movement, same shape as dedup_components.
+    under task retry. Each round assigns every vector to its cosine-
+    nearest centroid (:func:`_nearest`, the serving-time ranking), then
+    takes the per-cluster mean re-quantized to the 1/1024 integer grid;
+    empty clusters keep their previous centroid.  Per-round driver
+    traffic is only the k×DIM centroid table — steering, not data
+    movement, same shape as dedup_components.
     """
     return _train_centroids(spark, _quantized(spark, sf_dir).cache(), k, iters)
 
 
 def _train_centroids(
-    spark: SparkSession, base: DataFrame, k: int = K_CENTROIDS, iters: int = 3
+    spark: SparkSession,
+    base: DataFrame,
+    k: int = K_CENTROIDS,
+    iters: int = 3,
+    metric: str = "cos",
+    key: tuple = (),
 ) -> DataFrame:
-    """Training loop over an arbitrary quantized (vec_id, q, n2) frame —
-    shared by the sf_dir registry path and the incremental index.
+    """Lloyd's k-means over a quantized (vec_id, q, n2) frame from the
+    vec_id 1..k seeds, as ``(*key, centroid_id, cq, cn2)`` — shared by
+    the sf_dir registry paths and the incremental indexes.
+    ``key=("m",)`` trains the PQ_M subspace codebooks of
+    :func:`pq_train_codebooks` in one loop, with ``metric="l2"``.
 
-    Size-dispatched (round 12, the ``_er_closure`` precedent): below
-    ``KM_DRIVER_MAX`` vectors a driver numpy twin runs the bit-identical
-    iteration over one bounded ``localrel.pull`` — Lloyd's on a small
-    init corpus is k·n·DIM·iters of arithmetic that the distributed
-    loop pays ~2 jobs of scheduler latency per round for (measured 3.0 s at sf0.1 for
-    1,000 vectors, ~0.1 s on the driver; it is the dominant fixed cost
-    of every quantizer-training entry).  Above the threshold the
-    distributed loop takes over with identical semantics — the
-    assignment is the exact IEEE-754 sequence both physical paths
-    already share (``_assign_lists_arrow``'s contract), the M-step is
-    the same exact-integer rounded mean, so the dispatch is invisible
-    to every oracle hash (pinned by tests/test_functions.py's
-    driver-twin parity test)."""
+    Size-dispatched (round 12, the ``_er_closure`` precedent): up to
+    ``KM_DRIVER_MAX`` vectors :func:`_lloyd_np` runs the bit-identical
+    loop on the driver over one bounded ``localrel.pull`` — Lloyd's on a
+    small init corpus is k·n·DIM·iters of arithmetic that the
+    distributed loop pays ~2 jobs of scheduler latency per round for
+    (measured 3.0 s at sf0.1 for 1,000 vectors, ~0.1 s on the driver;
+    it is the dominant fixed cost of every quantizer-training entry).
+    Above it the distributed :func:`_lloyd` runs.  Both assign through
+    :func:`_nearest_np` and take the same exact-integer rounded mean, so
+    the dispatch is invisible to every oracle hash (pinned by
+    tests/test_functions.py's driver-twin parity test)."""
     n_vecs, tbl = localrel.pull(base, KM_DRIVER_MAX)  # caller caches base
     if tbl is not None:
-        return _train_centroids_driver(spark, tbl, k, iters)
-    cents = _seed_centroids(base, k).localCheckpoint()
-    # Loop-scoped shuffle sizing (same move as propagate_components): the
-    # per-iteration shuffles carry n·assign / k·DIM rows, so at bench scale
-    # 32 partitions are pure stage-scheduling overhead (~2 s/iteration of
-    # empty tasks); size them to the data and restore the session conf
-    # after. At cluster scale the formula climbs back to the session value.
-    saved_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    loop_parts = max(4, min(int(saved_parts), n_vecs // 50_000 + 1))
-    spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    try:
-        cents = _kmeans_iterations(base, cents, k, iters)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved_parts)
-    return cents
+        return _lloyd_np(spark, tbl, k, iters, metric, key)
+    rows = _pq_rows(_pq_subvectors(base)).localCheckpoint() if key else base
+    cents = _seed_centroids(rows, k, key).localCheckpoint()
+    # the per-round shuffles carry n·DIM / k·DIM rows
+    with loop_conf(spark, n_vecs, 50_000):
+        return _lloyd(rows, cents, iters, metric, key)
 
 
-def _train_centroids_driver(
-    spark: SparkSession, tbl, k: int, iters: int
+def _lloyd(
+    rows: DataFrame, cents: DataFrame, iters: int, metric: str, key: tuple = ()
 ) -> DataFrame:
-    """Driver numpy twin of :func:`_kmeans_iterations` over the pulled
-    (≤ KM_DRIVER_MAX rows) quantized table — the identical per-round
-    computation:
+    """Distributed Lloyd's loop over ``rows`` (vec_id, *key, q, n2) from
+    the ``cents`` table (*key, centroid_id, cq, cn2).  Each round:
 
-    - E-step: the exact int64 matmul + IEEE-754 cosine sequence
-      (d·1e6 / sqrt(n2a·n2b), floor, non-finite→0) and the strictly
-      unique ranking key ``sim_e6·2^21 − centroid_id`` — byte-for-byte
-      the ``_assign_lists_arrow`` body (which is itself pinned
-      bit-identical to the JVM expression path).
-    - M-step: the exact-integer rounded mean
-      ``div(2s + c − pmod(2s + c, 2c), 2c)`` per (cluster, pos); empty
-      clusters keep their previous centroid; cn2 = Σm².
-
-    Both steps are order-insensitive (per-row assignment, integer sums),
-    so driver and distributed runs agree bit-for-bit."""
-    import numpy as np
-
-    ids = np.array(tbl.column("vec_id").to_pylist(), dtype=np.int64)
-    Q = np.array(tbl.column("q").to_pylist(), dtype=np.int64)
-    n2 = np.array(tbl.column("n2").to_pylist(), dtype=np.float64)
-    seed_mask = (ids >= 1) & (ids <= k)
-    order = np.argsort(ids[seed_mask], kind="stable")
-    cid = ids[seed_mask][order]
-    C = Q[seed_mask][order].copy()
-    if cid.size == 0:
-        return empty_rel(
-            spark, "centroid_id long, cq array<long>, cn2 long"
-        )
-    cn2 = np.einsum("ij,ij->i", C, C).astype(np.float64)
+    - E-step: :func:`_nearest` with n=1;
+    - M-step: per (*key, centroid_id, pos) the exact-integer rounded
+      mean ``floor(s/c + 1/2) = div(2s + c − pmod(2s + c, 2c), 2c)``
+      (``F.avg`` over doubles depends on partial-sum order, so a
+      ``floor(m + 0.5)`` could flip at .5 boundaries across retries; the
+      integer form is bit-stable), reassembled in pos order; an empty
+      cluster keeps its centroid; cn2 = Σm².  The table is checkpointed
+      per round."""
+    ck = [*key, "centroid_id"]
     for _ in range(iters):
-        d = Q @ C.T  # exact int64
-        with np.errstate(invalid="ignore", divide="ignore"):
-            s = np.floor(
-                d.astype(np.float64)
-                * 1_000_000.0
-                / np.sqrt(n2[:, None] * cn2[None, :])
-            )
-        s = np.where(np.isfinite(s), s, 0.0)
-        key = s * (2.0**21) - cid[None, :].astype(np.float64)
-        j = np.argsort(-key, axis=1, kind="stable")[:, 0]
-        assigned = cid[j]
-        for ci in range(cid.size):
-            mask = assigned == cid[ci]
-            c = int(mask.sum())
-            if c == 0:
-                continue  # empty cluster keeps its previous centroid
-            ssum = Q[mask].sum(axis=0, dtype=np.int64)
-            num = 2 * ssum + c
-            C[ci] = (num - (num % (2 * c))) // (2 * c)
-        cn2 = np.einsum("ij,ij->i", C, C).astype(np.float64)
-    return local_rows(
-        spark,
-        [
-            (int(cid[i]), [int(x) for x in C[i]], int(cn2[i]))
-            for i in range(cid.size)
-        ],
-        "centroid_id long, cq array<long>, cn2 long",
-    )
-
-
-def _kmeans_iterations(base, cents, k: int, iters: int):
-    for _ in range(iters):
-        # Per-round assignment is the shared `_assign_lists` with
-        # assign=1 — its (desc csim, asc centroid_id) ranking is the
-        # same total order the `max_by(centroid_id, csim*ORD_MULT -
-        # centroid_id)` key encodes for any k < ORD_MULT (csim is
-        # integer e6, so the composite only ties on identical
-        # (csim, id); the kmeans oracle uses the same key), and the
-        # helper's per-k dispatch gives training iterations the numpy
-        # matmul path above ARROW_ASSIGN_MIN_K (r5: measured faster from
-        # k=16 up — the r3 "Arrow 2× slower" note measured a pairwise
-        # formulation that shipped both vectors per pair, not the
-        # broadcast-matrix matmul; see the constant's comment).
-        assign = (
-            _assign_lists(base, cents, 1, k=k)
-            .withColumnRenamed("centroid_id", "cluster")
-            .join(base.select("vec_id", "q"), "vec_id")
-        )
-        # Exact-integer rounded mean: floor(s/c + 1/2) = floor((2s+c)/(2c)),
-        # computed with pmod so the floor-division is exact for any sign.
-        # F.avg over doubles depends on partial-sum order, so floor(m+0.5)
-        # could flip at .5 boundaries across retries/repartitioning; the
-        # integer form is bit-stable, keeping trained centroids
-        # reproducible under task retry as documented.
+        assign = _nearest(rows.withColumn("v", F.col("q")), cents, 1, metric, key)
         means = (
-            assign.select("cluster", F.posexplode("q").alias("pos", "val"))
-            .groupBy("cluster", "pos")
+            assign.select(*ck, F.posexplode("v").alias("pos", "val"))
+            .groupBy(*ck, "pos")
             .agg(
                 F.sum("val").cast("long").alias("s"),
                 F.count(F.lit(1)).alias("c"),
             )
             .select(
-                "cluster",
+                *ck,
                 "pos",
-                F.expr("div(2*s + c - pmod(2*s + c, 2*c), 2*c)").alias("m"),
+                F.expr("div(2*s + c - pmod(2*s + c, 2*c), 2*c)").alias("v"),
             )
-            .groupBy("cluster")
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
-            .select(
-                F.col("cluster").alias("centroid_id"),
-                F.transform("pm", lambda s: s["m"]).alias("cq"),
-            )
+            .groupBy(*ck)
+            .agg(F.array_sort(F.collect_list(F.struct("pos", "v"))).alias("pv"))
+            .select(*ck, F.transform("pv", lambda s: s["v"]).alias("cq"))
             .withColumn("cn2", vectors.norm2(F.col("cq")))
         )
         cents = (
-            cents.select("centroid_id", F.col("cq").alias("ocq"), F.col("cn2").alias("ocn2"))
-            .join(means, "centroid_id", "left")
+            cents.select(*ck, F.col("cq").alias("ocq"), F.col("cn2").alias("ocn2"))
+            .join(means, ck, "left")
             .select(
-                "centroid_id",
+                *ck,
                 F.coalesce("cq", "ocq").alias("cq"),
                 F.coalesce("cn2", "ocn2").alias("cn2"),
             )
@@ -483,14 +515,62 @@ def _kmeans_iterations(base, cents, k: int, iters: int):
     return cents
 
 
+def _lloyd_np(
+    spark: SparkSession, tbl, k: int, iters: int, metric: str, key: tuple = ()
+) -> DataFrame:
+    """Driver numpy twin of :func:`_lloyd` over the pulled
+    (≤ KM_DRIVER_MAX rows) quantized table, seeded from vec_id 1..k;
+    ``key=("m",)`` splits each vector into its PQ_M sub-vectors and
+    trains one table per subspace.  Each round is the identical
+    computation: the E-step is :func:`_nearest_np` itself, the M-step
+    the same exact-integer rounded mean (numpy ``%`` is the same
+    nonnegative-remainder pmod Spark uses), an empty cluster keeps its
+    centroid, cn2 = Σm².  Both steps are order-insensitive (per-row
+    assignment, integer sums), so driver and distributed runs agree
+    bit-for-bit."""
+    import numpy as np
+
+    ids = np.array(tbl.column("vec_id").to_pylist(), dtype=np.int64)
+    Q = np.array(tbl.column("q").to_pylist(), dtype=np.int64)
+    seed = (ids >= 1) & (ids <= k)
+    order = np.argsort(ids[seed], kind="stable")
+    cid = ids[seed][order]
+    out = []
+    if cid.size:
+        parts = [((), Q)]
+        if key:
+            w = PQ_SUBDIM
+            parts = [((m,), Q[:, m * w : (m + 1) * w]) for m in range(PQ_M)]
+        for kv, S in parts:
+            n2 = np.einsum("ij,ij->i", S, S)
+            C = S[seed][order].copy()
+            for _ in range(iters):
+                cn2 = np.einsum("ij,ij->i", C, C)
+                j = _nearest_np(S, n2, C, cn2, cid, 1, metric)[0][:, 0]
+                for ci in range(cid.size):
+                    mask = j == ci
+                    c = int(mask.sum())
+                    if c:  # an empty cluster keeps its centroid
+                        num = 2 * S[mask].sum(axis=0, dtype=np.int64) + c
+                        C[ci] = (num - (num % (2 * c))) // (2 * c)
+            cn2 = np.einsum("ij,ij->i", C, C)
+            out.extend(
+                (*kv, int(cid[i]), [int(x) for x in C[i]], int(cn2[i]))
+                for i in range(cid.size)
+            )
+    schema = "centroid_id long, cq array<long>, cn2 long"
+    return local_rows(spark, out, f"m integer, {schema}" if key else schema)
+
+
 def sim_ivf(
     spark: SparkSession, sf_dir: str, centroids: DataFrame | None = None
 ) -> DataFrame:
     """IVF (inverted-file) ANN: coarse-quantize the corpus into K_CENTROIDS
     lists, probe the NPROBE nearest lists per query, exact-search inside.
 
-    The 100 TB shape: assignment is one broadcast pass over the corpus (the
-    centroid table is tiny by construction), the inverted lists are just a
+    The 100 TB shape: assignment is one :func:`_nearest` pass over the
+    corpus (the centroid table is tiny by construction, collected once
+    and multiplied per Arrow batch), the inverted lists are just a
     ``cluster`` column to shuffle/join on, and per-query work is bounded by
     the probed lists — never the full corpus. Default centroids are seeded
     deterministically (vec_id 1..K) so the DuckDB oracle replicates the
@@ -499,44 +579,17 @@ def sim_ivf(
     """
     base = _quantized(spark, sf_dir).cache()
     cents = centroids if centroids is not None else _seed_centroids(base)
-
-    # Assignment: argmax_c sim(v, c), deterministic tie-break on the lower
-    # centroid id via an injective integer ordering key (k < ORD_MULT).
-    csim = vectors.sim_e6(
-        vectors.dot(F.col("q"), F.col("cq")), F.col("n2"), F.col("cn2")
+    # Assignment: each vector's nearest centroid; probes: each query's
+    # NPROBE nearest — both the (sim desc, id asc) ranking of _nearest.
+    assign = _nearest(base, cents, 1, "cos").select(
+        "vec_id", F.col("centroid_id").alias("cluster")
     )
-    scored = base.join(F.broadcast(cents), F.lit(True)).select(
-        "vec_id",
-        "centroid_id",
-        (csim * F.lit(ORD_MULT) - F.col("centroid_id")).alias("ord"),
-    )
-    assign = scored.groupBy("vec_id").agg(
-        F.max_by("centroid_id", "ord").alias("cluster")
-    )
-
-    # Probes: each query ranks centroids and keeps the NPROBE nearest.
     queries = base.where(F.col("vec_id") % QUERY_STRIDE == 0).select(
         F.col("vec_id").alias("query_id"),
         F.col("q").alias("qq"),
         F.col("n2").alias("qn2"),
     )
-    qsim = vectors.sim_e6(
-        vectors.dot(F.col("qq"), F.col("cq")), F.col("qn2"), F.col("cn2")
-    )
-    pw = Window.partitionBy("query_id").orderBy(F.desc("ord"))
-    probes = (
-        queries.join(F.broadcast(cents), F.lit(True))
-        .select(
-            "query_id",
-            "qq",
-            "qn2",
-            "centroid_id",
-            (qsim * F.lit(ORD_MULT) - F.col("centroid_id")).alias("ord"),
-        )
-        .withColumn("pr", F.row_number().over(pw))
-        .where(F.col("pr") <= NPROBE)
-        .select("query_id", "qq", "qn2", F.col("centroid_id").alias("cluster"))
-    )
+    probes = _probe(queries, cents)
 
     # Exact search inside the probed lists only.
     members = assign.join(base, "vec_id")
@@ -711,11 +764,10 @@ def _verify_pairs_arrow(
     Arrow transfer back.
 
     Bit-exactness vs the expression form (and the DuckDB oracle): the
-    dot is exact int64 arithmetic; the cosine then performs the
-    identical IEEE-754 double sequence (d*1e6, na*nb, sqrt, divide,
-    floor) on identical operands, so results are bit-equal — the
+    dot is exact int64 arithmetic and the cosine is :func:`_cos_e6`,
+    the JVM form's IEEE-754 sequence, so results are bit-equal — the
     driver's sf0.01 hash-gate checks exactly this. Zero-norm vectors
-    yield 0/0 = NaN, dropped by the threshold like the JVM form."""
+    score 0, like the JVM form."""
     import numpy as np
 
     if min_e6 is None:
@@ -725,17 +777,11 @@ def _verify_pairs_arrow(
             continue
         A = np.vstack(pdf["qa"].to_numpy()).astype(np.int64, copy=False)
         B = np.vstack(pdf["qb"].to_numpy()).astype(np.int64, copy=False)
-        d = np.einsum("ij,ij->i", A, B)
-        with np.errstate(invalid="ignore", divide="ignore"):
-            s = np.floor(
-                d.astype(np.float64)
-                * 1_000_000.0
-                / np.sqrt(
-                    pdf["na"].to_numpy().astype(np.float64)
-                    * pdf["nb"].to_numpy().astype(np.float64)
-                )
-            )
-        s = np.where(np.isfinite(s), s, 0.0)
+        s = _cos_e6(
+            np.einsum("ij,ij->i", A, B),
+            pdf["na"].to_numpy().astype(np.float64)
+            * pdf["nb"].to_numpy().astype(np.float64),
+        )
         keep = s >= min_e6
         out = {c: pdf[c].to_numpy()[keep] for c in ("vec_a", "vec_b", *extra)}
         out["sim_e6"] = s[keep].astype(np.int64)
@@ -779,10 +825,11 @@ def dedup_embedding_ann(
     (:func:`scaled_ann_params`) are recall-pinned ≥ 0.95 in
     tests/test_similarity.py.
 
-    100 TB shape: the k-centroid table is broadcast (tiny by
-    construction), assignment is one narrow pass + a per-vector top-k
-    over k rows materialized once (localCheckpoint — it feeds both
-    sides of the candidate self-join), the candidate join shuffles on
+    100 TB shape: the k-centroid table is collected (tiny by
+    construction), assignment is one narrow :func:`_nearest` pass (a
+    per-vector top-k over k centroids) materialized once
+    (localCheckpoint — it feeds both sides of the candidate
+    self-join), the candidate join shuffles on
     list id, and verify touches only co-listed pairs, batch-vectorized
     through one Arrow stage that also applies the threshold (so only
     survivors transfer back). k scales with corpus size (k ≈ n /
@@ -799,128 +846,6 @@ def dedup_embedding_ann(
     return _ann_verified_pairs(spark, sf_dir, k, assign, EMBED_DUP_MIN_E6)
 
 
-# Dispatch point between the two bit-identical assignment paths (VERDICT
-# r4 item 4). The expression path materializes n×k ROWS through the
-# row-oriented interpreter (linear in k: 0.62 / 0.47 / 0.43 / 1.96 s at
-# k=16/32/64/256, n=2k, median-of-3, local[32]); the Arrow path is one
-# numpy int64 matmul per batch and k-insensitive (0.41-0.48 s across the
-# same sweep, and 0.43-0.47 s even at n=20k where the expression path
-# hits 2.0 s by k=256). On this host the crossover sits BELOW the
-# smallest configured k: Arrow wins or ties from k=16 up, standalone AND
-# end-to-end (dedup_embedding_ann k=16: 7.7 s expr-assign vs 5.8 s
-# arrow-assign; scaled k=25: 6.7 vs 5.5 — the r3 note "Arrow 2× slower"
-# measured a different formulation that shipped both full vectors per
-# PAIR; assignment ships each vector once and multiplies against the
-# broadcast-sized centroid matrix). Threshold kept at the smallest
-# deployed k so every current config rides the matmul; the expression
-# path remains the k<16 fallback and the oracle-documenting twin.
-# Measurements in SCALE.md "Centroid-assignment crossover".
-ARROW_ASSIGN_MIN_K = 16
-
-
-def _assign_lists_arrow(
-    base: DataFrame, cents: DataFrame, assign: int
-) -> DataFrame:
-    """Arrow twin of the expression-path multi-assignment: one numpy
-    int64 matmul per batch against the collected k×DIM centroid matrix
-    (k rows — steering-sized, the same table the expression path
-    broadcasts), then a per-row top-``assign`` argsort.
-
-    Bit-exactness contract (same as ``_verify_pairs_arrow``): the dot is
-    exact int64; the cosine performs the identical IEEE-754 sequence
-    (d*1e6, na*nb, sqrt, divide, floor) on identical operands, with
-    non-finite (zero-norm) cosines mapped to 0 like ``vectors.sim_e6``;
-    the ranking key ``sim_e6 * 2^21 - centroid_id`` is exact in float64
-    (|sim_e6| ≤ 1e6 so the product ≤ 2.1e12 < 2^53) and strictly unique
-    per row, reproducing row_number's (desc csim, asc centroid_id) order
-    deterministically. The driver's oracle hash-gate on
-    sim_ivf_trained / dedup_embedding_ann checks the equivalence."""
-    import numpy as np
-
-    rows = cents.select("centroid_id", "cq", "cn2").collect()  # k rows
-    cid = np.array([r["centroid_id"] for r in rows], dtype=np.int64)
-    if cid.size == 0:
-        # empty quantizer (empty corpus): no lists to assign — same empty
-        # (vec_id, centroid_id) frame the expression path produces
-        return base.select(
-            "vec_id", F.col("vec_id").alias("centroid_id")
-        ).where(F.lit(False))
-    if np.abs(cid).max() >= 2**21:
-        raise ValueError("centroid ids must be in [0, 2^21) for the exact key")
-    C = np.array([r["cq"] for r in rows], dtype=np.int64)  # (k, DIM)
-    cn2 = np.array([r["cn2"] for r in rows], dtype=np.float64)
-    take = min(int(assign), cid.size)
-
-    def body(batches):
-        import numpy as np
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            Q = np.vstack(pdf["q"].to_numpy()).astype(np.int64, copy=False)
-            d = Q @ C.T  # exact int64, (n, k)
-            n2 = pdf["n2"].to_numpy().astype(np.float64)
-            with np.errstate(invalid="ignore", divide="ignore"):
-                s = np.floor(
-                    d.astype(np.float64)
-                    * 1_000_000.0
-                    / np.sqrt(n2[:, None] * cn2[None, :])
-                )
-            s = np.where(np.isfinite(s), s, 0.0)
-            key = s * (2.0**21) - cid[None, :].astype(np.float64)
-            idx = np.argsort(-key, axis=1, kind="stable")[:, :take]
-            yield pd.DataFrame(
-                {
-                    "vec_id": np.repeat(
-                        pdf["vec_id"].to_numpy(), idx.shape[1]
-                    ),
-                    "centroid_id": cid[idx].reshape(-1),
-                }
-            )
-
-    return base.select("vec_id", "q", "n2").mapInPandas(
-        body, schema="vec_id long, centroid_id long"
-    )
-
-
-def _assign_lists(
-    base: DataFrame, cents: DataFrame, assign: int, k: int | None = None
-) -> DataFrame:
-    """(vec_id, centroid_id) multi-assignment: each vector's ``assign``
-    nearest centroids by exact integer cosine, deterministic tie-break.
-
-    Two bit-identical physical strategies, picked per-k (the measured
-    crossover is documented at ``ARROW_ASSIGN_MIN_K``): small k stays on
-    the JVM expression path (broadcast centroid table, n×k rows through
-    a row_number window); large k goes through ``_assign_lists_arrow``
-    (one numpy matmul per batch — flat-IVF assignment is O(n·k·DIM)
-    either way, but the matmul does it at memory bandwidth instead of
-    interpreted-expression rates). ``k`` is a dispatch hint; when the
-    caller doesn't know it (index reload paths) the k-row centroid
-    table is counted — steering-sized."""
-    if k is None:
-        k = cents.count()
-    if k >= ARROW_ASSIGN_MIN_K:
-        return _assign_lists_arrow(base, cents, assign)
-    csim = vectors.sim_e6(
-        vectors.dot(F.col("q"), F.col("cq")), F.col("n2"), F.col("cn2")
-    )
-    return (
-        base.join(F.broadcast(cents), F.lit(True))
-        .select("vec_id", "centroid_id", csim.alias("csim"))
-        .withColumn(
-            "rk",
-            F.row_number().over(
-                Window.partitionBy("vec_id").orderBy(
-                    F.desc("csim"), F.asc("centroid_id")
-                )
-            ),
-        )
-        .where(F.col("rk") <= assign)
-        .select("vec_id", "centroid_id")
-    )
-
-
 def _ann_verified_pairs(
     spark: SparkSession, sf_dir: str, k: int, assign: int, min_e6: int
 ) -> DataFrame:
@@ -933,10 +858,11 @@ def _ann_verified_pairs(
     base = _quantized(spark, sf_dir)
     cents = kmeans_centroids(spark, sf_dir, k=k)
     ranked = (
-        _assign_lists(base, cents, assign, k=k)
+        _nearest(base, cents, assign, "cos")
+        .select("vec_id", "centroid_id")
         # n×assign tiny rows, but referenced on BOTH sides of the
         # candidate self-join — materialize once instead of re-running
-        # the cross-join + window per side.
+        # the assignment per side.
         .localCheckpoint()
     )
     cand = (
@@ -1042,7 +968,7 @@ def dedup_semantic(
     Output: (vec_id, cluster_id, cent_sim_e6, keep) for every vector.
 
     100 TB shape: training + assignment are the shared IVF machinery
-    (broadcast centroids, one narrow pass, per-k Arrow/matmul dispatch);
+    (collected centroid table, one narrow :func:`_nearest` pass);
     the within-cluster candidate join shuffles on cluster_id, and the
     pair verify rides ``_verify_pairs_arrow`` (batch matmul, threshold
     fused). k scales as n / TARGET_LIST_SIZE (:func:`scaled_ann_params`),
@@ -1056,7 +982,7 @@ def dedup_semantic(
     cents = kmeans_centroids(spark, sf_dir, k=k)
     # Feeds both sides of the within-cluster self-join, the loser
     # enrichment, and the output projection — materialize once.
-    withcs = _semantic_withcs(base, cents, k).localCheckpoint()
+    withcs = _semantic_withcs(base, cents).localCheckpoint()
     cand = (
         withcs.select(
             F.col("vec_id").alias("vec_a"),
@@ -1085,25 +1011,22 @@ def dedup_semantic(
     )
 
 
-def _semantic_withcs(base: DataFrame, cents: DataFrame, k: int) -> DataFrame:
-    """Single-assignment with the assigned centroid's similarity kept:
-    reuse the dispatched assignment path for the argmax, then one k-row
-    broadcast join recomputes the single surviving csim exactly.
+def _semantic_withcs(base: DataFrame, cents: DataFrame) -> DataFrame:
+    """Single-assignment with the winning centroid's similarity kept (the
+    ``score`` of :func:`_nearest`, which also carries the vector along).
     Returns (vec_id, cluster_id, cent_sim_e6, q, n2) — shared by the
     batch entry and the incremental index (round 11)."""
-    csim = vectors.sim_e6(
-        vectors.dot(F.col("q"), F.col("cq")), F.col("n2"), F.col("cn2")
-    )
-    a1 = _assign_lists(base, cents, 1, k=k).withColumnRenamed(
-        "centroid_id", "cluster_id"
-    )
-    return (
-        a1.join(base, "vec_id")
-        .join(
-            F.broadcast(cents.withColumnRenamed("centroid_id", "cluster_id")),
-            "cluster_id",
-        )
-        .select("vec_id", "cluster_id", csim.alias("cent_sim_e6"), "q", "n2")
+    return _nearest(
+        base.withColumn("vq", F.col("q")).withColumn("vn2", F.col("n2")),
+        cents,
+        1,
+        "cos",
+    ).select(
+        "vec_id",
+        F.col("centroid_id").alias("cluster_id"),
+        F.col("score").alias("cent_sim_e6"),
+        F.col("vq").alias("q"),
+        F.col("vn2").alias("n2"),
     )
 
 
@@ -1231,7 +1154,7 @@ def semdedup_index_init(
     snapshots.meta_row(spark, "k long", (int(k),)).write.mode(
         "overwrite"
     ).parquet(f"{index_path}/meta")
-    withcs = _semantic_withcs(base, cents, k).localCheckpoint()
+    withcs = _semantic_withcs(base, cents).localCheckpoint()
     cand = (
         withcs.select(F.col("vec_id").alias("vec_a"), "cluster_id")
         .join(
@@ -1269,7 +1192,6 @@ def semdedup_index_update(
     with snapshots.txn(index_path, "sem_v") as t:
         live_dir = t.live
         cents = snapshots.read(spark, f"{index_path}/centroids")
-        k = int(snapshots.read(spark, f"{index_path}/meta").first()["k"])
         old_vecs = snapshots.read(spark, f"{live_dir}/vectors")
         old_dom = snapshots.read(spark, f"{live_dir}/dominated")
 
@@ -1278,13 +1200,14 @@ def semdedup_index_update(
             .join(old_vecs.select("vec_id"), "vec_id", "left_anti")
             .localCheckpoint()
         )
-        new_cs = _semantic_withcs(new_base, cents, k).localCheckpoint()
+        new_cs = _semantic_withcs(new_base, cents).localCheckpoint()
 
         def _dominated() -> DataFrame:
             newly_dom = _semdedup_newly_dominated(
                 spark, new_cs, old_vecs, old_dom
             ).localCheckpoint()  # materialize BEFORE mutating the index
-            # checkpointed — the sized write's count is free.
+            # The sized write still counts the checkpoint first: one
+            # more SQL execution (two jobs), not free.
             snapshots.write_sized(
                 newly_dom.select("vec_id"), f"{t.dir}/dominated"
             )
@@ -1679,7 +1602,7 @@ def sim_knn_graph(
     vectors whose candidate lists are shorter than DEGREE emit fewer
     rows, deterministic tie-break (sim desc, nbr_id asc).
 
-    100 TB shape: reuses :func:`_ann_verified_pairs` (broadcast
+    100 TB shape: reuses :func:`_ann_verified_pairs` (collected
     centroids, list-keyed candidate shuffle, one fused Arrow verify with
     NO threshold — ranking needs every candidate sim), mirrors the
     half-pairs, then one per-vector window bounded by the candidate
@@ -1797,13 +1720,13 @@ def ann_index_init(
         # the sizing count doesn't re-run the assignment.
         snapshots.write_sized(base, f"{t.dir}/vectors")
         snapshots.write_sized(
-            _assign_lists(base, cents, ASSIGN_LISTS, k=k).localCheckpoint(),
+            _nearest(base, cents, ASSIGN_LISTS, "cos")
+            .select("vec_id", "centroid_id")
+            .localCheckpoint(),
             f"{t.dir}/assign",
         )
-        # Persist k as index metadata (round 7, VERDICT r6 item 6 /
-        # ADVICE r5): the update path dispatches assignment strategy on
-        # k, and without metadata it re-counted the centroid frame on
-        # every batch.
+        # k as index metadata: a record of the quantizer size for
+        # readers of the index; the update path does not read it.
         snapshots.meta_row(spark, "k long", (int(k),)).write.mode(
             "overwrite"
         ).parquet(f"{index_path}/meta")
@@ -1841,19 +1764,17 @@ def ann_index_update(
         cents = snapshots.read(spark, f"{index_path}/centroids")
         old_vecs = snapshots.read(spark, f"{live_dir}/vectors")
         old_assign = snapshots.read(spark, f"{live_dir}/assign")
-        # k from the index metadata ann_index_init persisted (round 7): the
-        # one-row meta read replaces a per-batch count job over the centroid
-        # table as the strategy-dispatch hint.
-        k = int(snapshots.read(spark, f"{index_path}/meta").first()["k"])
 
         new_base = (
             _quantize_vectors(new_vectors)
             .join(old_vecs.select("vec_id"), "vec_id", "left_anti")
             .localCheckpoint()
         )
-        new_assign = _assign_lists(
-            new_base, cents, ASSIGN_LISTS, k=k
-        ).localCheckpoint()
+        new_assign = (
+            _nearest(new_base, cents, ASSIGN_LISTS, "cos")
+            .select("vec_id", "centroid_id")
+            .localCheckpoint()
+        )
 
         all_assign = old_assign.unionByName(new_assign)
         cand = (
@@ -1890,7 +1811,8 @@ def ann_index_update(
         # once for both tables (functions/snapshots.py), so a crash at any
         # point — including between the two writes below — leaves the
         # previous state fully intact and the retry redoes the whole batch.
-        # Both frames are checkpointed above — sized writes are free.
+        # Both frames are checkpointed above, but each sized write still
+        # counts its frame first (one more SQL execution each).
         snapshots.write_sized(new_assign, f"{t.dir}/assign")
         snapshots.write_sized(new_base, f"{t.dir}/vectors")
         t.carry("assign", "vectors")
@@ -1958,24 +1880,46 @@ PQ_SHORTLIST = 100  # ADC candidates per query fed to the exact re-rank
 
 
 def _pq_subvectors(base: DataFrame) -> DataFrame:
-    """Long-form (vec_id, m, sq, sn2): each quantized vector split into
-    PQ_M contiguous sub-vectors — one narrow posexplode, no shuffle."""
+    """Long-form (…, m, sq, sn2): each quantized vector ``q`` split into
+    PQ_M contiguous sub-vectors — one narrow posexplode, no shuffle;
+    every column other than ``q`` and ``n2`` is kept."""
     slices = F.array(
         *[F.slice(F.col("q"), 1 + PQ_SUBDIM * m, PQ_SUBDIM) for m in range(PQ_M)]
     )
+    ids = [c for c in base.columns if c not in ("q", "n2")]
     return base.select(
-        "vec_id", F.posexplode(slices).alias("m", "sq")
+        *ids, F.posexplode(slices).alias("m", "sq")
     ).withColumn("sn2", vectors.norm2(F.col("sq")))
+
+
+def _pq_rows(sub: DataFrame) -> DataFrame:
+    """``_pq_subvectors`` rows with the sub-vector as the ``q`` / ``n2``
+    that :func:`_nearest` and :func:`_seed_centroids` read."""
+    return sub.withColumnRenamed("sq", "q").withColumnRenamed("sn2", "n2")
 
 
 def _pq_seed_codebook(sub: DataFrame) -> DataFrame:
     """Deterministic seed codebook: vec_id 1..PQ_K's sub-vectors, per
-    subspace — the PQ twin of ``_seed_centroids``."""
-    return sub.where((F.col("vec_id") >= 1) & (F.col("vec_id") <= PQ_K)).select(
-        "m",
-        F.col("vec_id").alias("code_id"),
-        F.col("sq").alias("cq"),
-        F.col("sn2").alias("cn2"),
+    subspace — ``_seed_centroids`` keyed on ``m``."""
+    return _seed_centroids(_pq_rows(sub), PQ_K, ("m",)).withColumnRenamed(
+        "centroid_id", "code_id"
+    )
+
+
+def _pq_encode(sub: DataFrame, cb: DataFrame) -> DataFrame:
+    """(…, m, code_id): each sub-vector's nearest code of its subspace —
+    squared L2 with (d² asc, code_id asc) ties, :func:`_nearest` keyed
+    on ``m``; every column of ``sub`` other than the sub-vector is kept."""
+    return (
+        _nearest(
+            _pq_rows(sub),
+            cb.withColumnRenamed("code_id", "centroid_id"),
+            1,
+            "l2",
+            ("m",),
+        )
+        .withColumnRenamed("centroid_id", "code_id")
+        .drop("score")
     )
 
 
@@ -1994,12 +1938,13 @@ def sim_pq(
     - **Encode** (index build): split each vector into PQ_M contiguous
       sub-vectors; per subspace, assign the nearest codebook entry by
       EXACT integer squared-L2 ``d² = |x|² − 2x·c + |c|²`` on the 1/1024
-      quantization grid, argmin through the injective key
-      ``d²·PQ_K + code_id`` (deterministic ties). Codebooks are seeded
-      from vec_id 1..PQ_K's sub-vectors — the same deterministic seeding
-      contract as ``sim_ivf`` (swap in per-subspace k-means exactly as
-      ``sim_ivf_trained`` does for trained codebooks). One broadcast of
-      the PQ_M·PQ_K codebook, one narrow pass over the corpus.
+      quantization grid, argmin with (d², code_id) ties — the IVF
+      nearest-centroid step per subspace (:func:`_nearest` keyed on
+      ``m``). Codebooks are seeded from vec_id 1..PQ_K's sub-vectors —
+      the same deterministic seeding contract as ``sim_ivf`` (swap in
+      per-subspace k-means exactly as ``sim_ivf_trained`` does for
+      trained codebooks). The PQ_M·PQ_K codebook is collected once; one
+      narrow pass over the corpus.
     - **ADC shortlist** (asymmetric distance computation): each query
       precomputes its PQ_M×PQ_K distance table against the codebook
       (tiny), then the approximate distance to EVERY corpus vector is a
@@ -2025,13 +1970,7 @@ def sim_pq(
     d2 = (
         F.col("sn2") - 2 * vectors.dot(F.col("sq"), F.col("cq")) + F.col("cn2")
     ).cast("long")
-    enc = (
-        sub.join(F.broadcast(cb), "m")
-        .groupBy("vec_id", "m")
-        .agg(
-            F.min_by("code_id", d2 * PQ_K + F.col("code_id")).alias("code_id")
-        )
-    )
+    enc = _pq_encode(sub, cb)
     dtab = (
         sub.where(F.col("vec_id") % QUERY_STRIDE == 0)
         .join(F.broadcast(cb), "m")
@@ -2084,142 +2023,23 @@ def sim_pq(
 PQ_TRAIN_ITERS = 2
 
 
-def _pq_train_driver(spark: SparkSession, tbl, iters: int) -> DataFrame:
-    """Driver numpy twin of the :func:`pq_train_codebooks` loop over the
-    pulled (≤ KM_DRIVER_MAX rows) quantized table — the identical
-    per-round integer computation per subspace:
-
-    - E-step: ``d2 = sn2 − 2·(S @ Cᵀ) + cn2`` in exact int64 and the
-      injective ranking key ``d2·PQ_K + code_id`` (argmin ≡ min_by —
-      two keys only collide on identical (d2, code)).
-    - M-step: the exact-integer rounded mean
-      ``(2s + c − (2s + c) mod 2c) // 2c`` per (code, pos) — numpy ``%``
-      is the same nonnegative-remainder pmod Spark uses; empty codes
-      keep their previous entry; cn2 = Σm².
-
-    Both steps are order-insensitive integer ops, so driver and
-    distributed runs agree bit-for-bit (pytest-pinned)."""
-    import numpy as np
-
-    ids = np.array(tbl.column("vec_id").to_pylist(), dtype=np.int64)
-    Q = np.array(tbl.column("q").to_pylist(), dtype=np.int64)
-    seed_mask = (ids >= 1) & (ids <= PQ_K)
-    order = np.argsort(ids[seed_mask], kind="stable")
-    cid = ids[seed_mask][order]
-    out = []
-    if cid.size:
-        for m in range(PQ_M):
-            S = Q[:, m * PQ_SUBDIM : (m + 1) * PQ_SUBDIM]
-            sn2 = np.einsum("ij,ij->i", S, S)
-            C = S[seed_mask][order].copy()
-            cn2 = np.einsum("ij,ij->i", C, C)
-            for _ in range(iters):
-                d2 = sn2[:, None] - 2 * (S @ C.T) + cn2[None, :]
-                j = np.argmin(d2 * PQ_K + cid[None, :], axis=1)
-                assigned = cid[j]
-                for ci in range(cid.size):
-                    mask = assigned == cid[ci]
-                    c = int(mask.sum())
-                    if c == 0:
-                        continue  # empty code keeps its previous entry
-                    num = 2 * S[mask].sum(axis=0, dtype=np.int64) + c
-                    C[ci] = (num - (num % (2 * c))) // (2 * c)
-                cn2 = np.einsum("ij,ij->i", C, C)
-            out.extend(
-                (m, int(cid[i]), [int(x) for x in C[i]], int(cn2[i]))
-                for i in range(cid.size)
-            )
-    return local_rows(
-        spark, out, "m integer, code_id long, cq array<long>, cn2 long"
-    )
-
-
 def pq_train_codebooks(
     spark: SparkSession, sf_dir: str, iters: int = PQ_TRAIN_ITERS
 ) -> DataFrame:
     """Per-subspace k-means codebook training — ALL PQ_M subspaces in ONE
-    Lloyd's loop by keying every stage on (m, code): assignment is an
-    L2-argmin against the broadcast (PQ_M·PQ_K)-row codebook, the
-    re-estimation is one (m, code, pos) partial-agg shuffle with the same
+    Lloyd's loop (:func:`_train_centroids` keyed on ``m``): each round
+    assigns every sub-vector to the squared-L2 nearest code of its
+    subspace ((d², code_id) ties) and re-estimates with the same
     exact-integer rounded mean as ``kmeans_centroids``
-    (``floor(s/c + ½) = (2s+c − pmod(2s+c, 2c)) / (2c)``), and empty
-    codes keep their previous entry. Deterministic end to end (seeded
-    init, injective argmin keys, integer means) — the DuckDB oracle
-    unrolls these iterations and reproduces the trained codebook
-    bit-for-bit. Per-iteration driver traffic: none (localCheckpoint
-    truncates lineage; the codebook never leaves the cluster)."""
+    (``floor(s/c + ½) = (2s+c − pmod(2s+c, 2c)) / (2c)``); empty codes
+    keep their previous entry. Deterministic end to end (seeded init,
+    injective ranking keys, integer means) — the DuckDB oracle unrolls
+    these iterations and reproduces the trained codebook bit-for-bit.
+    Per-round driver traffic is the (PQ_M·PQ_K)-row codebook."""
     base = _quantized(spark, sf_dir).cache()
-    n_vecs, tbl = localrel.pull(base, KM_DRIVER_MAX)
-    if tbl is not None:
-        # Size-dispatched driver twin (round 12, the _train_centroids
-        # precedent): PQ training is EXACT integer arithmetic end to end
-        # (int64 L2 distances, injective min_by key, exact rounded
-        # means), so the numpy twin reproduces the distributed loop
-        # bit-for-bit (pytest-pinned) while skipping its ~3 shuffles ×
-        # iters of scheduler rounds.  Above the threshold the loop below
-        # takes over unchanged.
-        return _pq_train_driver(spark, tbl, iters)
-    sub = _pq_subvectors(base).localCheckpoint()
-    cb = _pq_seed_codebook(sub).localCheckpoint()
-    d2 = (
-        F.col("sn2") - 2 * vectors.dot(F.col("sq"), F.col("cq")) + F.col("cn2")
-    ).cast("long")
-    saved_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    loop_parts = max(4, min(int(saved_parts), n_vecs // 50_000 + 1))
-    spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    try:
-        for _ in range(iters):
-            assign = (
-                sub.join(F.broadcast(cb), "m")
-                .groupBy("vec_id", "m")
-                .agg(
-                    F.min_by("code_id", d2 * PQ_K + F.col("code_id")).alias(
-                        "code_id"
-                    )
-                )
-                .join(sub.select("vec_id", "m", "sq"), ["vec_id", "m"])
-            )
-            means = (
-                assign.select("m", "code_id", F.posexplode("sq").alias("pos", "val"))
-                .groupBy("m", "code_id", "pos")
-                .agg(
-                    F.sum("val").cast("long").alias("s"),
-                    F.count(F.lit(1)).alias("c"),
-                )
-                .select(
-                    "m",
-                    "code_id",
-                    "pos",
-                    F.expr("div(2*s + c - pmod(2*s + c, 2*c), 2*c)").alias("v"),
-                )
-                .groupBy("m", "code_id")
-                .agg(F.array_sort(F.collect_list(F.struct("pos", "v"))).alias("pv"))
-                .select(
-                    "m",
-                    "code_id",
-                    F.transform("pv", lambda s: s["v"]).alias("cq"),
-                )
-                .withColumn("cn2", vectors.norm2(F.col("cq")))
-            )
-            cb = (
-                cb.select(
-                    "m",
-                    "code_id",
-                    F.col("cq").alias("ocq"),
-                    F.col("cn2").alias("ocn2"),
-                )
-                .join(means, ["m", "code_id"], "left")
-                .select(
-                    "m",
-                    "code_id",
-                    F.coalesce("cq", "ocq").alias("cq"),
-                    F.coalesce("cn2", "ocn2").alias("cn2"),
-                )
-                .localCheckpoint()
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved_parts)
-    return cb
+    return _train_centroids(
+        spark, base, PQ_K, iters, "l2", ("m",)
+    ).withColumnRenamed("centroid_id", "code_id")
 
 
 def sim_pq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2377,7 +2197,7 @@ def sim_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pipeline (all exact integer arithmetic, reproduced bit-for-bit by
     the oracle):
     1. coarse assignment: exact-L2 argmin against the K_CENTROIDS seeded
-       centroids (injective ``d²·K + id`` tie-break);
+       centroids ((d², id) ties, :func:`_nearest`);
     2. residual encode: residual sub-vectors argmin'd against the
        PQ_M×PQ_K seed codebook (seeds = vec_id 1..PQ_K's residual
        sub-vectors — the same deterministic seeding contract as sim_ivf
@@ -2409,71 +2229,41 @@ def sim_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     base = _quantized(spark, sf_dir).cache()
     cents = _seed_centroids(base)
-    d2c = (
-        F.col("n2") - 2 * vectors.dot(F.col("q"), F.col("cq")) + F.col("cn2")
-    ).cast("long")
-    assign = (
-        base.join(F.broadcast(cents), F.lit(True))
-        .groupBy("vec_id")
-        .agg(
-            F.min_by(
-                F.struct("centroid_id", "cq"),
-                d2c * K_CENTROIDS + F.col("centroid_id"),
-            ).alias("c")
+    # Corpus rows and query probes both take their residual against the
+    # centroid of their squared-L2 nearest (probed) list.
+    lists = F.broadcast(cents.withColumnRenamed("centroid_id", "cluster"))
+    res = (
+        _nearest(base.withColumn("v", F.col("q")), cents, 1, "l2")
+        .withColumnRenamed("centroid_id", "cluster")
+        .join(lists, "cluster")
+        .select(
+            "vec_id",
+            "cluster",
+            F.zip_with("v", "cq", lambda x, y: x - y).alias("q"),
         )
-    )
-    res = assign.join(base, "vec_id").select(
-        "vec_id",
-        F.col("c.centroid_id").alias("cluster"),
-        F.zip_with("q", F.col("c.cq"), lambda x, y: x - y).alias("q"),
     )
     sub = _pq_subvectors(res)
     cb = _pq_seed_codebook(sub)
     d2 = (
         F.col("sn2") - 2 * vectors.dot(F.col("sq"), F.col("cq")) + F.col("cn2")
     ).cast("long")
-    enc = (
-        sub.join(F.broadcast(cb), "m")
-        .groupBy("vec_id", "m")
-        .agg(F.min_by("code_id", d2 * PQ_K + F.col("code_id")).alias("code_id"))
-        .join(res.select("vec_id", "cluster"), "vec_id")
-    )
+    enc = _pq_encode(sub, cb)
 
     queries = base.where(F.col("vec_id") % QUERY_STRIDE == 0).select(
         F.col("vec_id").alias("query_id"),
         F.col("q").alias("qq"),
         F.col("n2").alias("qn2"),
     )
-    qd2c = (
-        F.col("qn2") - 2 * vectors.dot(F.col("qq"), F.col("cq")) + F.col("cn2")
-    ).cast("long")
-    pw = Window.partitionBy("query_id").orderBy(
-        F.asc("ordk")
-    )
     probes = (
-        queries.join(F.broadcast(cents), F.lit(True))
-        .select(
-            "query_id",
-            "qq",
-            F.col("centroid_id").alias("cluster"),
-            "cq",
-            (qd2c * K_CENTROIDS + F.col("centroid_id")).alias("ordk"),
-        )
-        .withColumn("pr", F.row_number().over(pw))
-        .where(F.col("pr") <= NPROBE)
+        _probe(queries, cents, "l2")
+        .join(lists, "cluster")
         .select(
             "query_id",
             "cluster",
-            F.zip_with("qq", F.col("cq"), lambda x, y: x - y).alias("q"),
+            F.zip_with("qq", "cq", lambda x, y: x - y).alias("q"),
         )
     )
-    qslices = F.array(
-        *[F.slice(F.col("q"), 1 + PQ_SUBDIM * m, PQ_SUBDIM) for m in range(PQ_M)]
-    )
-    qsub = probes.select(
-        "query_id", "cluster", F.posexplode(qslices).alias("m", "sq")
-    ).withColumn("sn2", vectors.norm2(F.col("sq")))
-    dtab = qsub.join(F.broadcast(cb), "m").select(
+    dtab = _pq_subvectors(probes).join(F.broadcast(cb), "m").select(
         "query_id", "cluster", "m", "code_id", d2.alias("d2")
     )
     approx = (
@@ -2877,7 +2667,7 @@ def _mmr_ivf_pool(base: DataFrame) -> DataFrame:
     count grows ∝ n²/stride).  Recall vs the exact pool is measured and
     pinned in tests/test_similarity.py."""
     cents = _seed_centroids(base)
-    members = _assign_lists(base, cents, MMR_ASSIGN, k=K_CENTROIDS).select(
+    members = _nearest(base, cents, MMR_ASSIGN, "cos").select(
         "vec_id", F.col("centroid_id").alias("cluster")
     )
     queries = base.where(F.col("vec_id") % QUERY_STRIDE == 0).select(
@@ -2885,21 +2675,7 @@ def _mmr_ivf_pool(base: DataFrame) -> DataFrame:
         F.col("q").alias("qq"),
         F.col("n2").alias("qn2"),
     )
-    qsim = vectors.sim_e6(
-        vectors.dot(F.col("qq"), F.col("cq")), F.col("qn2"), F.col("cn2")
-    )
-    pw = Window.partitionBy("query_id").orderBy(F.desc("ord"))
-    probes = (
-        queries.join(F.broadcast(cents), F.lit(True))
-        .select(
-            "query_id",
-            "centroid_id",
-            (qsim * F.lit(ORD_MULT) - F.col("centroid_id")).alias("ord"),
-        )
-        .withColumn("pr", F.row_number().over(pw))
-        .where(F.col("pr") <= NPROBE)
-        .select("query_id", F.col("centroid_id").alias("cluster"))
-    )
+    probes = _probe(queries, cents).select("query_id", "cluster")
     # A (query, member) pair can co-list in several probed lists —
     # distinct BEFORE the vector join so the rel computation and the
     # rank see each candidate exactly once.

@@ -1145,17 +1145,15 @@ def stream_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     service runs in front of a vector store.  Per micro-batch,
     STATELESS end-to-end:
 
-    - **probe selection** without a window (windows are illegal on an
-      un-watermarked stream): the k-row centroid table is collected at
-      plan-build time (steering-sized — the same table every IVF path
-      broadcasts) and unrolled into a LITERAL array of (ord, cluster)
-      structs per query row; ``array_sort`` + ``slice`` picks the
-      NPROBE nearest.  The ordering key ``sim_e6·ORD_MULT − cid`` is
-      injective, so the array selection equals the batch row_number
-      probe exactly.
-    - **list search**: the exploded (query, cluster) probes join the
-      static inverted-list frame (corpus assignment, localCheckpointed
-      so per-batch re-planning reads computed blocks, never re-runs the
+    - **probe selection**: each query row's NPROBE nearest lists from
+      ``similarity._probe`` — the batch entry's own ``_nearest`` call.
+      It is a stateless ``mapInPandas`` map against the k-row centroid
+      table collected at plan-build time (steering-sized), so it runs
+      on the append stream unchanged and without a window (windows are
+      illegal on an un-watermarked stream).
+    - **list search**: the (query, cluster) probes join the static
+      inverted-list frame (corpus assignment, localCheckpointed so
+      per-batch re-planning reads computed blocks, never re-runs the
       assignment) and verify with the exact integer cosine.
 
     Candidates drain through the append file sink; the per-query top-k
@@ -1165,31 +1163,20 @@ def stream_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate pins that streaming arrival changes nothing."""
     from ..functions import vectors
     from .similarity import (
-        NPROBE,
-        ORD_MULT,
         QUERY_STRIDE,
         TOPK,
+        _nearest,
+        _probe,
         _quantized,
         _seed_centroids,
     )
 
     base = _quantized(spark, sf_dir).cache()
     cents = _seed_centroids(base)
-    crows = cents.collect()  # bounded: K_CENTROIDS rows (steering)
-
     # static inverted lists: corpus assignment under the frozen seeds
-    csim = vectors.sim_e6(
-        vectors.dot(F.col("q"), F.col("cq")), F.col("n2"), F.col("cn2")
-    )
     assign = (
-        base.join(F.broadcast(cents), F.lit(True))
-        .select(
-            "vec_id",
-            "centroid_id",
-            (csim * F.lit(ORD_MULT) - F.col("centroid_id")).alias("ord"),
-        )
-        .groupBy("vec_id")
-        .agg(F.max_by("centroid_id", "ord").alias("cluster"))
+        _nearest(base, cents, 1, "cos")
+        .select("vec_id", F.col("centroid_id").alias("cluster"))
         .join(base, "vec_id")
         .localCheckpoint()
     )
@@ -1203,40 +1190,12 @@ def stream_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("qn2", vectors.norm2(F.col("qq")))
     )
-    probes = F.array(
-        *[
-            F.struct(
-                (
-                    vectors.sim_e6(
-                        vectors.dot(
-                            F.col("qq"),
-                            F.array(*[F.lit(int(x)) for x in r["cq"]]),
-                        ),
-                        F.col("qn2"),
-                        F.lit(int(r["cn2"])),
-                    )
-                    * F.lit(ORD_MULT)
-                    - F.lit(int(r["centroid_id"]))
-                ).alias("ord"),
-                F.lit(int(r["centroid_id"])).alias("cluster"),
-            )
-            for r in crows
-        ]
-    )
-    qp = qstream.select(
-        "query_id",
-        "qq",
-        "qn2",
-        F.explode(
-            F.slice(F.reverse(F.array_sort(probes)), 1, NPROBE)
-        ).alias("p"),
-    ).select("query_id", "qq", "qn2", F.col("p.cluster").alias("cluster"))
-
     sim = vectors.sim_e6(
         vectors.dot(F.col("qq"), F.col("q")), F.col("qn2"), F.col("n2")
     )
     cand = (
-        qp.join(assign, "cluster")
+        _probe(qstream, cents)
+        .join(assign, "cluster")
         .where(F.col("vec_id") != F.col("query_id"))
         .select(
             "query_id",

@@ -17,6 +17,7 @@ from hypothesis import strategies as st
 from engineering_school_bigdata_project_f1_weather_spark.functions import intlog, localrel
 from engineering_school_bigdata_project_f1_weather_spark.functions.jobs import (
     leg,
+    loop_conf,
     run_overlapped,
 )
 from engineering_school_bigdata_project_f1_weather_spark.functions.localrel import (
@@ -186,6 +187,30 @@ def test_pull_is_one_job_after_the_count(spark):
     )
     assert n == n2 == tbl.num_rows == 800
     assert pull_jobs == count_jobs + 1
+
+
+def test_loop_conf_sizes_partitions_from_n_and_restores_on_error(spark):
+    """``loop_conf`` sets ``max(4, min(session, n // rows_per_part + 1))``
+    shuffle partitions (and AQE when asked) inside the block, and both
+    session values come back on exit — also when the block raises."""
+    parts, aqe = "spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled"
+    before = (spark.conf.get(parts), spark.conf.get(aqe))
+    session = int(before[0])
+    for n, want in [
+        (0, 4),  # the floor
+        (10 * 1_000 - 1, max(4, min(session, 10))),
+        (10**9, session),  # never above the session value
+    ]:
+        with loop_conf(spark, n, 1_000):
+            assert spark.conf.get(parts) == str(want), n
+            assert spark.conf.get(aqe) == before[1]
+        assert (spark.conf.get(parts), spark.conf.get(aqe)) == before
+    with pytest.raises(RuntimeError, match="inside the loop"):
+        with loop_conf(spark, 6_000, 1_000, aqe=False):
+            assert spark.conf.get(parts) == str(max(4, min(session, 7)))
+            assert spark.conf.get(aqe) == "false"
+            raise RuntimeError("inside the loop")
+    assert (spark.conf.get(parts), spark.conf.get(aqe)) == before
 
 
 # ------------------------------------------------- driver-twin parity

@@ -664,9 +664,7 @@ def test_semdedup_index_matches_frozen_batch_and_is_idempotent(
     cents = similarity._train_centroids(
         spark, similarity._quantize_vectors(first).cache()
     )
-    withcs = similarity._semantic_withcs(
-        base, cents, similarity.K_CENTROIDS
-    ).localCheckpoint()
+    withcs = similarity._semantic_withcs(base, cents).localCheckpoint()
     cand = (
         withcs.select(F.col("vec_id").alias("vec_a"), "cluster_id")
         .join(
@@ -791,3 +789,123 @@ def test_semdedup_index_compact_preserves_serving(spark, sf_dir, tmp_path):
     }
     total = vecs.count()
     assert len(after) == total  # every vector indexed across the 3 batches
+
+
+# ------------------------------------------------- _nearest contract
+def _nearest_reference(rows, cents, n, metric, key=()):
+    """The expression form ``_nearest`` replaced: a broadcast cross join
+    (an equi-join on ``key``) scored by ``vectors.sim_e6`` or the exact
+    squared L2, ranked by ``row_number`` over (sim desc, id asc) or
+    (d2 asc, id asc)."""
+    import pyspark.sql.functions as F
+    from pyspark.sql import Window
+
+    from engineering_school_bigdata_project_f1_weather_spark.functions import vectors
+
+    dot = vectors.dot(F.col("q"), F.col("cq"))
+    if metric == "cos":
+        score = vectors.sim_e6(dot, F.col("n2"), F.col("cn2"))
+        order = [F.desc("score"), F.asc("centroid_id")]
+    else:
+        score = (F.col("n2") - 2 * dot + F.col("cn2")).cast("long")
+        order = [F.asc("score"), F.asc("centroid_id")]
+    ids = ["vec_id", *key]
+    on = list(key) if key else F.lit(True)
+    w = Window.partitionBy(*ids).orderBy(*order)
+    return (
+        rows.join(F.broadcast(cents), on)
+        .select(*ids, "centroid_id", score.alias("score"))
+        .withColumn("rk", F.row_number().over(w))
+        .where(F.col("rk") <= n)
+        .drop("rk")
+    )
+
+
+def _argbest_reference(rows, cents, metric):
+    """The n=1 form ``_nearest`` replaced: ``max_by`` over the injective
+    key ``sim·ORD_MULT − id`` (cosine) or ``min_by`` over
+    ``d2·PQ_K + id`` (L2, ids below PQ_K)."""
+    import pyspark.sql.functions as F
+
+    from engineering_school_bigdata_project_f1_weather_spark.functions import vectors
+
+    dot = vectors.dot(F.col("q"), F.col("cq"))
+    scored = rows.join(F.broadcast(cents), F.lit(True))
+    if metric == "cos":
+        sim = vectors.sim_e6(dot, F.col("n2"), F.col("cn2"))
+        best = F.max_by(
+            "centroid_id", sim * F.lit(similarity.ORD_MULT) - F.col("centroid_id")
+        )
+    else:
+        d2 = (F.col("n2") - 2 * dot + F.col("cn2")).cast("long")
+        best = F.min_by("centroid_id", d2 * similarity.PQ_K + F.col("centroid_id"))
+    return scored.groupBy("vec_id").agg(best.alias("centroid_id"))
+
+
+def test_nearest_matches_the_expression_form(spark):
+    """``_nearest`` against the expression form it replaced, on rows
+    built to hit its edges: exact score ties for cosine (parallel
+    centroids) and L2 (equidistant centroids), a zero-norm row, n larger
+    than the table, an empty table, and a per-subspace ``key=("m",)``
+    table with a subspace that has no codes."""
+    import random
+
+    import pyspark.sql.functions as F
+
+    from engineering_school_bigdata_project_f1_weather_spark.functions import vectors
+
+    rng = random.Random(7)
+    vecs = [[3, 0, 0, 0], [0, 0, 0, 0], [1, 1, 0, 0], [-2, 1, 3, 0]]
+    vecs += [[rng.randint(-2, 2) for _ in range(4)] for _ in range(24)]
+    rows = spark.createDataFrame(
+        [(i + 1, f"r{i + 1}", v) for i, v in enumerate(vecs)],
+        "vec_id long, tag string, q array<long>",
+    ).withColumn("n2", vectors.norm2(F.col("q")))
+    cents = spark.createDataFrame(
+        [
+            (7, [1, 0, 0, 0]),
+            (3, [2, 0, 0, 0]),  # parallel to 7: every cosine ties
+            (5, [0, 1, 0, 0]),
+            (9, [0, -1, 0, 0]),  # 5, 7, 9 are equidistant from the origin
+            (11, [1, 1, 0, 0]),
+        ],
+        "centroid_id long, cq array<long>",
+    ).withColumn("cn2", vectors.norm2(F.col("cq")))
+
+    def got(df, cols):
+        return sorted(tuple(r) for r in df.select(*cols).collect())
+
+    cols = ["vec_id", "centroid_id", "score"]
+    for metric in ("cos", "l2"):
+        for n in (1, 2, 10):
+            out = similarity._nearest(rows, cents, n, metric)
+            assert out.columns == ["vec_id", "tag", "centroid_id", "score"]
+            want = got(_nearest_reference(rows, cents, n, metric), cols)
+            assert got(out, cols) == want, (metric, n)
+            assert len(want) == len(vecs) * min(n, 5)
+            tags = {f"r{i + 1}" for i in range(len(vecs))}
+            assert {r.tag for r in out.collect()} == tags
+        ids = ["vec_id", "centroid_id"]
+        best = got(similarity._nearest(rows, cents, 1, metric), ids)
+        assert best == got(_argbest_reference(rows, cents, metric), ids)
+    # the ties resolve to the lower id: row 1 is parallel to 3 and 7,
+    # the zero row 2 scores 0 against all (cosine) and 1 against 5/7/9
+    first = dict(got(similarity._nearest(rows, cents, 1, "cos"), ids))
+    assert first[1] == 3 and first[2] == 3
+    first = dict(got(similarity._nearest(rows, cents, 1, "l2"), ids))
+    assert first[2] == 5
+
+    assert similarity._nearest(rows, cents.where(F.lit(False)), 3, "cos").count() == 0
+
+    sub = rows.select(
+        "vec_id", F.explode(F.array(F.lit(0), F.lit(1), F.lit(2))).alias("m"), "q", "n2"
+    )
+    kcents = cents.select(F.explode(F.array(F.lit(0), F.lit(1))).alias("m"), "*").where(
+        (F.col("m") == 0) | (F.col("centroid_id") != 3)
+    )
+    kcols = ["vec_id", "m", "centroid_id", "score"]
+    for metric in ("cos", "l2"):
+        out = similarity._nearest(sub, kcents, 2, metric, ("m",))
+        want = got(_nearest_reference(sub, kcents, 2, metric, ("m",)), kcols)
+        assert got(out, kcols) == want, metric
+        assert {r[1] for r in want} == {0, 1}  # m=2 has no codes

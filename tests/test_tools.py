@@ -188,3 +188,36 @@ def test_tools_put_the_checkout_on_the_workers_pythonpath(monkeypatch, tmp_path)
     with pytest.raises(RuntimeError, match="no session"):
         dump_plans.main()
     assert seen[-1] == repo
+
+
+def test_dump_plans_mask_keeps_only_the_plan():
+    """``dump_plans --mask`` replaces the tokens that differ between two
+    runs of one plan (expression, lambda-variable, plan and RDD ids,
+    UUIDs, application ids, temp paths) and keeps everything else."""
+    sys.path.insert(0, TOOLS)
+    from dump_plans import mask
+
+    def plan(n, uuid, app):
+        return (
+            f"+- Exchange hashpartitioning(vec_id#{n}L, 4), [plan_id={n + 7}]\n"
+            f"   +- Project [transform(q#{n + 1}, lambdafunction(lambda x_{n}#{n + 2}L, "
+            f"lambda x_{n}#{n + 2}L, false)) AS cq#{n + 3}]\n"
+            f"      +- Scan ExistingRDD[vec_id#{n}L] MapPartitionsRDD[{n}] rdd_{n}_0\n"
+            f"         +- Scan parquet [Location: file:/tmp/spark_drain_{app}_{uuid}/part-0]\n"
+            f"            +- {app} id={uuid} keep=vec_id#{n}L sim_v0 2097152\n"
+        )
+
+    a = plan(12, "0f8e2c1a-1b2c-4d5e-8f90-a1b2c3d4e5f6", "local-1760900000000")
+    b = plan(345, "9a8b7c6d-5e4f-4a3b-9c2d-1e0f9a8b7c6d", "local-1760911111111")
+    assert a != b
+    assert mask(a, "/tmp") == mask(b, "/tmp")
+    m = mask(a, "/tmp")
+    assert "vec_id#<id>L" in m and "[plan_id=<id>]" in m
+    assert "lambda x_<id>#<id>L" in m and "MapPartitionsRDD[<id>]" in m
+    assert "rdd_<id>_0" in m and "Location: <tmp>]" in m
+    assert "local-<app> id=<uuid>" in m
+    # plan content is kept: constants, node shapes, names with digits
+    assert "hashpartitioning(" in m and ", 4)" in m
+    assert "sim_v0 2097152" in m
+    # a real difference survives masking
+    assert mask(a.replace("4)", "8)"), "/tmp") != m
