@@ -1604,6 +1604,30 @@ PPLX_TRAIN_STRIDE = 3  # doc_id % 3 == 0 trains the LM; the rest are scored
 PPLX_BANDS = 3  # head / middle / tail
 
 
+def _lm_scored(
+    spark: SparkSession, sf_dir: str, terms, n_col: str, score_col: str
+) -> DataFrame:
+    """The train/scored split and per-doc tail the two LM families
+    share: ``terms(train, scored)`` fits the model on the stride-0
+    documents and returns one ``(doc_id, term_e6)`` row per scored
+    n-gram; the result is ``(doc_id, n_col, score_col)``, the n-gram
+    count and the floored mean term per non-training document."""
+    from ..sources.tables import load_table_spread
+
+    d = load_table_spread(spark, sf_dir, "documents").select("doc_id", "text")
+    train = d.where(F.col("doc_id") % PPLX_TRAIN_STRIDE == 0)
+    scored = d.where(F.col("doc_id") % PPLX_TRAIN_STRIDE != 0)
+    per_doc = terms(train, scored).groupBy("doc_id").agg(
+        F.count(F.lit(1)).cast("long").alias(n_col),
+        F.sum("term_e6").alias("_sum"),
+    )
+    return per_doc.select(
+        "doc_id",
+        n_col,
+        F.expr(f"div(_sum, {n_col})").alias(score_col),
+    )
+
+
 def _perplexity_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared scoring pipeline of the two perplexity entries: (doc_id,
     n_bigrams, pplx_e6) over the non-training documents.
@@ -1622,47 +1646,36 @@ def _perplexity_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms are bounded by (|train tokens| + V)·1e6; at corpora where
     that nears 2^63/doc_len, drop the e6 scale or widen to decimal."""
     from ..functions import texts
-    from ..sources.tables import load_table_spread
 
-    d = load_table_spread(spark, sf_dir, "documents").select("doc_id", "text")
-    train = d.where(F.col("doc_id") % PPLX_TRAIN_STRIDE == 0)
-    scored = d.where(F.col("doc_id") % PPLX_TRAIN_STRIDE != 0)
-
-    big_counts = (
-        texts.shingle_frame(train, 2, dedup=False)
-        .groupBy("g")
-        .agg(F.count(F.lit(1)).alias("c12"))
-    )
-    uni_counts = (
-        train.select(F.explode(texts.tokens(F.col("text"))).alias("w1"))
-        .groupBy("w1")
-        .agg(F.count(F.lit(1)).alias("c1"))
-    )
-    vocab = uni_counts.agg(F.count(F.lit(1)).cast("long").alias("v"))
-
-    occ = texts.shingle_frame(scored, 2, dedup=False).select(
-        "doc_id", "g", F.split("g", " ").getItem(0).alias("w1")
-    )
-    terms = (
-        occ.join(big_counts, "g", "left")
-        .join(uni_counts, "w1", "left")
-        .crossJoin(F.broadcast(vocab))
-        .select(
-            "doc_id",
-            F.expr(
-                "div((coalesce(c1, 0L) + v) * 1000000, coalesce(c12, 0L) + 1)"
-            ).alias("term_e6"),
+    def terms(train: DataFrame, scored: DataFrame) -> DataFrame:
+        big_counts = (
+            texts.shingle_frame(train, 2, dedup=False)
+            .groupBy("g")
+            .agg(F.count(F.lit(1)).alias("c12"))
         )
-    )
-    per_doc = terms.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_bigrams"),
-        F.sum("term_e6").alias("_sum"),
-    )
-    return per_doc.select(
-        "doc_id",
-        "n_bigrams",
-        F.expr("div(_sum, n_bigrams)").alias("pplx_e6"),
-    )
+        uni_counts = (
+            train.select(F.explode(texts.tokens(F.col("text"))).alias("w1"))
+            .groupBy("w1")
+            .agg(F.count(F.lit(1)).alias("c1"))
+        )
+        vocab = uni_counts.agg(F.count(F.lit(1)).cast("long").alias("v"))
+
+        occ = texts.shingle_frame(scored, 2, dedup=False).select(
+            "doc_id", "g", F.split("g", " ").getItem(0).alias("w1")
+        )
+        return (
+            occ.join(big_counts, "g", "left")
+            .join(uni_counts, "w1", "left")
+            .crossJoin(F.broadcast(vocab))
+            .select(
+                "doc_id",
+                F.expr(
+                    "div((coalesce(c1, 0L) + v) * 1000000, coalesce(c12, 0L) + 1)"
+                ).alias("term_e6"),
+            )
+        )
+
+    return _lm_scored(spark, sf_dir, terms, "n_bigrams", "pplx_e6")
 
 
 def _band_cols(nt: Column) -> list[Column]:
@@ -1676,6 +1689,29 @@ def _band_cols(nt: Column) -> list[Column]:
     ]
 
 
+def _ntile_banded(scored: DataFrame, *order: Column) -> DataFrame:
+    """The oracle-twin tercile banding of a scored LM frame: one global
+    ``ntile`` window in ``order`` (every row in one window partition —
+    cross-engine reproducible, not the shape to run at scale)."""
+    from pyspark.sql import Window
+
+    return scored.withColumn(
+        "_nt", F.ntile(PPLX_BANDS).over(Window.orderBy(*order))
+    ).select(*scored.columns, *_band_cols(F.col("_nt")))
+
+
+def _rank_banded(scored: DataFrame, *order: Column) -> DataFrame:
+    """The scale-safe twin of :func:`_ntile_banded`: the same terciles
+    from the exact two-pass distributed rank (``ranks.global_ranked``)
+    and per-row ntile arithmetic, with no empty-partitionBy window."""
+    from ..functions import ranks
+
+    ranked, n = ranks.global_ranked(scored, list(order))
+    return ranked.select(
+        *scored.columns, *_band_cols(ranks.ntile_expr(n, PPLX_BANDS))
+    )
+
+
 def quality_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bigram-LM fluency filter: (doc_id, n_bigrams, pplx_e6, band,
     keep) over the non-training documents — the ORACLE-TWIN form whose
@@ -1684,15 +1720,8 @@ def quality_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     to run at scale — :func:`quality_perplexity_banded` is, and its
     parity with this entry is pinned by
     tests/test_quality.py::test_perplexity_banded_matches_ntile_twin)."""
-    from pyspark.sql import Window
-
-    return (
-        _perplexity_scored(spark, sf_dir)
-        .withColumn(
-            "_nt",
-            F.ntile(PPLX_BANDS).over(Window.orderBy("pplx_e6", "doc_id")),
-        )
-        .select("doc_id", "n_bigrams", "pplx_e6", *_band_cols(F.col("_nt")))
+    return _ntile_banded(
+        _perplexity_scored(spark, sf_dir), F.asc("pplx_e6"), F.asc("doc_id")
     )
 
 
@@ -1707,15 +1736,8 @@ def quality_perplexity_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     slice.  At 100 TB this is the plan you run; the ntile entry stays
     as the oracle twin, the same split :func:`zorder_write_layout` /
     :func:`lineitem_zorder_layout` use."""
-    from ..functions import ranks
-
-    scored = _perplexity_scored(spark, sf_dir)
-    ranked, n = ranks.global_ranked(
-        scored, [F.asc("pplx_e6"), F.asc("doc_id")]
-    )
-    nt = ranks.ntile_expr(n, PPLX_BANDS)
-    return ranked.select(
-        "doc_id", "n_bigrams", "pplx_e6", *_band_cols(nt)
+    return _rank_banded(
+        _perplexity_scored(spark, sf_dir), F.asc("pplx_e6"), F.asc("doc_id")
     )
 
 
@@ -1789,70 +1811,59 @@ def _backoff_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     AQE broadcasts them on small reference corpora, hash elsewhere),
     and one doc_id partial-agg."""
     from ..functions import texts
-    from ..sources.tables import load_table_spread
-
-    d = load_table_spread(spark, sf_dir, "documents").select("doc_id", "text")
-    train = d.where(F.col("doc_id") % PPLX_TRAIN_STRIDE == 0)
-    scored = d.where(F.col("doc_id") % PPLX_TRAIN_STRIDE != 0)
 
     def grams(frame, k, out):
         return texts.shingle_frame(frame, k, out=out, dedup=False)
 
-    tri = grams(train, 3, "g3").groupBy("g3").agg(
-        F.count(F.lit(1)).alias("c123")
-    )
-    big = grams(train, 2, "g2").groupBy("g2").agg(
-        F.count(F.lit(1)).alias("cb")
-    )
-    uni = (
-        train.select(F.explode(texts.tokens(F.col("text"))).alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("cu"))
-    )
-    totals = uni.agg(F.sum("cu").cast("long").alias("n_train"))
-
-    occ = grams(scored, 3, "g3").select(
-        "doc_id",
-        "g3",
-        F.concat_ws(
-            " ",
-            F.split("g3", " ").getItem(0),
-            F.split("g3", " ").getItem(1),
-        ).alias("g12"),
-        F.concat_ws(
-            " ",
-            F.split("g3", " ").getItem(1),
-            F.split("g3", " ").getItem(2),
-        ).alias("g23"),
-        F.split("g3", " ").getItem(1).alias("w2"),
-        F.split("g3", " ").getItem(2).alias("w3"),
-    )
-    terms = (
-        occ.join(tri, "g3", "left")
-        .join(big.select(F.col("g2").alias("g12"), F.col("cb").alias("c12")), "g12", "left")
-        .join(big.select(F.col("g2").alias("g23"), F.col("cb").alias("c23")), "g23", "left")
-        .join(uni.select(F.col("w").alias("w2"), F.col("cu").alias("c2")), "w2", "left")
-        .join(uni.select(F.col("w").alias("w3"), F.col("cu").alias("c3")), "w3", "left")
-        .crossJoin(F.broadcast(totals))
-        .select(
-            "doc_id",
-            F.expr(
-                "CASE WHEN coalesce(c123, 0L) > 0"
-                " THEN div(c123 * 1000000, c12)"
-                f" WHEN coalesce(c23, 0L) > 0 THEN div(c23 * {SB_ALPHA_E6}, c2)"
-                f" ELSE div(coalesce(c3, 0L) * {SB_ALPHA2_E6}, n_train) END"
-            ).alias("term_e6"),
+    def terms(train: DataFrame, scored: DataFrame) -> DataFrame:
+        tri = grams(train, 3, "g3").groupBy("g3").agg(
+            F.count(F.lit(1)).alias("c123")
         )
-    )
-    per_doc = terms.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_trigrams"),
-        F.sum("term_e6").alias("_sum"),
-    )
-    return per_doc.select(
-        "doc_id",
-        "n_trigrams",
-        F.expr("div(_sum, n_trigrams)").alias("fluency_e6"),
-    )
+        big = grams(train, 2, "g2").groupBy("g2").agg(
+            F.count(F.lit(1)).alias("cb")
+        )
+        uni = (
+            train.select(F.explode(texts.tokens(F.col("text"))).alias("w"))
+            .groupBy("w")
+            .agg(F.count(F.lit(1)).alias("cu"))
+        )
+        totals = uni.agg(F.sum("cu").cast("long").alias("n_train"))
+
+        occ = grams(scored, 3, "g3").select(
+            "doc_id",
+            "g3",
+            F.concat_ws(
+                " ",
+                F.split("g3", " ").getItem(0),
+                F.split("g3", " ").getItem(1),
+            ).alias("g12"),
+            F.concat_ws(
+                " ",
+                F.split("g3", " ").getItem(1),
+                F.split("g3", " ").getItem(2),
+            ).alias("g23"),
+            F.split("g3", " ").getItem(1).alias("w2"),
+            F.split("g3", " ").getItem(2).alias("w3"),
+        )
+        return (
+            occ.join(tri, "g3", "left")
+            .join(big.select(F.col("g2").alias("g12"), F.col("cb").alias("c12")), "g12", "left")
+            .join(big.select(F.col("g2").alias("g23"), F.col("cb").alias("c23")), "g23", "left")
+            .join(uni.select(F.col("w").alias("w2"), F.col("cu").alias("c2")), "w2", "left")
+            .join(uni.select(F.col("w").alias("w3"), F.col("cu").alias("c3")), "w3", "left")
+            .crossJoin(F.broadcast(totals))
+            .select(
+                "doc_id",
+                F.expr(
+                    "CASE WHEN coalesce(c123, 0L) > 0"
+                    " THEN div(c123 * 1000000, c12)"
+                    f" WHEN coalesce(c23, 0L) > 0 THEN div(c23 * {SB_ALPHA_E6}, c2)"
+                    f" ELSE div(coalesce(c3, 0L) * {SB_ALPHA2_E6}, n_train) END"
+                ).alias("term_e6"),
+            )
+        )
+
+    return _lm_scored(spark, sf_dir, terms, "n_trigrams", "fluency_e6")
 
 
 def quality_stupid_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1864,19 +1875,8 @@ def quality_stupid_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     global ntile window); the scale path is
     :func:`quality_backoff_banded`, parity-pinned by
     tests/test_quality.py::test_backoff_banded_matches_ntile_twin."""
-    from pyspark.sql import Window
-
-    return (
-        _backoff_scored(spark, sf_dir)
-        .withColumn(
-            "_nt",
-            F.ntile(PPLX_BANDS).over(
-                Window.orderBy(F.desc("fluency_e6"), F.asc("doc_id"))
-            ),
-        )
-        .select(
-            "doc_id", "n_trigrams", "fluency_e6", *_band_cols(F.col("_nt"))
-        )
+    return _ntile_banded(
+        _backoff_scored(spark, sf_dir), F.desc("fluency_e6"), F.asc("doc_id")
     )
 
 
@@ -1887,15 +1887,8 @@ def quality_backoff_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed rank (``functions/ranks.py``) instead of the
     single-partition ntile window — see
     :func:`quality_perplexity_banded` for the plan argument."""
-    from ..functions import ranks
-
-    scored = _backoff_scored(spark, sf_dir)
-    ranked, n = ranks.global_ranked(
-        scored, [F.desc("fluency_e6"), F.asc("doc_id")]
-    )
-    nt = ranks.ntile_expr(n, PPLX_BANDS)
-    return ranked.select(
-        "doc_id", "n_trigrams", "fluency_e6", *_band_cols(nt)
+    return _rank_banded(
+        _backoff_scored(spark, sf_dir), F.desc("fluency_e6"), F.asc("doc_id")
     )
 
 

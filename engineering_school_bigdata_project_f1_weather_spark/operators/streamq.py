@@ -1145,75 +1145,53 @@ def stream_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     service runs in front of a vector store.  Per micro-batch,
     STATELESS end-to-end:
 
-    - **probe selection**: each query row's NPROBE nearest lists from
-      ``similarity._probe`` — the batch entry's own ``_nearest`` call.
-      It is a stateless ``mapInPandas`` map against the k-row centroid
-      table collected at plan-build time (steering-sized), so it runs
-      on the append stream unchanged and without a window (windows are
-      illegal on an un-watermarked stream).
+    - **probe selection**: each query row's NPROBE nearest lists, by
+      the batch entry's own retrieve (``similarity._ivf_retrieve``).
+      Its ``_nearest`` is a stateless ``mapInPandas`` map against the
+      k-row centroid table that ``similarity._ivf_lists`` collects once
+      at plan-build time (steering-sized), so it runs on the append
+      stream unchanged and without a window (windows are illegal on an
+      un-watermarked stream).
     - **list search**: the (query, cluster) probes join the static
       inverted-list frame (corpus assignment, localCheckpointed so
       per-batch re-planning reads computed blocks, never re-runs the
       assignment) and verify with the exact integer cosine.
 
-    Candidates drain through the append file sink; the per-query top-k
-    rank runs on the drained frame (output-proportional — the
-    stream_decontaminate rollup precedent).  The oracle is the batch
-    ``sim_ivf`` serving path VERBATIM (``_ivf_oracle_sql``): the hash
-    gate pins that streaming arrival changes nothing."""
-    from ..functions import vectors
+    The query frame is the batch ``similarity._queries`` over the
+    quantized stream.  Candidates drain through the append file sink;
+    the per-query top-k cut (``similarity._top_n``) runs on the drained
+    frame (output-proportional — the stream_decontaminate rollup
+    precedent).  The oracle is the batch ``sim_ivf`` serving path
+    VERBATIM (``_ivf_oracle_sql``): the hash gate pins that streaming
+    arrival changes nothing."""
     from .similarity import (
-        QUERY_STRIDE,
         TOPK,
-        _nearest,
-        _probe,
+        _ivf_lists,
+        _ivf_retrieve,
+        _quantize_vectors,
         _quantized,
+        _queries,
+        _query_sim,
         _seed_centroids,
+        _top_n,
     )
 
     base = _quantized(spark, sf_dir).cache()
-    cents = _seed_centroids(base)
+    cents, lists = _ivf_lists(base, _seed_centroids(base), 1)
     # static inverted lists: corpus assignment under the frozen seeds
-    assign = (
-        _nearest(base, cents, 1, "cos")
-        .select("vec_id", F.col("centroid_id").alias("cluster"))
-        .join(base, "vec_id")
-        .localCheckpoint()
+    members = lists.join(base, "vec_id").localCheckpoint()
+    qstream = _queries(
+        _quantize_vectors(events_stream.stream_table(spark, sf_dir, "embeddings"))
     )
-
-    qstream = (
-        events_stream.stream_table(spark, sf_dir, "embeddings")
-        .where(F.col("vec_id") % QUERY_STRIDE == 0)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            vectors.quantize(F.col("embedding")).alias("qq"),
-        )
-        .withColumn("qn2", vectors.norm2(F.col("qq")))
-    )
-    sim = vectors.sim_e6(
-        vectors.dot(F.col("qq"), F.col("q")), F.col("qn2"), F.col("n2")
-    )
-    cand = (
-        _probe(qstream, cents)
-        .join(assign, "cluster")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            sim.alias("sim_e6"),
-        )
+    cand = _ivf_retrieve(qstream, cents, members).select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        _query_sim().alias("sim_e6"),
     )
     drained = _drain(cand, "stream_ann_probe", spark, mode="append")
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim_e6"), F.asc("neighbor_id")
-    )
-    return (
-        drained.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOPK)
-        .select("query_id", "neighbor_id", "sim_e6", F.col("rank").cast("int").alias("rank"))
-    )
+    return _top_n(
+        drained, "query_id", TOPK, F.desc("sim_e6"), F.asc("neighbor_id")
+    ).select("query_id", "neighbor_id", "sim_e6", F.col("rank").cast("int").alias("rank"))
 
 
 def _curate_stream_oracle_sql() -> str:

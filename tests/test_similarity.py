@@ -909,3 +909,35 @@ def test_nearest_matches_the_expression_form(spark):
         want = got(_nearest_reference(sub, kcents, 2, metric, ("m",)), kcols)
         assert got(out, kcols) == want, metric
         assert {r[1] for r in want} == {0, 1}  # m=2 has no codes
+
+
+def test_serving_build_collects_each_centroid_table_once(spark, sf_dir):
+    """Building a served IVF / IVF-PQ / MMR frame collects each
+    centroid or codebook table with at most one Spark job: the table is
+    collected once into a local relation, and every assignment, probe
+    and broadcast reads that relation.  Before, each ``_nearest`` call
+    re-collected the same table with its own job.  The first build
+    also materializes the entry's cached corpus frame, so the jobs are
+    counted on the second build, where only the table collects run."""
+    tables = {
+        "sim_ivf": 1,  # the seeded coarse centroids
+        # the coarse centroids and the residual codebook, plus one job:
+        # the codebook's residuals broadcast the collected centroid
+        # table, and Spark runs a one-task job to broadcast a local
+        # relation
+        "sim_ivf_pq": 2 + 1,
+        "sim_mmr": 1,  # the seeded lists of the IVF pool
+    }
+    sc = spark.sparkContext
+    for name, n_tables in tables.items():
+        similarity.QUERIES[name](spark, sf_dir)
+        group = f"collect_once_{name}"
+        sc.setJobGroup(group, group)
+        try:
+            similarity.QUERIES[name](spark, sf_dir)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts are async
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert jobs <= n_tables, (name, jobs)
