@@ -86,9 +86,12 @@ def write_sized(df, path: str, rows: int | None = None) -> int:
     Scale-adaptive by construction: file count grows with the data, so
     a 100 TB snapshot still writes many parallel files.
 
-    ``df`` must be cheap to count — materialized (localCheckpoint) or a
-    plain parquet read — or ``rows`` passed explicitly; returns the file
-    count used."""
+    Without ``rows`` the frame is counted first, and that count is its
+    own SQL execution: on a materialized (localCheckpoint) frame it runs
+    two jobs (a query stage and the final aggregate) before the one-job
+    write, so a caller that holds the row count passes ``rows``, and an
+    unmaterialized frame is checkpointed first so the count does not
+    re-run its plan.  Returns the file count used."""
     if rows is None:
         rows = df.count()
     # No partition-count cap needed: coalesce() never INCREASES the
@@ -139,11 +142,14 @@ def read(spark, path: str):
 
 
 def meta_row(spark, schema: str, values: tuple):
-    """One-row metadata frame built as a pure-JVM relation (single
-    partition).  ``createDataFrame([row])`` parallelizes the local list
-    into defaultParallelism Python-RDD slices — a 32-task Python-worker
-    job and up to 32 files for ONE row (guide §4/§6); ``spark.range(1)``
-    + literals stays in the JVM and writes one file.
+    """One-row metadata frame built as a pure-JVM relation on a single
+    partition, so its write leaves one file.  ``createDataFrame([row])``
+    parallelizes the local list into defaultParallelism Python-RDD
+    slices — a 32-task Python-worker job and up to 32 files for ONE row
+    (guide §4/§6); ``spark.range(1)`` also has defaultParallelism
+    partitions (its write leaves empty part files next to the one row),
+    so the range is built with one partition.  :func:`read_meta_row`
+    reads the row back on the driver.
 
     ``schema`` is the same DDL string the createDataFrame call took,
     e.g. ``"c_q16 long"``; values positional.  Parsed via StructType
@@ -163,7 +169,22 @@ def meta_row(spark, schema: str, values: tuple):
         F.lit(v).cast(f.dataType).alias(f.name)
         for f, v in zip(fields, values)
     ]
-    return spark.range(1).select(*cols)
+    return spark.range(0, 1, 1, 1).select(*cols)
+
+
+def read_meta_row(path: str) -> dict:
+    """The one row a :func:`meta_row` write left under ``path``, as a
+    ``{column: value}`` dict, read with pyarrow on the driver from the
+    part files (the mechanism :func:`read` uses for footers), so it runs
+    no Spark job.  Raises ``ValueError`` unless the files hold exactly
+    one row."""
+    import pyarrow.parquet as pq
+
+    parts = sorted(e.path for e in os.scandir(path) if e.name.startswith("part-"))
+    rows = [r for p in parts for r in pq.read_table(p).to_pylist()]
+    if len(rows) != 1:
+        raise ValueError(f"read_meta_row: {len(rows)} rows under {path!r}")
+    return rows[0]
 
 
 def snap_live(path: str) -> str:

@@ -172,9 +172,9 @@ def curate_index_init(
             ).parquet(f"{index_path}/model_meta")
             model_b = F.broadcast(snapshots.read(spark, f"{index_path}/model"))
             rows = _doc_rows(d, model_b, c_q16, wide=wide, fb=fb)
-            # Sized write (round 12 opt, guide §6): checkpointed first (the
-            # frame is corpus-sized, cheap) so the file count derives from a
-            # free count instead of one file per task.
+            # Sized write (round 12 opt, guide §6): checkpointed first so
+            # the sizing count (two jobs) reads the materialized rows
+            # instead of re-running the scoring plan.
             snapshots.write_sized(rows.localCheckpoint(), f"{t.dir}/docs")
 
         def _leg_minhash() -> None:
@@ -249,9 +249,7 @@ def curate_index_update(
         )
 
     def _leg_rows() -> DataFrame:
-        c_q16 = int(
-            snapshots.read(spark, f"{index_path}/model_meta").first()["c_q16"]
-        )
+        c_q16 = snapshots.read_meta_row(f"{index_path}/model_meta")["c_q16"]
         model_b = F.broadcast(snapshots.read(spark, f"{index_path}/model"))
         return _doc_rows(batch, model_b, c_q16).localCheckpoint()
 
@@ -262,8 +260,9 @@ def curate_index_update(
     )
 
     with snapshots.txn(index_path, CUR_PREFIX) as t:
-        # rows / new_pairs are checkpointed above — sized writes are free,
-        # and independent, so they overlap.
+        # rows / new_pairs are checkpointed above, so each sizing count
+        # (two jobs) reads materialized rows; the writes are independent,
+        # so they overlap.
         run_overlapped(
             lambda: snapshots.write_sized(rows, f"{t.dir}/docs"),
             lambda: snapshots.write_sized(new_pairs, f"{t.dir}/pairs"),

@@ -2374,15 +2374,15 @@ def er_index_update(
             )
             .unionByName(batch_remap)
             # checkpointed at the write below (merge-event-sized) so the
-            # sized write can count it for free
+            # sized write's count reads materialized rows
         )
 
         nbase = t.dir
         # Sized writes (round 12 opt, guide §6) — batch-proportional frames,
         # one near-empty file per task otherwise.  new_labels has exactly one
-        # row per batch doc (drows is checkpointed, so the count is a cheap
-        # scan); remap is merge-event-sized and written once, so it is
-        # checkpointed (tiny) to make its count free.
+        # row per batch doc, so both take ``n_batch`` (drows is checkpointed;
+        # its one count serves both writes); remap is merge-event-sized and
+        # written once, so it is checkpointed (tiny) before its own count.
         n_batch = drows.count()
         # Independent writes of materialized (or once-consumed) frames —
         # overlapped (round 13, guide §2.6), then the hard links and the one

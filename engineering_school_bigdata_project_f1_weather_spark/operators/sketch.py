@@ -64,7 +64,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 from ..functions import snapshots, texts
 from ..sources.tables import load_table
-from .events import MONTH_DAYS_US, load_events
+from .events import MONTH_DAYS_US, _cents, load_events
 
 MG_CAPACITY = 128  # C: summary size; guarantee threshold is N/(C+1)
 
@@ -80,6 +80,31 @@ def _month_us(c: Column | str) -> Column:
     since 86 400 s divides the grid."""
     c = F.col(c) if isinstance(c, str) else c
     return c - c % F.lit(MONTH_DAYS_US)
+
+
+def _rank(qnum: int, qden: int) -> Column:
+    """The exact-integer rank ceil(n·qnum/qden) over the column ``n``, as
+    one ``div`` — no float percentile anywhere."""
+    return F.expr(f"div(n * {qnum} + {qden - 1}, {qden})")
+
+
+def _reaching(qnum: int, qden: int, value: str) -> Column:
+    """Aggregate: the least ``value`` whose running count ``cum`` reaches
+    :func:`_rank` — a q-quantile read off a cumulative-count frame."""
+    return F.min(F.when(F.col("cum") >= _rank(qnum, qden), F.col(value)))
+
+
+def _max_by(keys: list, col: str):
+    """Register-MAX merge (HLL registers), at the month roll-ups and in
+    the indexes: idempotent, max(a, a) = a."""
+    return lambda df: df.groupBy(*keys).agg(F.max(col).alias(col))
+
+
+def _sum_by(keys: list, cols: list):
+    """Counter-SUM merge (CMS counters, histogram bins, profile counts),
+    at the month roll-ups and in the indexes: a + a ≠ a, so the indexes
+    that SUM keep an exactly-once ``batches`` ledger."""
+    return lambda df: df.groupBy(*keys).agg(*[F.sum(c).alias(c) for c in cols])
 
 
 def _mg_merge(counters: dict, batch: pd.Series, capacity: int) -> dict:
@@ -412,7 +437,8 @@ def events_mau_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     up to ANY coarser grain without touching raw events again.  The
     Spark side composes day → month explicitly (the same
     `_daily_registers` frame ``events_dau_hll`` serves, merged by
-    ``MAX(m_reg)`` per (month, register)); the ORACLE sketches the month
+    ``MAX(m_reg)`` per (month, register) — :func:`_max_by`, the index
+    merge); the ORACLE sketches the month
     grain DIRECTLY from events — the hash gate
     therefore validates the merge law itself, in-engine, not just the
     pytest register-level pin (test_sketch.py).  Month = the same fixed
@@ -420,11 +446,8 @@ def events_mau_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     Day keys lie inside their month-grid bucket by construction
     (86 400 s divides the 30-day grid), so day-grain → month-grid
     assignment is exact."""
-    month_regs = (
-        _daily_registers(spark, sf_dir)
-        .withColumn("month_us", _month_us("day_us"))
-        .groupBy("month_us", "reg")
-        .agg(F.max("m_reg").alias("m_reg"))
+    month_regs = _max_by(["month_us", "reg"], "m_reg")(
+        _daily_registers(spark, sf_dir).withColumn("month_us", _month_us("day_us"))
     )
     return _hll_estimate(month_regs, "month_us").orderBy("month_us")
 
@@ -476,6 +499,30 @@ CMS_W = 512  # buckets per row
 CMS_QUERY_STRIDE = 10  # queried keys: user_id % 10 == 0
 
 
+def _hash_pos(tag: str, r: Column, key: Column, width: int) -> Column:
+    """hash32(tag || r || ':' || key) mod width — the one hash-position
+    function of the CMS buckets and the Bloom bits, exact-integer and
+    identical in the DuckDB oracles.  ``r`` is the hash row as a string
+    column (a literal where the rows are unrolled, as in
+    :func:`_bloom_test`)."""
+    return (
+        texts.hash32(F.concat(F.lit(tag), r, F.lit(":"), key.cast("string")))
+        % width
+    )
+
+
+def _hash_rows(
+    df: DataFrame, tag: str, d: int, key: str, width: int, out: str
+) -> DataFrame:
+    """Append the ``d`` hash rows to every input row: (…, r, ``out``) with
+    ``out`` = :func:`_hash_pos` of (r, ``key``)."""
+    return df.withColumn(
+        "r", F.explode(F.array(*[F.lit(r) for r in range(d)]))
+    ).withColumn(
+        out, _hash_pos(tag, F.col("r").cast("string"), F.col(key), width)
+    )
+
+
 def _cms_expand(df: DataFrame) -> DataFrame:
     """Append the CMS hash rows to every input row: (… , r, bucket) for
     r in 0..d-1, bucket = hash32('cms' || r || ':' || user_id) mod w.
@@ -483,19 +530,21 @@ def _cms_expand(df: DataFrame) -> DataFrame:
     commutes with any filter/distinct on the input — which is what lets
     the query side expand DISTINCT USERS (∝ queried keys) instead of
     distinct-ing an events×d frame (∝ events)."""
-    return df.withColumn(
-        "r", F.explode(F.array(*[F.lit(r) for r in range(CMS_D)]))
-    ).withColumn(
-        "bucket",
-        texts.hash32(
-            F.concat(
-                F.lit("cms"),
-                F.col("r").cast("string"),
-                F.lit(":"),
-                F.col("user_id").cast("string"),
-            )
-        )
-        % CMS_W,
+    return _hash_rows(df, "cms", CMS_D, "user_id", CMS_W, "bucket")
+
+
+def _cms_counters_of(freq: DataFrame, n: str = "n", *keys: str) -> DataFrame:
+    """(*keys, user_id, ``n``) frequency frame → (*keys, r, bucket, cnt)
+    CMS counter table (d·w ≤ 1536 rows per key, map-side combinable) —
+    the counters of the day entry, the month entry's daily tables and
+    the join-size estimate.  Linear in the frequency vector:
+    counters(f+g) = counters(f) + counters(g) — tests/test_sketch.py
+    pins this by building the two halves of the event log separately
+    and SUM-merging."""
+    return (
+        _cms_expand(freq)
+        .groupBy(*keys, "r", "bucket")
+        .agg(F.sum(n).alias("cnt"))
     )
 
 
@@ -503,9 +552,10 @@ def events_user_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-Min Sketch over event user_ids + point-queried estimates —
     EXACT-integer end to end so the DuckDB oracle (the identical sketch
     formula) hashes bit-for-bit: bucket_r(u) = md5-hash32 of
-    ``'cms' || r || ':' || u`` mod w; counters = one (r, bucket) count
-    aggregate (map-side combinable, ≤ d·w = 1536 rows shuffled
-    regardless of user cardinality); the estimate for a queried key is
+    ``'cms' || r || ':' || u`` mod w (:func:`_hash_pos`); counters = one
+    (r, bucket) count aggregate (:func:`_cms_counters_of`; map-side
+    combinable, ≤ d·w = 1536 rows shuffled regardless of user
+    cardinality); the estimate for a queried key is
     ``min_r counters[r, bucket_r(u)]``, joined against the BROADCAST
     counter table. Output carries the exact count next to the estimate,
     so the CMS overestimate guarantee (est ≥ true, pytest-pinned along
@@ -524,10 +574,7 @@ def events_user_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     Bit-identical counters, same hash; measured ×5-data slope 3.0× → see
     SCALE.md."""
     per_user = _user_counts(load_events(spark, sf_dir))
-    counters = _cms_expand(per_user).groupBy("r", "bucket").agg(
-        F.sum("n_events").alias("cnt")
-    )
-    return _cms_serve(per_user, counters)
+    return _cms_serve(per_user, _cms_counters_of(per_user, "n_events"))
 
 
 def _user_counts(events_df: DataFrame) -> DataFrame:
@@ -592,8 +639,9 @@ def events_user_cms_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The Spark side composes day → month explicitly: per-day counter
     tables (the d·w-row frames a production pipeline persists per
-    ingest day) are merged to the 30-day month grid by per-cell SUM,
-    and point estimates are served from the MERGED table.  The ORACLE
+    ingest day, :func:`_cms_counters_of` keyed by day) are merged to the
+    30-day month grid by per-cell SUM (:func:`_sum_by`), and point
+    estimates are served from the MERGED table.  The ORACLE
     sketches the month grain DIRECTLY from events — so the hash gate
     passes iff SUM-merging daily counters equals sketching the month in
     one pass, which is the merge law itself (CMS counters are linear in
@@ -612,13 +660,10 @@ def events_user_cms_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(day_us.alias("day_us"), F.col("user_id"))
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    daily = _cms_expand(per_day_user).groupBy("day_us", "r", "bucket").agg(
-        F.sum("n_events").alias("cnt")
-    )
-    monthly = (
+    daily = _cms_counters_of(per_day_user, "n_events", "day_us")
+    # the counter-SUM merge
+    monthly = _sum_by(["month_us", "r", "bucket"], ["cnt"])(
         daily.withColumn("month_us", _month_us("day_us"))
-        .groupBy("month_us", "r", "bucket")
-        .agg(F.sum("cnt").alias("cnt"))  # the counter-SUM merge
     )
     per_month_user = (
         per_day_user.where(F.col("user_id") % CMS_QUERY_STRIDE == 0)
@@ -690,20 +735,7 @@ def _bloom_positions(df: DataFrame, key: str) -> DataFrame:
     """Append the d Bloom bit positions for ``df[key]``:
     pos_r(k) = hash32('bloom' || r || ':' || k) mod m — a pure function
     of (r, key), exact-integer and identical in the DuckDB oracle."""
-    return df.withColumn(
-        "r", F.explode(F.array(*[F.lit(r) for r in range(BLOOM_D)]))
-    ).withColumn(
-        "pos",
-        texts.hash32(
-            F.concat(
-                F.lit("bloom"),
-                F.col("r").cast("string"),
-                F.lit(":"),
-                F.col(key).cast("string"),
-            )
-        )
-        % BLOOM_M,
-    )
+    return _hash_rows(df, "bloom", BLOOM_D, key, BLOOM_M, "pos")
 
 
 def events_user_bloom_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -889,18 +921,12 @@ ORDER BY nb.month_us
 # — so one helper, :func:`_merge_commit`, runs it for all six.  A crash
 # at any point leaves CURRENT on a complete version.  Writing to a fresh
 # directory also means the merge may stream straight from the live
-# version's files: nothing it reads is being replaced.
-
-
-def _max_by(keys: list, col: str):
-    """Register-MAX merge (HLL registers): idempotent, max(a, a) = a."""
-    return lambda df: df.groupBy(*keys).agg(F.max(col).alias(col))
-
-
-def _sum_by(keys: list, cols: list):
-    """Counter-SUM merge (histogram bins, profile counts): a + a ≠ a, so
-    these families keep an exactly-once ``batches`` ledger."""
-    return lambda df: df.groupBy(*keys).agg(*[F.sum(c).alias(c) for c in cols])
+# version's files: nothing it reads is being replaced.  The four
+# families whose merges are idempotent (Bloom, HLL, KMV, row sample) get
+# their init/update pair from one :func:`_idempotent_index`; hist and
+# ndv SUM-merge, carry a ledger and serve differently, so they keep their
+# own functions.  The month entries roll days up with the same merges,
+# :func:`_max_by` and :func:`_sum_by`.
 
 
 def _min_k_per_day(k: int):
@@ -962,34 +988,43 @@ def _merge_commit(
     return t.dir
 
 
+def _idempotent_index(prefix: str, parts):
+    """The init/update pair of an index whose every merge is idempotent:
+    Bloom bits (a ∪ a = a), HLL registers (max(a, a) = a), and the KMV
+    and row-sample bottom-k (min-k(S ∪ S) = min-k(S), a semilattice).
+    Merging a re-delivered batch returns the state it merged into, so an
+    orchestrator retry is a no-op through the merge law alone and these
+    four keep no ``batches`` ledger — contrast the SUM-merged hist and
+    ndv indexes, where a + a ≠ a.  ``parts`` maps an event frame to the
+    :func:`_merge_commit` parts of its sketch."""
+
+    def init(spark: SparkSession, events_df: DataFrame, path: str) -> None:
+        """Commit the sketch of an initial corpus as the first version."""
+        _merge_commit(spark, path, prefix, parts(events_df), init=True)
+
+    def update(spark: SparkSession, new_events: DataFrame, path: str) -> DataFrame:
+        """Sketch the batch, merge it into the live state, commit the
+        result as the next version and return it.  Per-batch work is
+        O(|batch| + state of the days touched), never corpus-sized."""
+        return snapshots.read(
+            spark, _merge_commit(spark, path, prefix, parts(new_events))
+        )
+
+    return init, update
+
+
 # ------------------------------------- incremental Bloom bit-set table
 def _bloom_parts(events_df: DataFrame) -> dict:
     # set-union merge: a ∪ a = a
     return {"": (_bloom_bits_of(events_df), DataFrame.distinct)}
 
 
-def bloom_index_init(spark: SparkSession, events_df: DataFrame, path: str) -> None:
-    """Materialize the per-day Bloom bit-set table for an initial event
-    corpus — the membership twin of :func:`hll_index_init`: the lake
-    keeps ≤ m rows per day forever and answers "was user U active in
-    window W" by OR-merging the window's day rows, never re-reading raw
-    events (no false negatives; false-positive rate set by m/d against
-    the per-day active-user count).  Same versioned-snapshot + atomic
-    CURRENT-pointer durability as the HLL register table."""
-    _merge_commit(spark, path, "bits_v", _bloom_parts(events_df), init=True)
-
-
-def bloom_index_update(
-    spark: SparkSession, new_events: DataFrame, path: str
-) -> DataFrame:
-    """Merge a new event batch into the bit-set table: sketch the batch,
-    OR-merge (set union) against the stored frame, commit as a new
-    snapshot.  IDEMPOTENT — re-delivery is absorbed because
-    a ∪ a = a (the Bloom merge law as persisted state).  Returns the
-    post-merge frame; per-batch work is O(|batch| + m·days-touched)."""
-    return snapshots.read(
-        spark, _merge_commit(spark, path, "bits_v", _bloom_parts(new_events))
-    )
+# The per-day Bloom bit-set table, the membership twin of the HLL
+# register table: the lake keeps ≤ m rows per day forever and answers
+# "was user U active in window W" by OR-merging the window's day rows,
+# never re-reading raw events (no false negatives; false-positive rate
+# set by m/d against the per-day active-user count).
+bloom_index_init, bloom_index_update = _idempotent_index("bits_v", _bloom_parts)
 
 
 def _bloom_bits_of(events_df: DataFrame) -> DataFrame:
@@ -1082,17 +1117,7 @@ def _bloom_test(key_col: Column, words: list[int]) -> Column:
     arr = F.array(*[F.lit(w).cast("long") for w in words])
     cond = F.lit(True)
     for r in range(BLOOM_D):
-        pos = (
-            texts.hash32(
-                F.concat(
-                    F.lit("bloom"),
-                    F.lit(str(r)),
-                    F.lit(":"),
-                    key_col.cast("string"),
-                )
-            )
-            % BLOOM_M
-        )
+        pos = _hash_pos("bloom", F.lit(str(r)), key_col, BLOOM_M)
         word = F.element_at(arr, (pos / 64).cast("int") + 1)
         # bit_get takes a COLUMN position (shiftright's numBits must be
         # a literal); reads the two's-complement bit directly
@@ -1119,30 +1144,12 @@ def _hll_parts(events_df: DataFrame) -> dict:
     return {"": (_registers_of(events_df), _max_by(["day_us", "reg"], "m_reg"))}
 
 
-def hll_index_init(spark: SparkSession, events_df: DataFrame, path: str) -> None:
-    """Materialize the per-day HLL register table for an initial event
-    corpus — the persisted-sketch twin of dedup.minhash_index_init /
-    similarity.ann_index_init, for the continuous-ingest distinct-count
-    pipeline: the lake keeps ≤ m rows per day FOREVER and answers any
-    day/month/arbitrary-window distinct-user question by register-MAX
-    merge, never re-reading raw events."""
-    _merge_commit(spark, path, "registers_v", _hll_parts(events_df), init=True)
-
-
-def hll_index_update(
-    spark: SparkSession, new_events: DataFrame, path: str
-) -> DataFrame:
-    """Merge a new event batch into the register table: sketch the batch,
-    register-wise MAX against the stored frame, write the merged state
-    as a NEW snapshot, atomically swap the CURRENT pointer.  IDEMPOTENT
-    — re-delivering the same batch is absorbed because max(a, a) = a,
-    so an orchestrator retry is a no-op (the same contract as the
-    minhash / ANN index updates, via the merge law instead of an
-    anti-join).  Returns the post-merge register frame;
-    per-batch work is O(|batch| + m·days-touched), never corpus-sized."""
-    return snapshots.read(
-        spark, _merge_commit(spark, path, "registers_v", _hll_parts(new_events))
-    )
+# The per-day HLL register table, for the continuous-ingest
+# distinct-count pipeline: the lake keeps ≤ m rows per day forever and
+# answers any day/month/arbitrary-window distinct-user question by
+# register-MAX merge, never re-reading raw events (the minhash / ANN
+# retry contract, through the merge law instead of an anti-join).
+hll_index_init, hll_index_update = _idempotent_index("registers_v", _hll_parts)
 
 
 def _registers_of(events_df: DataFrame) -> DataFrame:
@@ -1251,10 +1258,9 @@ def segment_overlap_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
         texts.hash32(F.col("user_id").cast("string")).alias("h"),
     )
     seg_regs = _hll_registers(hashed, "event_type")
-    union_regs = (
-        seg_regs.groupBy("reg")
-        .agg(F.max("m_reg").alias("m_reg"))  # the register-MAX merge
-        .select(F.lit("union").alias("relation"), "reg", "m_reg")
+    # the register-MAX merge of the two segment sketches
+    union_regs = _max_by(["reg"], "m_reg")(seg_regs).select(
+        F.lit("union").alias("relation"), "reg", "m_reg"
     )
     regs = seg_regs.select(
         F.col("event_type").alias("relation"), "reg", "m_reg"
@@ -1410,12 +1416,12 @@ def events_value_hist_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _hist_monthly_serve(daily: DataFrame) -> DataFrame:
-    """SUM-merge day histograms to month grain + exact-integer
-    percentile extraction — factored (round 8) for the streaming twin."""
-    monthly = (
+    """SUM-merge day histograms to month grain (:func:`_sum_by`) +
+    exact-integer percentile extraction (:func:`_reaching`) — factored
+    (round 8) for the streaming twin."""
+    # the histogram SUM merge
+    monthly = _sum_by(["month_us", "bin"], ["cnt"])(
         daily.withColumn("month_us", _month_us("day_us"))
-        .groupBy("month_us", "bin")
-        .agg(F.sum("cnt").alias("cnt"))  # the histogram SUM merge
     )
     w_cum = (
         Window.partitionBy("month_us")
@@ -1429,16 +1435,10 @@ def _hist_monthly_serve(daily: DataFrame) -> DataFrame:
         F.sum("cnt").over(w_cum).alias("cum"),
         F.sum("cnt").over(w_all).alias("n"),
     )
-
-    def pick(q: int) -> Column:
-        thresh = F.expr(f"div(n * {q} + 99, 100)")  # ceil(n·q/100)
-        return F.min(
-            F.when(F.col("cum") >= thresh, F.col("bin"))
-        ).alias(f"p{q}_bin")
-
+    picks = [_reaching(q, 100, "bin").alias(f"p{q}_bin") for q in (50, 90, 99)]
     return (
         c.groupBy("month_us")
-        .agg(F.max("n").alias("n_events"), pick(50), pick(90), pick(99))
+        .agg(F.max("n").alias("n_events"), *picks)
         .select(
             "month_us",
             "n_events",
@@ -1457,8 +1457,6 @@ def _daily_hist_of(events_df: DataFrame) -> DataFrame:
     """(day_us, bin, cnt) per-day histogram over an arbitrary
     (ts, value) frame — the persisted frame of the index twins,
     factored from events_value_hist_monthly."""
-    from .events import _cents
-
     day_us = _day_us()
     return (
         events_df.select(
@@ -1593,7 +1591,11 @@ def _kmv_est(n_kmv: Column, kth: Column) -> Column:
     (fewer than k distinct hashes means the sketch IS the set).
     Integer-exact in both engines: single div of long literals."""
     return F.when(n_kmv < KMV_K, n_kmv).otherwise(
-        F.expr(f"div({(KMV_K - 1) * KMV_HASH_SPACE}, greatest(kth_h, 1))")
+        F.call_function(
+            "div",
+            F.lit((KMV_K - 1) * KMV_HASH_SPACE),
+            F.greatest(kth, F.lit(1)),
+        )
     )
 
 
@@ -1618,43 +1620,28 @@ _USER_DAY_HASH_SQL = texts.hash32_sql(
 )
 
 
+def _kmv_rows(events_df: DataFrame) -> DataFrame:
+    """(day_us, h) user-day hash rows of a (ts, user_id) frame, batch or
+    stream — the input of the daily KMV sketch and of its GroupState
+    twin (``streamq.stream_kmv``)."""
+    return events_df.select(_day_us().alias("day_us"), _user_day_hash().alias("h"))
+
+
 def _daily_kmv_of(events_df: DataFrame) -> DataFrame:
     """(day_us, h) daily bottom-k frame over an arbitrary (ts, user_id)
     events frame — the persisted sketch the month entry, the Jaccard
     entry's shape, and the kmv_index twins all derive from."""
-    hashed = events_df.select(
-        _day_us().alias("day_us"),
-        _user_day_hash().alias("h"),
-    ).distinct()
-    return _bottom_k(hashed, ["day_us"], KMV_K)
+    return _bottom_k(_kmv_rows(events_df).distinct(), ["day_us"], KMV_K)
 
 
 def _kmv_parts(events_df: DataFrame) -> dict:
     return {"": (_daily_kmv_of(events_df), _min_k_per_day(KMV_K))}
 
 
-def kmv_index_init(spark: SparkSession, events_df: DataFrame, path: str) -> None:
-    """Materialize the per-day KMV bottom-k table for an initial event
-    corpus — the continuous-ingest twin for the ORDER-STATISTIC merge,
-    completing the persisted-sketch family (minhash / ANN / HLL / Bloom
-    / histogram): ≤ KMV_K rows per day kept forever, any window's
-    distinct-count estimate served by min-k merge of its days."""
-    _merge_commit(spark, path, "kmv_v", _kmv_parts(events_df), init=True)
-
-
-def kmv_index_update(
-    spark: SparkSession, new_events: DataFrame, path: str
-) -> DataFrame:
-    """Merge a new event batch into the bottom-k table: sketch the
-    batch, min-k the union per day, write a NEW snapshot, atomically
-    swap CURRENT (:func:`_merge_commit`).  IDEMPOTENT like the
-    HLL/Bloom twins — min-k(S ∪ S) = min-k(S), the order-statistic
-    merge is a semilattice, so a re-delivered batch is a no-op and no
-    ledger is needed (contrast hist_index_update's non-idempotent SUM).
-    Per-batch work is O(|batch| + k·days-touched), never corpus-sized."""
-    return snapshots.read(
-        spark, _merge_commit(spark, path, "kmv_v", _kmv_parts(new_events))
-    )
+# The per-day KMV bottom-k table, the continuous-ingest twin of the
+# ORDER-STATISTIC merge: ≤ KMV_K rows per day kept forever, any window's
+# distinct-count estimate served by min-k merge of its days.
+kmv_index_init, kmv_index_update = _idempotent_index("kmv_v", _kmv_parts)
 
 
 def events_kmv_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1771,7 +1758,8 @@ def segment_jaccard_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketches; the ORACLE sketches the union segment DIRECTLY (the
     across-filters merge law, KMV edition).  Exact counts ride along;
     everything downstream of the two per-segment bottom-k's is O(k)
-    rows.  Integer surface: jaccard_ppm = match·10⁶/|B_∪|, inter_est =
+    rows.  Integer surface: union_est = :func:`_kmv_est` of the union
+    sketch, jaccard_ppm = match·10⁶/|B_∪|, inter_est =
     match·union_est/|B_∪|."""
     e = (
         load_events(spark, sf_dir)
@@ -1816,9 +1804,7 @@ def segment_jaccard_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_union_exact"),
         F.sum(F.col("fa") * F.col("fb")).alias("n_inter_exact"),
     )
-    union_est = F.when(F.col("n_union_kmv") < KMV_K, F.col("n_union_kmv")).otherwise(
-        F.expr(f"div({(KMV_K - 1) * KMV_HASH_SPACE}, greatest(kth_h, 1))")
-    )
+    union_est = _kmv_est(F.col("n_union_kmv"), F.col("kth_h"))
     return (
         exact.crossJoin(F.broadcast(sk))  # two one-row frames
         .withColumn("union_est", union_est)
@@ -1932,52 +1918,37 @@ _ROW_HASH60_SQL = (
 def _pick_rank(qnum: int, qden: int) -> Column:
     """Value at the exact-integer rank ceil(q·n) of the (cents, h)-sorted
     frame — aggregate form: the single row whose rn equals the rank."""
-    rank = F.expr(f"div(n * {qnum} + {qden - 1}, {qden})")
-    return F.max(F.when(F.col("rn") == rank, F.col("cents")))
+    return F.max(F.when(F.col("rn") == _rank(qnum, qden), F.col("cents")))
+
+
+def _qsample_rows(events_df: DataFrame) -> DataFrame:
+    """(day_us, h, cents) keyed rows of a (ts, event_id, value) frame,
+    batch or stream — the input of the daily row sample, of its
+    GroupState twin (``streamq.stream_value_quantiles``) and of the
+    month entry's exact companions."""
+    return events_df.select(
+        _day_us().alias("day_us"),
+        _row_hash60().alias("h"),
+        _cents("value").alias("cents"),
+    )
 
 
 def _daily_qsample_of(events_df: DataFrame) -> DataFrame:
     """(day_us, h, cents) daily bottom-k row-sample frame — the persisted
     sketch the month entry and the qsample_index twins derive from."""
-    from .events import _cents
-
-    day_us = F.col("ts_us") - F.col("ts_us") % (24 * 3600 * 1_000_000)
-    rows = events_df.select(
-        day_us.alias("day_us"),
-        _row_hash60().alias("h"),
-        _cents("value").alias("cents"),
-    )
-    return _bottom_k(rows, ["day_us"], QSAMPLE_K)
+    return _bottom_k(_qsample_rows(events_df), ["day_us"], QSAMPLE_K)
 
 
 def _qsample_parts(events_df: DataFrame) -> dict:
     return {"": (_daily_qsample_of(events_df), _min_k_per_day(QSAMPLE_K))}
 
 
-def qsample_index_init(
-    spark: SparkSession, events_df: DataFrame, path: str
-) -> None:
-    """Materialize the per-day bottom-k ROW-SAMPLE table (h, cents) — the
-    continuous-ingest twin for the quantile sketch: ≤ QSAMPLE_K rows per
-    day kept forever, any window's rank quantiles served by min-k merge
-    of its days (same semilattice and snapshot durability as the KMV
-    twin; the carried ``cents`` payload is what turns the membership
-    sketch into a quantile sketch)."""
-    _merge_commit(spark, path, "qs_v", _qsample_parts(events_df), init=True)
-
-
-def qsample_index_update(
-    spark: SparkSession, new_events: DataFrame, path: str
-) -> DataFrame:
-    """Merge a new event batch into the row-sample table: sketch the
-    batch, min-k the union per day, write a NEW snapshot, atomically
-    swap CURRENT. IDEMPOTENT — min-k(S ∪ S) = min-k(S) and the 60-bit
-    key makes the per-row (h, cents) pair unique, so a re-delivered
-    batch is a no-op (no ledger; contrast hist_index_update's SUM).
-    Per-batch work is O(|batch| + k·days-touched), never corpus-sized."""
-    return snapshots.read(
-        spark, _merge_commit(spark, path, "qs_v", _qsample_parts(new_events))
-    )
+# The per-day bottom-k ROW-SAMPLE table (h, cents), the continuous-ingest
+# twin of the quantile sketch: ≤ QSAMPLE_K rows per day kept forever, any
+# window's rank quantiles served by min-k merge of its days.  The 60-bit
+# key makes each (h, cents) row unique, so the carried ``cents`` payload
+# keeps the merge a semilattice.
+qsample_index_init, qsample_index_update = _idempotent_index("qs_v", _qsample_parts)
 
 
 def events_value_quantiles_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2016,17 +1987,11 @@ def _qsample_monthly_of(e: DataFrame) -> DataFrame:
 
 
 def _qsample_monthly_serve(daily: DataFrame, e: DataFrame) -> DataFrame:
-    """Month min-k merge + rank-quantile serving + exact companions over
-    a per-day (h, cents) sample frame — factored (round 8) for the
-    streaming twin."""
-    from .events import _cents
-
-    day_us = F.col("ts_us") - F.col("ts_us") % (24 * 3600 * 1_000_000)
-    rows = e.select(
-        day_us.alias("day_us"),
-        _row_hash60().alias("h"),
-        _cents("value").alias("cents"),
-    )
+    """Month min-k merge + rank-quantile serving (:func:`_pick_rank`) +
+    exact companions (:func:`_reaching` over the :func:`_qsample_rows`
+    of ``e``) over a per-day (h, cents) sample frame — factored (round 8)
+    for the streaming twin."""
+    rows = _qsample_rows(e)
     merged = _bottom_k(
         daily.select(_month_us("day_us").alias("month_us"), "h", "cents"),
         ["month_us"],
@@ -2064,16 +2029,11 @@ def _qsample_monthly_serve(daily: DataFrame, e: DataFrame) -> DataFrame:
     cum = per_val.withColumn("cum", F.sum("cnt").over(wcum)).withColumn(
         "n", F.sum("cnt").over(Window.partitionBy("month_us"))
     )
-
-    def pick_true(qnum: int, qden: int) -> Column:
-        rank = F.expr(f"div(n * {qnum} + {qden - 1}, {qden})")
-        return F.min(F.when(F.col("cum") >= rank, F.col("cents")))
-
     truth = cum.groupBy("month_us").agg(
         F.max("n").alias("n_events"),
-        pick_true(1, 2).alias("p50_true"),
-        pick_true(9, 10).alias("p90_true"),
-        pick_true(99, 100).alias("p99_true"),
+        _reaching(1, 2, "cents").alias("p50_true"),
+        _reaching(9, 10, "cents").alias("p90_true"),
+        _reaching(99, 100, "cents").alias("p99_true"),
     )
     return (
         est.join(truth, "month_us")
@@ -2150,19 +2110,6 @@ ORDER BY e.month_us
 # Both summaries are fixed-size regardless of data volume and merge
 # (counter-SUM / register-MAX) across partitions, days, clusters — the
 # estimate is available BEFORE the shuffle it prices.
-
-
-def _cms_counters_of(per_key: DataFrame) -> DataFrame:
-    """(user_id, n) frequency frame → (r, bucket, cnt) CMS counter
-    table (d·w ≤ 1536 rows, map-side combinable).  Linear in the
-    frequency vector: counters(f+g) = counters(f) + counters(g) —
-    tests/test_sketch.py pins this by building the two halves of the
-    event log separately and SUM-merging."""
-    return (
-        _cms_expand(per_key)
-        .groupBy("r", "bucket")
-        .agg(F.sum("n").alias("cnt"))
-    )
 
 
 def _cms_inner_product(cv: DataFrame, cp: DataFrame) -> DataFrame:

@@ -715,81 +715,53 @@ def stream_value_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _sketch._hist_monthly_serve(daily)
 
 
-def bottomk_state_stream(
-    rows: DataFrame, k: int, with_cents: bool
-) -> DataFrame:
+def bottomk_state_stream(rows: DataFrame, k: int) -> DataFrame:
     """Per-day bottom-k GroupState fold (round 8): the order-statistic
     streaming state shared by the KMV and quantile-sample twins.  Input
-    is a stream of (day_us, h[, cents]) rows; each micro-batch min-k-
-    merges into the day's ≤ k-row state (a semilattice — min-k(S∪S) =
-    min-k(S) — so re-delivery is absorbed and NO watermark is needed),
-    and the group emits a VERSIONED snapshot of its surviving rows
-    (append-mode file sinks can't retract; the max-ver snapshot per day
-    is the final sketch — the same convention as mg_state_stream).
-    State is ≤ k rows per day FOREVER regardless of volume."""
+    is a stream of (day_us, h, *payload) rows, every column a bigint —
+    no payload for KMV's ``sketch._kmv_rows``, ``cents`` for the row
+    sample's ``sketch._qsample_rows``.  Each micro-batch min-k-merges
+    into the day's ≤ k-row state (a semilattice — min-k(S∪S) =
+    min-k(S) — so re-delivery is absorbed and NO watermark is needed;
+    a re-delivered hash keeps its latest payload), and the group emits
+    a VERSIONED snapshot of its surviving rows (append-mode file sinks
+    can't retract; the max-ver snapshot per day is the final sketch —
+    the same convention as mg_state_stream).  State is ≤ k rows per day
+    FOREVER regardless of volume."""
     import pyspark.sql.types as T
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    out_fields = [
-        T.StructField("day_us", T.LongType()),
-        T.StructField("ver", T.LongType()),
-        T.StructField("h", T.LongType()),
-    ]
-    state_fields = [
-        T.StructField("ver", T.LongType()),
-        T.StructField("hs", T.ArrayType(T.LongType())),
-    ]
-    if with_cents:
-        out_fields.append(T.StructField("cents", T.LongType()))
-        state_fields.append(T.StructField("cs", T.ArrayType(T.LongType())))
+    cols = [c for c in rows.columns if c != "day_us"]  # h, *payload
+    out_schema = T.StructType(
+        [T.StructField(c, T.LongType()) for c in ("day_us", "ver", *cols)]
+    )
+    state_schema = T.StructType(
+        [T.StructField("ver", T.LongType())]
+        + [T.StructField(c, T.ArrayType(T.LongType())) for c in cols]
+    )
 
     def update(key, pdfs, state: GroupState):
         import pandas as pd
 
         (day_us,) = key
-        if state.exists:
-            st = state.get
-            ver = st[0]
-            pool = (
-                dict(zip(st[1], st[2])) if with_cents else dict.fromkeys(st[1])
+        ver, *held = state.get if state.exists else (0, *[[] for _ in cols])
+        pool = (
+            pd.concat(
+                [pd.DataFrame(dict(zip(cols, held)), dtype="int64")]
+                + [pdf[cols].astype("int64") for pdf in pdfs]
             )
-        else:
-            ver, pool = 0, {}
-        for pdf in pdfs:
-            if with_cents:
-                for h, c in zip(pdf["h"], pdf["cents"]):
-                    pool[int(h)] = int(c)
-            else:
-                for h in pdf["h"]:
-                    pool[int(h)] = None
-        keep = sorted(pool)[:k]
+            .drop_duplicates("h", keep="last")
+            .sort_values("h")
+            .head(k)
+        )
         ver += 1
-        if with_cents:
-            state.update((ver, keep, [pool[h] for h in keep]))
-            yield pd.DataFrame(
-                {
-                    "day_us": day_us,
-                    "ver": ver,
-                    "h": pd.Series(keep, dtype="int64"),
-                    "cents": pd.Series(
-                        [pool[h] for h in keep], dtype="int64"
-                    ),
-                }
-            )
-        else:
-            state.update((ver, keep))
-            yield pd.DataFrame(
-                {
-                    "day_us": day_us,
-                    "ver": ver,
-                    "h": pd.Series(keep, dtype="int64"),
-                }
-            )
+        state.update((ver, *[pool[c].tolist() for c in cols]))
+        yield pool.assign(day_us=day_us, ver=ver)[["day_us", "ver", *cols]]
 
     return rows.groupBy("day_us").applyInPandasWithState(
         update,
-        outputStructType=T.StructType(out_fields),
-        stateStructType=T.StructType(state_fields),
+        outputStructType=out_schema,
+        stateStructType=state_schema,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
@@ -809,29 +781,34 @@ def _latest_snapshot(drained: DataFrame, key: str, cols: list) -> DataFrame:
     )
 
 
+def _bottomk_daily(
+    spark: SparkSession, sf_dir: str, rows, k: int, name: str
+) -> DataFrame:
+    """The final per-day bottom-k sketch of the event stream: the
+    :func:`bottomk_state_stream` fold of ``rows(stream)``, drained and
+    cut to each day's latest snapshot (same columns as ``rows``)."""
+    folded = rows(events_stream.stream_events(spark, sf_dir))
+    drained = _drain(
+        bottomk_state_stream(folded, k), name, spark, mode="append"
+    )
+    return _latest_snapshot(drained, "day_us", folded.columns)
+
+
 def stream_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming distinct-count where the KMV BOTTOM-K SKETCH IS THE
     STREAMING STATE (round 8): per-day k-smallest user-day hashes in
     GroupState, min-k-merged per micro-batch — the order-statistic
     member completing the sketch-as-streaming-state family (HLL
     register-MAX r7; CMS counter-SUM, MG truncating-union, Bloom
-    bit-OR, histogram bin-SUM r8).  The drained daily sketches serve
+    bit-OR, histogram bin-SUM r8).  The folded rows are the batch
+    sketch's own ``sketch._kmv_rows``; the drained daily sketches serve
     the month grain through the SAME factored code as the batch entry;
     oracle = the batch month-grain KMV SQL verbatim (min-k is a
     semilattice, so the final state equals the batch daily sketch under
     ANY batching — bit-deterministic, unlike MG's candidates)."""
-    ev = events_stream.stream_events(spark, sf_dir)
-    rows = ev.select(
-        _sketch._day_us().alias("day_us"),
-        _sketch._user_day_hash().alias("h"),
+    daily = _bottomk_daily(
+        spark, sf_dir, _sketch._kmv_rows, _sketch.KMV_K, "stream_kmv"
     )
-    drained = _drain(
-        bottomk_state_stream(rows, _sketch.KMV_K, with_cents=False),
-        "stream_kmv",
-        spark,
-        mode="append",
-    )
-    daily = _latest_snapshot(drained, "day_us", ["day_us", "h"])
     return _sketch._kmv_monthly_serve(
         spark, daily, _load_events_batch(spark, sf_dir)
     )
@@ -842,25 +819,15 @@ def stream_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     STREAMING STATE (round 8): per-day k-smallest (60-bit hash, cents)
     rows in GroupState — the payload-carrying min-k that turns the
     membership sketch into a quantile sketch, min-k-merged per
-    micro-batch (semilattice, re-delivery absorbed, no watermark).
+    micro-batch (semilattice, re-delivery absorbed, no watermark); the
+    folded rows are the batch sample's own ``sketch._qsample_rows``.
     Month merge + exact-integer rank quantiles serve through the SAME
     factored code as the batch entry; oracle = the batch month-grain
     quantile-sample SQL verbatim."""
-    from .events import _cents
-
-    ev = events_stream.stream_events(spark, sf_dir)
-    rows = ev.select(
-        _sketch._day_us().alias("day_us"),
-        _sketch._row_hash60().alias("h"),
-        _cents("value").alias("cents"),
-    )
-    drained = _drain(
-        bottomk_state_stream(rows, _sketch.QSAMPLE_K, with_cents=True),
+    daily = _bottomk_daily(
+        spark, sf_dir, _sketch._qsample_rows, _sketch.QSAMPLE_K,
         "stream_value_quantiles",
-        spark,
-        mode="append",
     )
-    daily = _latest_snapshot(drained, "day_us", ["day_us", "h", "cents"])
     return _sketch._qsample_monthly_serve(
         daily, _load_events_batch(spark, sf_dir)
     )

@@ -24,7 +24,10 @@ from engineering_school_bigdata_project_f1_weather_spark.functions.localrel impo
     empty_rel,
     local_rows,
 )
-from engineering_school_bigdata_project_f1_weather_spark.functions.snapshots import meta_row
+from engineering_school_bigdata_project_f1_weather_spark.functions.snapshots import (
+    meta_row,
+    read_meta_row,
+)
 from engineering_school_bigdata_project_f1_weather_spark.operators import (
     dedup,
     indexes,
@@ -140,12 +143,26 @@ def test_local_rows_accepts_iterators(spark):
     assert sorted(tuple(r) for r in from_gen.collect()) == rows
 
 
-def test_meta_row_arity_mismatch_raises(spark):
+def test_meta_row_arity_mismatch_raises(spark, tmp_path):
     assert meta_row(spark, "a long, b string", (1, "x")).collect()[0] == (1, "x")
     with pytest.raises(ValueError, match="1 values for 2 fields"):
         meta_row(spark, "a long, b string", (1,))
     with pytest.raises(ValueError):
         meta_row(spark, "a long", (1, 2))
+    row = meta_row(spark, "a long, b string", (1, "x"))
+    assert row.rdd.getNumPartitions() == 1
+    row.write.parquet(str(tmp_path / "meta"))
+    assert len(list((tmp_path / "meta").glob("part-*"))) == 1
+
+
+def test_read_meta_row_returns_the_written_row_without_a_job(spark, tmp_path):
+    """``read_meta_row`` gives back the values ``meta_row`` wrote, and
+    reads them on the driver: no Spark job runs."""
+    path = str(tmp_path / "meta")
+    meta_row(spark, "c_q16 long, tag string", (-12345, "x")).write.parquet(path)
+    got, jobs = _jobs_in_group(spark, "read_meta_row", lambda: read_meta_row(path))
+    assert got == {"c_q16": -12345, "tag": "x"}
+    assert jobs == 0
 
 
 def _jobs_in_group(spark, group, action):

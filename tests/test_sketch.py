@@ -740,6 +740,22 @@ def test_kmv_estimator_envelope_synthetic(spark):
     assert abs(est - n) <= 3 * sigma * n, est
 
 
+def test_kmv_est_reads_its_arguments(spark):
+    """``_kmv_est`` over columns NOT named ``n_kmv`` / ``kth_h`` equals
+    the exact-integer formula in both regimes: a sketch smaller than k
+    (the count itself) and a full sketch ((k−1)·2³² div max(h_k, 1))."""
+    k, space = sketch.KMV_K, sketch.KMV_HASH_SPACE
+    rows = [(5, 123), (k - 1, 7_000_000), (k, 0), (k, 1), (k, 3_000_000_017)]
+    df = spark.createDataFrame(rows, "cnt long, top long")
+    got = df.select(
+        "cnt", "top", sketch._kmv_est(F.col("cnt"), F.col("top")).alias("est")
+    ).collect()
+    want = {
+        (n, h): n if n < k else (k - 1) * space // max(h, 1) for n, h in rows
+    }
+    assert {(r.cnt, r.top): r.est for r in got} == want
+
+
 def test_events_kmv_monthly_regimes(spark, sf_dir):
     """Per month: the sketch never exceeds k rows; below k it IS the
     set, so the estimate equals the exact count bit-for-bit (32-bit

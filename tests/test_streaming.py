@@ -1415,7 +1415,10 @@ def test_stream_hist_counts_merge_across_microbatches(spark, sf_dir, tmp_path):
     assert got == want and len(got) > 0
 
 
-def test_stream_bottomk_state_folds_across_microbatches(spark, sf_dir, tmp_path):
+@pytest.mark.parametrize("sample", [False, True], ids=["kmv", "qsample"])
+def test_stream_bottomk_state_folds_across_microbatches(
+    spark, sf_dir, tmp_path, sample
+):
     """stream_kmv / stream_value_quantiles (round 8): the per-day
     bottom-k GroupState fold is a SEMILATTICE — replaying the events as
     two event-time micro-batches must leave every day's final snapshot
@@ -1441,30 +1444,38 @@ def test_stream_bottomk_state_folds_across_microbatches(spark, sf_dir, tmp_path)
         .parquet(half_dir)
     )
     day_us = F.unix_micros("ts") - F.unix_micros("ts") % (24 * 3600 * 1_000_000)
-    rows = stream.select(
-        day_us.alias("day_us"), sketch._user_day_hash().alias("h")
-    )
+    if sample:  # the (day_us, h, cents) row-sample rows
+        rows = stream.select(
+            day_us.alias("day_us"),
+            sketch._row_hash60().alias("h"),
+            ev._cents("value").alias("cents"),
+        )
+        k, daily = sketch.QSAMPLE_K, sketch._daily_qsample_of
+    else:
+        rows = stream.select(
+            day_us.alias("day_us"), sketch._user_day_hash().alias("h")
+        )
+        k, daily = sketch.KMV_K, sketch._daily_kmv_of
     out_dir = str(tmp_path / "kmv_out")
     drained = events_stream.run_available_now_to_parquet(
-        streamq.bottomk_state_stream(rows, sketch.KMV_K, with_cents=False),
+        streamq.bottomk_state_stream(rows, k),
         out_dir,
         spark,
         mode="append",
     ).collect()
     by_day: dict = {}
-    for r in drained:
-        by_day.setdefault(r.day_us, {}).setdefault(r.ver, set()).add(r.h)
+    for r in drained:  # (day_us, ver, h, *payload)
+        by_day.setdefault(r.day_us, {}).setdefault(r.ver, set()).add(tuple(r)[2:])
     assert any(max(vers) == 2 for vers in by_day.values())
     for vers in by_day.values():
         assert set(vers) == set(range(1, max(vers) + 1))
         for hs in vers.values():
-            assert len(hs) <= sketch.KMV_K
+            assert len(hs) <= k
     got = {
-        (d, h) for d, vers in by_day.items() for h in vers[max(vers)]
+        (d, *h) for d, vers in by_day.items() for h in vers[max(vers)]
     }
     want = {
-        (r.day_us, r.h)
-        for r in sketch._daily_kmv_of(ev.load_events(spark, sf_dir)).collect()
+        tuple(r) for r in daily(ev.load_events(spark, sf_dir)).collect()
     }
     assert got == want and len(got) > 0
 
